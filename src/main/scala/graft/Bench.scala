@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // sampled BEFORE any of our own work so it reflects pre-existing
@@ -45,8 +44,7 @@ object Bench {
     val stealStart = stealJiffies()
     val benchWallT0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = Session.cpus
     // Busy-burn CALIBRATION sample (r21 lesson: the 32c driver run had 59
     // pin-regressed rows — untouched trivial queries at 6× — while
     // steal_cs read a quiet 515, because /proc/stat's steal field misses
@@ -59,7 +57,7 @@ object Bench {
       try {
         val bean = java.lang.management.ManagementFactory.getThreadMXBean
         if (!bean.isThreadCpuTimeSupported) return -1.0
-        val k = math.max(1, cpus.toInt)
+        val k = math.max(1, cpus)
         val got = new java.util.concurrent.atomic.AtomicLong(0L)
         val deadline = System.nanoTime() + ms * 1000000L
         val threads = (1 to k).map { _ =>
@@ -80,12 +78,7 @@ object Bench {
         else math.rint(got.get.toDouble / (wall.toDouble * k) * 1000) / 1000
       } catch { case _: Throwable => -1.0 }
     val burnStart = burnEff()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // Warm up the session (codegen, hadoop FS, parquet reader classes) so
     // the first measured query doesn't absorb ~5-10s of one-time JVM cost,
     // and time queries in sorted order so per-query numbers are comparable

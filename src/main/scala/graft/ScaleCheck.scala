@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Empirical scale-growth check (not part of the driver contract).
@@ -32,13 +31,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val (src, dst, factor) = (args(0), args(1), args(2).toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     keyCols.foreach { case (table, keys) =>
       // events goes through the schema-adaptive reader: a raw read of the
       // micros-era testdata loads TIMESTAMP_NTZ and the replica would be
@@ -70,12 +63,7 @@ object ScaleUp {
   */
 object SignatureScreenBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     spark.range(1000).selectExpr("sum(id)").collect()
     args.foreach { dir =>
       val t0 = System.nanoTime()
@@ -106,12 +94,7 @@ object SignatureScreenBench {
   */
 object DeleteBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     spark.range(1000).selectExpr("sum(id)").collect()
     import graft.sources.Lake
     args.foreach { dir =>
@@ -196,13 +179,7 @@ object ScaleCheck {
     // optional 3rd+ args: restrict to named queries (local iteration)
     val only = args.drop(2).toSet
     val picked = if (only.isEmpty) flagship else flagship.filter(only)
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     spark.range(1000).selectExpr("sum(id)").collect() // warm the JVM
 
     // best-of-two: the first execution of a query pays one-time JVM +

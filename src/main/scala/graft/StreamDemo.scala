@@ -2,7 +2,6 @@ package graft
 
 import graft.stream.Ingest
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 
 /** CLI surface for the streaming medallion pipeline: lands JSON files in a
   * temp dir in two batches, drains bronze→silver with Trigger.AvailableNow
@@ -13,13 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     val root = Files.createTempDirectory("graft-stream-demo")
     val landing = args.headOption.getOrElse {

@@ -13,6 +13,26 @@ final case class QueryDef(
     oracle: Option[String],
 )
 
+/** The one session shape every main runs under: `local[cpus]` with
+  * `cpus` = `$SPARK_GRAFT_CPUS` (default: the JVM's processor count), one
+  * shuffle partition per core, UTC session time, no UI, WARN logging.
+  */
+object Session {
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def apply(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}
+
 /** Readers for the driver testdata tables (TESTDATA.md / FIXTURES.md §B). */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =

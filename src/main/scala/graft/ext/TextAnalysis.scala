@@ -18,21 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Plan-evidence hook (inert unless GRAFT_PLAN_DUMP_DIR is set): the
-    * strip-family rows return an eager localCheckpoint, so the RETURNED
-    * frame's plan is just a checkpoint scan — this dumps the
-    * pre-checkpoint plan the pass actually executes, for the judge's
-    * plan-diff evidence. Never fires in Bench/Verify runs.
-    */
-  private def dumpInnerPlan(tag: String, df: DataFrame): Unit =
-    sys.env.get("GRAFT_PLAN_DUMP_DIR").foreach { d =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-      java.nio.file.Files.write(java.nio.file.Paths.get(d, s"$tag.txt"),
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-      ()
-    }
-
   /** HTML/markup strip — the first cleaning pass a web-crawl corpus needs
     * before any tokenize/dedup/quality stage: drop script/style blocks
     * wholesale (their CONTENT is code, not prose — tag-stripping alone
@@ -343,7 +328,6 @@ object TextAnalysis {
       // materialize before unpersisting the gram frame the plan feeds on;
       // at real scale this eager executor-local materialization is a
       // durable write of the stripped corpus (the pass's output anyway)
-      dumpInnerPlan("boilerplate_strip_inner", out)
       out.localCheckpoint(true)
     } finally { grams.unpersist(); () }
   }
@@ -403,7 +387,6 @@ object TextAnalysis {
         .orderBy("doc_id")
       // guards the unpersist below (the plan feeds on the gram frame); at
       // real scale the equivalent is a durable write of the deduped corpus
-      dumpInnerPlan("substring_dedup_inner", out)
       out.localCheckpoint(true)
     } finally { grams.unpersist(); () }
   }
@@ -490,7 +473,6 @@ object TextAnalysis {
               .as("deduped"))
           .orderBy("doc_id")
         // durable-write equivalent at scale; guards both unpersists
-        dumpInnerPlan("substring_spans_inner", out)
         out.localCheckpoint(true)
       } finally { spans.unpersist(); () }
     } finally { grams.unpersist(); () }

@@ -21,23 +21,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Lake {
 
-  /** Phase timer for the optimization rounds: wraps the commit-path
-    * phases (discovery join, rewrite, footer reads, manifest publish)
-    * and prints wall times when `-Dgraft.lake.prof` is set. Inert (no
-    * timestamp read) when the property is absent, so production paths
-    * pay one branch.
-    */
-  @inline private def prof[A](name: String)(body: => A): A =
-    if (!profEnabled) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[lake-prof] $name%-28s ${(System.nanoTime() - t0) / 1e6}%8.1f ms")
-      r
-    }
-  private val profEnabled = sys.props.contains("graft.lake.prof") ||
-    sys.env.contains("GRAFT_LAKE_PROF")
-
   /** Target rows per data file for SIZE-ADAPTIVE commit writes (guide §6:
     * files in the 128 MB – 1 GB band; at the lake's ~30–100 B rows, 4 Mi
     * rows ≈ 128–400 MB). A rewrite commit whose expected output is far
@@ -47,13 +30,11 @@ object Lake {
     * fold otherwise publishes ~10 KB-sized files per micro-batch, and
     * every later scan pays per-file overhead). The SAME rule derives many
     * files for a big rewrite, so it is scale-adaptive, not a local-mode
-    * constant; override via GRAFT_TARGET_FILE_ROWS. Tables carrying a
-    * `_graft_stats` manifest are exempt — their file boundaries encode
-    * clustering (z-order, range cells) that a coalesce would smear.
+    * constant. Tables carrying a `_graft_stats` manifest are exempt —
+    * their file boundaries encode clustering (z-order, range cells) that a
+    * coalesce would smear.
     */
-  private val targetCommitFileRows: Long =
-    sys.env.get("GRAFT_TARGET_FILE_ROWS").map(_.trim.toLong)
-      .getOrElse(4L * 1024 * 1024)
+  private val targetCommitFileRows: Long = 4L * 1024 * 1024
 
   /** ceil(estRows / target) as a coalesce width — never below 1. Callers
     * apply it only when the estimate is sound and the layout is free-form
@@ -2487,10 +2468,10 @@ object Lake {
       // neither the source nor table data — overlaps it instead of
       // queueing behind it; both are pure reads, and nothing is written
       // until the guard has been checked on the main thread.
-      val statsFut = scala.concurrent.Future(prof("merge:src-stats")(grouped
+      val statsFut = scala.concurrent.Future(grouped
         .agg(sum(col("_graft_n")), org.apache.spark.sql.functions
           .max(col("_graft_n")), sum(col("_graft_ndel")))
-        .head()))(scala.concurrent.ExecutionContext.global)
+        .head())(scala.concurrent.ExecutionContext.global)
       val root = rootPath(fs, hp)
       val abs0 = m0.entries.map(e => resolveRef(root, e._1))
       val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
@@ -2524,7 +2505,7 @@ object Lake {
         if (nSrc <= maxBroadcastKeys) {
           val pdf = grouped.select(
             (keyCols.map(col) :+ (col("_graft_ndel") > 0).as("_graft_del")): _*)
-          val rows = prof("merge:probe-collect")(pdf.collect())
+          val rows = pdf.collect()
           org.apache.spark.sql.functions.broadcast(spark.createDataFrame(
             java.util.Arrays.asList(rows: _*), pdf.schema))
         } else src.select(
@@ -2533,7 +2514,7 @@ object Lake {
       // and how many target rows does each merge arm touch? (file name
       // bound AT THE SCAN — after the join the row has two sources and
       // input_file_name is undefined)
-      val fileArms: Seq[(String, Long, Long)] = prof("merge:discovery")(
+      val fileArms: Seq[(String, Long, Long)] =
         if (candidates.isEmpty) Seq.empty
         else readSomeFiles(spark, fs, path, candidates, m0.schemaDdl)
           .withColumn("_graft_file", input_file_name())
@@ -2547,7 +2528,7 @@ object Lake {
               .as("n_del"))
           .collect().toSeq.map(r => (
             new java.net.URI(r.getString(0)).getPath,
-            r.getLong(1), r.getLong(2))))
+            r.getLong(1), r.getLong(2)))
       val matched: Set[String] = fileArms.map(_._1).toSet
       // target-row tallies per arm, exact whatever the target's key shape
       val updated = fileArms.map(_._2).sum
@@ -2581,8 +2562,7 @@ object Lake {
       val rewriteDf =
         if (fs.exists(statsDir)) rewriteAll
         else rewriteAll.coalesce(commitFileParts(estRows))
-      val (_, rewritten) =
-        prof("merge:rewrite")(writeClaimedDir(spark, fs, path, rewriteDf))
+      val (_, rewritten) = writeClaimedDir(spark, fs, path, rewriteDf)
       // a constraint may have landed since the gate: re-enforce the NEW
       // ones against the upsert arm (src is persisted — one cheap pass)
       val csNow = checkConstraints(spark, path).filterNot(cs0.contains)
@@ -2598,17 +2578,17 @@ object Lake {
       // duplicate). Delta draws the same line: ConcurrentAppendException
       // for merges that read the table, rebase only for blind appends.
       val next = v0 + 1
-      prof("merge:manifest")(writeVersionDelta(spark, fs, path, next,
+      writeVersionDelta(spark, fs, path, next,
         m0.schemaDdl,
         base = v0, add = rewritten, remove = matchedEntries.map(_._1),
-        streamBatchId = streamBatchId, op = Some("merge")))
+        streamBatchId = streamBatchId, op = Some("merge"))
       writeVersionPointer(spark, fs, path, next)
-      prof("merge:stats")(if (fs.exists(statsDir)) {
+      if (fs.exists(statsDir)) {
         val tracked = spark.read.json(statsDir.toString).schema.fieldNames.toSeq
           .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
         if (tracked.nonEmpty) appendStats(spark, path, tracked)
-      })
-      prof("merge:bloom")(refreshBloomIndexes(spark, fs, path))
+      }
+      refreshBloomIndexes(spark, fs, path)
       // inserted = upsert rows whose key matched nothing; with a
       // key-unique target (the normal state of a merge-maintained table)
       // `updated` counts exactly the matched upsert keys, so the split is
@@ -3748,10 +3728,8 @@ object Lake {
       if (claimed) {
         // Append, not ErrorIfExists: the dir exists now (it holds our
         // claim marker) and is exclusively ours
-        prof("claimed:write")(
-          df.write.mode(SaveMode.Append).parquet(dirPath.toString))
-        return (d, prof("claimed:footers")(
-          fileEntries(spark, fs, path, listDataFiles(fs, dirPath))))
+        df.write.mode(SaveMode.Append).parquet(dirPath.toString)
+        return (d, fileEntries(spark, fs, path, listDataFiles(fs, dirPath)))
       }
     }
     sys.error("unreachable")

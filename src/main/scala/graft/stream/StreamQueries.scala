@@ -291,11 +291,7 @@ object StreamQueries {
     // semantics at the session default.)
     val spark = df.sparkSession
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    // measurement-only A/B knob (round-22 shard-sizing experiments via
-    // StreamProf); unset in bench/verify, where `shards` stands
-    val effShards = sys.env.get("GRAFT_STREAM_SHARDS")
-      .map(_.trim.toInt).getOrElse(shards)
-    spark.conf.set("spark.sql.shuffle.partitions", effShards.toString)
+    spark.conf.set("spark.sql.shuffle.partitions", shards.toString)
     try {
       val q = df.writeStream.format("parquet")
         .option("path", sink).option("checkpointLocation", ckpt)
