@@ -677,11 +677,15 @@ object Lake {
           .withColumn("_commit_timestamp", raw.ts
             .map(t => timestamp_millis(lit(t)))
             .getOrElse(lit(null).cast("timestamp")))
+      // `ddl` is the schema of the manifest that LISTS `files`: a removed
+      // file read with a later version's DDL would null-fill a column that
+      // version added, and the union below would no longer refuse the era
+      // mix
       def tag(files: Seq[String], changeType: String,
-          dvs: Seq[DvEntry]): Option[DataFrame] =
+          dvs: Seq[DvEntry], ddl: String = raw.schemaDdl): Option[DataFrame] =
         if (files.isEmpty) None
         else Some(stamp(
-          readFilesWithDv(spark, fs, path, dvView(raw.schemaDdl, dvs),
+          readFilesWithDv(spark, fs, path, dvView(ddl, dvs),
             files.map(f => resolveRef(root, f))), changeType))
       // rows of `files` AT the tombstoned positions in `positions` — the
       // dv-delete preimages; cost ∝ covered files + KB-sized sidecars
@@ -744,7 +748,7 @@ object Lake {
             val fileParts =
               tag(cur.map(_._1).filterNot(prevSet), "insert", raw.dv).toSeq ++
                 tag(prevM.entries.map(_._1).filterNot(curSet), "delete",
-                  prevM.dvs).toSeq
+                  prevM.dvs, prevM.schemaDdl).toSeq
             // carried files whose TOMBSTONE set changed (a restore across
             // a dvDelete/purge boundary): positions tombstoned before but
             // not after came BACK (insert); newly tombstoned ones are
@@ -1022,29 +1026,6 @@ object Lake {
     }
   }
 
-  /** INCREMENTAL MATERIALIZED-VIEW MAINTENANCE over the change feed —
-    * the reference's "automatic incremental refresh"
-    * (README_DBT.md:32,102-103) as a first-class operator. The view at
-    * `viewPath` is the distributive aggregate
-    * {{{ SELECT keys…, count(*) AS countCol, sum(c) AS c  -- c ∈ sumCols
-    *     FROM readVersioned(sourcePath) GROUP BY keys… }}}
-    * maintained as a versioned Lake table. Every refresh commit is
-    * stamped (streamBatchId channel) with the SOURCE version it folded
-    * up to — the watermark rides the commit ATOMICALLY, so a crashed
-    * refresh retries idempotently: either the commit landed (watermark
-    * advanced, re-refresh no-ops) or it didn't (nothing was applied,
-    * the same window recomputes).
-    *
-    * Refresh cost ∝ CHANGED data + CHANGED keys, never the source:
-    * [[readChangeFeed]] opens only each commit's add/remove files, the
-    * per-key delta aggregates map-side (insert +1 / delete −1 retraction
-    * weights), and the view update lands as ONE file-granular [[mergeCdc]]
-    * commit rewriting only the view files that hold changed keys — keys
-    * whose count reaches zero are deleted from the view. First call (no
-    * view yet) materializes the full aggregate once.
-    *
-    * @return (view version, source version the view now reflects)
-    */
   /** [[readChangeFeed]] with UPDATE classification — Delta CDF's four
     * `_change_type` values for KEY-UNIQUE tables (the merge-maintained
     * shape): within each commit, a delete and an insert sharing `keys`
@@ -1137,7 +1118,31 @@ object Lake {
         col("_vt").isNull.cast("int").as("is_current")): _*)
   }
 
-  /** `forceFull = true` recomputes the view from the current source
+  /** INCREMENTAL MATERIALIZED-VIEW MAINTENANCE over the change feed —
+    * the reference's "automatic incremental refresh"
+    * (README_DBT.md:32,102-103) as a first-class operator. The view at
+    * `viewPath` is the distributive aggregate
+    * {{{ SELECT keys…, count(*) AS countCol, sum(c) AS c  -- c ∈ sumCols
+    *     FROM readVersioned(sourcePath) GROUP BY keys… }}}
+    * maintained as a versioned Lake table. Every refresh commit is
+    * stamped (streamBatchId channel) with the SOURCE version it folded
+    * up to — the watermark rides the commit ATOMICALLY, so a crashed
+    * refresh retries idempotently: either the commit landed (watermark
+    * advanced, re-refresh no-ops) or it didn't (nothing was applied,
+    * the same window recomputes).
+    *
+    * Refresh cost never touches the unchanged source: [[readChangeFeed]]
+    * opens only each commit's add/remove files and the per-key delta
+    * aggregates map-side (insert +1 / delete −1 retraction weights). The
+    * fold ([[foldAggDelta]]) then scans the VIEW once, whole, rewrites
+    * only the view files that hold changed keys, and lands as ONE
+    * file-granular merge commit — keys whose count reaches zero are
+    * deleted from the view. A steady fold starts five Spark jobs: the
+    * view-side broadcast, the delta aggregate, the merged-row collect,
+    * the matched-key broadcast and the rewrite. First call (no view yet)
+    * materializes the full aggregate once.
+    *
+    * `forceFull = true` recomputes the view from the current source
     * snapshot instead of folding the feed — the recovery path when the
     * feed window was vacuumed past retention (readChangeFeed refuses) or
     * after changing the aggregate definition.
@@ -1148,13 +1153,25 @@ object Lake {
     * sentinel upstream if the domain needs them. Aggregates are limited
     * to count + sums because those are the retraction-foldable ones;
     * min/max need a recompute on delete (use forceFull or a full view).
+    *
+    * @return (view version, source version the view now reflects)
     */
   def refreshIncremental(spark: SparkSession, sourcePath: String,
       viewPath: String, keys: Seq[String],
       sumCols: Seq[String] = Seq.empty,
       countCol: String = "n_rows",
-      forceFull: Boolean = false): (Long, Long) = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
+      forceFull: Boolean = false): (Long, Long) =
+    refreshIncrementalBounded(spark, sourcePath, viewPath, keys, sumCols,
+      countCol, forceFull)
+
+  /** [[refreshIncremental]] with the fold's collect bound exposed, so
+    * specs can drive the above-bound path.
+    */
+  private[graft] def refreshIncrementalBounded(spark: SparkSession,
+      sourcePath: String, viewPath: String, keys: Seq[String],
+      sumCols: Seq[String], countCol: String, forceFull: Boolean,
+      maxBroadcastKeys: Long = 1000000L): (Long, Long) = {
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
     require(keys.nonEmpty, "refreshIncremental needs at least one key column")
     val sfs = new org.apache.hadoop.fs.Path(sourcePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1181,29 +1198,11 @@ object Lake {
         s"$viewPath's latest commit carries no source watermark — " +
           "not a refresh-maintained view"))
     if (w >= srcHead) return (viewHead, w) // nothing new to fold
-    val sign = when(col("_change_type") === "insert", lit(1L))
-      .otherwise(lit(-1L))
-    val deltaAggs = sum(sign).as("_graft_dn") +:
-      sumCols.map(c => sum(col(c) * sign).as(s"_graft_d_$c"))
+    val aggs = foldDeltaAggs(sumCols)
     val delta = readChangeFeed(spark, sourcePath, w + 1, srcHead)
-      .groupBy(keys.map(col): _*)
-      .agg(deltaAggs.head, deltaAggs.tail: _*)
-    val view = readVersioned(spark, viewPath, Some(viewHead))
-    val viewTypes = view.schema.map(f => f.name -> f.dataType).toMap
-    val merged = delta.join(view, keys, "left_outer")
-      .select((keys.map(col) :+
-        (coalesce(col(countCol), lit(0L)) + col("_graft_dn")).as(countCol))
-        ++ sumCols.map(c =>
-          // Both sides need the coalesce: sum(c * sign) over a fold window
-          // where every changed row for the key has NULL in c is NULL, and
-          // view.c + NULL would overwrite the key's accumulated sum with
-          // NULL (silently rebasing it to 0 on the NEXT fold).
-          (coalesce(col(c), lit(0).cast(viewTypes(c))) +
-            coalesce(col(s"_graft_d_$c"), lit(0).cast(viewTypes(c))))
-            .cast(viewTypes(c)).as(c)): _*)
-    val (v, _) = mergeCdc(spark, viewPath, merged, keys,
-      deleteWhen = col(countCol) <= 0L, streamBatchId = Some(srcHead))
-    (v, srcHead)
+      .groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    (foldAggDelta(spark, viewPath, delta, keys, sumCols, countCol,
+      retainNonPositive = false, stamp = srcHead, maxBroadcastKeys), srcHead)
   }
 
   /** STREAMING incremental MV maintenance — [[refreshIncremental]]'s
@@ -1211,7 +1210,7 @@ object Lake {
     * unjoined halves: the change feed arrives as a STREAM (the
     * [[exportChangeFeedLanding]] bridge), and each `foreachBatch`
     * micro-batch folds its retraction-weighted per-key delta into the
-    * versioned view with ONE [[mergeCdc]] commit. The reference's
+    * versioned view with ONE merge commit. The reference's
     * "automatic incremental refresh" (README_DBT.md:32,102-103) run
     * continuously instead of on demand.
     *
@@ -1234,8 +1233,10 @@ object Lake {
     * would drop the key at count −1 and LOSE the retraction; the next
     * insert would then land on 0 instead of net.
     *
-    * Cost per micro-batch ∝ the batch + the view files holding changed
-    * keys ([[mergeCdc]]'s file-granular discipline) — never the source.
+    * Cost per micro-batch: the batch, one scan of the whole view, and a
+    * rewrite of only the view files holding changed keys — never the
+    * source. The fold is [[refreshIncremental]]'s ([[foldAggDelta]]):
+    * five Spark jobs at steady state.
     *
     * @return the view version now current
     */
@@ -1243,7 +1244,7 @@ object Lake {
       batchId: Long, keys: Seq[String], sumCols: Seq[String] = Seq.empty,
       countCol: String = "n_rows",
       retainNonPositive: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, sum, when}
+    import org.apache.spark.sql.functions.col
     require(keys.nonEmpty, "foldFeedBatchIntoAggView needs key columns")
     require(batchId >= 0 && batchId < DimStampBase,
       s"fact-channel batch id $batchId collides with the dim stamp " +
@@ -1270,12 +1271,8 @@ object Lake {
       if (factStamp.exists(_ >= batchId))
         return head // replayed batch: idempotent no-op
     }
-    val sign = when(col("_change_type") === "insert", lit(1L))
-      .otherwise(lit(-1L))
-    val deltaAggs = sum(sign).as("_graft_dn") +:
-      sumCols.map(c => sum(col(c) * sign).as(s"_graft_d_$c"))
-    val delta = batch.groupBy(keys.map(col): _*)
-      .agg(deltaAggs.head, deltaAggs.tail: _*)
+    val aggs = foldDeltaAggs(sumCols)
+    val delta = batch.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     if (!exists) {
       val initAll = delta.select((keys.map(col) :+
         col("_graft_dn").as(countCol)) ++
@@ -1287,23 +1284,111 @@ object Lake {
       return writeVersioned(spark, init, viewPath,
         streamBatchId = Some(batchId))
     }
-    val view = readVersioned(spark, viewPath)
+    foldAggDelta(spark, viewPath, delta, keys, sumCols, countCol,
+      retainNonPositive, stamp = batchId)
+  }
+
+  /** The per-key delta of a change-feed frame: `_graft_dn` is the row
+    * count with inserts weighted +1 and deletes −1, `_graft_d_<c>` the
+    * same weighting over each sum column.
+    */
+  private def foldDeltaAggs(
+      sumCols: Seq[String]): Seq[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.{col, lit, sum, when}
+    val sign = when(col("_change_type") === "insert", lit(1L))
+      .otherwise(lit(-1L))
+    sum(sign).as("_graft_dn") +:
+      sumCols.map(c => sum(col(c) * sign).as(s"_graft_d_$c"))
+  }
+
+  /** Fold a per-key delta ([[foldDeltaAggs]] over `keys`) into the
+    * aggregate view at `viewPath` as ONE merge commit stamped `stamp` —
+    * the gold fold of [[refreshIncremental]] and
+    * [[foldFeedBatchIntoAggView]]. A key whose new count is ≤ 0 leaves
+    * the view unless `retainNonPositive`.
+    *
+    * The view's files are scanned ONCE, each row tagged with its file at
+    * the scan, and left-joined to the delta; one collect brings every
+    * merged row (keys, new count, new sums, source file) to the driver,
+    * which derives the matched files, the arm counts and [[mergeCdc]]'s
+    * key-uniqueness refusal. The rewrite — matched files anti-joined with
+    * a driver-local key relation, plus the local upsert rows — publishes
+    * through [[publishMergeRewrite]], the tail [[mergeCdc]] uses. The
+    * collect is bounded by `maxBroadcastKeys` (the bound [[mergeCdc]]
+    * puts on its probe collect); a delta above it folds through
+    * [[mergeCdc]] instead.
+    *
+    * @return the view version now current (the base when nothing changed)
+    */
+  private def foldAggDelta(spark: SparkSession, viewPath: String,
+      delta: DataFrame, keys: Seq[String], sumCols: Seq[String],
+      countCol: String, retainNonPositive: Boolean, stamp: Long,
+      maxBroadcastKeys: Long = 1000000L): Long = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, input_file_name, lit}
+    val hp = new org.apache.hadoop.fs.Path(viewPath)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireNoColMap(spark, fs, viewPath, "mergeInto")
+    requireNoDvs(spark, fs, viewPath, "mergeInto")
+    val v0 = readVersionPointer(fs, viewPath).getOrElse(
+      manifestVersions(fs, viewPath).last)
+    val m0 = readVersionManifest(spark, fs, viewPath, v0).getOrElse(
+      sys.error(s"version $v0 has no manifest under $viewPath"))
+    val root = rootPath(fs, hp)
+    val view = readSomeFiles(spark, fs, viewPath,
+      m0.entries.map(e => resolveRef(root, e._1)), m0.schemaDdl)
     val viewTypes = view.schema.map(f => f.name -> f.dataType).toMap
-    val merged = delta.join(view, keys, "left_outer")
-      .select((keys.map(col) :+
-        (coalesce(col(countCol), lit(0L)) + col("_graft_dn")).as(countCol))
-        ++ sumCols.map(c =>
-          // same two-sided coalesce rule as refreshIncremental: a batch
-          // whose every changed row has NULL in c must not rebase the
-          // key's accumulated sum
-          (coalesce(col(c), lit(0).cast(viewTypes(c))) +
-            coalesce(col(s"_graft_d_$c"), lit(0).cast(viewTypes(c))))
-            .cast(viewTypes(c)).as(c)): _*)
-    val deleteRule = if (retainNonPositive) lit(false)
-      else col(countCol) <= 0L
-    val (v, _) = mergeCdc(spark, viewPath, merged, keys,
-      deleteWhen = deleteRule, streamBatchId = Some(batchId))
-    v
+    def merged(v: DataFrame, extra: Seq[String]): DataFrame =
+      delta.join(v, keys, "left_outer")
+        .select((keys.map(col) :+
+          (coalesce(col(countCol), lit(0L)) + col("_graft_dn")).as(countCol))
+          ++ sumCols.map(c =>
+            // Both sides need the coalesce: sum(c * sign) over a fold
+            // window where every changed row for the key has NULL in c is
+            // NULL, and view.c + NULL would overwrite the key's
+            // accumulated sum with NULL (silently rebasing it to 0 on the
+            // NEXT fold).
+            (coalesce(col(c), lit(0).cast(viewTypes(c))) +
+              coalesce(col(s"_graft_d_$c"), lit(0).cast(viewTypes(c))))
+              .cast(viewTypes(c)).as(c)) ++ extra.map(col): _*)
+    // the generated-column gate mergeCdc applies to its source
+    applyGeneratedTo(spark, viewPath, merged(view, Nil), "mergeInto",
+      computeAbsent = false)
+    val deleteRule =
+      if (retainNonPositive) lit(false) else col(countCol) <= 0L
+    // file name bound AT THE SCAN — after the join the row has two
+    // sources and input_file_name is undefined
+    val tagged = merged(view.withColumn("_graft_file", input_file_name()),
+      Seq("_graft_file")).withColumn("_graft_del", deleteRule)
+    val rows = tagged
+      .limit(math.min(maxBroadcastKeys, Int.MaxValue - 1L).toInt + 1)
+      .collect()
+    if (rows.length > maxBroadcastKeys)
+      return mergeCdc(spark, viewPath, merged(view, Nil), keys,
+        deleteWhen = deleteRule, maxBroadcastKeys = maxBroadcastKeys,
+        streamBatchId = Some(stamp))._1
+    val nk = keys.length
+    val (fileAt, delAt) = (nk + 1 + sumCols.length, nk + 2 + sumCols.length)
+    require(rows.map(r => (0 until nk).map(r.get)).distinct.length == rows.length,
+      s"mergeInto source is not unique on (${keys.mkString(",")})")
+    val matchedRows = rows.filterNot(_.isNullAt(fileAt))
+    val upserts = rows.filterNot(_.getBoolean(delAt))
+    if (matchedRows.isEmpty && upserts.isEmpty) return v0
+    val matched = matchedRows
+      .map(r => new java.net.URI(r.getString(fileAt)).getPath).toSet
+    val matchedEntries =
+      m0.entries.filter(e => matched(resolveRef(root, e._1)))
+    def local(rs: Seq[Row], width: Int): DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(rs.map(r => Row.fromSeq(r.toSeq.take(width))): _*),
+      org.apache.spark.sql.types.StructType(tagged.schema.take(width)))
+    // every matched key leaves its file; updated and new keys enter with
+    // the upserts
+    val estRows = matchedEntries.map(_._2).sum - matchedRows.length +
+      upserts.length
+    publishMergeRewrite(spark, fs, viewPath, v0, m0, matchedEntries,
+      broadcast(local(matchedRows.toSeq, nk)), keys,
+      local(upserts.toSeq, fileAt), upserts.length.toLong, estRows,
+      Some(stamp))
   }
 
   /** The boundary between the two stamp channels packed into the one
@@ -2534,61 +2619,11 @@ object Lake {
       val updated = fileArms.map(_._2).sum
       val deleted = fileArms.map(_._3).sum
       if (matched.isEmpty && nUp == 0L) return (v0, (0L, 0L, 0L))
-      // constraints apply to the rows ENTERING the table (the upsert
-      // arm); carried rows were validated when they entered, delete rows
-      // remove data
-      val cs0 = checkConstraints(spark, path)
-      if (nUp > 0L && cs0.nonEmpty)
-        enforceConstraintsOn(spark,
-          src.filter(!delFlag).select(prior.fieldNames.map(col): _*),
-          cs0, s"mergeInto($path)")
-      // rewrite = unmatched rows of matched files + every UPSERT source
-      // row (updated keys replace, new keys insert; delete-flagged rows
-      // contribute removals only) — one write into a claimed namespace
-      // dir; the commit number is base+1 (contiguity — see deleteWhere)
-      val keptOld = readSomeFiles(spark, fs, path, matched.toSeq, m0.schemaDdl)
-        .join(probe, keyCols, "left_anti")
-        .select(prior.fieldNames.map(col): _*)
       val matchedEntries = m0.entries.filter(e => matched(resolveRef(root, e._1)))
-      // size-adaptive output: the rewrite's row count is KNOWN before the
-      // write (matched files' manifest n_rows minus replaced/deleted rows
-      // plus the upsert arm) — shape the file count to the data instead of
-      // inheriting ~one tiny file per upstream task. Stats-manifest tables
-      // keep their natural boundaries (file-level clustering).
-      val rewriteAll = keptOld.unionByName(
-        src.filter(!delFlag).select(prior.fieldNames.map(col): _*))
       val estRows =
         matchedEntries.map(_._2).sum - updated - deleted + (nSrc - nDel)
-      val rewriteDf =
-        if (fs.exists(statsDir)) rewriteAll
-        else rewriteAll.coalesce(commitFileParts(estRows))
-      val (_, rewritten) = writeClaimedDir(spark, fs, path, rewriteDf)
-      // a constraint may have landed since the gate: re-enforce the NEW
-      // ones against the upsert arm (src is persisted — one cheap pass)
-      val csNow = checkConstraints(spark, path).filterNot(cs0.contains)
-      if (nUp > 0L && csNow.nonEmpty)
-        enforceConstraintsOn(spark,
-          src.filter(!delFlag).select(prior.fieldNames.map(col): _*),
-          csNow, s"mergeInto($path)")
-      // MERGE deliberately keeps the strict publish (no disjoint-set
-      // rebase): its match/insert split was computed against the WHOLE
-      // key set of the base version, so even a file-disjoint concurrent
-      // append can invalidate it (an appended row carrying a source key
-      // should have been an UPDATE — rebasing would silently insert a
-      // duplicate). Delta draws the same line: ConcurrentAppendException
-      // for merges that read the table, rebase only for blind appends.
-      val next = v0 + 1
-      writeVersionDelta(spark, fs, path, next,
-        m0.schemaDdl,
-        base = v0, add = rewritten, remove = matchedEntries.map(_._1),
-        streamBatchId = streamBatchId, op = Some("merge"))
-      writeVersionPointer(spark, fs, path, next)
-      if (fs.exists(statsDir)) {
-        val tracked = spark.read.json(statsDir.toString).schema.fieldNames.toSeq
-          .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-        if (tracked.nonEmpty) appendStats(spark, path, tracked)
-      }
-      refreshBloomIndexes(spark, fs, path)
+      val next = publishMergeRewrite(spark, fs, path, v0, m0, matchedEntries,
+        probe, keyCols, src.filter(!delFlag), nUp, estRows, streamBatchId)
       // inserted = upsert rows whose key matched nothing; with a
       // key-unique target (the normal state of a merge-maintained table)
       // `updated` counts exactly the matched upsert keys, so the split is
@@ -2597,6 +2632,74 @@ object Lake {
       // target rows directly)
       (next, (updated, nUp - updated, deleted))
     } finally { grouped.unpersist(); src.unpersist(); () }
+  }
+
+  /** The commit tail every merge shares, publishing base `v0` + 1:
+    *   1. gate the rows ENTERING the table (`upserts`, `nUp` of them) on
+    *      the CHECK constraints — carried rows were validated when they
+    *      entered, deleted rows remove data;
+    *   2. write the surviving rows of the matched files (anti-joined with
+    *      `keysOut` on `keyCols`) plus the upserts into one claimed dir,
+    *      shaped to `estRows` rows;
+    *   3. re-gate constraints that landed since step 1;
+    *   4. publish the delta manifest, the pointer, the stats append and
+    *      the bloom refresh.
+    */
+  private def publishMergeRewrite(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, v0: Long,
+      m0: VersionManifest, matchedEntries: Seq[(String, Long)],
+      keysOut: DataFrame, keyCols: Seq[String], upserts: DataFrame,
+      nUp: Long, estRows: Long, streamBatchId: Option[Long]): Long = {
+    import org.apache.spark.sql.functions.col
+    val prior = org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
+    val entering = upserts.select(prior.fieldNames.map(col): _*)
+    val root = rootPath(fs, new org.apache.hadoop.fs.Path(path))
+    val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
+    val cs0 = checkConstraints(spark, path)
+    if (nUp > 0L && cs0.nonEmpty)
+      enforceConstraintsOn(spark, entering, cs0, s"mergeInto($path)")
+    // rewrite = unmatched rows of matched files + every UPSERT row
+    // (updated keys replace, new keys insert; delete-flagged keys
+    // contribute removals only) — one write into a claimed namespace
+    // dir; the commit number is base+1 (contiguity — see deleteWhere)
+    val keptOld = readSomeFiles(spark, fs, path,
+        matchedEntries.map(e => resolveRef(root, e._1)), m0.schemaDdl)
+      .join(keysOut, keyCols, "left_anti")
+      .select(prior.fieldNames.map(col): _*)
+    // size-adaptive output: the rewrite's row count is KNOWN before the
+    // write (matched files' manifest n_rows minus replaced/deleted rows
+    // plus the upsert arm) — shape the file count to the data instead of
+    // inheriting ~one tiny file per upstream task. Stats-manifest tables
+    // keep their natural boundaries (file-level clustering).
+    val rewriteAll = keptOld.unionByName(entering)
+    val rewriteDf =
+      if (fs.exists(statsDir)) rewriteAll
+      else rewriteAll.coalesce(commitFileParts(estRows))
+    val (_, rewritten) = writeClaimedDir(spark, fs, path, rewriteDf)
+    // a constraint may have landed since the gate: re-enforce the NEW
+    // ones against the upsert arm
+    val csNow = checkConstraints(spark, path).filterNot(cs0.contains)
+    if (nUp > 0L && csNow.nonEmpty)
+      enforceConstraintsOn(spark, entering, csNow, s"mergeInto($path)")
+    // MERGE deliberately keeps the strict publish (no disjoint-set
+    // rebase): its match/insert split was computed against the WHOLE
+    // key set of the base version, so even a file-disjoint concurrent
+    // append can invalidate it (an appended row carrying a source key
+    // should have been an UPDATE — rebasing would silently insert a
+    // duplicate). Delta draws the same line: ConcurrentAppendException
+    // for merges that read the table, rebase only for blind appends.
+    val next = v0 + 1
+    writeVersionDelta(spark, fs, path, next, m0.schemaDdl,
+      base = v0, add = rewritten, remove = matchedEntries.map(_._1),
+      streamBatchId = streamBatchId, op = Some("merge"))
+    writeVersionPointer(spark, fs, path, next)
+    if (fs.exists(statsDir)) {
+      val tracked = spark.read.json(statsDir.toString).schema.fieldNames.toSeq
+        .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
+      if (tracked.nonEmpty) appendStats(spark, path, tracked)
+    }
+    refreshBloomIndexes(spark, fs, path)
+    next
   }
 
   /** Make a STREAM-WRITTEN table versioned — the commit half of the
@@ -4192,16 +4295,22 @@ object Lake {
     files.toIndexedSeq.map(f =>
       fs.makeQualified(new org.apache.hadoop.fs.Path(f)).toString)
 
+  /** Read `files` with the schema of the manifest that lists them. The
+    * manifest DDL is the files' physical schema, so the scan needs no
+    * footer-inference job; `schemaDdl` must belong to the manifest that
+    * lists `files` (a column the DDL names but a file lacks reads as NULL).
+    */
   private def readSomeFiles(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
-      files: Seq[String], schemaDdl: String): DataFrame =
+      files: Seq[String], schemaDdl: String): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(schemaDdl)
     if (files.isEmpty)
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     else if (readSchemaManifests(spark, path).nonEmpty)
       evolvedRead(spark, path, Some(files))
-    else spark.read.parquet(qualifyForRead(fs, files): _*)
+    else spark.read.schema(schema).parquet(qualifyForRead(fs, files): _*)
+  }
 
   /** Upgrade a pre-manifest versioned layout in place: every bare `v=N`
     * dir gets a manifest built from its own files' footers. No-op for

@@ -185,10 +185,13 @@ object Ingest {
     *      versions the commit just published through the change feed into
     *      one file-granular merge on the gold table (watermark rides the
     *      gold commit; a replayed batch no-ops at BOTH layers).
-    * Gold is per (location_id, sensor_type): event count + value sum —
-    * refresh cost ∝ the batch and the touched gold keys, never the
-    * accumulated silver table, which is what lets the chain run 24/7
-    * against an unbounded table.
+    * Gold is per (location_id, sensor_type): event count + value sum.
+    * Each fold reads the batch's silver files, scans the small gold table
+    * once and rewrites only the gold files holding touched keys — never
+    * the accumulated silver table, which is what lets the chain run 24/7
+    * against an unbounded table. A steady micro-batch starts six Spark
+    * jobs: the silver write and the fold's five (see
+    * [[graft.sources.Lake.refreshIncremental]]).
     */
   def runContinuousSilverGoldPipeline(spark: SparkSession,
       landingDir: String, silverDir: String, goldDir: String,

@@ -262,6 +262,56 @@ class StreamingSpec extends SparkSpec {
     assert(Lake.listVersions(spark, goldDir) == goldVersions)
   }
 
+  test("continuous silver→gold: a steady micro-batch stays within its job budget") {
+    import java.util.concurrent.ConcurrentHashMap
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftSqlShims
+    val root = Files.createTempDirectory("graft-stream-jobs")
+    val landing = Files.createDirectory(root.resolve("landing"))
+    for (f <- 0 until 3)
+      writeFile(landing, s"b$f.jsonl", (0 until 12).map(i =>
+        evt(f"d$f$i%02d", s"l${i % 3}", "2024-01-01T00:00:00",
+          if (i % 2 == 0) "temperature" else "humidity", "good", i.toDouble)))
+    // Jobs per micro-batch. Spark stamps each job with the batch id of the
+    // thread that submits it; a pooled helper thread can carry a stale id
+    // from the batch that created it, and batches run one at a time, so a
+    // job belongs to the newest batch id seen so far. The tag keeps other
+    // suites' jobs out.
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val current = new AtomicLong(-1L)
+    val perBatch = new ConcurrentHashMap[Long, AtomicLong]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("graft.spec.tag") == tag)
+          .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach { b =>
+            val batch = current.accumulateAndGet(b.toLong, math.max)
+            perBatch.computeIfAbsent(batch, _ => new AtomicLong).incrementAndGet()
+          }
+    }
+    GraftSqlShims.drainListeners(sc)
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.spec.tag", tag)
+    try {
+      Ingest.runContinuousSilverGoldPipeline(spark, landing.toString,
+        root.resolve("silver").toString, root.resolve("gold").toString,
+        root.resolve("ckpt").toString, maxFilesPerTrigger = Some(1))
+      GraftSqlShims.drainListeners(sc)
+    } finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      sc.removeSparkListener(l)
+    }
+    val jobs = (0L until 3L).map(b => Option(perBatch.get(b)).fold(0L)(_.get))
+    // a steady batch: the silver append's write, then the gold fold's
+    // view broadcast, feed aggregate, merged-row collect, matched-key
+    // broadcast and rewrite. Before the fold scanned its view once and
+    // Lake reads took the manifest schema, the same batch started 17.
+    assert(jobs.forall(_ > 0) && jobs.tail.forall(_ <= 6L),
+      s"jobs per micro-batch: $jobs")
+  }
+
   test("manifest-stream view maintenance folds commits exactly once") {
     import graft.sources.Lake
     import spark.implicits._
