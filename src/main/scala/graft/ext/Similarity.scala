@@ -1199,10 +1199,16 @@ object Similarity {
 
   private def pruneStatsFor(sp: SparkSession, path: String,
       probed: Seq[Long]): (Long, Long) = {
-    val manifest = sp.read.json(s"$path/_graft_stats")
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(sp.sparkContext.hadoopConfiguration)
+    val manifest = graft.sources.StatsManifest.read(fs,
+      graft.sources.StatsManifest.dir(path))
     val keep = probed.map(c =>
       graft.sources.Lake.skipRange("cell", lit(c), lit(c))).reduce(_ || _)
-    (manifest.filter(keep).count(), manifest.count())
+    // the filter folds over the manifest's LocalRelation; counting the
+    // collected rows keeps it job-free (count() would be an aggregate)
+    (manifest.frame(sp).filter(keep).collect().length.toLong,
+      manifest.rows.size.toLong)
   }
 
   /** IVFADC search where the nprobe probe prunes FILES: the scan reads

@@ -435,12 +435,7 @@ object Lake {
         // the commits that degrade probe pruning, so leaving the manifest
         // stale here would make every post-append readSkipping refuse):
         // O(batch) — stats are computed for the fresh files only
-        val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
-        if (fs.exists(statsDir)) {
-          val tracked = spark.read.json(statsDir.toString).schema.fieldNames
-            .toSeq.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-          if (tracked.nonEmpty) appendStats(spark, path, tracked)
-        }
+        keepStatsLive(spark, fs, path)
         refreshBloomIndexes(spark, fs, path)
         // table-level auto-compaction (see setAutoOptimize): runs AFTER
         // this commit published, in its own maintenance commit — the
@@ -664,10 +659,8 @@ object Lake {
     // a stand-in manifest carrying only what readFilesWithDv consults
     def dvView(ddl: String, dvs: Seq[DvEntry]) =
       VersionManifest(0L, ddl, Nil, dvs)
-    def tombFrame(dvs: Seq[DvEntry]): DataFrame = spark.read
-      .parquet(qualifyForRead(fs, dvs.map(d => resolveRef(root, d.dv))): _*)
-      .select(org.apache.spark.sql.functions.col("file"),
-        org.apache.spark.sql.functions.col("pos"))
+    def tombFrame(dvs: Seq[DvEntry]): DataFrame = readTombstones(spark, fs,
+      dvs.map(d => resolveRef(root, d.dv)))
     val parts: Seq[DataFrame] = inRange.flatMap { v =>
       val raw = readRawManifest(spark, fs, path, v).getOrElse(
         sys.error(s"version $v has no manifest under $path"))
@@ -2054,11 +2047,7 @@ object Lake {
         add = rewritten, remove = matchedEntries.map(_._1), op = "delete")
       // keep an existing skipping manifest live: the rewritten files gain
       // stats rows incrementally (O(rewritten), not a corpus re-scan)
-      if (fs.exists(statsDir)) {
-        val tracked = spark.read.json(statsDir.toString).schema.fieldNames
-          .toSeq.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-        if (tracked.nonEmpty) appendStats(spark, path, tracked)
-      }
+      keepStatsLive(spark, fs, path)
       refreshBloomIndexes(spark, fs, path)
       // metadata-only audit count from the manifests' per-file n_rows: rows
       // in the matched (resolved-source) files minus rows in their rewrites
@@ -2197,8 +2186,7 @@ object Lake {
     }
     // covered-file list: path strings only to the driver (the engine's
     // metadata-transfer rule), bounded by the candidate file count
-    val covered = spark.read
-      .parquet(qualifyForRead(fs, written.map(e => resolveRef(root, e._1))): _*)
+    val covered = readTombstones(spark, fs, written.map(e => resolveRef(root, e._1)))
       .select("file").distinct().collect().map(_.getString(0)).toSeq
     val next = publishNonCommuting(spark, fs, path, v0, m0.schemaDdl,
       add = Nil, remove = Nil, op = "dvdelete",
@@ -2265,12 +2253,7 @@ object Lake {
       add = rewritten, remove = dvdRel, op = "purge",
       readSet = dvdRel.toSet)
     // keep an existing skipping manifest live over the purged rewrites
-    val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
-    if (fs.exists(statsDir)) {
-      val tracked = spark.read.json(statsDir.toString).schema.fieldNames
-        .toSeq.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-      if (tracked.nonEmpty) appendStats(spark, path, tracked)
-    }
+    keepStatsLive(spark, fs, path)
     refreshBloomIndexes(spark, fs, path)
     (next, dvdRel.size.toLong)
   }
@@ -2318,10 +2301,9 @@ object Lake {
       fs: org.apache.hadoop.fs.FileSystem, root: String,
       dvs: Seq[DvEntry], files: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    spark.read
-      .parquet(qualifyForRead(fs, dvs.map(d => resolveRef(root, d.dv))): _*)
+    readTombstones(spark, fs, dvs.map(d => resolveRef(root, d.dv)))
       .filter(col("file").isin(files: _*))
-      .select("file", "pos").distinct()
+      .distinct()
   }
 
   /** The live deletion-vector sidecars at `version` (default: current):
@@ -2693,11 +2675,7 @@ object Lake {
       base = v0, add = rewritten, remove = matchedEntries.map(_._1),
       streamBatchId = streamBatchId, op = Some("merge"))
     writeVersionPointer(spark, fs, path, next)
-    if (fs.exists(statsDir)) {
-      val tracked = spark.read.json(statsDir.toString).schema.fieldNames.toSeq
-        .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-      if (tracked.nonEmpty) appendStats(spark, path, tracked)
-    }
+    keepStatsLive(spark, fs, path)
     refreshBloomIndexes(spark, fs, path)
     next
   }
@@ -3406,12 +3384,7 @@ object Lake {
     val next = publishNonCommuting(spark, fs, path, v0, ddl,
       add = folded, remove = small.map(_._1._1), op = "optimize")
     // keep an existing skipping manifest live over the folded files
-    val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
-    if (fs.exists(statsDir)) {
-      val tracked = spark.read.json(statsDir.toString).schema.fieldNames.toSeq
-        .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-      if (tracked.nonEmpty) appendStats(spark, path, tracked)
-    }
+    keepStatsLive(spark, fs, path)
     refreshBloomIndexes(spark, fs, path)
     (next, small.size.toLong)
   }
@@ -3571,13 +3544,7 @@ object Lake {
     // already tracked this is an O(new files) append; a manifest not yet
     // tracking c (or absent) rebuilds in full — same cost class as the
     // rewrite that just ran
-    val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
-    val statsCols: Seq[String] =
-      if (!fs.exists(statsDir)) Seq(c)
-      else (spark.read.json(statsDir.toString).schema.fieldNames.toSeq
-        .filter(_.startsWith("min_")).map(_.stripPrefix("min_")) :+ c).distinct
-    if (fs.exists(statsDir)) appendStats(spark, path, statsCols)
-    else writeStats(spark, path, statsCols)
+    appendStats(spark, path, (StatsManifest.trackedAt(fs, path) :+ c).distinct)
     refreshBloomIndexes(spark, fs, path)
     (next, rewritten.size.toLong)
   }
@@ -3904,15 +3871,28 @@ object Lake {
   private def fileEntries(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
       files: Seq[String]): Seq[(String, Long)] = {
+    import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     val root = rootPath(fs, new org.apache.hadoop.fs.Path(path))
     files.map { abs =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(abs), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val n = try r.getRecordCount finally r.close()
+      val n = readFooter(conf, new org.apache.hadoop.fs.Path(abs))
+        .getBlocks.asScala.map(_.getRowCount).sum
       (abs.stripPrefix(root + "/"), n)
     }
+  }
+
+  /** A parquet file's footer, read the way Spark's own footer reader does
+    * (options and one stream, about 1 ms a file on local disk);
+    * `ParquetFileReader.open` also builds a whole reader and costs ten
+    * times that.
+    */
+  private[sources] def readFooter(conf: org.apache.hadoop.conf.Configuration,
+      p: org.apache.hadoop.fs.Path): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+    val s = in.newStream()
+    try org.apache.parquet.hadoop.ParquetFileReader.readFooter(in,
+      org.apache.parquet.HadoopReadOptions.builder(conf, p).build(), s)
+    finally s.close()
   }
 
   private def entriesJson(entries: Seq[(String, Long)]): String =
@@ -4151,11 +4131,17 @@ object Lake {
   private def colMapAtHead(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
       path: String): Seq[(String, String)] =
-    if (!fs.exists(versionsDir(path))) Nil
-    else manifestVersions(fs, path).lastOption.map { last =>
-      val v = readVersionPointer(fs, path).getOrElse(last)
-      readVersionManifest(spark, fs, path, v).map(_.colmap).getOrElse(Nil)
-    }.getOrElse(Nil)
+    headManifest(spark, fs, path).map(_.colmap).getOrElse(Nil)
+
+  /** The HEAD version's manifest (None when none / not versioned). */
+  private def headManifest(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Option[VersionManifest] =
+    if (!fs.exists(versionsDir(path))) None
+    else manifestVersions(fs, path).lastOption.flatMap { last =>
+      readVersionManifest(spark, fs, path,
+        readVersionPointer(fs, path).getOrElse(last))
+    }
 
   /** Refusal for operations whose scans/rewrites/predicates would bypass
     * the logical-name projection (the [[requireNoDvs]] discipline):
@@ -4243,9 +4229,7 @@ object Lake {
             relDataPathCol(col("_metadata.file_path"), root))
           .withColumn(DvPosCol, col("_metadata.row_index"))
     if (dvd.isEmpty) return tagged(files)
-    val tombRaw = spark.read
-      .parquet(qualifyForRead(fs, m.dvs.map(d => resolveRef(root, d.dv))): _*)
-      .select(col("file"), col("pos"))
+    val tombRaw = readTombstones(spark, fs, m.dvs.map(d => resolveRef(root, d.dv)))
     val tomb =
       if (m.dvs.map(_.nDel).sum <= DvBroadcastPositions) broadcast(tombRaw)
       else tombRaw
@@ -4260,6 +4244,15 @@ object Lake {
   private val DvSrcFileCol = "_graft_src_file"
   private val DvPosCol = "_graft_src_pos"
 
+  /** Deletion-vector sidecars (`sidecars`: absolute paths) under their
+    * fixed schema — table-relative data file, row position — so a
+    * tombstone read needs no footer-inference job.
+    */
+  private def readTombstones(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, sidecars: Seq[String]): DataFrame =
+    spark.read.schema("file STRING, pos BIGINT")
+      .parquet(qualifyForRead(fs, sidecars): _*)
+
   // 1M (file, pos) rows ≈ 60 MB serialized — the comfortable broadcast
   // ceiling; a bigger live tombstone set (the signal the table is overdue
   // for purgeDeletes) falls back to a shuffle anti-join on the covered
@@ -4269,8 +4262,8 @@ object Lake {
   /** Normalize an absolute file-path column (`input_file_name` /
     * `_metadata.file_path` form: scheme-qualified, percent-encoded) to
     * the TABLE-RELATIVE identity tombstones are keyed by — the Column
-    * twin of the driver-side `URI.getPath.stripPrefix(root)`, sharing
-    * [[pruneCandidatesWithStats]]'s decode contract.
+    * twin of the driver-side `URI.getPath.stripPrefix(root)`: `%XX`
+    * escapes decode, a literal `+` stays a `+`.
     */
   private def relDataPathCol(c: org.apache.spark.sql.Column,
       root: String): org.apache.spark.sql.Column = {
@@ -4550,12 +4543,7 @@ object Lake {
       // leaves the manifest stale and every later readSkipping refuses
       // until a full writeStats): O(batch), tracked columns only — the
       // drift is additive, so old tracked columns exist in the new files
-      val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
-      if (fs.exists(statsDir)) {
-        val tracked = spark.read.json(statsDir.toString).schema.fieldNames
-          .toSeq.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-        if (tracked.nonEmpty) appendStats(spark, path, tracked)
-      }
+      keepStatsLive(spark, fs, path)
       refreshBloomIndexes(spark, fs, path)
     }
     next
@@ -4722,9 +4710,12 @@ object Lake {
     * compact/append; `readSkipping` refuses a stale manifest).
     *
     * `readSkipping` filters the manifest with `keep` (build it with
-    * [[skipRange]]) and hands Spark only the surviving files. The collect
-    * is METADATA-proportional — one short string per file, the same
-    * driver-side planning cost Delta pays — never data-proportional.
+    * [[skipRange]]) and hands Spark only the surviving files. The manifest
+    * is planning metadata, read on the driver like Delta reads its log
+    * ([[StatsManifest]]: a Jackson parse of the JSON lines, no Spark job);
+    * the cost is METADATA-proportional — O(files × tracked columns)
+    * driver memory, the order of the version manifest every read
+    * resolves — never data-proportional.
     *
     * Skipping is only sound for predicates that can never match a row the
     * stats bounds exclude: [[skipRange]] range predicates are (nulls make
@@ -4761,9 +4752,9 @@ object Lake {
     val staging = new org.apache.hadoop.fs.Path(path, "._graft_stats.rebuild")
     fs.delete(staging, true)
     stats.coalesce(1).write.mode(SaveMode.Overwrite).json(staging.toString)
-    val out = new org.apache.hadoop.fs.Path(path, "_graft_stats")
+    val out = StatsManifest.dir(path)
     publishManifest(fs, staging, out, path)
-    spark.read.json(out.toString).count()
+    StatsManifest.lines(fs, out).size.toLong
   }
 
   /** Publish a staged manifest dir via RENAME-ASIDE (compact's protocol,
@@ -4792,9 +4783,9 @@ object Lake {
 
   /** INCREMENTAL stats append — the O(batch) complement of [[writeStats]]
     * for append-only tables: compute per-file min/max/n_rows for ONLY the
-    * data files the manifest does not cover yet (scanning just those
-    * files) and publish old + new manifest rows together. The manifest
-    * stays a single metadata-sized JSON file, rewritten via a tmp dir +
+    * data files the manifest does not cover yet (read from their parquet
+    * footers when every tracked column is integral, else scanning just
+    * those files) and add them as one more manifest file, landed by
     * rename so a reader never sees a partial manifest. This is what keeps
     * an admit loop batch-proportional: full `writeStats` re-scans the
     * corpus on every append, which at 100 TB turns each day's intake into
@@ -4807,55 +4798,78 @@ object Lake {
     */
   def appendStats(spark: SparkSession, path: String,
       statsCols: Seq[String]): Long = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    appendStatsTo(spark, fs, path, statsCols, StatsManifest.at(fs, path))
+  }
+
+  /** Keep an existing stats manifest live over a commit's new files: an
+    * [[appendStats]] over every column it tracks; no-op without one.
+    */
+  private def keepStatsLive(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
+    StatsManifest.at(fs, path).filter(_.tracked.nonEmpty).foreach(m =>
+      appendStatsTo(spark, fs, path, m.tracked, Some(m)))
+
+  /** [[appendStats]] against the manifest already read (None: none yet). */
+  private def appendStatsTo(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String,
+      statsCols: Seq[String], manifest: Option[StatsManifest]): Long = {
     import org.apache.spark.sql.functions._
     require(statsCols.nonEmpty, "appendStats needs at least one column")
     val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireNoColMap(spark, fs, path, "appendStats")
-    val manifestDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
-    if (!fs.exists(manifestDir)) return writeStats(spark, path, statsCols)
-    val manifest = spark.read.json(manifestDir.toString)
+    val manifestDir = StatsManifest.dir(path)
+    val m = manifest.getOrElse(return writeStats(spark, path, statsCols))
     // append rows for EVERY column the manifest tracks, not just the ones
     // this caller asked about — selecting a subset would silently drop the
     // other columns' bounds from the merged manifest (a Z-ordered table
     // tracks several). A manifest from an older layout (missing n_rows,
     // or not covering the requested columns) rebuilds in full instead.
-    val tracked = manifest.schema.fieldNames.toSeq
-      .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
+    val tracked = m.tracked
     val appendCols =
-      if (statsCols.forall(tracked.contains) &&
-          manifest.schema.fieldNames.contains("n_rows")) tracked
+      if (statsCols.forall(tracked.contains) && m.has("n_rows")) tracked
       else return writeStats(spark, path, statsCols)
-    val covered = manifest.select("file").collect()
-      .map(r => new java.net.URI(r.getString(0)).getPath).toSet
+    val covered = m.files.toSet
     val fresh = currentDataFiles(spark, fs, hp, path).filterNot(covered)
     if (fresh.isEmpty) return 0L
-    val aggs = appendCols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
-      count(lit(1)).as("n_rows")
-    // scan ONLY the fresh files — evolved tables resolve through the
-    // schema manifests like every other subset read
-    val freshStats = readFileSubset(spark, path, fresh)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
+    // integral bounds come from the fresh files' parquet footers, with no
+    // Spark job; any other column scans ONLY the fresh files, and Spark's
+    // JSON generator renders the rows. A schema-evolving table always
+    // scans: its files may hold a column under an older name or type, and
+    // its reads resolve them through the schema manifests
+    val footerLines =
+      if (readSchemaManifests(spark, path).isEmpty)
+        StatsManifest.fromFooters(fs, fresh, appendCols)
+      else None
+    val lines = footerLines.getOrElse {
+      val aggs = appendCols.flatMap(c =>
+        Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
+        count(lit(1)).as("n_rows")
+      readFileSubset(spark, path, fresh)
+        .groupBy(input_file_name().as("file"))
+        .agg(aggs.head, aggs.tail: _*)
+        .toJSON.collect().toSeq
+    }
     // the manifest is a DIRECTORY of json files: an append ADDS one
     // metadata-sized file rather than rewriting the whole manifest — at
     // ~800k data files a merged rewrite is ~100 MB of json churn per
-    // admit, where this is a few KB; readers (spark.read.json over the
-    // dir) see the union either way, and each added file lands via one
-    // atomic rename (a reader never sees partial rows)
-    val staging = new org.apache.hadoop.fs.Path(path, "._graft_stats.append")
-    fs.delete(staging, true)
-    freshStats.coalesce(1).write.mode(SaveMode.Overwrite).json(staging.toString)
-    val parts = fs.listStatus(staging).filter(f =>
-      f.isFile && f.getPath.getName.startsWith("part-"))
-    parts.zipWithIndex.foreach { case (p, i) =>
+    // admit, where this is a few KB. Readers list the dir and parse every
+    // file on the driver (StatsManifest: no Spark job, O(files × tracked
+    // columns) memory), so they see the union, and the added file lands
+    // via one atomic rename of a per-writer staging file (a reader never
+    // sees partial rows)
+    if (lines.nonEmpty) {
+      val staging = new org.apache.hadoop.fs.Path(path,
+        s"._graft_stats.append.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+      val out = fs.create(staging, true)
+      try lines.foreach(l => out.write((l + "\n").getBytes("UTF-8")))
+      finally out.close()
       val dst = new org.apache.hadoop.fs.Path(manifestDir,
-        s"append-${System.nanoTime()}-$i.json")
-      require(fs.rename(p.getPath, dst),
+        s"append-${System.nanoTime()}-0.json")
+      require(fs.rename(staging, dst),
         s"appendStats: could not add manifest file under $path")
     }
-    fs.delete(staging, true)
     // SELF-FOLDING: past the threshold the accreted append files fold
     // back to one (metadata-only, identical pruning) — the same
     // automatic-maintenance posture setAutoOptimize gives data files,
@@ -4881,9 +4895,9 @@ object Lake {
   /** METADATA-ONLY stats-manifest compaction: fold the `append-*.json`
     * files [[appendStats]] accretes (one per admit — deliberately, to keep
     * each admit O(batch)) back into ONE manifest file. After 10k admits
-    * every screen's `spark.read.json(_graft_stats)` pays a 10k-file
-    * listing; this folds them reading only the manifest itself — never
-    * data — and publishes via the same staged-write + rename-aside swap as
+    * every reader of the manifest pays a 10k-file listing and open; this
+    * folds them reading only the manifest itself — never data — and
+    * publishes via the same staged-write + rename-aside swap as
     * [[writeStats]], with bit-identical pruning decisions before and
     * after. ([[writeStats]] also yields a single file but at corpus-scan
     * cost; [[rerange]] folds as a side effect of its writeStats rebuild
@@ -4895,42 +4909,29 @@ object Lake {
   def compactStats(spark: SparkSession, path: String): (Long, Long) = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifestDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
+    val manifestDir = StatsManifest.dir(path)
     require(fs.exists(manifestDir), s"no _graft_stats manifest under $path")
-    def manifestFiles() = fs.listStatus(manifestDir).count(f =>
-      f.isFile && !f.getPath.getName.startsWith(".") &&
-        !f.getPath.getName.startsWith("_"))
-    val nBefore = manifestFiles().toLong
-    val manifest = spark.read.json(manifestDir.toString)
+    val nBefore = manifestFileCount(fs, manifestDir).toLong
     // drop rows for files no longer ON DISK (vacuumed / compacted away):
     // current readers already ignore them, but without this the manifest
     // grows forever under a delete/merge-heavy table. Files merely
     // RETIRED (still on disk for time travel) keep their rows — harmless,
-    // and a restored version could need them again. The filter runs
-    // DISTRIBUTIVELY (broadcast semi-join against the on-disk file list):
-    // at ~800k files a driver-side collect of the whole manifest is
-    // ~100 MB of Row objects for a housekeeping call; only the final
-    // coalesce(1) write stays single-task by design.
-    val onDisk = listDataFiles(fs, hp)
-    // manifest `file` values carry whatever scheme input_file_name gave
-    // them; the on-disk list is scheme-less — strip "scheme:[//authority]"
-    // to compare in the scheme-less identity form used everywhere else
-    val normFile = org.apache.spark.sql.functions.regexp_replace(
-      org.apache.spark.sql.functions.col("file"),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", "")
-    val onDiskDf = spark.createDataset(onDisk.toIndexedSeq)(
-      org.apache.spark.sql.Encoders.STRING).toDF("_graft_on_disk")
-    val kept = manifest.join(
-      org.apache.spark.sql.functions.broadcast(onDiskDf),
-      normFile === org.apache.spark.sql.functions.col("_graft_on_disk"),
-      "leftsemi")
-    val dead = manifest.count() - kept.count()
-    if (nBefore <= 1 && dead == 0L) return (nBefore, nBefore)
+    // and a restored version could need them again. The whole fold runs
+    // on the driver: the lines are parsed once (O(files) memory, the
+    // order of the on-disk listing it is checked against), and the kept
+    // lines are written back verbatim — no Spark job.
+    val lines = StatsManifest.lines(fs, manifestDir)
+    val onDisk = listDataFiles(fs, hp).toSet
+    val kept = lines.zip(StatsManifest.parse(lines, manifestDir.toString).files)
+      .collect { case (line, f) if onDisk(f) => line }
+    if (nBefore <= 1 && kept.size == lines.size) return (nBefore, nBefore)
     val staging = new org.apache.hadoop.fs.Path(path, "._graft_stats.rebuild")
     fs.delete(staging, true)
-    kept.coalesce(1).write.mode(SaveMode.Overwrite).json(staging.toString)
+    val out = fs.create(new org.apache.hadoop.fs.Path(staging, "part-00000.json"))
+    try kept.foreach(l => out.write((l + "\n").getBytes("UTF-8")))
+    finally out.close()
     publishManifest(fs, staging, manifestDir, path)
-    (nBefore, manifestFiles().toLong)
+    (nBefore, manifestFileCount(fs, manifestDir).toLong)
   }
 
   /** Table row count from the `_graft_stats` manifest, if one exists, is
@@ -4942,25 +4943,19 @@ object Lake {
   def rowCountFromManifest(spark: SparkSession, path: String): Option[Long] = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifestDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
-    if (!fs.exists(manifestDir)) None
-    else {
-      val manifest = spark.read.json(manifestDir.toString)
-      if (!manifest.schema.fieldNames.contains("n_rows")) None // pre-n_rows manifest
-      else {
-        // manifest rows are metadata-sized (one per file): resolve on the
-        // driver, summing only files that still exist (a manifest may
-        // carry rows for since-compacted files; counting them would
-        // overstate, and a file NOT covered at all means stale → None)
-        val current = currentDataFiles(spark, fs, hp, path).toSet
-        // toMap dedupes by file: concurrent appendStats can double-cover
-        // a file and a duplicate row must not double-count it
-        val rows = manifest.select("file", "n_rows").collect()
-          .map(r => (new java.net.URI(r.getString(0)).getPath, r.getLong(1)))
-          .toMap
-        if (!current.subsetOf(rows.keySet)) None
-        else Some(rows.collect { case (f, n) if current(f) => n }.sum)
-      }
+    // the manifest is metadata-sized (one row per file): parsed and
+    // resolved on the driver, summing only files that still exist (a
+    // manifest may carry rows for since-compacted files; counting them
+    // would overstate, and a file NOT covered at all means stale → None)
+    StatsManifest.at(fs, path).filter(_.has("n_rows")).flatMap { m =>
+      val current = currentDataFiles(spark, fs, hp, path).toSet
+      // toMap dedupes by file: concurrent appendStats can double-cover
+      // a file and a duplicate row must not double-count it; a manifest
+      // older than n_rows answers None
+      val n = m.schema.fieldIndex("n_rows")
+      val rows = m.files.zip(m.rows.map(_.getLong(n))).toMap
+      if (!current.subsetOf(rows.keySet)) None
+      else Some(rows.collect { case (f, c) if current(f) => c }.sum)
     }
   }
 
@@ -4982,8 +4977,10 @@ object Lake {
     // manifest may still carry rows for files a delete retired — reading
     // one would resurrect deleted rows. DISTINCT because concurrent
     // appendStats calls can double-cover a file — a duplicate manifest
-    // row must never become a double data read
-    val files = manifest.filter(keep).select("file").distinct().collect()
+    // row must never become a double data read. The filter folds over
+    // the manifest's LocalRelation and the dedupe runs on the driver (a
+    // distinct() would be an aggregate, and start a job)
+    val files = manifest.frame(spark).filter(keep).select("file").collect()
       .map(r => new java.net.URI(r.getString(0)).getPath)
       .filter(current).distinct
     readFileSubset(spark, path, files.toIndexedSeq)
@@ -5223,12 +5220,7 @@ object Lake {
       add = entries, remove = Nil, op = "wap",
       streamBatchId = streamBatchId)
     // same keep-alive invariants as every other committing path
-    val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
-    if (fs.exists(statsDir)) {
-      val tracked = spark.read.json(statsDir.toString).schema.fieldNames
-        .toSeq.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-      if (tracked.nonEmpty) appendStats(spark, path, tracked)
-    }
+    keepStatsLive(spark, fs, path)
     refreshBloomIndexes(spark, fs, path)
     fs.delete(claimed, false)
     next
@@ -5358,15 +5350,14 @@ object Lake {
     * covered-but-retired files would resurrect deleted rows).
     */
   private def validatedManifest(spark: SparkSession,
-      path: String): (DataFrame, Set[String]) = {
+      path: String): (StatsManifest, Set[String]) = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifestDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
+    val manifestDir = StatsManifest.dir(path)
     require(fs.exists(manifestDir), s"no _graft_stats manifest under $path")
-    val manifest = spark.read.json(manifestDir.toString)
+    val manifest = StatsManifest.read(fs, manifestDir)
     val current = currentDataFiles(spark, fs, hp, path).toSet
-    val listed = manifest.select("file").collect()
-      .map(r => new java.net.URI(r.getString(0)).getPath).toSet
+    val listed = manifest.files.toSet
     require(current.subsetOf(listed),
       s"stale _graft_stats manifest under $path: " +
         s"${(current -- listed).size} data file(s) not covered - re-run writeStats")
@@ -5374,42 +5365,26 @@ object Lake {
   }
 
   /** Narrow a commit's candidate file list with the `_graft_stats`
-    * manifest, DISTRIBUTIVELY — the same broadcast-join shape as
-    * [[compactStats]]: per-file keep verdicts are computed in the cluster
-    * and only the candidate PATH strings come back to the driver, never
-    * the manifest's stats rows (at ~800k files those are ~100 MB of Row
-    * objects; the path list is the same metadata the version manifest
-    * already put on the driver). Contracts preserved from the filter
-    * form: a file with no stats row stays a candidate (superset rule),
-    * and duplicate rows from concurrent appendStats keep the file if ANY
-    * row keeps it.
+    * manifest. The manifest is read on the driver ([[StatsManifest]]) and
+    * `keep` is evaluated over its `LocalRelation` frame, which folds on
+    * the driver: no Spark job, O(files) driver memory — the order of the
+    * version manifest that listed `abs0`. Contracts: a file with no stats
+    * row stays a candidate (superset rule), and duplicate rows from
+    * concurrent appendStats keep the file if ANY row keeps it. Manifest
+    * `file` values compare in URI.getPath form (input_file_name
+    * URL-encodes a space as `%20`; a literal `+` stays a `+`).
     */
   private[graft] def pruneCandidatesWithStats(spark: SparkSession,
       statsDir: org.apache.hadoop.fs.Path,
       keep: org.apache.spark.sql.Column,
       abs0: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, max, regexp_replace, url_decode, when}
-    val stats = spark.read.json(statsDir.toString)
-    // scheme-strip AND percent-decode, mirroring java.net.URI.getPath on
-    // the candidate side: input_file_name URL-encodes spaces etc., and an
-    // undecoded mismatch silently loses pruning for those files (kept via
-    // the superset rule — correct, but the skip quietly degrades).
-    // Literal '+' is protected first: url_decode is form-decoding ('+' →
-    // space), but URI paths only escape via '%'.
-    val normFile = url_decode(regexp_replace(
-      regexp_replace(col("file"), "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", ""),
-      "\\+", "%2B"))
-    val verdicts = stats
-      .select(normFile.as("_graft_file"),
-        when(keep, lit(1)).otherwise(lit(0)).as("_graft_keep"))
-      .groupBy("_graft_file").agg(max(col("_graft_keep")).as("_graft_keep"))
-    val entries = spark.createDataset(abs0.toIndexedSeq)(
-      org.apache.spark.sql.Encoders.STRING).toDF("_graft_path")
-    entries
-      .join(broadcast(verdicts),
-        col("_graft_path") === col("_graft_file"), "left_outer")
-      .filter(col("_graft_keep").isNull || col("_graft_keep") === 1)
-      .select("_graft_path").collect().map(_.getString(0)).toIndexedSeq
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val fs = statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val verdicts = StatsManifest.read(fs, statsDir).frame(spark)
+      .select(col("file"), coalesce(keep, lit(false))).collect()
+      .groupMapReduce(r => new java.net.URI(r.getString(0)).getPath)(
+        _.getBoolean(1))(_ || _)
+    abs0.filter(f => verdicts.getOrElse(f, true)).toIndexedSeq
   }
 
   /** basePath keeps partition-dir columns in the schema when reading a
@@ -5438,13 +5413,18 @@ object Lake {
       full.limit(0)
     } else if (evolved) evolvedRead(spark, path, Some(files))
     // versioned tables are unpartitioned (our writers): no basePath, which
-    // over `v=N` rewrite dirs would hallucinate a `v` partition column;
-    // a column-mapped table's subset reads project to logical names like
-    // any full read (skipping/probe/lookup callers see the same schema)
-    else if (versioned) applyColMap(
-      spark.read.parquet(qualifyForRead(fs, files): _*),
-      colMapAtHead(spark, fs, path))
-    else spark.read.option("basePath", path)
+    // over `v=N` rewrite dirs would hallucinate a `v` partition column.
+    // The head manifest's DDL is the files' physical schema, so the scan
+    // needs no footer-inference job; a column-mapped table's subset reads
+    // project to logical names like any full read (skipping/probe/lookup
+    // callers see the same schema)
+    else if (versioned) {
+      val head = headManifest(spark, fs, path).getOrElse(
+        sys.error(s"$path has no head version manifest"))
+      applyColMap(spark.read
+        .schema(org.apache.spark.sql.types.StructType.fromDDL(head.schemaDdl))
+        .parquet(qualifyForRead(fs, files): _*), head.colmap)
+    } else spark.read.option("basePath", path)
       .parquet(qualifyForRead(fs, files): _*)
   }
 
@@ -5488,8 +5468,8 @@ object Lake {
         "pruning would be unsound - use skipRange, or zero-pad the key")
     // current-file intersection: covered-but-retired rows must not count
     // as prunable candidates, let alone be read
-    val rows = manifest.select(col("file"),
-      col(s"min_$c").cast("string"), col(s"max_$c").cast("string")).collect()
+    val rows = manifest.frame(spark).select(col("file"),
+      col(s"min_$c"), col(s"max_$c")).collect()
       .filter(r => current(new java.net.URI(r.getString(0)).getPath))
     val sorted = probes.distinct.sorted.toIndexedSeq
     // any probe in [lo, hi]? binary-search the first probe >= lo
@@ -6005,14 +5985,8 @@ object Lake {
       add = rewritten, remove = m0.entries.map(_._1), op = "zorder",
       full = true)
     // every clustered column ends up tracked, like rerange's contract
-    val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
-    val statsCols: Seq[String] =
-      if (!fs.exists(statsDir)) clusterCols
-      else (spark.read.json(statsDir.toString).schema.fieldNames.toSeq
-        .filter(_.startsWith("min_")).map(_.stripPrefix("min_")) ++
-        clusterCols).distinct
-    if (fs.exists(statsDir)) appendStats(spark, path, statsCols)
-    else writeStats(spark, path, statsCols)
+    appendStats(spark, path,
+      (StatsManifest.trackedAt(fs, path) ++ clusterCols).distinct)
     refreshBloomIndexes(spark, fs, path)
     (next, rewritten.size.toLong)
   }
@@ -6042,11 +6016,8 @@ object Lake {
     }
     // the rewrite drops the _graft_stats manifest (it describes the OLD
     // files); remember its columns so a fresh one is published after
-    val statsDir = new org.apache.hadoop.fs.Path(hp, "_graft_stats")
-    val statsCols: Seq[String] =
-      if (!fs.exists(statsDir)) Seq.empty
-      else spark.read.json(statsDir.toString).schema.fieldNames.toSeq
-        .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
+    val statsDir = StatsManifest.dir(path)
+    val statsCols = StatsManifest.trackedAt(fs, path)
     // an EVOLVED table's files carry DIFFERENT physical schemas: the
     // rewrite must read through the manifests (a plain parquet read binds
     // one footer's schema and silently drops other eras' columns) and the
@@ -6157,14 +6128,10 @@ object Lake {
     val evolved = readSchemaManifests(spark, path).nonEmpty
     def source = if (evolved) readEvolving(spark, path)
                  else spark.read.parquet(path)
-    val statsDir = new org.apache.hadoop.fs.Path(hp, "_graft_stats")
     // the re-range key ALWAYS ends up tracked: re-ranging exists to restore
     // probe pruning on `c`, so a pre-existing manifest that happens not to
     // track c must gain its bounds, not silently keep lacking them
-    val statsCols: Seq[String] =
-      if (!fs.exists(statsDir)) Seq(c)
-      else (spark.read.json(statsDir.toString).schema.fieldNames.toSeq
-        .filter(_.startsWith("min_")).map(_.stripPrefix("min_")) :+ c).distinct
+    val statsCols = (StatsManifest.trackedAt(fs, path) :+ c).distinct
     val nBefore = listDataFiles(fs, hp).size.toLong
     val nOut = math.max(1L,
       (source.count() + targetFileRows - 1) / targetFileRows)

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{AnalysisException, GraftSqlShims}
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
 import graft.sources.Lake
@@ -18,31 +16,6 @@ class ManifestFoldSpec extends SparkSpec {
 
   private def tmp(): String =
     Files.createTempDirectory("graft-fold").toString
-
-  /** Jobs `body` starts on this thread (and threads it spawns), counted
-    * through a local-property tag so other suites' jobs never leak in.
-    */
-  private def jobsOf(body: => Unit): Long = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicLong
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.spec.tag") == tag))
-          jobs.incrementAndGet()
-    }
-    GraftSqlShims.drainListeners(sc)
-    sc.addSparkListener(l)
-    sc.setLocalProperty("graft.spec.tag", tag)
-    try {
-      body
-      GraftSqlShims.drainListeners(sc)
-      jobs.get
-    } finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(l)
-    }
-  }
 
   test("manifest-schema reads equal footer inference and build with zero jobs") {
     val dir = tmp() + "/t"

@@ -1,0 +1,216 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.sources.{Lake, StatsManifest}
+
+/** The driver-side `_graft_stats` reader: the schema and rows it gives
+  * equal `spark.read.json` over the same manifest (Spark is the reference
+  * here only), and the skipping read and stats upkeep it serves stop
+  * starting Spark jobs for metadata.
+  */
+class StatsManifestSpec extends SparkSpec {
+
+  private def tmp(): String =
+    Files.createTempDirectory("graft-stats").toString
+
+  private def fsOf(dir: String) = new Path(dir)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Rows as sorted strings that carry each value's class, so a bigint
+    * read as an int, or a double as a decimal, does not compare equal.
+    */
+  private def show(rows: Seq[Row]): Seq[String] =
+    rows.map(_.toSeq.map {
+      case null => "null"
+      case v => s"${v.getClass.getSimpleName}:$v"
+    }.mkString("|")).sorted
+
+  private def assertSameAsSpark(d: Path): StatsManifest = {
+    val m = StatsManifest.read(fsOf(d.toString), d)
+    val ref = spark.read.json(d.toString)
+    assert(m.schema == ref.schema,
+      s"reader ${m.schema.toDDL} vs spark ${ref.schema.toDDL}")
+    val want = show(ref.collect().toSeq)
+    assert(show(m.rows) == want)
+    assert(show(m.frame(spark).collect().toSeq) == want)
+    m
+  }
+
+  test("the reader equals spark.read.json on a typed, appended stats manifest") {
+    val dir = tmp() + "/t"
+    def batch(lo: Long, n: Long) = spark.range(lo, lo + n).select(
+      col("id").cast("int").as("i"),
+      (col("id") * 3000000000L).as("l"),
+      (col("id") / 3.0).as("d"),
+      format_string("k%04d", col("id")).as("s"),
+      date_add(lit("2024-01-01").cast("date"), col("id").cast("int")).as("dt"),
+      timestamp_seconds(col("id") * 3601).as("ts"),
+      (col("id") / 8).cast("decimal(12,3)").as("dec"),
+      (col("id") % 2 === 0).as("b"),
+      // NULL bounds in every file past id 40, all-NULL everywhere
+      when(col("id") < 40, col("id")).as("sparse"),
+      lit(null).cast("int").as("none"))
+    val cols = Seq("i", "l", "d", "s", "dt", "ts", "dec", "b", "sparse", "none")
+    batch(0, 60).repartitionByRange(3, col("i")).write.parquet(dir)
+    assert(Lake.writeStats(spark, dir, cols) == 3)
+    // (`none` has no bounds to track, so asking for it would rebuild)
+    for (b <- 0 until 2) {
+      batch(60 + b * 10, 10).coalesce(1).write.mode("append").parquet(dir)
+      assert(Lake.appendStats(spark, dir, cols.filterNot(_ == "none")) == 1)
+    }
+    val d = StatsManifest.dir(dir)
+    assert(StatsManifest.files(fsOf(dir), d).count(_.getName.startsWith("append-")) == 2)
+    val m = assertSameAsSpark(d)
+    assert(m.rows.size == 5)
+    // the types Spark's inference gives these columns' bounds
+    Seq("min_i" -> LongType, "max_l" -> LongType, "min_d" -> DoubleType,
+      "min_s" -> StringType, "min_dt" -> StringType, "max_ts" -> StringType,
+      "min_dec" -> DoubleType, "max_b" -> BooleanType, "min_sparse" -> LongType,
+      "n_rows" -> LongType).foreach { case (f, t) =>
+      assert(m.schema(f).dataType == t, s"$f: ${m.schema(f).dataType}")
+    }
+    // an all-NULL column has no bounds in any row, so no field at all
+    assert(!m.has("min_none") && !m.has("max_none"))
+    assert(m.rows.count(r => r.isNullAt(m.schema.fieldIndex("min_sparse"))) == 3)
+    assert(m.tracked.toSet == (cols.toSet - "none"))
+  }
+
+  test("footer stats equal the per-file aggregate, and an append through them equals a rebuild") {
+    // a space in the path: `file` must spell it as input_file_name does
+    val dir = tmp() + "/t dir"
+    def batch(lo: Long, n: Long) = spark.range(lo, lo + n).select(
+      col("id").as("l"),
+      (col("id") * -7).cast("int").as("i"),
+      col("id").cast("short").as("sh"),
+      (col("id") % 100).cast("byte").as("by"),
+      // whole row groups of NULLs at both ends, all-NULL everywhere
+      when(col("id").between(500, 2500), col("id")).as("sparse"),
+      lit(null).cast("long").as("none"),
+      (col("id") / 2.0).as("d"),
+      format_string("k%04d", col("id")).as("s"),
+      date_add(lit("2024-01-01").cast("date"), col("id").cast("int")).as("dt"))
+    // small row groups, so a file's bounds fold several groups' statistics
+    batch(0, 3000).repartitionByRange(3, col("l")).sortWithinPartitions("l")
+      .write.option("parquet.block.size", 4096).parquet(dir)
+    val fs = fsOf(dir)
+    val files = spark.read.parquet(dir).inputFiles.toSeq.map(f => new java.net.URI(f).getPath)
+    assert(files.exists { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f),
+          spark.sparkContext.hadoopConfiguration))
+      try r.getRowGroups.size > 1 finally r.close()
+    }, "every file has a single row group")
+    val cols = Seq("l", "i", "sh", "by", "sparse", "none")
+    def aggregate(cs: Seq[String]): Seq[String] = {
+      val aggs = cs.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
+        count(lit(1)).as("n_rows")
+      spark.read.parquet(dir).groupBy(input_file_name().as("file"))
+        .agg(aggs.head, aggs.tail: _*).toJSON.collect().toSeq.sorted
+    }
+    assert(StatsManifest.fromFooters(fs, files, cols).map(_.sorted).contains(aggregate(cols)))
+    // bounds parquet orders otherwise, or a column a file lacks: the
+    // caller aggregates
+    Seq("d", "s", "dt", "absent").foreach(c =>
+      assert(StatsManifest.fromFooters(fs, files, Seq("l", c)).isEmpty, c))
+    // appendStats lands the footer rows as one more manifest file; the
+    // manifest then equals a full rebuild's
+    Lake.writeStats(spark, dir, cols.filterNot(_ == "none"))
+    batch(3000, 500).coalesce(1).write.mode("append").parquet(dir)
+    assert(Lake.appendStats(spark, dir, cols.filterNot(_ == "none")) == 1)
+    val d = StatsManifest.dir(dir)
+    assert(StatsManifest.files(fs, d).count(_.getName.startsWith("append-")) == 1)
+    val appended = assertSameAsSpark(d)
+    Lake.writeStats(spark, dir, cols.filterNot(_ == "none"))
+    val rebuilt = StatsManifest.read(fs, d)
+    assert(appended.schema == rebuilt.schema && show(appended.rows) == show(rebuilt.rows))
+  }
+
+  test("hand-written lines follow Spark's inference: mixed, exact text, wide integers, null-only") {
+    val d = new Path(tmp(), "_graft_stats")
+    Files.createDirectories(Paths.get(d.toString))
+    def put(name: String, lines: String*): Unit =
+      Files.write(Paths.get(d.toString, name), lines.mkString("\n").getBytes("UTF-8"))
+    put("part-00000.json",
+      """{"a":1,"b":"x","c":1.50,"d":true,"e":null,"f":12345678901234567890,"g":1.0E10}""",
+      """{"a":2.5,"b":3,"c":"y","d":1,"e":null,"f":5,"g":2,"w":100000000000000000000}""",
+      "",
+      """{"a":-0.0,"b":true,"c":-12.000,"d":false,"z_":1,"w":7}""")
+    put("append-1-0.json",
+      """{"k":"v\"qé","x":1,"n":-9223372036854775808}""",
+      """{"x":2,"f":-1.5}""")
+    // hidden names are not manifest files: Spark's listing skips them too
+    put("_SUCCESS")
+    put(".part-00000.json.crc", "not json")
+    val m = assertSameAsSpark(d)
+    assert(m.schema.fieldNames.toSeq == m.schema.fieldNames.sorted.toSeq)
+    assert(m.schema("c").dataType == StringType && m.schema("e").dataType == StringType)
+    assert(m.schema("w").dataType == DecimalType(21, 0))
+    assert(m.rows.size == 5)
+  }
+
+  test("a malformed manifest line fails loudly") {
+    Seq("""{"file":"f","min_id":1""", "5", """{"file":{"p":1}}""",
+        """{"file":"f","file":"g"}""", """{"file":"f"} {"file":"g"}""")
+      .foreach { line =>
+        val e = intercept[IllegalStateException](
+          StatsManifest.parse(Seq("""{"file":"ok"}""", line), "spec"))
+        assert(e.getMessage.contains("malformed stats manifest line"), e.getMessage)
+      }
+    // and through the public skipping read of a table whose manifest broke
+    val dir = tmp() + "/t"
+    Lake.writeVersioned(spark, spark.range(100).toDF("id"), dir)
+    Lake.writeStats(spark, dir, Seq("id"))
+    Files.write(Paths.get(dir, "_graft_stats", "append-9-0.json"),
+      """{"file":"x","min_id":""".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](
+      Lake.readSkipping(spark, dir, Lake.skipRange("id", lit(1), lit(2))))
+    assert(e.getMessage.contains("malformed stats manifest line under") &&
+      e.getMessage.contains("_graft_stats"), e.getMessage)
+  }
+
+  test("skipping reads and stats upkeep stay within their job budgets") {
+    val dir = tmp() + "/t"
+    Lake.writeVersioned(spark,
+      spark.range(0, 1000).repartitionByRange(4, col("id")).toDF("id"), dir)
+    Lake.writeStats(spark, dir, Seq("id"))
+    val keep = Lake.skipRange("id", lit(100L), lit(150L))
+    // building the skipping frame is pure metadata: the parent started 5
+    // jobs here (the manifest's schema inference, the file collect, the
+    // kept-file distinct collect, and the subset read's footer inference)
+    val nRead = jobsOf(Lake.readSkipping(spark, dir, keep))
+    assert(nRead == 0, s"building a readSkipping frame started $nRead jobs")
+    val skipped = Lake.readSkipping(spark, dir, keep)
+    assert(skipped.inputFiles.length == 1)
+    assert(skipped.filter(col("id").between(100L, 150L)).count() == 51)
+    // an append plus the caller's appendStats on a stats-tracked table:
+    // the parent started 9 (manifest inferences and file collects in the
+    // keep-alive and in the caller's appendStats, the fresh files' footer
+    // inference, their stats aggregate and its JSON write); the append's
+    // write is left, as the fresh files' bounds come from their footers
+    val nCommit = jobsOf {
+      Lake.appendVersioned(spark, spark.range(1000, 1100).toDF("id"), dir)
+      Lake.appendStats(spark, dir, Seq("id"))
+    }
+    assert(nCommit <= 1, s"append + appendStats started $nCommit jobs")
+    // the manifest's other readers and its fold are job-free: the parent
+    // started 19 here
+    val nMeta = jobsOf {
+      assert(Lake.rowCountFromManifest(spark, dir).contains(1100L))
+      assert(Lake.compactStats(spark, dir) == ((2L, 1L)))
+      val all = Lake.readSkipping(spark, dir, lit(true)).inputFiles.toSeq
+        .map(f => new java.net.URI(f).getPath)
+      val kept = Lake.pruneCandidatesWithStats(spark, StatsManifest.dir(dir),
+        Lake.skipRange("id", lit(1050L), lit(1060L)), all)
+      assert(kept.nonEmpty && kept.size < all.size, s"${kept.size}/${all.size}")
+    }
+    assert(nMeta == 0, s"manifest upkeep and pruning started $nMeta jobs")
+    assert(Lake.readSkipping(spark, dir, keep).filter(col("id").between(100L, 150L))
+      .count() == 51)
+  }
+}
