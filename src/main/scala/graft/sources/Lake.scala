@@ -1127,12 +1127,14 @@ object Lake {
     * Refresh cost never touches the unchanged source: [[readChangeFeed]]
     * opens only each commit's add/remove files and the per-key delta
     * aggregates map-side (insert +1 / delete −1 retraction weights). The
-    * fold ([[foldAggDelta]]) then scans the VIEW once, whole, rewrites
+    * fold ([[foldAggDelta]]) then reads the VIEW once, whole, rewrites
     * only the view files that hold changed keys, and lands as ONE
     * file-granular merge commit — keys whose count reaches zero are
-    * deleted from the view. A steady fold starts five Spark jobs: the
-    * view-side broadcast, the delta aggregate, the merged-row collect,
-    * the matched-key broadcast and the rewrite. First call (no view yet)
+    * deleted from the view. A view of at most a million rows is read and
+    * merged on the driver, so a steady fold starts two Spark jobs: the
+    * delta collect and the rewrite. A feed larger than one scan task's
+    * input adds its aggregate's map stage, and a larger view is scanned
+    * and joined by Spark (two jobs more). First call (no view yet)
     * materializes the full aggregate once.
     *
     * `forceFull = true` recomputes the view from the current source
@@ -1192,7 +1194,13 @@ object Lake {
           "not a refresh-maintained view"))
     if (w >= srcHead) return (viewHead, w) // nothing new to fold
     val aggs = foldDeltaAggs(sumCols)
-    val delta = readChangeFeed(spark, sourcePath, w + 1, srcHead)
+    val feed = readChangeFeed(spark, sourcePath, w + 1, srcHead)
+    // a feed no larger than one scan task's share of input (the planner's
+    // size estimate, from file lengths) aggregates in that one task: a
+    // single partition needs no exchange, so the delta collect is one job
+    val oneTask = feed.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
+    val delta = (if (oneTask) feed.coalesce(1) else feed)
       .groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     (foldAggDelta(spark, viewPath, delta, keys, sumCols, countCol,
       retainNonPositive = false, stamp = srcHead, maxBroadcastKeys), srcHead)
@@ -1226,10 +1234,12 @@ object Lake {
     * would drop the key at count −1 and LOSE the retraction; the next
     * insert would then land on 0 instead of net.
     *
-    * Cost per micro-batch: the batch, one scan of the whole view, and a
+    * Cost per micro-batch: the batch, one read of the whole view, and a
     * rewrite of only the view files holding changed keys — never the
     * source. The fold is [[refreshIncremental]]'s ([[foldAggDelta]]):
-    * five Spark jobs at steady state.
+    * at steady state three Spark jobs (the batch aggregate's map stage,
+    * the delta collect and the rewrite) for a view of at most a million
+    * rows, which is read and merged on the driver; five above that.
     *
     * @return the view version now current
     */
@@ -1300,16 +1310,30 @@ object Lake {
     * [[foldFeedBatchIntoAggView]]. A key whose new count is ≤ 0 leaves
     * the view unless `retainNonPositive`.
     *
-    * The view's files are scanned ONCE, each row tagged with its file at
-    * the scan, and left-joined to the delta; one collect brings every
-    * merged row (keys, new count, new sums, source file) to the driver,
-    * which derives the matched files, the arm counts and [[mergeCdc]]'s
-    * key-uniqueness refusal. The rewrite — matched files anti-joined with
-    * a driver-local key relation, plus the local upsert rows — publishes
-    * through [[publishMergeRewrite]], the tail [[mergeCdc]] uses. The
-    * collect is bounded by `maxBroadcastKeys` (the bound [[mergeCdc]]
-    * puts on its probe collect); a delta above it folds through
-    * [[mergeCdc]] instead.
+    * A view of at most `maxBroadcastKeys` rows (its manifest's summed
+    * n_rows) folds on the DRIVER: the delta is collected, the view's
+    * files are decoded by the driver ([[readFileOnDriver]]), keys match
+    * in a driver map, and the merge Columns below evaluate as a
+    * projection over a driver-local relation — the optimizer folds it,
+    * so casts, decimal widening and ANSI overflow behave exactly as on
+    * the distributed path, and no job runs. The matched files' surviving
+    * rows and the upserts are written from local relations, so the fold
+    * starts only the delta collect (plus its map stage when the delta's
+    * aggregate needs an exchange) and the rewrite.
+    *
+    * A larger view — or one the driver cannot match byte for byte:
+    * schema-evolving, or keyed by a float, binary, complex or collated
+    * column — folds distributed: its files are scanned ONCE, each row
+    * tagged with its file at the scan, and left-joined to the delta; one
+    * collect brings every merged row (keys, new count, new sums, source
+    * file) to the driver, which derives the matched files, the arm
+    * counts and the key-uniqueness refusal, and the rewrite anti-joins
+    * the matched files with a broadcast of the matched keys.
+    *
+    * Both publish through [[publishMergeRewrite]], the tail [[mergeCdc]]
+    * uses. The delta collect is bounded by `maxBroadcastKeys` (the bound
+    * [[mergeCdc]] puts on its probe collect); a delta above it folds
+    * through [[mergeCdc]] instead.
     *
     * @return the view version now current (the base when nothing changed)
     */
@@ -1319,51 +1343,107 @@ object Lake {
       maxBroadcastKeys: Long = 1000000L): Long = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, input_file_name, lit}
+    import org.apache.spark.sql.types.StructType
     val hp = new org.apache.hadoop.fs.Path(viewPath)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoColMap(spark, fs, viewPath, "mergeInto")
-    requireNoDvs(spark, fs, viewPath, "mergeInto")
     val v0 = readVersionPointer(fs, viewPath).getOrElse(
       manifestVersions(fs, viewPath).last)
     val m0 = readVersionManifest(spark, fs, viewPath, v0).getOrElse(
       sys.error(s"version $v0 has no manifest under $viewPath"))
+    refuseColMap(m0.colmap, viewPath, "mergeInto")
+    refuseDvs(m0.dvs, viewPath, "mergeInto")
     val root = rootPath(fs, hp)
-    val view = readSomeFiles(spark, fs, viewPath,
+    val evolving = readSchemaManifests(spark, viewPath).nonEmpty
+    lazy val view = readSomeFiles(spark, fs, viewPath,
       m0.entries.map(e => resolveRef(root, e._1)), m0.schemaDdl)
-    val viewTypes = view.schema.map(f => f.name -> f.dataType).toMap
+    val viewSchema =
+      if (evolving) view.schema else StructType.fromDDL(m0.schemaDdl)
+    val viewTypes = viewSchema.map(f => f.name -> f.dataType).toMap
+    // one merged row per delta key, over the delta ⟕ view columns
+    val mergedCols = (keys.map(col) :+
+      (coalesce(col(countCol), lit(0L)) + col("_graft_dn")).as(countCol)) ++
+      sumCols.map(c =>
+        // Both sides need the coalesce: sum(c * sign) over a fold window
+        // where every changed row for the key has NULL in c is NULL, and
+        // view.c + NULL would overwrite the key's accumulated sum with
+        // NULL (silently rebasing it to 0 on the NEXT fold).
+        (coalesce(col(c), lit(0).cast(viewTypes(c))) +
+          coalesce(col(s"_graft_d_$c"), lit(0).cast(viewTypes(c))))
+          .cast(viewTypes(c)).as(c))
     def merged(v: DataFrame, extra: Seq[String]): DataFrame =
-      delta.join(v, keys, "left_outer")
-        .select((keys.map(col) :+
-          (coalesce(col(countCol), lit(0L)) + col("_graft_dn")).as(countCol))
-          ++ sumCols.map(c =>
-            // Both sides need the coalesce: sum(c * sign) over a fold
-            // window where every changed row for the key has NULL in c is
-            // NULL, and view.c + NULL would overwrite the key's
-            // accumulated sum with NULL (silently rebasing it to 0 on the
-            // NEXT fold).
-            (coalesce(col(c), lit(0).cast(viewTypes(c))) +
-              coalesce(col(s"_graft_d_$c"), lit(0).cast(viewTypes(c))))
-              .cast(viewTypes(c)).as(c)) ++ extra.map(col): _*)
+      delta.join(v, keys, "left_outer").select(mergedCols ++ extra.map(col): _*)
+    val deleteRule =
+      if (retainNonPositive) lit(false) else col(countCol) <= 0L
+    val width = keys.length + 1 + sumCols.length
+    val collectBound = math.min(maxBroadcastKeys, Int.MaxValue - 1L).toInt + 1
+    def viaMergeCdc(): Long =
+      mergeCdc(spark, viewPath, merged(view, Nil), keys,
+        deleteWhen = deleteRule, maxBroadcastKeys = maxBroadcastKeys,
+        streamBatchId = Some(stamp))._1
+    val notUnique = s"mergeInto source is not unique on (${keys.mkString(",")})"
+    val onDriver = m0.entries.map(_._2).sum <= maxBroadcastKeys &&
+      !evolving && viewTypes.contains(countCol) &&
+      keys.forall(k => delta.schema.find(_.name == k).exists(f =>
+        viewTypes.get(k).contains(f.dataType) && driverMatchable(f.dataType)))
+    if (onDriver) {
+      val deltaRows = delta.limit(collectBound).collect()
+      if (deltaRows.length > maxBroadcastKeys) return viaMergeCdc()
+      // (manifest-relative file, row) for every view row; a key holding a
+      // NULL never matches, as in the SQL join
+      val viewRows: Seq[(String, Row)] = m0.entries.flatMap { case (rel, _) =>
+        readFileOnDriver(spark, resolveRef(root, rel), viewSchema)
+          .map(rel -> _)
+      }
+      def keyOf(r: Row, at: Seq[Int]): Option[Seq[Any]] =
+        Some(at.map(r.get)).filterNot(_.contains(null))
+      val (viewAt, deltaAt) =
+        (keys.map(viewSchema.fieldIndex), keys.map(delta.schema.fieldIndex))
+      val byKey = viewRows.flatMap(fr => keyOf(fr._2, viewAt).map(_ -> fr))
+        .groupMap(_._1)(_._2)
+      val hits = deltaRows.map(d =>
+        keyOf(d, deltaAt).flatMap(byKey.get).getOrElse(Nil))
+      require(hits.forall(_.length <= 1), notUnique)
+      val valueCols = countCol +: sumCols
+      val valueAt = valueCols.map(viewSchema.fieldIndex)
+      val joined = spark.createDataFrame(
+        java.util.Arrays.asList(deltaRows.zip(hits).map { case (d, h) =>
+          Row.fromSeq(d.toSeq ++ h.headOption.fold(valueCols.map(_ => null: Any))(
+            fr => valueAt.map(fr._2.get)))
+        }: _*),
+        StructType(delta.schema.fields ++ valueCols.map(viewSchema(_))))
+      val mergedLocal = joined.select(mergedCols: _*)
+      // the generated-column gate mergeCdc applies to its source
+      applyGeneratedTo(spark, viewPath, mergedLocal, "mergeInto",
+        computeAbsent = false)
+      val upserts = mergedLocal.withColumn("_graft_del", deleteRule)
+        .collect().filterNot(_.getBoolean(width))
+        .map(r => Row.fromSeq(r.toSeq.take(width)))
+      val matched = hits.flatMap(_.headOption.map(_._1)).toSet
+      if (matched.isEmpty && upserts.isEmpty) return v0
+      val touched = deltaRows.flatMap(keyOf(_, deltaAt)).toSet
+      val kept = viewRows.collect { case (rel, r)
+        if matched(rel) && !keyOf(r, viewAt).exists(touched) => r }
+      return publishMergeRewrite(spark, fs, viewPath, v0, m0,
+        m0.entries.filter(e => matched(e._1)),
+        spark.createDataFrame(java.util.Arrays.asList(kept: _*), viewSchema),
+        spark.createDataFrame(java.util.Arrays.asList(upserts: _*),
+          StructType(mergedLocal.schema.take(width))),
+        upserts.length.toLong, kept.length.toLong + upserts.length,
+        Some(stamp))
+    }
     // the generated-column gate mergeCdc applies to its source
     applyGeneratedTo(spark, viewPath, merged(view, Nil), "mergeInto",
       computeAbsent = false)
-    val deleteRule =
-      if (retainNonPositive) lit(false) else col(countCol) <= 0L
     // file name bound AT THE SCAN — after the join the row has two
     // sources and input_file_name is undefined
     val tagged = merged(view.withColumn("_graft_file", input_file_name()),
       Seq("_graft_file")).withColumn("_graft_del", deleteRule)
-    val rows = tagged
-      .limit(math.min(maxBroadcastKeys, Int.MaxValue - 1L).toInt + 1)
-      .collect()
-    if (rows.length > maxBroadcastKeys)
-      return mergeCdc(spark, viewPath, merged(view, Nil), keys,
-        deleteWhen = deleteRule, maxBroadcastKeys = maxBroadcastKeys,
-        streamBatchId = Some(stamp))._1
+    val rows = tagged.limit(collectBound).collect()
+    if (rows.length > maxBroadcastKeys) return viaMergeCdc()
     val nk = keys.length
-    val (fileAt, delAt) = (nk + 1 + sumCols.length, nk + 2 + sumCols.length)
+    val (fileAt, delAt) = (width, width + 1)
     require(rows.map(r => (0 until nk).map(r.get)).distinct.length == rows.length,
-      s"mergeInto source is not unique on (${keys.mkString(",")})")
+      notUnique)
     val matchedRows = rows.filterNot(_.isNullAt(fileAt))
     val upserts = rows.filterNot(_.getBoolean(delAt))
     if (matchedRows.isEmpty && upserts.isEmpty) return v0
@@ -1371,17 +1451,57 @@ object Lake {
       .map(r => new java.net.URI(r.getString(fileAt)).getPath).toSet
     val matchedEntries =
       m0.entries.filter(e => matched(resolveRef(root, e._1)))
-    def local(rs: Seq[Row], width: Int): DataFrame = spark.createDataFrame(
-      java.util.Arrays.asList(rs.map(r => Row.fromSeq(r.toSeq.take(width))): _*),
-      org.apache.spark.sql.types.StructType(tagged.schema.take(width)))
+    def local(rs: Seq[Row], n: Int): DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(rs.map(r => Row.fromSeq(r.toSeq.take(n))): _*),
+      StructType(tagged.schema.take(n)))
     // every matched key leaves its file; updated and new keys enter with
     // the upserts
     val estRows = matchedEntries.map(_._2).sum - matchedRows.length +
       upserts.length
     publishMergeRewrite(spark, fs, viewPath, v0, m0, matchedEntries,
-      broadcast(local(matchedRows.toSeq, nk)), keys,
+      keptAfterMerge(spark, fs, viewPath, m0, matchedEntries,
+        broadcast(local(matchedRows.toSeq, nk)), keys),
       local(upserts.toSeq, fileAt), upserts.length.toLong, estRows,
       Some(stamp))
+  }
+
+  /** Key types whose values compare on the driver exactly as a Spark
+    * equi-join compares them. A join normalizes float NaN and −0.0,
+    * compares binary by content and strings by collation, so those keys
+    * (and complex ones) stay with Spark.
+    */
+  private def driverMatchable(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    t match {
+      case StringType | BooleanType | ByteType | ShortType | IntegerType |
+          LongType | DateType | TimestampType | TimestampNTZType => true
+      case _: DecimalType => true
+      case _ => false
+    }
+  }
+
+  /** Every row of one parquet data file, decoded on the driver by the
+    * record reader a Spark task runs when the vectorized reader is off
+    * (Spark's `ParquetReadSupport` under parquet-hadoop's `ParquetReader`,
+    * with the session's schema-conversion and calendar-rebase settings),
+    * so values convert exactly as a scan converts them and no Spark job
+    * runs. The rows are materialized: metadata-sized files only.
+    */
+  private def readFileOnDriver(spark: SparkSession, file: String,
+      schema: org.apache.spark.sql.types.StructType): Seq[org.apache.spark.sql.Row] = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    val conf = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    val support = org.apache.spark.sql.GraftSqlShims.parquetReadSupport(
+      spark, conf, schema,
+      readFooter(conf, p).getFileMetaData.getKeyValueMetaData)
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    val reader = org.apache.parquet.hadoop.ParquetReader.builder(support, p)
+      .withConf(conf).build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null)
+      .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row]).toVector
+    finally reader.close()
   }
 
   /** The boundary between the two stamp channels packed into the one
@@ -2172,9 +2292,19 @@ object Lake {
       .filter(pred)
       .select(col(DvSrcFileCol).as("file"), col(DvPosCol).as("pos"))
     // tombstones are metadata-sized (a DV delete is the SMALL-delete
-    // path); one sidecar file keeps the manifest entry single
+    // path): while the candidate files hold at most DvBroadcastPositions
+    // rows, the positions are collected once, the covered files come from
+    // the rows in hand and the sidecar is written from them
+    val rowsOf = m0.entries.map(e => resolveRef(root, e._1) -> e._2).toMap
+    val collected =
+      if (candidates.flatMap(rowsOf.get).sum > DvBroadcastPositions) None
+      else Some(positions.collect())
+    if (collected.exists(_.isEmpty)) return (v0, 0L)
+    val sidecar = collected.fold(positions)(rs => spark.createDataFrame(
+      java.util.Arrays.asList(rs: _*), positions.schema))
+    // one sidecar file keeps the manifest entry single
     val (claimedDir, written) = writeClaimedDir(spark, fs, path,
-      positions.coalesce(1))
+      sidecar.coalesce(1))
     val nDel = written.map(_._2).sum
     if (nDel == 0L) {
       // nothing matched: reclaim the WHOLE claimed dir (sidecar, claim
@@ -2185,9 +2315,14 @@ object Lake {
       return (v0, 0L)
     }
     // covered-file list: path strings only to the driver (the engine's
-    // metadata-transfer rule), bounded by the candidate file count
-    val covered = readTombstones(spark, fs, written.map(e => resolveRef(root, e._1)))
-      .select("file").distinct().collect().map(_.getString(0)).toSeq
+    // metadata-transfer rule), bounded by the candidate file count; above
+    // the collect bound, read back from the sidecar just written
+    val covered = collected match {
+      case Some(rs) => rs.map(_.getString(0)).distinct.toSeq
+      case None =>
+        readTombstones(spark, fs, written.map(e => resolveRef(root, e._1)))
+          .select("file").distinct().collect().map(_.getString(0)).toSeq
+    }
     val next = publishNonCommuting(spark, fs, path, v0, m0.schemaDdl,
       add = Nil, remove = Nil, op = "dvdelete",
       dvAdd = written.map(e => DvEntry(e._1, e._2, covered)),
@@ -2331,16 +2466,17 @@ object Lake {
   private def requireNoDvs(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
       opName: String): Unit =
-    if (fs.exists(versionsDir(path))) {
-      val v = readVersionPointer(fs, path)
-        .orElse(manifestVersions(fs, path).lastOption)
-      val dvs = v.flatMap(readVersionManifest(spark, fs, path, _))
-        .map(_.dvs).getOrElse(Nil)
-      require(dvs.isEmpty,
-        s"$opName($path): table carries live deletion vectors " +
-          s"(${dvs.map(_.nDel).sum} tombstones); run purgeDeletes first " +
-          "or read via readVersioned")
-    }
+    if (fs.exists(versionsDir(path)))
+      refuseDvs(headManifest(spark, fs, path).map(_.dvs).getOrElse(Nil),
+        path, opName)
+
+  /** [[requireNoDvs]] against a head manifest already resolved. */
+  private def refuseDvs(dvs: Seq[DvEntry], path: String,
+      opName: String): Unit =
+    require(dvs.isEmpty,
+      s"$opName($path): table carries live deletion vectors " +
+        s"(${dvs.map(_.nDel).sum} tombstones); run purgeDeletes first " +
+        "or read via readVersioned")
 
   /** File-granular MERGE (upsert) — Delta's `MERGE … WHEN MATCHED THEN
     * UPDATE SET * WHEN NOT MATCHED THEN INSERT *`, published as a new
@@ -2605,7 +2741,8 @@ object Lake {
       val estRows =
         matchedEntries.map(_._2).sum - updated - deleted + (nSrc - nDel)
       val next = publishMergeRewrite(spark, fs, path, v0, m0, matchedEntries,
-        probe, keyCols, src.filter(!delFlag), nUp, estRows, streamBatchId)
+        keptAfterMerge(spark, fs, path, m0, matchedEntries, probe, keyCols),
+        src.filter(!delFlag), nUp, estRows, streamBatchId)
       // inserted = upsert rows whose key matched nothing; with a
       // key-unique target (the normal state of a merge-maintained table)
       // `updated` counts exactly the matched upsert keys, so the split is
@@ -2616,13 +2753,30 @@ object Lake {
     } finally { grouped.unpersist(); src.unpersist(); () }
   }
 
+  /** The rows of a merge's matched files whose key `keysOut` does not
+    * hold (a distributed anti-join on `keyCols`), in the table's column
+    * order: what survives of those files.
+    */
+  private def keptAfterMerge(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String,
+      m0: VersionManifest, matchedEntries: Seq[(String, Long)],
+      keysOut: DataFrame, keyCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val root = rootPath(fs, new org.apache.hadoop.fs.Path(path))
+    readSomeFiles(spark, fs, path,
+        matchedEntries.map(e => resolveRef(root, e._1)), m0.schemaDdl)
+      .join(keysOut, keyCols, "left_anti")
+      .select(org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
+        .fieldNames.map(col): _*)
+  }
+
   /** The commit tail every merge shares, publishing base `v0` + 1:
     *   1. gate the rows ENTERING the table (`upserts`, `nUp` of them) on
     *      the CHECK constraints — carried rows were validated when they
     *      entered, deleted rows remove data;
-    *   2. write the surviving rows of the matched files (anti-joined with
-    *      `keysOut` on `keyCols`) plus the upserts into one claimed dir,
-    *      shaped to `estRows` rows;
+    *   2. write `keptOld` (the surviving rows of the matched files, in
+    *      the table's column order) plus the upserts into one claimed
+    *      dir, shaped to `estRows` rows;
     *   3. re-gate constraints that landed since step 1;
     *   4. publish the delta manifest, the pointer, the stats append and
     *      the bloom refresh.
@@ -2630,12 +2784,11 @@ object Lake {
   private def publishMergeRewrite(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String, v0: Long,
       m0: VersionManifest, matchedEntries: Seq[(String, Long)],
-      keysOut: DataFrame, keyCols: Seq[String], upserts: DataFrame,
+      keptOld: DataFrame, upserts: DataFrame,
       nUp: Long, estRows: Long, streamBatchId: Option[Long]): Long = {
     import org.apache.spark.sql.functions.col
     val prior = org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
     val entering = upserts.select(prior.fieldNames.map(col): _*)
-    val root = rootPath(fs, new org.apache.hadoop.fs.Path(path))
     val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
     val cs0 = checkConstraints(spark, path)
     if (nUp > 0L && cs0.nonEmpty)
@@ -2644,16 +2797,12 @@ object Lake {
     // (updated keys replace, new keys insert; delete-flagged keys
     // contribute removals only) — one write into a claimed namespace
     // dir; the commit number is base+1 (contiguity — see deleteWhere)
-    val keptOld = readSomeFiles(spark, fs, path,
-        matchedEntries.map(e => resolveRef(root, e._1)), m0.schemaDdl)
-      .join(keysOut, keyCols, "left_anti")
-      .select(prior.fieldNames.map(col): _*)
+    val rewriteAll = keptOld.unionByName(entering)
     // size-adaptive output: the rewrite's row count is KNOWN before the
     // write (matched files' manifest n_rows minus replaced/deleted rows
     // plus the upsert arm) — shape the file count to the data instead of
     // inheriting ~one tiny file per upstream task. Stats-manifest tables
     // keep their natural boundaries (file-level clustering).
-    val rewriteAll = keptOld.unionByName(entering)
     val rewriteDf =
       if (fs.exists(statsDir)) rewriteAll
       else rewriteAll.coalesce(commitFileParts(estRows))
@@ -3697,9 +3846,26 @@ object Lake {
     // one operation, so a concurrent reader never observes a missing
     // pointer (a delete-then-rename window would throw transiently —
     // readers also fall back to max(listVersions) as a belt-and-braces)
-    org.apache.hadoop.fs.FileContext.getFileContext(
-        ptr.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+      ptr.toUri, spark.sparkContext.hadoopConfiguration)
+    var attempts = 0
+    var swapped = false
+    while (!swapped)
+      try {
+        fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        swapped = true
+      } catch {
+        // the local FS overwrites by delete-then-rename, and a racing
+        // writer's swap can land in between: retry unless that writer
+        // already advanced the pointer to v or past it
+        case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
+          attempts += 1
+          if (attempts > MaxCommitRetries) throw e
+          if (readVersionPointer(fs, path).exists(_ >= v)) {
+            fs.delete(tmp, false)
+            swapped = true
+          }
+      }
   }
 
   // ---------- version-manifest plumbing ----------
@@ -4138,10 +4304,9 @@ object Lake {
       fs: org.apache.hadoop.fs.FileSystem,
       path: String): Option[VersionManifest] =
     if (!fs.exists(versionsDir(path))) None
-    else manifestVersions(fs, path).lastOption.flatMap { last =>
-      readVersionManifest(spark, fs, path,
-        readVersionPointer(fs, path).getOrElse(last))
-    }
+    else readVersionPointer(fs, path)
+      .orElse(manifestVersions(fs, path).lastOption)
+      .flatMap(readVersionManifest(spark, fs, path, _))
 
   /** Refusal for operations whose scans/rewrites/predicates would bypass
     * the logical-name projection (the [[requireNoDvs]] discipline):
@@ -4152,13 +4317,16 @@ object Lake {
     */
   private def requireNoColMap(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
-      opName: String): Unit = {
-    val cm = colMapAtHead(spark, fs, path)
-    require(cm.isEmpty,
+      opName: String): Unit =
+    refuseColMap(colMapAtHead(spark, fs, path), path, opName)
+
+  /** [[requireNoColMap]] against a head manifest already resolved. */
+  private def refuseColMap(colmap: Seq[(String, String)], path: String,
+      opName: String): Unit =
+    require(colmap.isEmpty,
       s"$opName($path): table carries a column mapping (renamed/dropped " +
         "columns); this operation works on physical file columns and " +
         "would bypass the logical projection - materializeMapping first")
-  }
 
   /** Rename/drop refuse while column-keyed maintenance artifacts exist:
     * a skipping-stats manifest, bloom indexes, or CHECK constraints are
@@ -4818,7 +4986,8 @@ object Lake {
     import org.apache.spark.sql.functions._
     require(statsCols.nonEmpty, "appendStats needs at least one column")
     val hp = new org.apache.hadoop.fs.Path(path)
-    requireNoColMap(spark, fs, path, "appendStats")
+    val head = headManifest(spark, fs, path)
+    refuseColMap(head.map(_.colmap).getOrElse(Nil), path, "appendStats")
     val manifestDir = StatsManifest.dir(path)
     val m = manifest.getOrElse(return writeStats(spark, path, statsCols))
     // append rows for EVERY column the manifest tracks, not just the ones
@@ -4831,7 +5000,7 @@ object Lake {
       if (statsCols.forall(tracked.contains) && m.has("n_rows")) tracked
       else return writeStats(spark, path, statsCols)
     val covered = m.files.toSet
-    val fresh = currentDataFiles(spark, fs, hp, path).filterNot(covered)
+    val fresh = currentDataFilesAt(fs, hp, path, head).filterNot(covered)
     if (fresh.isEmpty) return 0L
     // integral bounds come from the fresh files' parquet footers, with no
     // Spark job; any other column scans ONLY the fresh files, and Spark's
@@ -5327,15 +5496,17 @@ object Lake {
   private def currentDataFiles(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, hp: org.apache.hadoop.fs.Path,
       path: String): Seq[String] =
+    currentDataFilesAt(fs, hp, path, headManifest(spark, fs, path))
+
+  /** [[currentDataFiles]] against the head manifest already resolved
+    * ([[headManifest]]).
+    */
+  private def currentDataFilesAt(fs: org.apache.hadoop.fs.FileSystem,
+      hp: org.apache.hadoop.fs.Path, path: String,
+      head: Option[VersionManifest]): Seq[String] =
     if (!fs.exists(versionsDir(path))) listDataFiles(fs, hp)
     else {
-      val v = readVersionPointer(fs, path).getOrElse {
-        val vs = manifestVersions(fs, path)
-        require(vs.nonEmpty, s"no versions under $path")
-        vs.last
-      }
-      val m = readVersionManifest(spark, fs, path, v).getOrElse(
-        sys.error(s"version $v has no manifest under $path"))
+      val m = head.getOrElse(sys.error(s"no versions under $path"))
       val root = rootPath(fs, hp)
       m.entries.map(e => resolveRef(root, e._1))
     }

@@ -186,12 +186,12 @@ object Ingest {
     *      one file-granular merge on the gold table (watermark rides the
     *      gold commit; a replayed batch no-ops at BOTH layers).
     * Gold is per (location_id, sensor_type): event count + value sum.
-    * Each fold reads the batch's silver files, scans the small gold table
-    * once and rewrites only the gold files holding touched keys — never
-    * the accumulated silver table, which is what lets the chain run 24/7
-    * against an unbounded table. A steady micro-batch starts six Spark
-    * jobs: the silver write and the fold's five (see
-    * [[graft.sources.Lake.refreshIncremental]]).
+    * Each fold reads the batch's silver files, reads the small gold table
+    * once on the driver and rewrites only the gold files holding touched
+    * keys — never the accumulated silver table, which is what lets the
+    * chain run 24/7 against an unbounded table. A steady micro-batch
+    * starts three Spark jobs: the silver write, the delta collect and
+    * the gold rewrite (see [[graft.sources.Lake.refreshIncremental]]).
     */
   def runContinuousSilverGoldPipeline(spark: SparkSession,
       landingDir: String, silverDir: String, goldDir: String,

@@ -281,4 +281,15 @@ class DeletionVectorSpec extends SparkSpec {
     assert(ids(dir) == Set(3L, 4L, 5L, 6L, 7L, 8L))
     assert(Lake.deletionVectors(spark, dir).flatMap(_._3).distinct.size == 1)
   }
+
+  test("a dv delete starts two jobs: the discovery collect and the sidecar write") {
+    val dir = twoFileTable()
+    var res = (0L, 0L)
+    val n = jobsOf { res = Lake.deleteWhereDv(spark, dir, col("k") === "a") }
+    // the covered files come from the collected positions; reading them
+    // back from the sidecar just written cost two more jobs
+    assert(n <= 2L, s"a dv delete started $n Spark jobs")
+    assert(res._2 == 3L && ids(dir) == Set(2L, 4L, 5L, 7L, 8L))
+    assert(Lake.deletionVectors(spark, dir).flatMap(_._3).distinct.size == 2)
+  }
 }
