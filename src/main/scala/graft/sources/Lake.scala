@@ -1130,12 +1130,13 @@ object Lake {
     * fold ([[foldAggDelta]]) then reads the VIEW once, whole, rewrites
     * only the view files that hold changed keys, and lands as ONE
     * file-granular merge commit — keys whose count reaches zero are
-    * deleted from the view. A view of at most a million rows is read and
+    * deleted from the view. A view of at most a million rows, in files
+    * no larger together than Spark's broadcast threshold, is read and
     * merged on the driver, so a steady fold starts two Spark jobs: the
-    * delta collect and the rewrite. A feed larger than one scan task's
-    * input adds its aggregate's map stage, and a larger view is scanned
-    * and joined by Spark (two jobs more). First call (no view yet)
-    * materializes the full aggregate once.
+    * delta collect and the rewrite. A feed larger than Spark's per-file
+    * open cost (4 MB by default) adds its aggregate's map stage, and a
+    * larger view is scanned and joined by Spark (two jobs more). First
+    * call (no view yet) materializes the full aggregate once.
     *
     * `forceFull = true` recomputes the view from the current source
     * snapshot instead of folding the feed — the recovery path when the
@@ -1195,11 +1196,13 @@ object Lake {
     if (w >= srcHead) return (viewHead, w) // nothing new to fold
     val aggs = foldDeltaAggs(sumCols)
     val feed = readChangeFeed(spark, sourcePath, w + 1, srcHead)
-    // a feed no larger than one scan task's share of input (the planner's
-    // size estimate, from file lengths) aggregates in that one task: a
-    // single partition needs no exchange, so the delta collect is one job
+    // a feed (the planner's size estimate, from file lengths) no larger
+    // than the open cost Spark charges per file — the floor of every split
+    // size it plans a scan with — is smaller than any scan task's share, so
+    // it aggregates in one task: a single partition needs no exchange, and
+    // the delta collect is one job. A larger feed keeps Spark's splits.
     val oneTask = feed.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
+      spark.sessionState.conf.filesOpenCostInBytes
     val delta = (if (oneTask) feed.coalesce(1) else feed)
       .groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     (foldAggDelta(spark, viewPath, delta, keys, sumCols, countCol,
@@ -1311,8 +1314,12 @@ object Lake {
     * the view unless `retainNonPositive`.
     *
     * A view of at most `maxBroadcastKeys` rows (its manifest's summed
-    * n_rows) folds on the DRIVER: the delta is collected, the view's
-    * files are decoded by the driver ([[readFileOnDriver]]), keys match
+    * n_rows) whose files together fit the size Spark broadcasts a
+    * relation at (`spark.sql.autoBroadcastJoinThreshold`, against the
+    * summed file bytes a file scan's size estimate is made of; −1 keeps
+    * every fold distributed) folds on the DRIVER: the delta is
+    * collected, the view's files are decoded by the driver
+    * ([[readFilesOnDriver]]), keys match
     * in a driver map, and the merge Columns below evaluate as a
     * projection over a driver-local relation — the optimizer folds it,
     * so casts, decimal widening and ANSI overflow behave exactly as on
@@ -1381,19 +1388,22 @@ object Lake {
         deleteWhen = deleteRule, maxBroadcastKeys = maxBroadcastKeys,
         streamBatchId = Some(stamp))._1
     val notUnique = s"mergeInto source is not unique on (${keys.mkString(",")})"
+    lazy val viewFiles = m0.entries.map(e =>
+      fs.getFileStatus(new org.apache.hadoop.fs.Path(resolveRef(root, e._1))))
     val onDriver = m0.entries.map(_._2).sum <= maxBroadcastKeys &&
       !evolving && viewTypes.contains(countCol) &&
       keys.forall(k => delta.schema.find(_.name == k).exists(f =>
-        viewTypes.get(k).contains(f.dataType) && driverMatchable(f.dataType)))
+        viewTypes.get(k).contains(f.dataType) && driverMatchable(f.dataType))) &&
+      viewFiles.map(_.getLen).sum <=
+        spark.sessionState.conf.autoBroadcastJoinThreshold
     if (onDriver) {
       val deltaRows = delta.limit(collectBound).collect()
       if (deltaRows.length > maxBroadcastKeys) return viaMergeCdc()
       // (manifest-relative file, row) for every view row; a key holding a
       // NULL never matches, as in the SQL join
-      val viewRows: Seq[(String, Row)] = m0.entries.flatMap { case (rel, _) =>
-        readFileOnDriver(spark, resolveRef(root, rel), viewSchema)
-          .map(rel -> _)
-      }
+      val viewRows: Seq[(String, Row)] = m0.entries.map(_._1)
+        .zip(readFilesOnDriver(spark, viewFiles, viewSchema))
+        .flatMap { case (rel, rows) => rows.map(rel -> _) }
       def keyOf(r: Row, at: Seq[Int]): Option[Seq[Any]] =
         Some(at.map(r.get)).filterNot(_.contains(null))
       val (viewAt, deltaAt) =
@@ -1480,28 +1490,34 @@ object Lake {
     }
   }
 
-  /** Every row of one parquet data file, decoded on the driver by the
-    * record reader a Spark task runs when the vectorized reader is off
-    * (Spark's `ParquetReadSupport` under parquet-hadoop's `ParquetReader`,
-    * with the session's schema-conversion and calendar-rebase settings),
-    * so values convert exactly as a scan converts them and no Spark job
-    * runs. The rows are materialized: metadata-sized files only.
+  /** Every row of each parquet data file in `files`, decoded on the
+    * driver by the reader function a Spark scan task applies to its file
+    * splits (`ParquetFileFormat.buildReaderWithPartitionValues`, built
+    * once from the session's settings and hadoop conf), so values convert
+    * exactly as a scan converts them and no Spark job runs. The rows are
+    * materialized: metadata-sized files only.
     */
-  private def readFileOnDriver(spark: SparkSession, file: String,
-      schema: org.apache.spark.sql.types.StructType): Seq[org.apache.spark.sql.Row] = {
-    val p = new org.apache.hadoop.fs.Path(file)
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    val support = org.apache.spark.sql.GraftSqlShims.parquetReadSupport(
-      spark, conf, schema,
-      readFooter(conf, p).getFileMetaData.getKeyValueMetaData)
+  private def readFilesOnDriver(spark: SparkSession,
+      files: Seq[org.apache.hadoop.fs.FileStatus],
+      schema: org.apache.spark.sql.types.StructType)
+      : Seq[Seq[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    val read = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+        new org.apache.spark.sql.types.StructType(), schema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
     val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToScalaConverter(schema)
-    val reader = org.apache.parquet.hadoop.ParquetReader.builder(support, p)
-      .withConf(conf).build()
-    try Iterator.continually(reader.read()).takeWhile(_ != null)
-      .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row]).toVector
-    finally reader.close()
+    files.map { st =>
+      val rows = read(PartitionedFile(
+        org.apache.spark.sql.catalyst.InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromFileStatus(st), 0L, st.getLen,
+        fileSize = st.getLen))
+      // a task closes its reader on completion; the driver has no task
+      try rows.map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row]).toVector
+      finally rows match { case c: java.io.Closeable => c.close(); case _ => }
+    }
   }
 
   /** The boundary between the two stamp channels packed into the one

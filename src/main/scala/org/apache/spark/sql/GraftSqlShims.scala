@@ -1,50 +1,16 @@
 package org.apache.spark.sql
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.types.StructType
 
 /** Bridge to the sql-package-private Column ⇄ Expression converters —
   * the standard escape hatch third-party engines/connectors use to expose
-  * custom Catalyst expressions through the public Column API — to the
+  * custom Catalyst expressions through the public Column API — and to the
   * spark-private listener bus, so a profiler can read its listeners'
-  * counters once every posted event has been delivered, and to the
-  * session settings a parquet scan decodes records with.
+  * counters once every posted event has been delivered.
   */
 object GraftSqlShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
-
-  /** The record decoding a Spark task runs when the vectorized parquet
-    * reader is off: `ParquetReadSupport` requesting `schema`, with `conf`
-    * given the session's schema-conversion settings and the calendar
-    * rebase the file's footer metadata `meta` asks for — for reading a
-    * metadata-sized file on the driver exactly as a scan would.
-    */
-  def parquetReadSupport(spark: SparkSession,
-      conf: org.apache.hadoop.conf.Configuration, schema: StructType,
-      meta: java.util.Map[String, String])
-      : org.apache.parquet.hadoop.api.ReadSupport[InternalRow] = {
-    import org.apache.spark.sql.execution.datasources.DataSourceUtils
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
-    import org.apache.spark.sql.internal.SQLConf
-    def session(e: org.apache.spark.internal.config.ConfigEntry[_]): String =
-      spark.conf.get(e.key, e.defaultValueString)
-    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
-      SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
-      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
-      SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
-      SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
-      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION,
-      SQLConf.NESTED_SCHEMA_PRUNING_ENABLED)
-      .foreach(e => conf.set(e.key, session(e)))
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
-    new ParquetReadSupport(None, false,
-      DataSourceUtils.datetimeRebaseSpec(meta.get(_),
-        session(SQLConf.PARQUET_REBASE_MODE_IN_READ)),
-      DataSourceUtils.int96RebaseSpec(meta.get(_),
-        session(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ)))
-  }
 }

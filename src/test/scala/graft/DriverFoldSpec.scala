@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Lake
 
-/** The gold fold's two paths: a view of at most `maxBroadcastKeys` rows
-  * folds on the driver, a larger one through Spark. Both must publish the
-  * same views and versions as each other and as a full recompute.
+/** The gold fold's two paths: a view of at most `maxBroadcastKeys` rows,
+  * in files within Spark's broadcast threshold, folds on the driver, a
+  * larger one through Spark. Both must publish the same views and
+  * versions as each other and as a full recompute.
   */
 class DriverFoldSpec extends SparkSpec {
   import spark.implicits._
@@ -136,6 +137,34 @@ class DriverFoldSpec extends SparkSpec {
     val direct = Lake.readVersioned(spark, source).groupBy("x")
       .agg(count(lit(1)).as("n"), sum("v").as("v")).orderBy("x").collect().toSeq
     assert(rowsOf(s"$root/float", Seq("x")) == direct)
+  }
+
+  test("a view past the broadcast threshold folds in Spark; a feed past the open cost keeps its exchange") {
+    val root = tmp()
+    val source = s"$root/src"
+    val views = Seq("driver", "pastThreshold", "pastOpenCost")
+    def fold(view: String): Long = jobsOf(Lake.refreshIncremental(spark,
+      source, s"$root/$view", Seq("k", "g"), sumCols, "n"))
+    def withConf(k: String, v: String)(body: => Long): Long = {
+      val saved = spark.conf.getOption(k)
+      spark.conf.set(k, v)
+      try body finally saved.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    Lake.writeVersioned(spark, src((1L to 40L).map(i => (i, i % 8))), source)
+    views.foreach(fold)
+    Lake.appendVersioned(spark, src((41L to 44L).map(i => (i, i % 8))), source)
+    Lake.deleteWhere(spark, source, col("id") <= 3L)
+    val jobs = Seq(fold("driver"),
+      withConf("spark.sql.autoBroadcastJoinThreshold", "1")(fold("pastThreshold")),
+      withConf("spark.sql.files.openCostInBytes", "1")(fold("pastOpenCost")))
+    // the driver fold: delta collect + rewrite; a view whose files exceed
+    // the threshold adds the Spark scan of the merged rows; a feed above
+    // the open cost adds its aggregate's map stage
+    assert(jobs(0) <= 2L && jobs(1) > 2L && jobs(2) == jobs(0) + 1, s"jobs: $jobs")
+    Lake.refreshIncremental(spark, source, s"$root/full", keys = Seq("k", "g"),
+      sumCols = sumCols, countCol = "n", forceFull = true)
+    val want = viewOf(s"$root/full")
+    views.foreach(v => assert(viewOf(s"$root/$v") == want, v))
   }
 
   test("a duplicate view key refuses a touching fold on both paths, publishing nothing") {
