@@ -1205,10 +1205,9 @@ object Similarity {
       graft.sources.StatsManifest.dir(path))
     val keep = probed.map(c =>
       graft.sources.Lake.skipRange("cell", lit(c), lit(c))).reduce(_ || _)
-    // the filter folds over the manifest's LocalRelation; counting the
-    // collected rows keeps it job-free (count() would be an aggregate)
-    (manifest.frame(sp).filter(keep).collect().length.toLong,
-      manifest.rows.size.toLong)
+    // interpreted over the manifest rows on the driver: no job, and no
+    // generated class for the probed cells' literals
+    (manifest.keeps(sp, keep).count(identity).toLong, manifest.rows.size.toLong)
   }
 
   /** IVFADC search where the nprobe probe prunes FILES: the scan reads

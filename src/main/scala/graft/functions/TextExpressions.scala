@@ -750,49 +750,6 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** True iff the serialized bloom filter in `child` may contain ANY of the
-  * constant probe `hashes` (xxhash64 longs — the same keying
-  * [[TextFunctions.bloom_filter_agg]] feeds `putLong`). Evaluated once per
-  * MANIFEST row (one bloom per data file), never per data row, so the
-  * deserialization cost is metadata-proportional; the probe loop
-  * short-circuits on the first maybe-hit. Same codegen shape as the other
-  * expressions here: one virtual call, stage stays fused.
-  */
-case class BloomMightContainAny(child: Expression, hashes: Array[Long])
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bloom_might_contain_any"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain_any expects binary, got ${child.dataType.simpleString}")
-
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("bloomAny", this,
-      classOf[BloomMightContainAny].getName)
-    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $self.compute($v);")
-  }
-
-  def compute(bytes: Array[Byte]): Boolean = {
-    val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(bytes))
-    var i = 0
-    while (i < hashes.length) {
-      if (bf.mightContainLong(hashes(i))) return true
-      i += 1
-    }
-    false
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BloomMightContainAny =
-    copy(child = newChild)
-}
-
 object TextFunctions {
   def word_shingles(text: Column, n: Int, distinct: Boolean = false): Column =
     toCol(WordShingles(toExpr(text), n, distinct))
@@ -834,17 +791,6 @@ object TextFunctions {
     toCol(org.apache.spark.sql.catalyst.expressions
       .BloomFilterMightContain(toExpr(bf), toExpr(hashed)))
 
-  /** OR-of-probes bloom test for manifest pruning: true iff the serialized
-    * filter may contain ANY of the `hashes` (xxhash64 longs, same keying
-    * as [[bloom_filter_agg]]). Spark's own `BloomFilterMightContain`
-    * requires a FOLDABLE filter side (it is built for one runtime filter
-    * probed by many rows); a skipping-index manifest is the transpose —
-    * many filters (one per data file), one bounded probe set — so this
-    * expression takes the filter as a per-row binary column and the probes
-    * as a compile-time constant.
-    */
-  def bloom_might_contain_any(bf: Column, hashes: Array[Long]): Column =
-    toCol(BloomMightContainAny(toExpr(bf), hashes))
   def intersect_count(a: Column, b: Column): Column =
     toCol(IntersectCount(toExpr(a), toExpr(b)))
 

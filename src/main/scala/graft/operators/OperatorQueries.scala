@@ -230,8 +230,10 @@ object OperatorQueries {
       .collect()
     val ix =
       if (probeRows.length > maxProbes) sp.read.parquet(ixPath)
-      else graft.sources.Lake.readProbed(sp, ixPath, "mh",
-        probeRows.map(_.getString(0)).toIndexedSeq)
+      else graft.sources.Lake.readLookup(sp, ixPath,
+        sp.createDataFrame(java.util.Arrays.asList(probeRows: _*),
+          batch.select("mh").schema),
+        math.min(maxProbes, Int.MaxValue - 1L).toInt)
     val pairs = ix.as("ix")
       .join(broadcast(batch), Seq("lane", "mh"))
       .groupBy(col("b_doc"), col("ix.doc_id").as("ix_doc"))

@@ -952,12 +952,12 @@ object PipelineQueries {
       (sp, dir) => {
         import sp.implicits._
         // table + index come from the prebuild lane; the TIMED work is
-        // the probe (manifest filter + pruned read) — the per-lookup cost
+        // the probe (driver-side bloom verdicts + pruned read) — the per-lookup cost
         // a serving path would pay
         val path = prebuildBloomFixture(sp, dir)
         val ids = Seq(10L, 137L, 256L, 404L, 499L)
         val probes = ids.toDF("doc_id")
-        graft.sources.Lake.readBloomSkipping(sp, path, "doc_id", probes)
+        graft.sources.Lake.readLookup(sp, path, probes)
           .filter(col("doc_id").isin(ids: _*))
           .orderBy("doc_id")
       },
@@ -983,14 +983,13 @@ object PipelineQueries {
         val ids = Seq(23L, 142L, 301L, 477L)
         // collect the probe PAIRS once (4 rows — the metadata-sized probe
         // contract): a lazy probeRows frame would rescan raw documents
-        // once per indexed column inside lookupFilesMulti and a third
-        // time as the semi-join build side
+        // inside readLookup and again as the semi-join build side
         val pairs = Tables.documents(sp, dir)
           .filter(col("doc_id").isin(ids: _*))
           .select(col("doc_id"), col("n_chars"))
           .as[(Long, Long)].collect().toSeq
         val probeRows = pairs.toDF("doc_id", "n_chars")
-        graft.sources.Lake.readLookupMulti(sp, path, probeRows)
+        graft.sources.Lake.readLookup(sp, path, probeRows)
           .join(probeRows, Seq("doc_id", "n_chars"), "leftsemi")
           .orderBy("doc_id")
       },

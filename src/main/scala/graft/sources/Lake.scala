@@ -158,7 +158,7 @@ object Lake {
     * Pre-manifest layouts (bare `v=N` dirs) upgrade in place: the first
     * write backfills manifests from the existing dirs' footers. Once a
     * table is versioned, read it through [[readVersioned]] (or
-    * [[readSkipping]]/[[readProbed]], which resolve the manifest) — a
+    * [[readSkipping]]/[[readLookup]], which resolve the manifest) — a
     * plain recursive parquet read would see retired files.
     *
     * `writeVersioned` publishes `df` as a full new snapshot (its contract
@@ -3099,19 +3099,8 @@ object Lake {
     // valid commits are gated by a constraint that may yet be rolled
     // back (they simply pass it), and a violating concurrent commit is
     // correctly refused.
-    val dir = new org.apache.hadoop.fs.Path(path, "_graft_constraints")
-    fs.mkdirs(dir)
-    val dst = new org.apache.hadoop.fs.Path(dir, s"$name.json")
-    require(!fs.exists(dst),
-      s"constraint '$name' already exists on $path (drop it first)")
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
-    val out = fs.create(tmp, true)
-    out.write(
-      s"""{"name":${jsonStr(name)},"expr":${jsonStr(sqlExpr)}}"""
-        .getBytes("UTF-8"))
-    out.close()
-    require(fs.rename(tmp, dst),
-      s"constraint '$name' already exists on $path (concurrent writer?)")
+    val dst = publishNamedExpr(fs, path, "_graft_constraints", name, sqlExpr,
+      s"constraint '$name' already exists on $path")
     // post-publish cross-check against a concurrent writeEvolving: both
     // sides re-check the other's artifact after publishing their own, and
     // the CONSTRAINT side yields (rolls back) — whoever publishes second
@@ -3173,19 +3162,8 @@ object Lake {
     require(computed == declared,
       s"addGeneratedColumn($path): expression type $computed does not " +
         s"match declared column type $declared")
-    val dir = new org.apache.hadoop.fs.Path(path, "_graft_generated")
-    fs.mkdirs(dir)
-    val dst = new org.apache.hadoop.fs.Path(dir, s"$name.json")
-    require(!fs.exists(dst),
-      s"generated column '$name' already declared on $path (drop it first)")
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
-    val out = fs.create(tmp, true)
-    out.write(
-      s"""{"name":${jsonStr(name)},"expr":${jsonStr(sqlExpr)}}"""
-        .getBytes("UTF-8"))
-    out.close()
-    require(fs.rename(tmp, dst),
-      s"generated column '$name' already declared on $path (concurrent writer?)")
+    val dst = publishNamedExpr(fs, path, "_graft_generated", name, sqlExpr,
+      s"generated column '$name' already declared on $path")
     // validate EXISTING data after publish (the addCheckConstraint order:
     // once the spec is visible every new commit enforces it, so the scan
     // races no one); roll back on violation
@@ -3209,8 +3187,15 @@ object Lake {
 
   /** The table's (column, sql) generated-column specs, name-ascending. */
   def generatedColumns(spark: SparkSession,
-      path: String): Seq[(String, String)] = {
-    val dir = new org.apache.hadoop.fs.Path(path, "_graft_generated")
+      path: String): Seq[(String, String)] =
+    namedExprs(spark, path, "_graft_generated")
+
+  /** The `{"name","expr"}` specs of sidecar dir `sub` (CHECK constraints,
+    * generated columns), name-ascending; empty without the dir.
+    */
+  private def namedExprs(spark: SparkSession, path: String,
+      sub: String): Seq[(String, String)] = {
+    val dir = new org.apache.hadoop.fs.Path(path, sub)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) Seq.empty
     else {
@@ -3227,6 +3212,28 @@ object Lake {
           (n.get("name").asText, n.get("expr").asText)
         }.sortBy(_._1)
     }
+  }
+
+  /** Publish spec `name` → `sqlExpr` as `<sub>/<name>.json` (tmp-write +
+    * rename). Refuses, with `taken` as the message stem, a name already
+    * published or one a concurrent writer published first. Returns the
+    * published file.
+    */
+  private def publishNamedExpr(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, sub: String, name: String, sqlExpr: String,
+      taken: String): org.apache.hadoop.fs.Path = {
+    val dir = new org.apache.hadoop.fs.Path(path, sub)
+    fs.mkdirs(dir)
+    val dst = new org.apache.hadoop.fs.Path(dir, s"$name.json")
+    require(!fs.exists(dst), s"$taken (drop it first)")
+    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
+    val out = fs.create(tmp, true)
+    out.write(
+      s"""{"name":${jsonStr(name)},"expr":${jsonStr(sqlExpr)}}"""
+        .getBytes("UTF-8"))
+    out.close()
+    require(fs.rename(tmp, dst), s"$taken (concurrent writer?)")
+    dst
   }
 
   /** One aggregate pass refusing any row where a generated column's
@@ -3292,25 +3299,8 @@ object Lake {
 
   /** The table's (name, sql) CHECK constraints, name-ascending. */
   def checkConstraints(spark: SparkSession,
-      path: String): Seq[(String, String)] = {
-    val dir = new org.apache.hadoop.fs.Path(path, "_graft_constraints")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      fs.listStatus(dir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".json") &&
-          !s.getPath.getName.startsWith("."))
-        .map { st =>
-          val in = fs.open(st.getPath)
-          val txt =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          val n = m.readTree(txt)
-          (n.get("name").asText, n.get("expr").asText)
-        }.sortBy(_._1)
-    }
-  }
+      path: String): Seq[(String, String)] =
+    namedExprs(spark, path, "_graft_constraints")
 
   /** Refuse `incoming` unless every row satisfies every constraint — ONE
     * aggregate pass whatever the constraint count (a violation is
@@ -4920,60 +4910,156 @@ object Lake {
     // silently drops the other eras' columns); a VERSIONED table must
     // resolve through its version manifest (a recursive read would scan
     // retired files) — readVersioned composes both
-    val hp0 = new org.apache.hadoop.fs.Path(path)
-    val fs0 = hp0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoColMap(spark, fs0, path, "writeStats")
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireNoColMap(spark, fs, path, "writeStats")
     val source =
-      if (fs0.exists(versionsDir(path))) readVersioned(spark, path)
+      if (fs.exists(versionsDir(path))) readVersioned(spark, path)
       else if (readSchemaManifests(spark, path).nonEmpty)
         readEvolving(spark, path)
       else spark.read.parquet(path)
-    val stats = source
+    // one distributed aggregate; its one line per data file is rendered
+    // on the driver and published as the whole manifest
+    val lines = manifestLines(source
       .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(path, "._graft_stats.rebuild")
-    fs.delete(staging, true)
-    stats.coalesce(1).write.mode(SaveMode.Overwrite).json(staging.toString)
-    val out = StatsManifest.dir(path)
-    publishManifest(fs, staging, out, path)
-    StatsManifest.lines(fs, out).size.toLong
+      .agg(aggs.head, aggs.tail: _*))
+    replaceManifest(fs, StatsManifest.dir(path), lines)
+    lines.size.toLong
+  }
+
+  /** The manifest lines of `rows` (one per data file) as JSON objects,
+    * collected to the driver. Every field is written, NULLs included: a
+    * column that is NULL in every file still has its `min_<c>` field, so
+    * the manifest records it as tracked (Spark's JSON writer would drop
+    * the field, and every later append naming the column would rebuild).
+    */
+  private def manifestLines(rows: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.functions.{struct, to_json}
+    val fields = rows.columns.map(c => rows.col(s"`${c.replace("`", "``")}`"))
+    rows.select(to_json(struct(fields.toIndexedSeq: _*),
+        Map("ignoreNullFields" -> "false")))
+      .collect().map(_.getString(0)).toSeq
   }
 
   /** Publish a staged manifest dir via RENAME-ASIDE (compact's protocol,
     * not delete-then-rename): both complete manifests exist until the new
     * one is in place, so the no-manifest window shrinks to the instant
     * between the two renames, and a crash leaves the aside copy on disk.
-    * The manifest is derived data — a reader hitting that instant gets
-    * validatedManifest's clear require, and re-running writeStats fully
-    * repairs; nothing is ever silently wrong, only loudly absent.
+    * The aside copy is named after the dir it replaces (`.<name>.old`
+    * beside it), so publishes of different manifests never touch each
+    * other's. The manifest is derived data — a reader hitting that instant
+    * gets validatedManifest's clear require, and a rebuild fully repairs;
+    * nothing is ever silently wrong, only loudly absent.
     */
   private def publishManifest(fs: org.apache.hadoop.fs.FileSystem,
-      staging: org.apache.hadoop.fs.Path, out: org.apache.hadoop.fs.Path,
-      path: String): Unit = {
-    val aside = new org.apache.hadoop.fs.Path(path, "._graft_stats.old")
+      staging: org.apache.hadoop.fs.Path,
+      out: org.apache.hadoop.fs.Path): Unit = {
+    val aside = new org.apache.hadoop.fs.Path(out.getParent, s".${out.getName}.old")
     fs.delete(aside, true)
     if (fs.exists(out)) require(fs.rename(out, aside),
       s"manifest publish: could not move $out aside")
     if (!fs.rename(staging, out)) {
       if (fs.exists(aside)) fs.rename(aside, out) // roll back
-      sys.error(s"manifest publish: staging rename failed under $path " +
+      sys.error(s"manifest publish: staging rename failed for $out " +
         "(previous manifest restored)")
     }
     fs.delete(aside, true)
     ()
   }
 
+  /** Replace manifest dir `d` with one file holding `lines`: written to a
+    * staging dir beside it (`.<name>.rebuild`), then [[publishManifest]].
+    */
+  private def replaceManifest(fs: org.apache.hadoop.fs.FileSystem,
+      d: org.apache.hadoop.fs.Path, lines: Seq[String]): Unit = {
+    val staging = new org.apache.hadoop.fs.Path(d.getParent, s".${d.getName}.rebuild")
+    fs.delete(staging, true)
+    writeLines(fs, new org.apache.hadoop.fs.Path(staging, "part-00000.json"), lines)
+    publishManifest(fs, staging, d)
+  }
+
+  /** Add `lines` to manifest dir `d` as one more file, then fold the dir
+    * when it holds more than [[ManifestFoldThreshold]] files.
+    *
+    * The manifest is a DIRECTORY of json files: an append ADDS one
+    * metadata-sized file rather than rewriting the whole manifest — at
+    * ~800k data files a merged rewrite is ~100 MB of json churn per
+    * admit, where this is a few KB. Readers list the dir and parse every
+    * file on the driver ([[StatsManifest]]), so they see the union, and
+    * the added file lands via one atomic rename of a per-writer staging
+    * file (a reader never sees partial rows).
+    *
+    * SELF-FOLDING: past the threshold the accreted append files fold
+    * back to one (metadata-only, identical pruning) — the same
+    * automatic-maintenance posture setAutoOptimize gives data files,
+    * applied to the metadata itself. Amortized O(1): one fold per
+    * ~threshold appends, and each fold reads only the manifest.
+    */
+  private def appendManifest(fs: org.apache.hadoop.fs.FileSystem,
+      hp: org.apache.hadoop.fs.Path, d: org.apache.hadoop.fs.Path,
+      lines: Seq[String]): Unit = {
+    if (lines.nonEmpty) {
+      val staging = new org.apache.hadoop.fs.Path(d.getParent,
+        s".${d.getName}.append.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+      writeLines(fs, staging, lines)
+      require(fs.rename(staging,
+          new org.apache.hadoop.fs.Path(d, s"append-${System.nanoTime()}-0.json")),
+        s"could not add a manifest file under $d")
+    }
+    if (StatsManifest.files(fs, d).size > ManifestFoldThreshold)
+      foldManifest(fs, hp, d)
+    ()
+  }
+
+  private def writeLines(fs: org.apache.hadoop.fs.FileSystem,
+      f: org.apache.hadoop.fs.Path, lines: Seq[String]): Unit = {
+    val out = fs.create(f, true)
+    try lines.foreach(l => out.write((l + "\n").getBytes("UTF-8")))
+    finally out.close()
+  }
+
+  /** Append-manifest files before a fold is triggered. 64 keeps the
+    * per-read listing trivial while folding often enough that a fold
+    * never reads more than ~64 KB-sized files.
+    */
+  private val ManifestFoldThreshold = 64
+
+  /** METADATA-ONLY manifest fold, shared by [[compactStats]] and
+    * [[compactBloomIndex]]: fold the `append-*.json` files incremental
+    * maintenance accretes (one per admit — deliberately, to keep each
+    * admit O(batch)) back into ONE file, and drop rows for data files no
+    * longer ON DISK (vacuumed / compacted away): current readers already
+    * ignore them, but without this the manifest grows forever under a
+    * delete/merge-heavy table. Files merely RETIRED (still on disk for
+    * time travel) keep their rows — harmless, and a restored version
+    * could need them again. The fold runs on the driver: the lines are
+    * parsed once (O(files) memory, the order of the on-disk listing they
+    * are checked against) and the kept lines are written back verbatim
+    * through [[replaceManifest]] — no Spark job.
+    *
+    * @return (manifest files before, after) — (n, n) when already compact
+    */
+  private def foldManifest(fs: org.apache.hadoop.fs.FileSystem,
+      hp: org.apache.hadoop.fs.Path, d: org.apache.hadoop.fs.Path): (Long, Long) = {
+    val nBefore = StatsManifest.files(fs, d).size.toLong
+    val lines = StatsManifest.lines(fs, d)
+    val onDisk = listDataFiles(fs, hp).toSet
+    val kept = lines.zip(StatsManifest.parse(lines, d.toString).files)
+      .collect { case (line, f) if onDisk(f) => line }
+    if (nBefore <= 1 && kept.size == lines.size) return (nBefore, nBefore)
+    replaceManifest(fs, d, kept)
+    (nBefore, StatsManifest.files(fs, d).size.toLong)
+  }
+
   /** INCREMENTAL stats append — the O(batch) complement of [[writeStats]]
     * for append-only tables: compute per-file min/max/n_rows for ONLY the
     * data files the manifest does not cover yet (read from their parquet
     * footers when every tracked column is integral, else scanning just
-    * those files) and add them as one more manifest file, landed by
-    * rename so a reader never sees a partial manifest. This is what keeps
-    * an admit loop batch-proportional: full `writeStats` re-scans the
-    * corpus on every append, which at 100 TB turns each day's intake into
-    * a full-table statistics job.
+    * those files) and add them as one more manifest file
+    * ([[appendManifest]]), landed by rename so a reader never sees a
+    * partial manifest. This is what keeps an admit loop batch-proportional:
+    * full `writeStats` re-scans the corpus on every append, which at
+    * 100 TB turns each day's intake into a full-table statistics job.
     *
     * @return number of newly covered files; when the existing manifest
     *         cannot be appended to (older layout, missing columns) the
@@ -5004,7 +5090,6 @@ object Lake {
     val hp = new org.apache.hadoop.fs.Path(path)
     val head = headManifest(spark, fs, path)
     refuseColMap(head.map(_.colmap).getOrElse(Nil), path, "appendStats")
-    val manifestDir = StatsManifest.dir(path)
     val m = manifest.getOrElse(return writeStats(spark, path, statsCols))
     // append rows for EVERY column the manifest tracks, not just the ones
     // this caller asked about — selecting a subset would silently drop the
@@ -5019,10 +5104,10 @@ object Lake {
     val fresh = currentDataFilesAt(fs, hp, path, head).filterNot(covered)
     if (fresh.isEmpty) return 0L
     // integral bounds come from the fresh files' parquet footers, with no
-    // Spark job; any other column scans ONLY the fresh files, and Spark's
-    // JSON generator renders the rows. A schema-evolving table always
-    // scans: its files may hold a column under an older name or type, and
-    // its reads resolve them through the schema manifests
+    // Spark job; any other column scans ONLY the fresh files. A
+    // schema-evolving table always scans: its files may hold a column
+    // under an older name or type, and its reads resolve them through the
+    // schema manifests
     val footerLines =
       if (readSchemaManifests(spark, path).isEmpty)
         StatsManifest.fromFooters(fs, fresh, appendCols)
@@ -5031,58 +5116,18 @@ object Lake {
       val aggs = appendCols.flatMap(c =>
         Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
         count(lit(1)).as("n_rows")
-      readFileSubset(spark, path, fresh)
+      manifestLines(readFileSubset(spark, path, fresh)
         .groupBy(input_file_name().as("file"))
-        .agg(aggs.head, aggs.tail: _*)
-        .toJSON.collect().toSeq
+        .agg(aggs.head, aggs.tail: _*))
     }
-    // the manifest is a DIRECTORY of json files: an append ADDS one
-    // metadata-sized file rather than rewriting the whole manifest — at
-    // ~800k data files a merged rewrite is ~100 MB of json churn per
-    // admit, where this is a few KB. Readers list the dir and parse every
-    // file on the driver (StatsManifest: no Spark job, O(files × tracked
-    // columns) memory), so they see the union, and the added file lands
-    // via one atomic rename of a per-writer staging file (a reader never
-    // sees partial rows)
-    if (lines.nonEmpty) {
-      val staging = new org.apache.hadoop.fs.Path(path,
-        s"._graft_stats.append.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      val out = fs.create(staging, true)
-      try lines.foreach(l => out.write((l + "\n").getBytes("UTF-8")))
-      finally out.close()
-      val dst = new org.apache.hadoop.fs.Path(manifestDir,
-        s"append-${System.nanoTime()}-0.json")
-      require(fs.rename(staging, dst),
-        s"appendStats: could not add manifest file under $path")
-    }
-    // SELF-FOLDING: past the threshold the accreted append files fold
-    // back to one (metadata-only, identical pruning) — the same
-    // automatic-maintenance posture setAutoOptimize gives data files,
-    // applied to the metadata itself. Amortized O(1): one fold per
-    // ~threshold appends, and each fold reads only the manifest.
-    if (manifestFileCount(fs, manifestDir) > ManifestFoldThreshold)
-      compactStats(spark, path)
+    appendManifest(fs, hp, StatsManifest.dir(path), lines)
     fresh.size.toLong
   }
 
-  /** Append-manifest files before a fold is triggered. 64 keeps the
-    * per-read listing trivial while folding often enough that a fold
-    * never reads more than ~64 KB-sized files.
-    */
-  private val ManifestFoldThreshold = 64
-
-  private def manifestFileCount(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Int =
-    fs.listStatus(dir).count(f => f.isFile &&
-      !f.getPath.getName.startsWith(".") &&
-      !f.getPath.getName.startsWith("_"))
-
-  /** METADATA-ONLY stats-manifest compaction: fold the `append-*.json`
-    * files [[appendStats]] accretes (one per admit — deliberately, to keep
-    * each admit O(batch)) back into ONE manifest file. After 10k admits
-    * every reader of the manifest pays a 10k-file listing and open; this
-    * folds them reading only the manifest itself — never data — and
-    * publishes via the same staged-write + rename-aside swap as
+  /** METADATA-ONLY stats-manifest compaction ([[foldManifest]]): after
+    * 10k admits every reader of the manifest pays a 10k-file listing and
+    * open; this folds them reading only the manifest itself — never data
+    * — and publishes via the same staged-write + rename-aside swap as
     * [[writeStats]], with bit-identical pruning decisions before and
     * after. ([[writeStats]] also yields a single file but at corpus-scan
     * cost; [[rerange]] folds as a side effect of its writeStats rebuild
@@ -5094,29 +5139,9 @@ object Lake {
   def compactStats(spark: SparkSession, path: String): (Long, Long) = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifestDir = StatsManifest.dir(path)
-    require(fs.exists(manifestDir), s"no _graft_stats manifest under $path")
-    val nBefore = manifestFileCount(fs, manifestDir).toLong
-    // drop rows for files no longer ON DISK (vacuumed / compacted away):
-    // current readers already ignore them, but without this the manifest
-    // grows forever under a delete/merge-heavy table. Files merely
-    // RETIRED (still on disk for time travel) keep their rows — harmless,
-    // and a restored version could need them again. The whole fold runs
-    // on the driver: the lines are parsed once (O(files) memory, the
-    // order of the on-disk listing it is checked against), and the kept
-    // lines are written back verbatim — no Spark job.
-    val lines = StatsManifest.lines(fs, manifestDir)
-    val onDisk = listDataFiles(fs, hp).toSet
-    val kept = lines.zip(StatsManifest.parse(lines, manifestDir.toString).files)
-      .collect { case (line, f) if onDisk(f) => line }
-    if (nBefore <= 1 && kept.size == lines.size) return (nBefore, nBefore)
-    val staging = new org.apache.hadoop.fs.Path(path, "._graft_stats.rebuild")
-    fs.delete(staging, true)
-    val out = fs.create(new org.apache.hadoop.fs.Path(staging, "part-00000.json"))
-    try kept.foreach(l => out.write((l + "\n").getBytes("UTF-8")))
-    finally out.close()
-    publishManifest(fs, staging, manifestDir, path)
-    (nBefore, manifestFileCount(fs, manifestDir).toLong)
+    val d = StatsManifest.dir(path)
+    require(fs.exists(d), s"no _graft_stats manifest under $path")
+    foldManifest(fs, hp, d)
   }
 
   /** Table row count from the `_graft_stats` manifest, if one exists, is
@@ -5153,22 +5178,21 @@ object Lake {
 
   def readSkipping(spark: SparkSession, path: String,
       keep: org.apache.spark.sql.Column): DataFrame = {
-    requireNoDvs(spark,
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      path, "readSkipping")
-    val (manifest, current) = validatedManifest(spark, path)
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireNoDvs(spark, fs, path, "readSkipping")
+    val current = currentDataFiles(spark, fs, hp, path).toSet
+    val manifest = validatedManifest(fs, StatsManifest.dir(path), current,
+      s"_graft_stats manifest under $path", "writeStats")
     // intersect with the CURRENT file set: a versioned table's stats
     // manifest may still carry rows for files a delete retired — reading
     // one would resurrect deleted rows. DISTINCT because concurrent
     // appendStats calls can double-cover a file — a duplicate manifest
-    // row must never become a double data read. The filter folds over
-    // the manifest's LocalRelation and the dedupe runs on the driver (a
-    // distinct() would be an aggregate, and start a job)
-    val files = manifest.frame(spark).filter(keep).select("file").collect()
-      .map(r => new java.net.URI(r.getString(0)).getPath)
-      .filter(current).distinct
-    readFileSubset(spark, path, files.toIndexedSeq)
+    // row must never become a double data read. `keep` is interpreted
+    // over the rows on the driver ([[StatsManifest.keeps]])
+    val files = manifest.files.zip(manifest.keeps(spark, keep))
+      .collect { case (f, true) if current(f) => f }.distinct
+    readFileSubset(spark, path, files)
   }
 
   // ======================================================================
@@ -5527,50 +5551,49 @@ object Lake {
       m.entries.map(e => resolveRef(root, e._1))
     }
 
-  /** Load the `_graft_stats` manifest with the stale-manifest guard: every
-    * CURRENT data file must be covered, or a skip could silently drop rows
-    * written after the manifest. The listing is RECURSIVE so
-    * hive-partitioned layouts (data files one level down in day=… dirs)
-    * are guarded too — a top-level-only list would come back empty there
-    * and pass the subset check vacuously. Returns the manifest plus the
-    * current-file set (callers must intersect their file picks with it —
-    * covered-but-retired files would resurrect deleted rows).
+  /** Load a skipping-index manifest (`_graft_stats`, or a
+    * `_graft_bloom/<c>` index) with the stale-coverage guard both share:
+    * every CURRENT data file must be covered, or a skip could silently
+    * drop rows written after the manifest. `current` comes from
+    * [[currentDataFiles]], whose listing is RECURSIVE so hive-partitioned
+    * layouts (data files one level down in day=… dirs) are guarded too —
+    * a top-level-only list would come back empty there and pass the
+    * subset check vacuously. Callers must still intersect their file
+    * picks with `current`: covered-but-retired files would resurrect
+    * deleted rows. `what` names the manifest in the refusals, `repair`
+    * the call that fixes a stale one.
     */
-  private def validatedManifest(spark: SparkSession,
-      path: String): (StatsManifest, Set[String]) = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifestDir = StatsManifest.dir(path)
-    require(fs.exists(manifestDir), s"no _graft_stats manifest under $path")
-    val manifest = StatsManifest.read(fs, manifestDir)
-    val current = currentDataFiles(spark, fs, hp, path).toSet
+  private def validatedManifest(fs: org.apache.hadoop.fs.FileSystem,
+      d: org.apache.hadoop.fs.Path, current: Set[String], what: String,
+      repair: String): StatsManifest = {
+    require(fs.exists(d), s"no $what")
+    val manifest = StatsManifest.read(fs, d)
     val listed = manifest.files.toSet
     require(current.subsetOf(listed),
-      s"stale _graft_stats manifest under $path: " +
-        s"${(current -- listed).size} data file(s) not covered - re-run writeStats")
-    (manifest, current)
+      s"stale $what: ${(current -- listed).size} data file(s) not covered - " +
+        s"run $repair")
+    manifest
   }
 
   /** Narrow a commit's candidate file list with the `_graft_stats`
     * manifest. The manifest is read on the driver ([[StatsManifest]]) and
-    * `keep` is evaluated over its `LocalRelation` frame, which folds on
-    * the driver: no Spark job, O(files) driver memory — the order of the
-    * version manifest that listed `abs0`. Contracts: a file with no stats
-    * row stays a candidate (superset rule), and duplicate rows from
-    * concurrent appendStats keep the file if ANY row keeps it. Manifest
-    * `file` values compare in URI.getPath form (input_file_name
-    * URL-encodes a space as `%20`; a literal `+` stays a `+`).
+    * `keep` is interpreted over its rows ([[StatsManifest.keeps]]): no
+    * Spark job and no generated class, O(files) driver memory — the order
+    * of the version manifest that listed `abs0`. Contracts: a file with no
+    * stats row stays a candidate (superset rule), a NULL verdict drops
+    * it, and duplicate rows from concurrent appendStats keep the file if
+    * ANY row keeps it. Manifest `file` values compare in URI.getPath form
+    * (input_file_name URL-encodes a space as `%20`; a literal `+` stays a
+    * `+`).
     */
   private[graft] def pruneCandidatesWithStats(spark: SparkSession,
       statsDir: org.apache.hadoop.fs.Path,
       keep: org.apache.spark.sql.Column,
       abs0: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
     val fs = statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val verdicts = StatsManifest.read(fs, statsDir).frame(spark)
-      .select(col("file"), coalesce(keep, lit(false))).collect()
-      .groupMapReduce(r => new java.net.URI(r.getString(0)).getPath)(
-        _.getBoolean(1))(_ || _)
+    val m = StatsManifest.read(fs, statsDir)
+    val verdicts = m.files.zip(m.keeps(spark, keep))
+      .groupMapReduce(_._1)(_._2)(_ || _)
     abs0.filter(f => verdicts.getOrElse(f, true)).toIndexedSeq
   }
 
@@ -5615,103 +5638,221 @@ object Lake {
       .parquet(qualifyForRead(fs, files): _*)
   }
 
-  /** PROBE-SET data skipping — the equality-lookup complement of
-    * [[skipRange]]. Given the distinct join-key values of a (bounded)
-    * probe side, keep only files whose [min_c, max_c] stats can contain at
-    * least one probe; every dropped file provably holds no matching row,
-    * so an equi-join against the probed read is identical to one against
-    * the full table.
-    *
-    * This is what makes a signature-index screen BATCH-proportional
-    * instead of corpus-proportional when the table is range-laid-out on
-    * `c` (see [[graft.operators.OperatorQueries]] `dedup_incremental`):
-    * with files range-split on `c` at a fixed target size, one probe can
-    * land in at most ~1 file, so I/O is bounded by min(|probes|, |files|)
-    * × fileSize — flat in corpus size once files outnumber probes. For a
-    * probe set that OUTNUMBERS the files (a full day's intake), pruning
-    * degrades gracefully to the full narrow scan — never worse than
-    * unpruned, never a shuffle.
-    *
-    * Driver cost is metadata-proportional: one manifest row per file, one
-    * binary search per file over the sorted probes.
+  // ======================================================================
+  // POINT LOOKUPS — equality probes pruned by every skipping index the
+  // table carries, all read on the driver as [[StatsManifest]]s:
+  //
+  //  - `_graft_stats` min/max bounds (PROBE-SET skipping): a file is kept
+  //    when its [min_c, max_c] can contain a probe. This is what makes a
+  //    signature-index screen BATCH-proportional instead of
+  //    corpus-proportional when the table is range-laid-out on `c` (see
+  //    [[graft.operators.OperatorQueries]] `dedup_incremental`): with files
+  //    range-split on `c` at a fixed target size, one probe lands in ~1
+  //    file, so I/O is bounded by min(|probes|, |files|) × fileSize.
+  //  - `_graft_bloom/<c>` membership, the high-cardinality complement:
+  //    on a HASH-clustered or unsorted layout every file's [min, max] spans
+  //    the whole key domain and an equality probe skips nothing, while a
+  //    per-file Bloom filter answers "could this file hold key k?"
+  //    regardless of layout. The filters are Spark's own
+  //    org.apache.spark.util.sketch.BloomFilter, built by
+  //    BloomFilterAggregate over xxhash64 of the key (the exact sketch
+  //    InjectRuntimeFilter uses), base64 in the manifest rows.
+  //
+  // Every verdict is a SUPERSET of the files holding matches (false
+  // positives only — a kept file may be empty of matches, and the caller's
+  // residual filter drops its rows), so intersecting verdicts stays a
+  // superset and the pruned read + equality filter is IDENTICAL to the full
+  // scan + filter. Driver cost is metadata-proportional: one manifest row
+  // per file, one binary search (stats) or one filter decode (bloom) per
+  // current file, and no Spark job beyond collecting a non-local probe
+  // frame. 100 TB posture: the index is built DISTRIBUTIVELY (one groupBy
+  // input_file_name over the table — each task sketches its own file) and
+  // maintained INCREMENTALLY (appendBloomIndex sketches only uncovered
+  // files, keeping a daily admit O(batch)); a probe set above `maxProbes`
+  // degrades gracefully to the unpruned read — never worse than no index,
+  // never a failure.
+  // ======================================================================
+
+  /** The `_graft_stats` verdict for equality probes on `c`: the current
+    * files whose [min_c, max_c] holds at least one probe (URI.getPath
+    * form, manifest order), and the current file count. The manifest
+    * must cover every current file ([[validatedManifest]]).
     *
     * Probes and stats bounds are compared as STRINGS: sound for string
     * keys (the md5 signature case this serves) and for any key whose
     * lexicographic order matches its value order (zero-padded fixed
-    * width); raw numeric keys should go through [[skipRange]], which
-    * compares in the column's own type.
-    *
-    * @return (files kept, total data files in the manifest)
+    * width); numeric bounds refuse (raw numeric keys should go through
+    * [[skipRange]], which compares in the column's own type), and so does
+    * a column the manifest does not track.
     */
-  def probeDataFiles(spark: SparkSession, path: String, c: String,
+  private[graft] def probeDataFiles(spark: SparkSession, path: String, c: String,
       probes: Seq[String]): (Seq[String], Int) = {
-    import org.apache.spark.sql.functions.col
-    val (manifest, current) = validatedManifest(spark, path)
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val current = currentDataFiles(spark, fs, hp, path).toSet
+    val m = validatedManifest(fs, StatsManifest.dir(path), current,
+      s"_graft_stats manifest under $path", "writeStats")
+    (statsVerdict(m, current, c, probes), current.size)
+  }
+
+  private def statsVerdict(m: StatsManifest, current: Set[String], c: String,
+      probes: Seq[String]): Seq[String] = {
+    require(m.has(s"min_$c"),
+      s"probeDataFiles($c): the _graft_stats manifest does not track $c")
     // string comparison on numeric bounds would order "100" < "20" and
     // prune WRONG files — refuse instead of silently losing rows
-    require(manifest.schema(s"min_$c").dataType ==
-        org.apache.spark.sql.types.StringType,
+    require(m.schema(s"min_$c").dataType == org.apache.spark.sql.types.StringType,
       s"probeDataFiles($c): stats bounds are numeric; lexicographic probe " +
         "pruning would be unsound - use skipRange, or zero-pad the key")
-    // current-file intersection: covered-but-retired rows must not count
-    // as prunable candidates, let alone be read
-    val rows = manifest.frame(spark).select(col("file"),
-      col(s"min_$c"), col(s"max_$c")).collect()
-      .filter(r => current(new java.net.URI(r.getString(0)).getPath))
+    val (iLo, iHi) = (m.schema.fieldIndex(s"min_$c"), m.schema.fieldIndex(s"max_$c"))
     val sorted = probes.distinct.sorted.toIndexedSeq
     // any probe in [lo, hi]? binary-search the first probe >= lo
     def anyIn(lo: String, hi: String): Boolean = {
       var l = 0; var r = sorted.length
-      while (l < r) { val m = (l + r) >>> 1; if (sorted(m) < lo) l = m + 1 else r = m }
+      while (l < r) { val mid = (l + r) >>> 1; if (sorted(mid) < lo) l = mid + 1 else r = mid }
       l < sorted.length && sorted(l) <= hi
     }
-    // all-null files have null stats bounds: no row there can equal a
-    // probe. distinct on the kept PATHS: concurrent appendStats can
-    // double-cover a file, and a duplicate pick must not double-read
-    val kept = rows.toSeq
-      .filter(r => !r.isNullAt(1) && anyIn(r.getString(1), r.getString(2)))
-      .map(_.getString(0)).distinct
-    (kept, rows.map(_.getString(0)).distinct.length)
+    // covered-but-retired rows are never candidates; all-null files have
+    // null bounds, and no row there can equal a probe. distinct: concurrent
+    // appendStats can double-cover a file, and a duplicate pick must not
+    // double-read
+    m.files.zip(m.rows).collect {
+      case (f, r) if current(f) && !r.isNullAt(iLo) && anyIn(r.getString(iLo), r.getString(iHi)) => f
+    }.distinct
   }
 
-  def readProbed(spark: SparkSession, path: String, c: String,
-      probes: Seq[String]): DataFrame = {
+  /** The `_graft_bloom/<c>` verdict for a single-column probe frame (of
+    * the indexed key's type): the current files whose filter may hold a
+    * probe, and the current file count; every current file when the
+    * probe frame holds more than `maxProbes` rows. A stale index (a
+    * current file not covered) REFUSES rather than silently dropping the
+    * file's rows; [[appendBloomIndex]] repairs it.
+    */
+  private[graft] def bloomProbeFiles(spark: SparkSession, path: String, c: String,
+      probes: DataFrame, maxProbes: Int = 100000): (Seq[String], Int) = {
+    require(probes.columns.length == 1,
+      s"bloomProbeFiles($c): probe side must be a single key column")
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val current = currentDataFiles(spark, fs, hp, path)
+    val live = current.toSet
+    val m = validatedManifest(fs, bloomDir(path, c), live,
+      s"_graft_bloom/$c index under $path", "appendBloomIndex")
+    collectProbes(probes, maxProbes).fold((current, current.size)) { p =>
+      (bloomVerdict(m, live, p(probes.columns.head)._2), current.size)
+    }
+  }
+
+  private def bloomVerdict(m: StatsManifest, current: Set[String],
+      hashes: Seq[Long]): Seq[String] =
+    // a NULL filter (an all-null file, whose keys were never sketched) can
+    // hold no probe; an index written by Spark's JSON writer drops NULL
+    // fields, so one holding only such files has no bloom_b64 field
+    if (!m.has("bloom_b64")) Seq.empty
+    else {
+      val b = m.schema.fieldIndex("bloom_b64")
+      def mayHold(b64: String): Boolean = {
+        val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
+          new java.io.ByteArrayInputStream(java.util.Base64.getMimeDecoder.decode(b64)))
+        hashes.exists(bf.mightContainLong)
+      }
+      m.files.zip(m.rows).collect {
+        case (f, r) if current(f) && !r.isNullAt(b) && mayHold(r.getString(b)) => f
+      }.distinct
+    }
+
+  /** Each probe column's distinct non-NULL values on the driver, as
+    * strings (the stats verdict) and as xxhash64 longs (the bloom verdict;
+    * Spark hashes them, so the keys hash byte-identically to what
+    * bloom_filter_agg saw at build time, whatever the key's type). One
+    * collect of at most `maxProbes + 1` rows, deduped on the driver (a
+    * `distinct()` would start an aggregate job; over a local probe frame
+    * the collect starts none). None when the frame holds more than
+    * `maxProbes` rows.
+    */
+  private def collectProbes(probes: DataFrame,
+      maxProbes: Int): Option[Map[String, (Seq[String], Seq[Long])]] = {
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    val cols = probes.columns.toIndexedSeq
+    val rows = probes.select(cols.flatMap(c =>
+        Seq(col(c).cast("string"), xxhash64(col(c)))): _*)
+      .limit(math.min(maxProbes.toLong + 1, Int.MaxValue).toInt).collect()
+    if (rows.length > maxProbes) None
+    else Some(cols.indices.map { i =>
+      val live = rows.filterNot(_.isNullAt(2 * i))
+      cols(i) -> (live.map(_.getString(2 * i)).distinct.toSeq,
+        live.map(_.getLong(2 * i + 1)).distinct.toSeq)
+    }.toMap)
+  }
+
+  /** Point-lookup file pruning over every skipping index the table
+    * carries. Each probe column prunes through its own indexes —
+    * `_graft_stats` bounds ∩ `_graft_bloom/<c>` membership, so a table
+    * carrying both gets the tighter of either — and the columns' verdicts
+    * AND together: a file survives only if EVERY indexed column says
+    * "maybe". Sound for conjunctive lookups because a row matching
+    * (c1 = v1 AND c2 = v2) puts v1 in the file's c1 values and v2 in its
+    * c2 values; tuple-set probes (rows of (v1, v2) pairs) stay sound for
+    * the same reason — each column prunes by its VALUE SET, which can only
+    * keep more files than the exact tuple semantics would.
+    *
+    * On a bloom-only table a probe column with no bloom is skipped (at
+    * least one column must carry an index). On a stats-bearing table every
+    * probe column is treated as stats-indexed: a column the manifest does
+    * not track, or tracks with numeric bounds (where lexicographic probing
+    * would be unsound — [[probeDataFiles]]), fails LOUDLY unless the
+    * column's bloom answers instead; a silently unindexed column must
+    * never masquerade as a no-prune verdict. Any stale index refuses
+    * ([[validatedManifest]]). A probe frame of more than `maxProbes` rows
+    * degrades to no prune — weakening, never breaking, the lookup.
+    *
+    * @return (files kept, in URI.getPath form, sorted; total current files)
+    */
+  def lookupFiles(spark: SparkSession, path: String, probes: DataFrame,
+      maxProbes: Int = 100000): (Seq[String], Int) = {
+    require(probes.columns.nonEmpty, "lookupFiles: no probe columns")
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val statsDir = StatsManifest.dir(path)
+    val hasStats = fs.exists(statsDir)
+    val bloomed = probes.columns.filter(c => fs.exists(bloomDir(path, c))).toSet
+    val indexed = probes.columns.toSeq.filter(c => hasStats || bloomed(c))
+    require(indexed.nonEmpty,
+      s"lookupFiles: no _graft_stats or _graft_bloom index on any of " +
+        s"(${probes.columns.mkString(", ")}) under $path")
+    val current = currentDataFiles(spark, fs, hp, path)
+    val live = current.toSet
+    val stats = if (!hasStats) None else Some(validatedManifest(fs, statsDir,
+      live, s"_graft_stats manifest under $path", "writeStats"))
+    val blooms = indexed.filter(bloomed).map(c => c -> validatedManifest(fs,
+      bloomDir(path, c), live, s"_graft_bloom/$c index under $path",
+      "appendBloomIndex")).toMap
+    val probed = collectProbes(probes.select(indexed.map(probes.col): _*), maxProbes)
+      .getOrElse(return (current, current.size))
+    val kept = indexed.map { c =>
+      val (strs, hashes) = probed(c)
+      val byBloom = blooms.get(c).map(bloomVerdict(_, live, hashes).toSet)
+      val byStats = stats.flatMap { m =>
+        try Some(statsVerdict(m, live, c, strs).toSet)
+        catch { case _: IllegalArgumentException if byBloom.nonEmpty => None }
+      }
+      (byBloom ++ byStats).reduce(_ intersect _)
+    }.reduce(_ intersect _)
+    (kept.toSeq.sorted, current.size)
+  }
+
+  /** Point-lookup read over [[lookupFiles]]' prune — the caller still
+    * applies the equality filters (superset contract, as with every
+    * skipping read here).
+    */
+  def readLookup(spark: SparkSession, path: String, probes: DataFrame,
+      maxProbes: Int = 100000): DataFrame = {
     requireNoDvs(spark,
       new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      path, "readProbed")
-    readFileSubset(spark, path, probeDataFiles(spark, path, c, probes)._1)
+      path, "readLookup")
+    readFileSubset(spark, path, lookupFiles(spark, path, probes, maxProbes)._1)
   }
-
-  // ======================================================================
-  // BLOOM-FILTER SKIPPING INDEX — the high-cardinality complement of the
-  // `_graft_stats` min/max manifest. Min/max bounds prune range and
-  // low-cardinality equality predicates, but on a HASH-clustered or
-  // unsorted layout every file's [min, max] spans the whole key domain
-  // and an equality probe skips nothing. A per-file Bloom filter answers
-  // "could this file hold key k?" regardless of layout: false positives
-  // only (a kept file may be empty of matches — the residual filter
-  // drops its rows), never false negatives (a dropped file provably
-  // holds no probe), so a bloom-pruned read + equality filter is
-  // IDENTICAL to the full scan + filter. This is Delta/Iceberg's bloom
-  // column index re-expressed over the same sidecar-manifest mechanics
-  // as _graft_stats: JSON rows (one per data file) under
-  // `_graft_bloom/<col>/`, base64-serialized org.apache.spark.util
-  // .sketch.BloomFilter built by Spark's own BloomFilterAggregate
-  // (xxhash64-keyed — the exact sketch InjectRuntimeFilter uses).
-  //
-  // 100 TB posture: the index is built DISTRIBUTIVELY (one groupBy
-  // input_file_name over the table — each task sketches its own file;
-  // only the serialized filters cross the shuffle, ~bits/8 bytes per
-  // file), maintained INCREMENTALLY (appendBloomIndex sketches only
-  // manifest-uncovered files, keeping a daily admit O(batch)), and
-  // probed DISTRIBUTIVELY (the manifest is read as a DataFrame; per-file
-  // maybe-verdicts are computed in the cluster via BloomMightContainAny
-  // and only kept PATH strings reach the driver — at ~800k files the
-  // blooms are GBs, the paths are the same metadata the version manifest
-  // already holds). Probe sets above `maxProbes` degrade gracefully to
-  // the unpruned read — never worse than no index, never a failure.
-  // ======================================================================
 
   private def bloomDir(path: String, c: String) = {
     // the manifest dir name IS the column name (auto-refresh recovers the
@@ -5725,14 +5866,16 @@ object Lake {
   /** Keep every existing bloom index live across a commit — the bloom
     * sibling of the appendStats keep-alive hooks: O(fresh files) per
     * indexed column, no-op without an index. Same invariant: commits
-    * that add files are exactly the ones that would otherwise flip
-    * [[bloomProbeFiles]]'s stale guard into refusing every read.
+    * that add files are exactly the ones that would otherwise flip the
+    * index's stale guard into refusing every lookup. Dot-named entries
+    * are a publish's staging or aside copies, not indexes.
     */
   private def refreshBloomIndexes(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(path, "_graft_bloom")
     if (!fs.exists(root)) return
-    fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
+    fs.listStatus(root).map(_.getPath.getName)
+      .filterNot(_.startsWith("."))
       .foreach(c => appendBloomIndex(spark, path, c))
   }
 
@@ -5742,23 +5885,24 @@ object Lake {
     math.max(64L, math.ceil(-n * math.log(fpp) / (ln2 * ln2)).toLong)
   }
 
-  /** Per-file bloom sketch rows for `files` of table `path`: one row per
-    * data file with the base64 filter over xxhash64(`c`). NULL keys are
-    * not sketched (an equality probe never matches NULL), matching the
-    * stats manifest's all-null convention.
+  /** Per-file bloom manifest lines for `files` of table `path`: one line
+    * per data file with the base64 filter over xxhash64(`c`), from one
+    * distributed aggregate. NULL keys are not sketched (an equality probe
+    * never matches NULL), matching the stats manifest's all-null
+    * convention.
     */
-  private def bloomRows(spark: SparkSession, path: String, c: String,
-      files: Seq[String], expectedPerFile: Long, fpp: Double): DataFrame = {
+  private def bloomLines(spark: SparkSession, path: String, c: String,
+      files: Seq[String], expectedPerFile: Long, fpp: Double): Seq[String] = {
     import org.apache.spark.sql.functions.{base64, col, input_file_name, when, xxhash64}
     // null keys are skipped via a null hash (the aggregate ignores nulls),
     // NOT by pre-filtering rows: an all-null file must still emit its
     // manifest row (null bloom → provably probe-free → prunable), or the
     // stale-coverage guard would refuse the table forever
-    readFileSubset(spark, path, files)
+    manifestLines(readFileSubset(spark, path, files)
       .groupBy(input_file_name().as("file"))
       .agg(base64(graft.functions.TextFunctions.bloom_filter_agg(
         when(col(c).isNotNull, xxhash64(col(c))), expectedPerFile,
-        bloomBits(expectedPerFile, fpp))).as("bloom_b64"))
+        bloomBits(expectedPerFile, fpp))).as("bloom_b64")))
   }
 
   /** FULL bloom-index (re)build for column `c`: sketch every current data
@@ -5771,21 +5915,17 @@ object Lake {
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireNoColMap(spark, fs, path, "writeBloomIndex")
     val files = currentDataFiles(spark, fs, hp, path)
-    val out = bloomDir(path, c)
-    val staging = new org.apache.hadoop.fs.Path(path, s"._graft_bloom_build_${c}")
-    fs.delete(staging, true)
-    bloomRows(spark, path, c, files, expectedPerFile, fpp)
-      .coalesce(1).write.mode(SaveMode.Overwrite).json(staging.toString)
-    fs.mkdirs(out.getParent)
-    publishManifest(fs, staging, out, path)
+    replaceManifest(fs, bloomDir(path, c),
+      bloomLines(spark, path, c, files, expectedPerFile, fpp))
     files.size.toLong
   }
 
   /** INCREMENTAL bloom-index maintenance — the O(batch) complement of
     * [[writeBloomIndex]] for append-only tables: sketch ONLY the data
     * files the index does not cover yet and add their rows as one more
-    * manifest json file (atomic rename; readers see the union). Falls
-    * back to a full rebuild when no index exists.
+    * manifest file ([[appendManifest]]: atomic rename, readers see the
+    * union, self-folding). Falls back to a full rebuild when no index
+    * exists.
     *
     * @return newly covered files
     */
@@ -5796,256 +5936,28 @@ object Lake {
     requireNoColMap(spark, fs, path, "appendBloomIndex")
     val out = bloomDir(path, c)
     if (!fs.exists(out)) return writeBloomIndex(spark, path, c, expectedPerFile, fpp)
-    val covered = spark.read.json(out.toString).select("file").collect()
-      .map(r => new java.net.URI(r.getString(0)).getPath).toSet
+    val covered = StatsManifest.read(fs, out).files.toSet
     val fresh = currentDataFiles(spark, fs, hp, path).filterNot(covered)
     if (fresh.isEmpty) return 0L
-    val staging = new org.apache.hadoop.fs.Path(path, s"._graft_bloom_append_${c}")
-    fs.delete(staging, true)
-    bloomRows(spark, path, c, fresh, expectedPerFile, fpp)
-      .coalesce(1).write.mode(SaveMode.Overwrite).json(staging.toString)
-    val parts = fs.listStatus(staging).filter(f =>
-      f.isFile && f.getPath.getName.startsWith("part-"))
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val dst = new org.apache.hadoop.fs.Path(out,
-        s"append-${System.nanoTime()}-$i.json")
-      require(fs.rename(p.getPath, dst),
-        s"appendBloomIndex: could not add manifest file under $path")
-    }
-    fs.delete(staging, true)
-    // self-folding past the threshold — see appendStats' note
-    if (manifestFileCount(fs, out) > ManifestFoldThreshold)
-      compactBloomIndex(spark, path, c)
+    appendManifest(fs, hp, out,
+      bloomLines(spark, path, c, fresh, expectedPerFile, fpp))
     fresh.size.toLong
   }
 
   /** METADATA-ONLY bloom-manifest compaction — [[compactStats]]' sibling
-    * for `_graft_bloom/<c>`: fold the `append-*.json` files the
-    * incremental maintenance accretes (one per commit, deliberately)
-    * back into ONE manifest file, dropping rows for data files no longer
-    * ON DISK (vacuumed away — probes already ignore them via the
-    * current-file intersection, but under a delete/merge-heavy table the
-    * manifest would otherwise grow forever). Retired-but-on-disk files
-    * keep their rows (a restore could need them). Reads only the
-    * manifest, never data; publishes via the staged-write + rename-aside
-    * swap. @return (manifest files before, after)
+    * for `_graft_bloom/<c>`, the same driver fold ([[foldManifest]]):
+    * folds the per-commit append files back into ONE manifest file and
+    * drops rows for data files no longer ON DISK. Reads only the
+    * manifest, never data; no Spark job. @return (manifest files before,
+    * after)
     */
   def compactBloomIndex(spark: SparkSession, path: String,
       c: String): (Long, Long) = {
-    import org.apache.spark.sql.functions.{broadcast, col, regexp_replace, url_decode}
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = bloomDir(path, c)
-    require(fs.exists(out), s"no _graft_bloom/$c index under $path")
-    def manifestFiles() = fs.listStatus(out).count(f =>
-      f.isFile && !f.getPath.getName.startsWith(".") &&
-        !f.getPath.getName.startsWith("_"))
-    val nBefore = manifestFiles().toLong
-    val manifest = spark.read.json(out.toString)
-    val onDisk = listDataFiles(fs, hp)
-    val normFile = url_decode(regexp_replace(col("file"),
-      "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", ""))
-    val onDiskDf = spark.createDataset(onDisk.toIndexedSeq)(
-      org.apache.spark.sql.Encoders.STRING).toDF("_graft_on_disk")
-    val kept = manifest.join(broadcast(onDiskDf),
-      normFile === col("_graft_on_disk"), "leftsemi")
-    val dead = manifest.count() - kept.count()
-    if (nBefore <= 1 && dead == 0L) return (nBefore, nBefore)
-    val staging = new org.apache.hadoop.fs.Path(path, s"._graft_bloom_fold_$c")
-    fs.delete(staging, true)
-    kept.coalesce(1).write.mode(SaveMode.Overwrite).json(staging.toString)
-    publishManifest(fs, staging, out, path)
-    (nBefore, manifestFiles().toLong)
-  }
-
-  /** Bloom-prune the current file set of `path` against a bounded probe
-    * column (single-column DataFrame of the indexed key's type). Returns
-    * (files kept, total current files); kept == total when the probe set
-    * exceeds `maxProbes` (graceful degrade — pruning is an optimization,
-    * a huge probe side just means the full narrow scan was the right
-    * plan anyway). Stale index (a current file not covered) REFUSES
-    * loudly rather than silently dropping its rows — same posture as
-    * [[readSkipping]]'s validatedManifest; re-run [[appendBloomIndex]]
-    * to repair.
-    */
-  def bloomProbeFiles(spark: SparkSession, path: String, c: String,
-      probes: DataFrame, maxProbes: Int = 100000): (Seq[String], Int) = {
-    import org.apache.spark.sql.functions.{col, unbase64, xxhash64}
-    require(probes.columns.length == 1,
-      s"bloomProbeFiles($c): probe side must be a single key column")
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = bloomDir(path, c)
-    require(fs.exists(out), s"no _graft_bloom/$c index under $path")
-    val manifest = spark.read.json(out.toString)
-    val current = currentDataFiles(spark, fs, hp, path)
-    val coveredSet = manifest.select("file").collect()
-      .map(r => new java.net.URI(r.getString(0)).getPath).toSet
-    require(current.forall(coveredSet),
-      s"stale _graft_bloom/$c index under $path: " +
-        s"${current.count(f => !coveredSet(f))} data file(s) not covered " +
-        "- run appendBloomIndex")
-    // xxhash64 the probes through Spark itself so the key hashing is
-    // byte-identical to what bloom_filter_agg saw at build time, whatever
-    // the key's type. Bounded collect: maxProbes+1 rows tell us whether
-    // the cap was crossed without materializing an unbounded set.
-    val hashes = probes.na.drop().distinct().limit(maxProbes + 1)
-      .select(xxhash64(col(probes.columns.head)).as("h"))
-      .collect().map(_.getLong(0))
-    if (hashes.length > maxProbes) return (current, current.size)
-    // degenerate manifest: every covered file was all-null (json drops
-    // null fields, so the column may not even infer) → nothing can match
-    if (!manifest.schema.fieldNames.contains("bloom_b64"))
-      return (Seq.empty, current.size)
-    // per-file maybe-verdicts in the cluster; only kept paths come back
-    val kept = manifest
-      .filter(graft.functions.TextFunctions.bloom_might_contain_any(
-        unbase64(col("bloom_b64")), hashes))
-      .select("file").distinct().collect()
-      .map(r => new java.net.URI(r.getString(0)).getPath)
-    val currentSet = current.toSet
-    (kept.filter(currentSet).distinct.toIndexedSeq, current.size)
-  }
-
-  /** Bloom-pruned point-lookup read: only files whose bloom may contain a
-    * probe are opened. The caller still applies the equality filter — the
-    * pruned read is a SUPERSET of the matching rows (false positives keep
-    * whole files), exactly like every other skipping read here.
-    */
-  def readBloomSkipping(spark: SparkSession, path: String, c: String,
-      probes: DataFrame, maxProbes: Int = 100000): DataFrame = {
-    requireNoDvs(spark,
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      path, "readBloomSkipping")
-    readFileSubset(spark, path,
-      bloomProbeFiles(spark, path, c, probes, maxProbes)._1)
-  }
-
-  /** Point-lookup file pruning composing EVERY skipping index the table
-    * carries on `c`: `_graft_stats` min/max bounds (tight on range/
-    * z-ordered layouts, blind on hash layouts) ∩ `_graft_bloom`
-    * membership (tight on any layout, modulo false positives). Each
-    * prune is a SUPERSET of the files holding matches, so the
-    * intersection still is — the two indexes' strengths compose instead
-    * of competing, and a table that carries both gets the min of either
-    * read. A stats manifest with NUMERIC bounds (where lexicographic
-    * probe comparison would be unsound — [[probeDataFiles]] refuses it)
-    * silently contributes nothing; a probe set past `maxProbes` likewise
-    * degrades that index to no-prune. Refuses only when NO index exists.
-    *
-    * @return (files kept, total current files)
-    */
-  def lookupFiles(spark: SparkSession, path: String, c: String,
-      probes: DataFrame, maxProbes: Int = 100000): (Seq[String], Int) = {
-    import org.apache.spark.sql.functions.col
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasBloom = fs.exists(bloomDir(path, c))
-    val hasStats = fs.exists(new org.apache.hadoop.fs.Path(path, "_graft_stats"))
-    require(hasBloom || hasStats,
-      s"lookupFiles($c): no _graft_stats or _graft_bloom index under $path")
-    var kept: Option[Set[String]] = None
-    var total = -1
-    if (hasBloom) {
-      val (k, t) = bloomProbeFiles(spark, path, c, probes, maxProbes)
-      kept = Some(k.toSet); total = t
-    }
-    if (hasStats) {
-      val strs = probes.na.drop().distinct().limit(maxProbes + 1)
-        .select(col(probes.columns.head).cast("string"))
-        .collect().map(_.getString(0)).toIndexedSeq
-      if (strs.length <= maxProbes) {
-        try {
-          val (k0, t) = probeDataFiles(spark, path, c, strs)
-          // stats manifest rows carry input_file_name's scheme; the bloom
-          // prune is already in scheme-less URI.getPath form — intersect
-          // in the scheme-less identity used everywhere else
-          val k = k0.map(f => new java.net.URI(f).getPath)
-          total = t
-          kept = Some(kept.fold(k.toSet)(_ intersect k.toSet))
-        } catch {
-          // numeric stats bounds: lexicographic probing unsound — this
-          // index contributes nothing, the bloom (if any) already did
-          case _: IllegalArgumentException if kept.nonEmpty => ()
-        }
-      }
-    }
-    val current = currentDataFiles(spark, fs, hp, path)
-    val currentTotal = if (total >= 0) total else current.size
-    // every present index declined (probe cap): graceful degrade to the
-    // full narrow scan — same contract as bloomProbeFiles past its cap
-    (kept.map(_.toSeq.sorted).getOrElse(current), currentTotal)
-  }
-
-  /** Point-lookup read over [[lookupFiles]]' composed prune — the caller
-    * still applies the equality filter (superset contract, as with every
-    * skipping read here).
-    */
-  def readLookup(spark: SparkSession, path: String, c: String,
-      probes: DataFrame, maxProbes: Int = 100000): DataFrame = {
-    requireNoDvs(spark,
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      path, "readLookup")
-    readFileSubset(spark, path,
-      lookupFiles(spark, path, c, probes, maxProbes)._1)
-  }
-
-  /** MULTI-COLUMN point-lookup pruning: every probe column prunes
-    * independently through whatever per-column sidecar indexes it
-    * carries (stats bounds ∩ bloom membership, via [[lookupFiles]]), and
-    * the verdicts AND together — a file survives only if EVERY indexed
-    * column says "maybe". Sound for conjunctive lookups because a row
-    * matching (c1 = v1 AND c2 = v2) puts v1 in the file's c1 values and
-    * v2 in its c2 values, so each per-column prune independently keeps
-    * that file; the intersection of supersets is a superset. Tuple-set
-    * probes (rows of (v1, v2) pairs) stay sound for the same reason —
-    * each column's prune uses the column's VALUE SET, which can only keep
-    * more files than the exact tuple semantics would. On a bloom-only
-    * table, a probe column with no bloom sidecar is skipped (at least one
-    * column must carry an index); on a STATS-bearing table every probe
-    * column is treated as stats-indexed, and a column the manifest does
-    * not track fails LOUDLY — a silently unindexed column must never
-    * masquerade as a no-prune verdict. A column past the probe cap
-    * degrades to no-prune, weakening but never breaking the
-    * intersection. @return (files kept, total current files)
-    */
-  def lookupFilesMulti(spark: SparkSession, path: String,
-      probes: DataFrame, maxProbes: Int = 100000): (Seq[String], Int) = {
-    require(probes.columns.nonEmpty, "lookupFilesMulti: no probe columns")
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasStats = fs.exists(new org.apache.hadoop.fs.Path(path, "_graft_stats"))
-    val indexed = probes.columns.filter(c =>
-      fs.exists(bloomDir(path, c)) || hasStats)
-    require(indexed.nonEmpty,
-      s"lookupFilesMulti: no _graft_stats or _graft_bloom index on any of " +
-        s"(${probes.columns.mkString(", ")}) under $path")
-    var kept: Option[Set[String]] = None
-    var total = -1
-    indexed.foreach { c =>
-      // a stats manifest not tracking c, or numeric-bounds refusal with
-      // no bloom, surfaces as lookupFiles' own loud failure — a silently
-      // unindexed column must not masquerade as a no-prune verdict
-      val (k, t) = lookupFiles(spark, path, c, probes.select(c), maxProbes)
-      total = t
-      kept = Some(kept.fold(k.toSet)(_ intersect k.toSet))
-    }
-    (kept.get.toSeq.sorted, total)
-  }
-
-  /** Multi-column point-lookup read over [[lookupFilesMulti]]'s
-    * intersected prune (superset contract; caller applies the filters).
-    */
-  def readLookupMulti(spark: SparkSession, path: String,
-      probes: DataFrame, maxProbes: Int = 100000): DataFrame = {
-    requireNoDvs(spark,
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      path, "readLookupMulti")
-    readFileSubset(spark, path,
-      lookupFilesMulti(spark, path, probes, maxProbes)._1)
+    val d = bloomDir(path, c)
+    require(fs.exists(d), s"no _graft_bloom/$c index under $path")
+    foldManifest(fs, hp, d)
   }
 
   /** All parquet data files under `dir`, recursing through partition dirs;

@@ -2,15 +2,17 @@ package graft.sources
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-/** The `_graft_stats` data-skipping manifest, read on the driver.
+/** A data-skipping manifest, read on the driver: `_graft_stats` and each
+  * `_graft_bloom/<c>` index.
   *
-  * The manifest is a directory of JSON-lines files, one flat record per
-  * data file (`file`, `n_rows`, `min_<c>`/`max_<c>` per tracked column),
-  * written by Spark's JSON generator or, from parquet footers
-  * ([[StatsManifest.fromFooters]]), in its shape. These records are
+  * A manifest is a directory of JSON-lines files, one flat record per
+  * data file (`_graft_stats`: `file`, `n_rows`, `min_<c>`/`max_<c>` per
+  * tracked column; `_graft_bloom/<c>`: `file`, `bloom_b64`), rendered by
+  * Spark's JSON generator with NULL fields written out or, from parquet
+  * footers ([[StatsManifest.fromFooters]]), in its shape. These records are
   * planning metadata, the facts Delta keeps in its log: reading them through
   * `spark.read.json` costs a schema-inference job plus a job per collect,
   * for a few KB. This reader parses them with Jackson instead and gives
@@ -23,14 +25,18 @@ import org.apache.spark.sql.types._
   *    holding the value's exact source text, a field that is only ever
   *    null → string.
   *
-  * Driver memory is O(files × tracked columns), the order of the version
-  * manifest every read already resolves. A malformed line fails loudly:
-  * the manifest is derived data, and [[Lake.writeStats]] rebuilds it.
+  * Driver memory is O(files × tracked columns) — for a bloom index,
+  * O(files × filter bytes) — the order of the version manifest every read
+  * already resolves. A malformed line fails loudly: the manifest is
+  * derived data, and [[Lake.writeStats]] (or [[Lake.writeBloomIndex]])
+  * rebuilds it.
   */
 private[graft] final case class StatsManifest(schema: StructType,
     rows: IndexedSeq[Row]) {
 
-  /** Columns the manifest carries bounds for (`min_<c>` present). */
+  /** Columns the manifest carries bounds for (`min_<c>` present; an
+    * all-NULL column's bounds are written as `null`, so it is tracked too).
+    */
   def tracked: Seq[String] =
     schema.fieldNames.toSeq.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
 
@@ -50,6 +56,14 @@ private[graft] final case class StatsManifest(schema: StructType,
     */
   def frame(spark: SparkSession): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** Whether each row satisfies `keep`, a predicate over the manifest's
+    * fields (build it with [[Lake.skipRange]]): analysed once, then
+    * interpreted on the driver — no Spark job, and no generated class for
+    * a new literal. NULL counts as false.
+    */
+  def keeps(spark: SparkSession, keep: Column): IndexedSeq[Boolean] =
+    GraftSqlShims.evalLocalFilter(frame(spark), keep)
 }
 
 private[graft] object StatsManifest {
@@ -93,13 +107,14 @@ private[graft] object StatsManifest {
   private val json = new JsonFactory()
 
   /** Manifest lines for data `files` read from their parquet footers, with
-    * no Spark job, in the shape Spark's JSON writer gives the per-file
+    * no Spark job, in the shape [[Lake.writeStats]] renders the per-file
     * `min`/`max`/`count` aggregate (`file` as `input_file_name` spells it,
     * then `min_<c>`, `max_<c>` per column, then `n_rows`; null bounds
-    * omitted; a file without rows has no line). Footer statistics are that
-    * aggregate exactly when every column is a top-level INT32/INT64 with
-    * no or a signed-integer annotation (parquet orders those signed, as
-    * Spark does) and every non-empty row group carries statistics. None
+    * written as `null`; a file without rows has no line). Footer
+    * statistics are that aggregate exactly when every column is a
+    * top-level INT32/INT64 with no or a signed-integer annotation (parquet
+    * orders those signed, as Spark does) and every non-empty row group
+    * carries statistics. None
     * when a file or column falls outside that: the caller aggregates.
     * `cols` must name the files' physical columns (no renames or type
     * changes between file and table). Cost: one footer read per file.
@@ -147,10 +162,14 @@ private[graft] object StatsManifest {
         val g = json.createGenerator(w)
         g.writeStartObject()
         g.writeStringField("file", p.toUri.toString)
-        bounds.foreach { case (c, b) => b.foreach { case (lo, hi) =>
-          g.writeNumberField(s"min_$c", lo)
-          g.writeNumberField(s"max_$c", hi)
-        } }
+        bounds.foreach {
+          case (c, Some((lo, hi))) =>
+            g.writeNumberField(s"min_$c", lo)
+            g.writeNumberField(s"max_$c", hi)
+          case (c, None) =>
+            g.writeNullField(s"min_$c")
+            g.writeNullField(s"max_$c")
+        }
         g.writeNumberField("n_rows", n)
         g.writeEndObject()
         g.close()

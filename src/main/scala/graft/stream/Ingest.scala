@@ -115,7 +115,7 @@ object Ingest {
     * re-drain, and it leaves `_spark_metadata` alone (log-trusting
     * readers keep working; Lake's skipping readers list files directly).
     * Without this, a stream-written table `require`-fails every
-    * readSkipping/readProbed until someone pays a corpus-scan writeStats —
+    * readSkipping/readLookup until someone pays a corpus-scan writeStats —
     * correct but unusable. Triggered pipelines call it post-drain;
     * a continuous deployment would call it from foreachBatch after each
     * commit (same cost shape: stats for that batch's files only).

@@ -114,8 +114,8 @@ object DumpPlans {
       "candidate pairs come from an EQUI join on (chunk, chunk_val) — " +
       "no CartesianProduct, and document text never crosses an Exchange" :: Nil),
     "lake_bloom_skip" -> ("bloom-index point lookup on a hash-clustered layout" ::
-      "expect: the probe side resolved at PLAN time (manifest filter + " +
-      "BloomMightContainAny ran before this plan existed) — the data " +
+      "expect: the probe side resolved at PLAN time (the driver-side " +
+      "bloom verdicts ran before this plan existed) — the data " +
       "plan is just scan→filter→sort over the bloom-kept file subset, " +
       "where min/max stats would have kept all 16 files" :: Nil),
   )

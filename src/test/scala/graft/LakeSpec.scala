@@ -209,10 +209,10 @@ class LakeSpec extends SparkSpec {
     // the merged manifest answers metadata counts and skips like a full
     // rebuild would
     assert(Lake.rowCountFromManifest(spark, dir).contains(1300L))
-    val probed = Lake.readProbed(spark, dir, "k", Seq(f"${1250}%06d"))
+    val probed = Lake.readLookup(spark, dir, Seq(f"${1250}%06d").toDF("k"))
       .select("k", "v").collect().map(_.toString).sorted.toSeq
     Lake.writeStats(spark, dir, Seq("k")) // full rebuild, same data
-    val rebuilt = Lake.readProbed(spark, dir, "k", Seq(f"${1250}%06d"))
+    val rebuilt = Lake.readLookup(spark, dir, Seq(f"${1250}%06d").toDF("k"))
       .select("k", "v").collect().map(_.toString).sorted.toSeq
     assert(probed == rebuilt && probed.nonEmpty)
   }
@@ -441,7 +441,7 @@ class LakeSpec extends SparkSpec {
     assert(holding.subsetOf(kept.toSet),
       s"false negative: ${holding -- kept.toSet}")
     // superset guarantee: pruned read + equality filter == full scan
-    val got = Lake.readBloomSkipping(spark, dir, "id", probes)
+    val got = Lake.readLookup(spark, dir, probes)
       .filter(col("id").isin(ids: _*)).collect().toSet
     val want = spark.read.parquet(dir)
       .filter(col("id").isin(ids: _*)).collect().toSet
@@ -468,7 +468,7 @@ class LakeSpec extends SparkSpec {
     assert(e.getMessage.contains("appendBloomIndex"), e.getMessage)
     // incremental repair sketches ONLY the fresh file, then finds the row
     assert(Lake.appendBloomIndex(spark, dir, "id") == 1L)
-    val got = Lake.readBloomSkipping(spark, dir, "id", probe)
+    val got = Lake.readLookup(spark, dir, probe)
       .filter(col("id") === 110L).select("v").as[String].collect().toSeq
     assert(got == Seq("v110"))
     // an ALL-NULL file still gets covered (no eternal staleness) and is
@@ -505,7 +505,7 @@ class LakeSpec extends SparkSpec {
     Lake.compactBloomIndex(spark, dir, "id")
     assert(spark.read.json(s"$dir/_graft_bloom/id").count() < rowsBefore,
       "vacuumed files' manifest rows were not dropped")
-    val got = Lake.readBloomSkipping(spark, dir, "id", Seq(150L).toDF("id"))
+    val got = Lake.readLookup(spark, dir, Seq(150L).toDF("id"))
       .filter(col("id") === 150L).count()
     assert(got == 1L)
   }
@@ -529,7 +529,7 @@ class LakeSpec extends SparkSpec {
       assert(files("_graft_stats") <= 65, s"round $i: stats manifest unbounded")
     }
     // correctness unchanged through the folds
-    val got = Lake.readBloomSkipping(spark, dir, "id", Seq(37L).toDF("id"))
+    val got = Lake.readLookup(spark, dir, Seq(37L).toDF("id"))
       .filter(col("id") === 37L).select("v").as[String].collect().toSeq
     assert(got == Seq("v37"))
     assert(Lake.rowCountFromManifest(spark, dir).contains(71L))
@@ -548,11 +548,11 @@ class LakeSpec extends SparkSpec {
     // — NO manual repair step, and the deleted key must stay gone
     assert(Lake.appendBloomIndex(spark, dir, "id") == 0L,
       "commit hook should have covered the rewrites already")
-    val got = Lake.readBloomSkipping(spark, dir, "id", Seq(42L).toDF("id"))
+    val got = Lake.readLookup(spark, dir, Seq(42L).toDF("id"))
       .filter(col("id") === 42L)
     assert(got.isEmpty, "bloom read resurrected a deleted row")
     // a surviving key still resolves through the repaired index
-    val live = Lake.readBloomSkipping(spark, dir, "id", Seq(41L).toDF("id"))
+    val live = Lake.readLookup(spark, dir, Seq(41L).toDF("id"))
       .filter(col("id") === 41L)
     assert(live.count() == 1L)
   }
@@ -566,10 +566,9 @@ class LakeSpec extends SparkSpec {
     Lake.writeStats(spark, dir, Seq("k"))
     Lake.writeBloomIndex(spark, dir, "k", expectedPerFile = 500L)
     val probes = Seq(f"${42}%06d", f"${1777}%06d").toDF("k")
-    val (both, total) = Lake.lookupFiles(spark, dir, "k", probes)
+    val (both, total) = Lake.lookupFiles(spark, dir, probes)
     val (statsOnly0, _) = Lake.probeDataFiles(spark, dir, "k",
       Seq(f"${42}%06d", f"${1777}%06d"))
-    // probeDataFiles returns the manifest's scheme-qualified form;
     // compare in the scheme-less identity lookupFiles uses
     val statsOnly = statsOnly0.map(f => new java.net.URI(f).getPath)
     val (bloomOnly, _) = Lake.bloomProbeFiles(spark, dir, "k", probes)
@@ -578,7 +577,7 @@ class LakeSpec extends SparkSpec {
     assert(both.toSet.subsetOf(bloomOnly.toSet), "intersection ⊄ bloom prune")
     assert(both.size <= 2 && both.nonEmpty, s"kept ${both.size} of $total")
     // superset contract end-to-end
-    val got = Lake.readLookup(spark, dir, "k", probes)
+    val got = Lake.readLookup(spark, dir, probes)
       .filter(col("k").isin(f"${42}%06d", f"${1777}%06d"))
       .collect().toSet
     val want = spark.read.parquet(dir)
@@ -592,7 +591,7 @@ class LakeSpec extends SparkSpec {
       .repartition(8, col("id")).write.parquet(dir2)
     Lake.writeStats(spark, dir2, Seq("id"))
     Lake.writeBloomIndex(spark, dir2, "id", expectedPerFile = 200L)
-    val (kept2, total2) = Lake.lookupFiles(spark, dir2, "id",
+    val (kept2, total2) = Lake.lookupFiles(spark, dir2,
       Seq(77L).toDF("id"))
     assert(total2 == 8 && kept2.size < 8, s"kept ${kept2.size}")
     // …and with ONLY numeric stats it refuses loudly (skipRange is the
@@ -601,7 +600,7 @@ class LakeSpec extends SparkSpec {
     spark.range(100).toDF("id").repartition(2).write.parquet(dir3)
     Lake.writeStats(spark, dir3, Seq("id"))
     intercept[IllegalArgumentException] {
-      Lake.lookupFiles(spark, dir3, "id", Seq(5L).toDF("id"))
+      Lake.lookupFiles(spark, dir3, Seq(5L).toDF("id"))
     }
   }
 
@@ -624,7 +623,7 @@ class LakeSpec extends SparkSpec {
     val probes = Seq((5L, 10L)).toDF("a", "b")
     val (aOnly, totalA) = Lake.bloomProbeFiles(spark, dir, "a", probes.select("a"))
     val (bOnly, totalB) = Lake.bloomProbeFiles(spark, dir, "b", probes.select("b"))
-    val (both, total) = Lake.lookupFilesMulti(spark, dir, probes)
+    val (both, total) = Lake.lookupFiles(spark, dir, probes)
     assert(total == 16 && totalA == 16 && totalB == 16)
     assert(aOnly.size == 4 && bOnly.size == 4,
       s"single-column prunes: a=${aOnly.size}, b=${bOnly.size}")
@@ -632,7 +631,7 @@ class LakeSpec extends SparkSpec {
       "multi prune must be the intersection of the per-column verdicts")
     assert(both.size == 1, s"expected the one (a%4, b%4) grid file, got $both")
     // superset contract end-to-end: pruned read + filters == full scan
-    val got = Lake.readLookupMulti(spark, dir, probes)
+    val got = Lake.readLookup(spark, dir, probes)
       .filter(col("a") === 5L && col("b") === 10L).select("id").collect().toSet
     val want = spark.read.parquet(dir)
       .filter(col("a") === 5L && col("b") === 10L).select("id").collect().toSet
@@ -640,13 +639,20 @@ class LakeSpec extends SparkSpec {
     // on this bloom-only table a probe column with no bloom is skipped
     // (the indexed columns still prune), and a fully unindexed probe set
     // refuses loudly
-    val (withUnindexed, _) = Lake.lookupFilesMulti(spark, dir,
+    val (withUnindexed, _) = Lake.lookupFiles(spark, dir,
       probes.withColumn("zz", lit(1L)))
     assert(withUnindexed.toSet == both.toSet,
       "an unindexed extra column must not change the bloom-only prune")
     intercept[IllegalArgumentException] {
-      Lake.lookupFilesMulti(spark, dir, Seq(1L).toDF("zz"))
+      Lake.lookupFiles(spark, dir, Seq(1L).toDF("zz"))
     }
+    // a probe frame past the cap weakens the prune to every file and
+    // never breaks the read
+    val (capped, totalCapped) = Lake.lookupFiles(spark, dir, probes, maxProbes = 0)
+    assert(capped.size == 16 && totalCapped == 16, s"kept ${capped.size}")
+    val gotCapped = Lake.readLookup(spark, dir, probes, maxProbes = 0)
+      .filter(col("a") === 5L && col("b") === 10L).select("id").collect().toSet
+    assert(gotCapped == want)
   }
 
   test("WAP: stage is invisible, audit sees the union, publish folds it in") {
@@ -983,9 +989,9 @@ class LakeSpec extends SparkSpec {
     assert(Lake.readVersioned(spark, dir, Some(1L)).count() == 1000)
     // the skipping manifest stayed live across the delete (incremental
     // append for the rewritten files): probes prune and cannot resurrect
-    val gone = Lake.readProbed(spark, dir, "k", Seq(f"${105}%06d"))
+    val gone = Lake.readLookup(spark, dir, Seq(f"${105}%06d").toDF("k"))
     assert(gone.filter(col("k") === f"${105}%06d").count() == 0)
-    val there = Lake.readProbed(spark, dir, "k", Seq(f"${500}%06d"))
+    val there = Lake.readLookup(spark, dir, Seq(f"${500}%06d").toDF("k"))
     assert(there.filter(col("k") === f"${500}%06d").count() == 1)
     // vacuum makes the delete physical: exactly ONE of the 8 range-laid
     // files matched and goes; the 7 others are shared with v2 by
@@ -1005,7 +1011,7 @@ class LakeSpec extends SparkSpec {
     Lake.compactStats(spark, dir)
     assert(spark.read.json(s"$dir/_graft_stats").count() ==
       7L + rewritten.size)
-    val again = Lake.readProbed(spark, dir, "k", Seq(f"${500}%06d"))
+    val again = Lake.readLookup(spark, dir, Seq(f"${500}%06d").toDF("k"))
     assert(again.filter(col("k") === f"${500}%06d").count() == 1)
   }
 
@@ -1168,7 +1174,7 @@ class LakeSpec extends SparkSpec {
     assert(cur.select("k").distinct().count() == 802)
     assert(Lake.readVersioned(spark, dir, Some(1L)).count() == 800)
     // the skipping manifest stayed live; probes keep pruning
-    val probed = Lake.readProbed(spark, dir, "k", Seq(f"${900}%06d"))
+    val probed = Lake.readLookup(spark, dir, Seq(f"${900}%06d").toDF("k"))
     assert(probed.filter(col("k") === f"${900}%06d").count() == 1)
     // dup-keyed source refused
     intercept[IllegalArgumentException] {
@@ -1655,7 +1661,7 @@ class LakeSpec extends SparkSpec {
     // nothing lost, old versions intact, stats manifest still validates
     assert(Lake.readVersioned(spark, dir).count() == 1300)
     assert(Lake.readVersioned(spark, dir, Some(1L)).count() == 1000)
-    assert(Lake.readProbed(spark, dir, "k", probe)
+    assert(Lake.readLookup(spark, dir, probe.toDF("k"))
       .filter(col("k") === probe.head).count() == 1)
   }
 

@@ -203,7 +203,8 @@ class PlanSpec extends SparkSpec {
     // pruned read ≡ full read for the probe equi-lookup (no matching row
     // may live in a dropped file)
     import org.apache.spark.sql.functions.col
-    val pruned = sources.Lake.readProbed(spark, ixPath, "mh", probes)
+    import spark.implicits._
+    val pruned = sources.Lake.readLookup(spark, ixPath, probes.toDF("mh"))
       .filter(col("mh").isin(probes: _*)).select("doc_id", "lane", "mh")
       .collect().map(_.toString).sorted
     val full = spark.read.parquet(ixPath)

@@ -59,10 +59,11 @@ class StatsManifestSpec extends SparkSpec {
     val cols = Seq("i", "l", "d", "s", "dt", "ts", "dec", "b", "sparse", "none")
     batch(0, 60).repartitionByRange(3, col("i")).write.parquet(dir)
     assert(Lake.writeStats(spark, dir, cols) == 3)
-    // (`none` has no bounds to track, so asking for it would rebuild)
+    // the all-NULL `none` is tracked, so an append naming it covers just
+    // the fresh file (a manifest without its bounds would rebuild: 4)
     for (b <- 0 until 2) {
       batch(60 + b * 10, 10).coalesce(1).write.mode("append").parquet(dir)
-      assert(Lake.appendStats(spark, dir, cols.filterNot(_ == "none")) == 1)
+      assert(Lake.appendStats(spark, dir, cols) == 1)
     }
     val d = StatsManifest.dir(dir)
     assert(StatsManifest.files(fsOf(dir), d).count(_.getName.startsWith("append-")) == 2)
@@ -75,10 +76,12 @@ class StatsManifestSpec extends SparkSpec {
       "n_rows" -> LongType).foreach { case (f, t) =>
       assert(m.schema(f).dataType == t, s"$f: ${m.schema(f).dataType}")
     }
-    // an all-NULL column has no bounds in any row, so no field at all
-    assert(!m.has("min_none") && !m.has("max_none"))
+    // an all-NULL column's bounds are written as NULL in every row, so
+    // the manifest still records the column as tracked
+    assert(Seq("min_none", "max_none").forall(f =>
+      m.rows.forall(_.isNullAt(m.schema.fieldIndex(f)))))
     assert(m.rows.count(r => r.isNullAt(m.schema.fieldIndex("min_sparse"))) == 3)
-    assert(m.tracked.toSet == (cols.toSet - "none"))
+    assert(m.tracked.toSet == cols.toSet)
   }
 
   test("footer stats equal the per-file aggregate, and an append through them equals a rebuild") {
@@ -110,8 +113,12 @@ class StatsManifestSpec extends SparkSpec {
     def aggregate(cs: Seq[String]): Seq[String] = {
       val aggs = cs.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
         count(lit(1)).as("n_rows")
-      spark.read.parquet(dir).groupBy(input_file_name().as("file"))
-        .agg(aggs.head, aggs.tail: _*).toJSON.collect().toSeq.sorted
+      val agg = spark.read.parquet(dir).groupBy(input_file_name().as("file"))
+        .agg(aggs.head, aggs.tail: _*)
+      // rendered as the manifest writers render it: NULL bounds written
+      agg.select(to_json(struct(agg.columns.map(col).toIndexedSeq: _*),
+          Map("ignoreNullFields" -> "false")))
+        .collect().map(_.getString(0)).toSeq.sorted
     }
     assert(StatsManifest.fromFooters(fs, files, cols).map(_.sorted).contains(aggregate(cols)))
     // bounds parquet orders otherwise, or a column a file lacks: the
@@ -120,13 +127,16 @@ class StatsManifestSpec extends SparkSpec {
       assert(StatsManifest.fromFooters(fs, files, Seq("l", c)).isEmpty, c))
     // appendStats lands the footer rows as one more manifest file; the
     // manifest then equals a full rebuild's
-    Lake.writeStats(spark, dir, cols.filterNot(_ == "none"))
+    Lake.writeStats(spark, dir, cols)
     batch(3000, 500).coalesce(1).write.mode("append").parquet(dir)
-    assert(Lake.appendStats(spark, dir, cols.filterNot(_ == "none")) == 1)
+    // the all-NULL `none` included: a manifest that did not track it
+    // would rebuild (4, and a corpus scan)
+    val n = jobsOf(assert(Lake.appendStats(spark, dir, cols) == 1))
+    assert(n <= 1, s"appendStats started $n jobs")
     val d = StatsManifest.dir(dir)
     assert(StatsManifest.files(fs, d).count(_.getName.startsWith("append-")) == 1)
     val appended = assertSameAsSpark(d)
-    Lake.writeStats(spark, dir, cols.filterNot(_ == "none"))
+    Lake.writeStats(spark, dir, cols)
     val rebuilt = StatsManifest.read(fs, d)
     assert(appended.schema == rebuilt.schema && show(appended.rows) == show(rebuilt.rows))
   }
@@ -212,5 +222,56 @@ class StatsManifestSpec extends SparkSpec {
     assert(nMeta == 0, s"manifest upkeep and pruning started $nMeta jobs")
     assert(Lake.readSkipping(spark, dir, keep).filter(col("id").between(100L, 150L))
       .count() == 51)
+  }
+
+  test("skipping reads and stats pruning with fresh literals compile no class") {
+    val dir = tmp() + "/t"
+    Lake.writeVersioned(spark,
+      spark.range(0, 1000).repartitionByRange(4, col("id")).toDF("id"), dir)
+    Lake.writeStats(spark, dir, Seq("id"))
+    def compiled = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    // literals no earlier run of this JVM has compiled a predicate for:
+    // the optimizer's local fold would generate a class for each range
+    val base = 1000000L + System.nanoTime() % 1000000L
+    val before = compiled
+    Lake.readSkipping(spark, dir, Lake.skipRange("id", lit(base), lit(base + 1)))
+    Lake.readSkipping(spark, dir, Lake.skipRange("id", lit(base + 7), lit(base + 9)))
+    val all = Lake.readVersioned(spark, dir).inputFiles.toSeq
+      .map(f => new java.net.URI(f).getPath)
+    val kept = Lake.pruneCandidatesWithStats(spark, StatsManifest.dir(dir),
+      Lake.skipRange("id", lit(base + 11), lit(base + 12)), all)
+    assert(compiled == before, s"${compiled - before} classes compiled")
+    assert(all.size == 4 && kept.isEmpty, s"${kept.size}/${all.size}")
+    assert(Lake.readSkipping(spark, dir, Lake.skipRange("id", lit(base), lit(base)))
+      .inputFiles.isEmpty)
+  }
+
+  test("bloom upkeep and point lookups stay within their job budgets") {
+    import spark.implicits._
+    val dir = tmp() + "/t"
+    def rows(r: Range) = r.map(i => (f"$i%06d", i.toLong)).toDF("k", "v")
+    Lake.writeVersioned(spark, rows(1 to 2000).repartitionByRange(8, col("k")), dir)
+    Lake.writeStats(spark, dir, Seq("k"))
+    Lake.writeBloomIndex(spark, dir, "k", expectedPerFile = 500L)
+    // two commits: the keep-alive hook adds two bloom manifest files
+    for (b <- 0 until 2)
+      Lake.appendVersioned(spark, rows(2001 + b * 10 to 2010 + b * 10).coalesce(1), dir)
+    // with nothing to sketch this is pure metadata (a spark.read.json
+    // index started an inference job and a file collect here)
+    val nAppend = jobsOf(assert(Lake.appendBloomIndex(spark, dir, "k") == 0L))
+    assert(nAppend == 0, s"appendBloomIndex with nothing fresh started $nAppend jobs")
+    val probes = Seq(f"${42}%06d", f"${2005}%06d").toDF("k")
+    val nFiles = jobsOf {
+      val (kept, total) = Lake.lookupFiles(spark, dir, probes)
+      assert(total == 10 && kept.size == 2, s"kept ${kept.size} of $total")
+    }
+    assert(nFiles == 0, s"lookupFiles over local probes started $nFiles jobs")
+    val nRead = jobsOf(Lake.readLookup(spark, dir, probes))
+    assert(nRead == 0, s"building a readLookup frame started $nRead jobs")
+    val nCompact = jobsOf(assert(Lake.compactBloomIndex(spark, dir, "k") == ((3L, 1L))))
+    assert(nCompact == 0, s"compactBloomIndex started $nCompact jobs")
+    assert(Lake.readLookup(spark, dir, probes)
+      .filter(col("k").isin(f"${42}%06d", f"${2005}%06d")).count() == 2)
   }
 }
