@@ -155,9 +155,9 @@ object Lake {
     * that makes concurrent long scans safe at 100 TB: a reader planned
     * against v(n) keeps a valid file list while writers publish v(n+1).
     *
-    * Pre-manifest layouts (bare `v=N` dirs) upgrade in place: the first
-    * write backfills manifests from the existing dirs' footers. Once a
-    * table is versioned, read it through [[readVersioned]] (or
+    * The manifests are the only record of what a version holds: a `v=N`
+    * data dir no manifest references is a crashed commit's leavings, not
+    * a version. Read a versioned table through [[readVersioned]] (or
     * [[readSkipping]]/[[readLookup]], which resolve the manifest) — a
     * plain recursive parquet read would see retired files.
     *
@@ -180,7 +180,6 @@ object Lake {
     // physical-schema op; materializeMapping first makes the logical names
     // physical, after which a snapshot is unambiguous again
     requireNoColMap(spark, fs, path, "writeVersioned")
-    ensureVersionManifests(spark, path)
     // when a constraint gate will read the batch before the write does,
     // persist it so the caller's (possibly expensive) plan runs once
     val dfG = applyGeneratedTo(spark, path, df, "writeVersioned")
@@ -194,8 +193,7 @@ object Lake {
       // contends on the same next number — the linearization the rename
       // guard needs
       val (dataDir, entries) = writeClaimedDir(spark, fs, path, batch)
-      val ms = if (fs.exists(versionsDir(path))) manifestVersions(fs, path) else Nil
-      val next = if (ms.nonEmpty) ms.last + 1 else dataDir
+      val next = manifestVersions(fs, path).lastOption.fold(dataDir)(_ + 1)
       reenforceIfChanged(spark, fs, path, cs, entries, batch.schema.toDDL,
         s"writeVersioned($path)")
       writeVersionManifest(spark, fs, path, next, batch.schema.toDDL, entries,
@@ -235,12 +233,7 @@ object Lake {
     // crashed attempt's files sit in an unpublished claimed dir that no
     // reader ever sees and vacuum's grace window reclaims
     streamBatchId.foreach { bid =>
-      if (streamBatchCommitted(spark, path, bid)) {
-        val ptr = readVersionPointer(fs, path)
-          .orElse(manifestVersions(fs, path).lastOption)
-        return ptr.getOrElse(sys.error(
-          s"batch $bid recorded but no versions under $path"))
-      }
+      if (streamBatchCommitted(spark, path, bid)) return headVersion(fs, path)
     }
     // GENERATED specs make the gate run a validation aggregate over the
     // batch before writeClaimedDir evaluates the caller's plan a second
@@ -262,23 +255,6 @@ object Lake {
     // the ones it carries — before any schema logic, so an omitted
     // generated column never masquerades as schema drift
     val dfG = applyGeneratedTo(spark, path, df, "appendVersioned")
-    // COLUMN-MAPPED table: the batch arrives in LOGICAL names and is
-    // translated ONCE to the frozen physical names, before any schema
-    // logic — the drift checks below then compare physical-vs-physical,
-    // and the published delta INHERITS the base's colmap (manifest
-    // resolution rule), so a concurrent rename rebases cleanly.
-    val headCm = colMapAtHead(spark, fs, path)
-    val dfP =
-      if (headCm.isEmpty) dfG
-      else {
-        val logical = headCm.map(_._1)
-        require(dfG.schema.fields.map(_.name).toSeq == logical,
-          s"appendVersioned($path): column-mapped table expects logical " +
-            s"columns (${logical.mkString(", ")}); frame has " +
-            s"(${dfG.schema.fieldNames.mkString(", ")})")
-        dfG.select(headCm.map { case (l, p) =>
-          org.apache.spark.sql.functions.col(l).as(p) }: _*)
-      }
     // SCHEMA EVOLUTION IS NOT A REFUSAL: a 24/7 stream appending through
     // this path must survive upstream column drift. Three cases:
     //   1. evolving table, batch matches the current LOGICAL schema →
@@ -293,19 +269,17 @@ object Lake {
     //      the manifest DDL — no file reads) and the batch lands as
     //      schema v2 via writeEvolving. Invalid drift (dropped column,
     //      narrowing) still refuses, loudly, inside writeEvolving.
-    val priors = readSchemaManifests(spark, path)
-    def batchFields = dfP.schema.fields
-      .map(f => f.name -> f.dataType.catalogString).toSeq
     // writeEvolving returns the SCHEMA version; this method's contract is
-    // the TABLE version — re-read it after an evolving delegation
-    def latestTableVersion(): Long = readVersionPointer(fs, path)
-      .orElse(manifestVersions(fs, path).lastOption)
-      .getOrElse(sys.error(s"no versions under $path"))
+    // the TABLE version, re-read as the head after an evolving delegation
+    val priors = readSchemaManifests(spark, path)
     if (priors.nonEmpty) {
-      if (batchFields != logicalSchema(priors)) {
+      // an evolving table carries no column mapping (renameColumns and
+      // dropColumns refuse it), so the batch's names are the table's
+      if (dfG.schema.fields.map(f => f.name -> f.dataType.catalogString)
+          .toSeq != logicalSchema(priors)) {
         if (fs.exists(versionsDir(path))) {
           writeEvolving(spark, df, path, streamBatchId = streamBatchId)
-          return latestTableVersion()
+          return headVersion(fs, path)
         } else {
           // evolving-but-unversioned: land the drifted batch, then adopt
           // ALL files (batch included) as version 1 carrying this batch id
@@ -314,24 +288,43 @@ object Lake {
           return 1L
         }
       }
-      if (!fs.exists(versionsDir(path)))
-        // evolving-but-unversioned, same schema: adopt the existing files
-        // as version 1 so this and every later batch gets a version
-        // manifest + the replay gate
-        bootstrapRootVersion(spark, fs, path)
     }
-    ensureVersionManifests(spark, path)
-    val versions = listVersions(spark, path)
-    if (versions.isEmpty) return writeVersioned(spark, df, path, streamBatchId)
+    // the manifests are the only versions. An unversioned dir holding data
+    // files is a plain (or evolving) table: its files become version 1, the
+    // adopt rule deleteWhere, mergeInto and stageAppend follow, and the
+    // batch appends to them. An empty dir, or one holding only a crashed
+    // commit's claimed dir, starts at this batch.
+    if (manifestVersions(fs, path).isEmpty) {
+      if (!holdsTableData(fs, hp))
+        return writeVersioned(spark, df, path, streamBatchId)
+      bootstrapRootVersion(spark, fs, path)
+    }
+    val (_, m0) = resolveHead(spark, fs, path)
+    // COLUMN-MAPPED table: the batch arrives in LOGICAL names and is
+    // translated ONCE to the frozen physical names, before any schema
+    // logic — the drift checks below then compare physical-vs-physical,
+    // and the published delta INHERITS the base's colmap (manifest
+    // resolution rule), so a concurrent rename rebases cleanly.
+    val dfP =
+      if (m0.colmap.isEmpty) dfG
+      else {
+        val logical = m0.colmap.map(_._1)
+        require(dfG.schema.fields.map(_.name).toSeq == logical,
+          s"appendVersioned($path): column-mapped table expects logical " +
+            s"columns (${logical.mkString(", ")}); frame has " +
+            s"(${dfG.schema.fieldNames.mkString(", ")})")
+        dfG.select(m0.colmap.map { case (l, p) =>
+          org.apache.spark.sql.functions.col(l).as(p) }: _*)
+      }
+    val batchFields = dfP.schema.fields
+      .map(f => f.name -> f.dataType.catalogString).toSeq
     if (priors.isEmpty) {
-      val curDdl = readRawManifest(spark, fs, path,
-        manifestVersions(fs, path).last).get.schemaDdl
-      val cur = org.apache.spark.sql.types.StructType.fromDDL(curDdl)
+      val cur = org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
         .fields.map(f => f.name -> f.dataType.catalogString).toSeq
       if (batchFields != cur) {
         // a column-mapped table cannot drift into the evolving chain: the
         // chain's fold logic knows nothing of the physical-name map
-        require(headCm.isEmpty,
+        require(m0.colmap.isEmpty,
           s"appendVersioned($path): schema drift on a column-mapped table " +
             "is not supported - materializeMapping first")
         // constraint gate BEFORE the chain bootstrap: writeEvolving would
@@ -362,13 +355,12 @@ object Lake {
         }
         bootstrapSchemaChain(fs, new org.apache.hadoop.fs.Path(path), cur)
         writeEvolving(spark, df, path, streamBatchId = streamBatchId)
-        return latestTableVersion()
+        return headVersion(fs, path)
       }
     }
     def schemaCheck(baseDdl: String): Unit = {
       val prior = org.apache.spark.sql.types.StructType.fromDDL(baseDdl)
-      require(dfP.schema.fields.map(f =>
-          (f.name, f.dataType.catalogString)).toSeq ==
+      require(batchFields ==
           prior.fields.map(f => (f.name, f.dataType.catalogString)).toSeq,
         s"appendVersioned schema mismatch: table has ${prior.toDDL}, " +
           s"frame has ${dfP.schema.toDDL}")
@@ -388,11 +380,10 @@ object Lake {
         // is a namespace, not the commit number)
         writeClaimedDir(spark, fs, path, batch)._2
       } finally { if (cs.nonEmpty) batch.unpersist(); () }
-    var attempts = 0
     // phase 2 — publish the delta manifest, REBASING on conflict: the
     // base is re-read each attempt, so after losing a race the commit
     // chains behind the winner instead of forking a sibling lineage
-    attempts = 0
+    var attempts = 0
     while (true) {
       attempts += 1
       require(attempts <= MaxCommitRetries,
@@ -401,15 +392,17 @@ object Lake {
       // the base is the NEWEST MANIFEST, never the pointer: the pointer
       // can lag a concurrent commit (it is written after the manifest),
       // and chaining a delta onto a lagging base would silently drop the
-      // newer commit's files from this lineage
-      val published = manifestVersions(fs, path)
-      val v0 = published.last
-      val raw0 = readRawManifest(spark, fs, path, v0).getOrElse(
-        sys.error(s"version $v0 has no manifest under $path"))
-      schemaCheck(raw0.schemaDdl) // a concurrent evolve/merge may have changed it
+      // newer commit's files from this lineage. The head resolved above
+      // is that manifest unless a commit landed since.
+      val v0 = manifestVersions(fs, path).last
+      val base =
+        if (v0 == m0.version) m0
+        else readVersionManifest(spark, fs, path, v0).getOrElse(
+          sys.error(s"version $v0 has no manifest under $path"))
+      schemaCheck(base.schemaDdl) // a concurrent evolve/merge may have changed it
       // a constraint may have landed since the gate: re-enforce the NEW
       // ones against the written batch files before publishing
-      reenforceIfChanged(spark, fs, path, cs, fresh, raw0.schemaDdl,
+      reenforceIfChanged(spark, fs, path, cs, fresh, base.schemaDdl,
         s"appendVersioned($path)")
       // mirror for GENERATED columns: a spec declared since the gate gets
       // validated against the written batch files before the manifest
@@ -421,72 +414,51 @@ object Lake {
         val root = rootPath(fs, new org.apache.hadoop.fs.Path(path))
         validateGeneratedOn(spark,
           readSomeFiles(spark, fs, path,
-            fresh.map(e => resolveRef(root, e._1)), raw0.schemaDdl),
+            fresh.map(e => resolveRef(root, e._1)), base.schemaDdl),
           freshGen, s"appendVersioned($path) post-gate spec")
       }
       val next = v0 + 1
-      try {
-        writeVersionDelta(spark, fs, path, next, raw0.schemaDdl,
-          base = v0, add = fresh, remove = Seq.empty,
-          streamBatchId = streamBatchId, op = Some("append"))
+      val published =
+        try Some(writeVersionDelta(spark, fs, path, next, base.schemaDdl,
+          base, add = fresh, remove = Seq.empty,
+          streamBatchId = streamBatchId, op = Some("append")))
+        catch {
+          case _: IllegalArgumentException
+              if fs.exists(versionManifestFile(path, next)) =>
+            None // manifest race lost: re-read the new base and rebase
+        }
+      published.foreach { pub =>
         writeVersionPointer(spark, fs, path, next)
         // keep an existing skipping manifest live over the appended files
         // (the deleteWhere/merge/optimize invariant — appends are exactly
         // the commits that degrade probe pruning, so leaving the manifest
         // stale here would make every post-append readSkipping refuse):
         // O(batch) — stats are computed for the fresh files only
-        keepStatsLive(spark, fs, path)
-        refreshBloomIndexes(spark, fs, path)
+        keepStatsLive(spark, fs, path, pub)
+        refreshBloomIndexes(spark, fs, path, pub)
         // table-level auto-compaction (see setAutoOptimize): runs AFTER
         // this commit published, in its own maintenance commit — the
         // append's version contract is unchanged
         autoOptimizePolicy(fs, path).foreach { case (limit, target) =>
-          maybeAutoOptimize(spark, fs, path, limit, target)
+          maybeAutoOptimize(spark, fs, path, pub, limit, target)
         }
         return next
-      } catch {
-        case _: IllegalArgumentException
-            if fs.exists(versionManifestFile(path, next)) =>
-          () // manifest race lost: re-read the new base and rebase
       }
     }
     sys.error("unreachable")
   }
 
   def listVersions(spark: SparkSession, path: String): Seq[Long] = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) Seq.empty
-    // once a table carries version manifests they are AUTHORITATIVE: a
-    // v= dir may outlive its version (vacuum keeps files a newer manifest
-    // still references), so dir presence no longer implies existence
-    else if (fs.exists(versionsDir(path))) manifestVersions(fs, path)
-    else dirVersions(fs, hp)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    manifestVersions(fs, path)
   }
 
   def readVersioned(spark: SparkSession, path: String,
       version: Option[Long] = None): DataFrame = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = version.orElse(readVersionPointer(fs, path)).getOrElse {
-      // pointer momentarily absent (e.g. a non-atomic FS mid-publish):
-      // the newest published version is by construction the latest
-      val vs = listVersions(spark, path)
-      require(vs.nonEmpty, s"no versions under $path")
-      vs.last
-    }
-    if (fs.exists(versionsDir(path))) {
-      val m = readVersionManifest(spark, fs, path, v)
-      require(m.isDefined,
-        s"version $v does not exist under $path (have: " +
-          s"${listVersions(spark, path).mkString(",")})")
-      readManifestFiles(spark, fs, path, m.get)
-    } else {
-      require(fs.exists(new org.apache.hadoop.fs.Path(path, s"v=$v")),
-        s"version $v does not exist under $path (have: " +
-          s"${listVersions(spark, path).mkString(",")})")
-      spark.read.parquet(s"$path/v=$v")
-    }
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    readManifestFiles(spark, fs, path, manifestAt(spark, fs, path, version))
   }
 
   /** TIMESTAMP time travel — `readVersioned` resolved by commit time: the
@@ -621,7 +593,6 @@ object Lake {
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireNoColMap(spark, fs, path, "readChangeFeed")  // feed rows would expose
     // physical names, and deltas across a rename version would mix eras
-    ensureVersionManifests(spark, path)
     require(fs.exists(versionsDir(path)), s"no versions under $path")
     val all = manifestVersions(fs, path)
     val inRange = all.filter(v => v >= fromVersion && v <= toVersion)
@@ -853,10 +824,7 @@ object Lake {
     val lp = new org.apache.hadoop.fs.Path(landing)
     val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(lp)
-    ensureVersionManifests(spark, path)
-    val tfs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = manifestVersions(tfs, path)
+    val versions = listVersions(spark, path)
     require(versions.nonEmpty, s"exportChangeFeedLanding: no versions under $path")
     val head = upTo.map(u => math.min(u, versions.last)).getOrElse(versions.last)
     val namePat = "cdf-v(\\d+)-.*\\.(json|parquet)".r
@@ -1173,9 +1141,7 @@ object Lake {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(sfs.exists(versionsDir(sourcePath)),
       s"$sourcePath is not a versioned table (refresh tracks its versions)")
-    val srcHead = readVersionPointer(sfs, sourcePath)
-      .orElse(manifestVersions(sfs, sourcePath).lastOption)
-      .getOrElse(sys.error(s"no versions under $sourcePath"))
+    val srcHead = headVersion(sfs, sourcePath)
     val vfs = new org.apache.hadoop.fs.Path(viewPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (forceFull || !vfs.exists(versionsDir(viewPath))) {
@@ -1186,13 +1152,10 @@ object Lake {
       return (writeVersioned(spark, full, viewPath,
         streamBatchId = Some(srcHead)), srcHead)
     }
-    val viewHead = readVersionPointer(vfs, viewPath)
-      .orElse(manifestVersions(vfs, viewPath).lastOption)
-      .getOrElse(sys.error(s"no versions under $viewPath"))
-    val w = readRawManifest(spark, vfs, viewPath, viewHead)
-      .flatMap(_.streamBatchId).getOrElse(sys.error(
-        s"$viewPath's latest commit carries no source watermark — " +
-          "not a refresh-maintained view"))
+    val (viewHead, viewM) = resolveHead(spark, vfs, viewPath)
+    val w = viewM.streamBatchId.getOrElse(sys.error(
+      s"$viewPath's latest commit carries no source watermark — " +
+        "not a refresh-maintained view"))
     if (w >= srcHead) return (viewHead, w) // nothing new to fold
     val aggs = foldDeltaAggs(sumCols)
     val feed = readChangeFeed(spark, sourcePath, w + 1, srcHead)
@@ -1205,7 +1168,7 @@ object Lake {
       spark.sessionState.conf.filesOpenCostInBytes
     val delta = (if (oneTask) feed.coalesce(1) else feed)
       .groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    (foldAggDelta(spark, viewPath, delta, keys, sumCols, countCol,
+    (foldAggDelta(spark, viewPath, viewM, delta, keys, sumCols, countCol,
       retainNonPositive = false, stamp = srcHead, maxBroadcastKeys), srcHead)
   }
 
@@ -1258,11 +1221,10 @@ object Lake {
     val spark = batch.sparkSession
     val vfs = new org.apache.hadoop.fs.Path(viewPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = vfs.exists(versionsDir(viewPath))
-    if (exists) {
-      val head = readVersionPointer(vfs, viewPath)
-        .orElse(manifestVersions(vfs, viewPath).lastOption)
-        .getOrElse(sys.error(s"no versions under $viewPath"))
+    val head =
+      if (vfs.exists(versionsDir(viewPath))) Some(resolveHead(spark, vfs, viewPath))
+      else None
+    head.foreach { case (v, _) =>
       // replay guard compares ONLY against the FACT channel's latest
       // stamp: the head commit may be a dim-side fold (stamped at
       // 1e6+bid), and comparing a small fact batch id against a dim
@@ -1275,23 +1237,24 @@ object Lake {
         s"$viewPath carries no batch stamp in any commit — " +
           "not a stream-maintained view")
       if (factStamp.exists(_ >= batchId))
-        return head // replayed batch: idempotent no-op
+        return v // replayed batch: idempotent no-op
     }
     val aggs = foldDeltaAggs(sumCols)
     val delta = batch.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    if (!exists) {
-      val initAll = delta.select((keys.map(col) :+
-        col("_graft_dn").as(countCol)) ++
-        sumCols.map(c => col(s"_graft_d_$c").as(c)): _*)
-      // order-insensitive lane: a first batch that is all-deletes must
-      // SEED the view with its negative balance, not drop it
-      val init = if (retainNonPositive) initAll
-        else initAll.filter(col(countCol) > 0L)
-      return writeVersioned(spark, init, viewPath,
-        streamBatchId = Some(batchId))
+    head match {
+      case Some((_, m0)) =>
+        foldAggDelta(spark, viewPath, m0, delta, keys, sumCols, countCol,
+          retainNonPositive, stamp = batchId)
+      case None =>
+        val initAll = delta.select((keys.map(col) :+
+          col("_graft_dn").as(countCol)) ++
+          sumCols.map(c => col(s"_graft_d_$c").as(c)): _*)
+        // order-insensitive lane: a first batch that is all-deletes must
+        // SEED the view with its negative balance, not drop it
+        val init = if (retainNonPositive) initAll
+          else initAll.filter(col(countCol) > 0L)
+        writeVersioned(spark, init, viewPath, streamBatchId = Some(batchId))
     }
-    foldAggDelta(spark, viewPath, delta, keys, sumCols, countCol,
-      retainNonPositive, stamp = batchId)
   }
 
   /** The per-key delta of a change-feed frame: `_graft_dn` is the row
@@ -1308,7 +1271,8 @@ object Lake {
   }
 
   /** Fold a per-key delta ([[foldDeltaAggs]] over `keys`) into the
-    * aggregate view at `viewPath` as ONE merge commit stamped `stamp` —
+    * aggregate view at `viewPath`, whose head manifest is `m0`, as ONE
+    * merge commit stamped `stamp` —
     * the gold fold of [[refreshIncremental]] and
     * [[foldFeedBatchIntoAggView]]. A key whose new count is ≤ 0 leaves
     * the view unless `retainNonPositive`.
@@ -1345,7 +1309,7 @@ object Lake {
     * @return the view version now current (the base when nothing changed)
     */
   private def foldAggDelta(spark: SparkSession, viewPath: String,
-      delta: DataFrame, keys: Seq[String], sumCols: Seq[String],
+      m0: VersionManifest, delta: DataFrame, keys: Seq[String], sumCols: Seq[String],
       countCol: String, retainNonPositive: Boolean, stamp: Long,
       maxBroadcastKeys: Long = 1000000L): Long = {
     import org.apache.spark.sql.Row
@@ -1353,10 +1317,7 @@ object Lake {
     import org.apache.spark.sql.types.StructType
     val hp = new org.apache.hadoop.fs.Path(viewPath)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v0 = readVersionPointer(fs, viewPath).getOrElse(
-      manifestVersions(fs, viewPath).last)
-    val m0 = readVersionManifest(spark, fs, viewPath, v0).getOrElse(
-      sys.error(s"version $v0 has no manifest under $viewPath"))
+    val v0 = m0.version
     refuseColMap(m0.colmap, viewPath, "mergeInto")
     refuseDvs(m0.dvs, viewPath, "mergeInto")
     val root = rootPath(fs, hp)
@@ -1433,7 +1394,7 @@ object Lake {
       val touched = deltaRows.flatMap(keyOf(_, deltaAt)).toSet
       val kept = viewRows.collect { case (rel, r)
         if matched(rel) && !keyOf(r, viewAt).exists(touched) => r }
-      return publishMergeRewrite(spark, fs, viewPath, v0, m0,
+      return publishMergeRewrite(spark, fs, viewPath, m0,
         m0.entries.filter(e => matched(e._1)),
         spark.createDataFrame(java.util.Arrays.asList(kept: _*), viewSchema),
         spark.createDataFrame(java.util.Arrays.asList(upserts: _*),
@@ -1468,7 +1429,7 @@ object Lake {
     // the upserts
     val estRows = matchedEntries.map(_._2).sum - matchedRows.length +
       upserts.length
-    publishMergeRewrite(spark, fs, viewPath, v0, m0, matchedEntries,
+    publishMergeRewrite(spark, fs, viewPath, m0, matchedEntries,
       keptAfterMerge(spark, fs, viewPath, m0, matchedEntries,
         broadcast(local(matchedRows.toSeq, nk)), keys),
       local(upserts.toSeq, fileAt), upserts.length.toLong, estRows,
@@ -1748,19 +1709,18 @@ object Lake {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
     require(joinKeys.nonEmpty && groupKeys.nonEmpty,
       "refreshJoinIncremental needs join and group keys")
-    def head(p: String): Long = {
-      val fs = new org.apache.hadoop.fs.Path(p)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(fs.exists(versionsDir(p)), s"$p is not a versioned table")
-      readVersionPointer(fs, p).orElse(manifestVersions(fs, p).lastOption)
-        .getOrElse(sys.error(s"no versions under $p"))
-    }
-    val (fHead, dHead) = (head(factPath), head(dimPath))
-    val vfs = new org.apache.hadoop.fs.Path(viewPath)
+    def fsOf(p: String) = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def head(p: String): (Long, VersionManifest) = {
+      require(fsOf(p).exists(versionsDir(p)), s"$p is not a versioned table")
+      resolveHead(spark, fsOf(p), p)
+    }
+    val ((fHead, fM), (dHead, dM)) = (head(factPath), head(dimPath))
+    def fact = readManifestFiles(spark, fsOf(factPath), factPath, fM)
+    val vfs = fsOf(viewPath)
     if (!vfs.exists(versionsDir(viewPath))) {
-      val full = readVersioned(spark, factPath, Some(fHead))
-        .join(readVersioned(spark, dimPath, Some(dHead)), joinKeys)
+      val full = fact
+        .join(readManifestFiles(spark, fsOf(dimPath), dimPath, dM), joinKeys)
         .groupBy(groupKeys.map(col): _*)
         .agg(count(lit(1)).as(countCol),
           sumCols.map(c => sum(col(c)).as(c)): _*)
@@ -1768,13 +1728,10 @@ object Lake {
         streamBatchId = Some(encodeJoinWatermark(fHead, dHead))),
         fHead, dHead)
     }
-    val viewHead = readVersionPointer(vfs, viewPath)
-      .orElse(manifestVersions(vfs, viewPath).lastOption)
-      .getOrElse(sys.error(s"no versions under $viewPath"))
-    val w = readRawManifest(spark, vfs, viewPath, viewHead)
-      .flatMap(_.streamBatchId).getOrElse(sys.error(
-        s"$viewPath's latest commit carries no source watermark — " +
-          "not a refresh-maintained join view"))
+    val (viewHead, viewM) = resolveHead(spark, vfs, viewPath)
+    val w = viewM.streamBatchId.getOrElse(sys.error(
+      s"$viewPath's latest commit carries no source watermark — " +
+        "not a refresh-maintained join view"))
     val (fW, dW) = (w / 1000000L, w % 1000000L)
     if (fHead <= fW && dHead <= dW) return (viewHead, fW, dW)
     val sign = when(col("_change_type") === "insert", lit(1L))
@@ -1790,7 +1747,7 @@ object Lake {
       else None
     val dPiece =
       if (dHead > dW)
-        Some(readVersioned(spark, factPath, Some(fHead))
+        Some(fact
           .join(readChangeFeed(spark, dimPath, dW + 1, dHead)
             .withColumn("_graft_w", sign).drop(meta: _*), joinKeys)
           .select(picked: _*))
@@ -1800,7 +1757,7 @@ object Lake {
     val delta = Seq(fPiece, dPiece).flatten.reduce(_.unionByName(_))
       .groupBy(groupKeys.map(col): _*)
       .agg(deltaAggs.head, deltaAggs.tail: _*)
-    val view = readVersioned(spark, viewPath, Some(viewHead))
+    val view = readManifestFiles(spark, vfs, viewPath, viewM)
     val viewTypes = view.schema.map(f => f.name -> f.dataType).toMap
     val merged = delta.join(view, groupKeys, "left_outer")
       .select((groupKeys.map(col) :+
@@ -1839,11 +1796,7 @@ object Lake {
     val sfs = shp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(sfs.exists(versionsDir(srcPath)),
       s"$srcPath is not a versioned table")
-    val head = readVersionPointer(sfs, srcPath)
-      .orElse(manifestVersions(sfs, srcPath).lastOption)
-      .getOrElse(sys.error(s"no versions under $srcPath"))
-    val m = readVersionManifest(spark, sfs, srcPath, head).getOrElse(
-      sys.error(s"version $head has no manifest under $srcPath"))
+    val (head, m) = resolveHead(spark, sfs, srcPath)
     require(m.dvs.isEmpty, s"shallowClone: $srcPath@v$head carries live " +
       "deletion vectors — purgeDeletes the source first")
     val dhp = new org.apache.hadoop.fs.Path(dstPath)
@@ -1894,12 +1847,8 @@ object Lake {
     require(readSchemaManifests(spark, path).isEmpty,
       s"$path is a schema-evolving table; rename through writeEvolving's " +
         "renames parameter instead")
-    ensureVersionManifests(spark, path)
     if (!fs.exists(versionsDir(path))) bootstrapRootVersion(spark, fs, path)
-    val v0 = readVersionPointer(fs, path)
-      .getOrElse(manifestVersions(fs, path).last)
-    val m0 = readVersionManifest(spark, fs, path, v0).getOrElse(
-      sys.error(s"version $v0 has no manifest under $path"))
+    val (v0, m0) = resolveHead(spark, fs, path)
     val cm0: Seq[(String, String)] =
       if (m0.colmap.nonEmpty) m0.colmap
       else org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
@@ -1918,7 +1867,7 @@ object Lake {
         s"(${cm1.map(_._1).mkString(", ")})")
     val next = v0 + 1
     writeVersionDelta(spark, fs, path, next, m0.schemaDdl,
-      base = v0, add = Nil, remove = Nil, op = Some("rename"),
+      base = m0, add = Nil, remove = Nil, op = Some("rename"),
       colmap = cm1)
     writeVersionPointer(spark, fs, path, next)
     next
@@ -1943,12 +1892,8 @@ object Lake {
     require(readSchemaManifests(spark, path).isEmpty,
       s"$path is a schema-evolving table; evolving drops are refused by " +
         "design (writeEvolving's carry-or-rename contract)")
-    ensureVersionManifests(spark, path)
     if (!fs.exists(versionsDir(path))) bootstrapRootVersion(spark, fs, path)
-    val v0 = readVersionPointer(fs, path)
-      .getOrElse(manifestVersions(fs, path).last)
-    val m0 = readVersionManifest(spark, fs, path, v0).getOrElse(
-      sys.error(s"version $v0 has no manifest under $path"))
+    val (v0, m0) = resolveHead(spark, fs, path)
     val phys = org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
     val cm0: Seq[(String, String)] =
       if (m0.colmap.nonEmpty) m0.colmap
@@ -1964,7 +1909,7 @@ object Lake {
       phys.fields.filter(f => keepPhys(f.name))).toDDL
     val next = v0 + 1
     writeVersionDelta(spark, fs, path, next, ddl1,
-      base = v0, add = Nil, remove = Nil, op = Some("drop"),
+      base = m0, add = Nil, remove = Nil, op = Some("drop"),
       colmap = cm1)
     writeVersionPointer(spark, fs, path, next)
     next
@@ -1983,10 +1928,7 @@ object Lake {
   def materializeMapping(spark: SparkSession, path: String): (Long, Long) = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v0 = readVersionPointer(fs, path)
-      .getOrElse(manifestVersions(fs, path).last)
-    val m0 = readVersionManifest(spark, fs, path, v0).getOrElse(
-      sys.error(s"version $v0 has no manifest under $path"))
+    val (v0, m0) = resolveHead(spark, fs, path)
     if (m0.colmap.isEmpty) return (v0, 0L)
     val logical = readManifestFiles(spark, fs, path, m0)
     val (_, entries) = writeClaimedDir(spark, fs, path, logical)
@@ -2019,10 +1961,7 @@ object Lake {
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(versionsDir(path)),
       s"$path carries no _graft_versions manifests - nothing to export")
-    val v0 = readVersionPointer(fs, path)
-      .getOrElse(manifestVersions(fs, path).last)
-    val m0 = readVersionManifest(spark, fs, path, v0).getOrElse(
-      sys.error(s"version $v0 has no manifest under $path"))
+    val (_, m0) = resolveHead(spark, fs, path)
     require(m0.dvs.isEmpty,
       s"exportSymlinkManifest($path): table carries live deletion " +
         "vectors; an external engine cannot apply tombstones - " +
@@ -2110,22 +2049,16 @@ object Lake {
     import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit}
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ensureVersionManifests(spark, path)
     if (!fs.exists(versionsDir(path))) bootstrapRootVersion(spark, fs, path)
-    requireNoColMap(spark, fs, path, "deleteWhere")  // pred names logical columns; the COW
-    // rewrite would also persist physical names under a stale map
     val root = rootPath(fs, hp)
     val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
     // one base→publish delete pass; returns (base read, version published,
     // rows removed) — published == base means nothing matched
     def onePass(): (Long, Long, Long) = {
-      val v0 = readVersionPointer(fs, path).getOrElse {
-        val vs = listVersions(spark, path)
-        require(vs.nonEmpty, s"no versions under $path")
-        vs.last
-      }
-      val m0 = readVersionManifest(spark, fs, path, v0).getOrElse(
-        sys.error(s"version $v0 has no manifest under $path"))
+      val (v0, m0) = resolveHead(spark, fs, path)
+      // pred names logical columns; the COW rewrite would also persist
+      // physical names under a stale map
+      refuseColMap(m0.colmap, path, "deleteWhere")
       val abs0 = m0.entries.map(e => resolveRef(root, e._1))
       // files whose stats bounds exclude every matching row are not even
       // OPENED; files the stats manifest does not cover stay candidates
@@ -2179,12 +2112,12 @@ object Lake {
       // disjoint delete) rebases this delete behind it; a commit that
       // removed one of them refuses loudly (our rewrite would resurrect
       // rows it dropped) — see publishNonCommuting
-      val next = publishNonCommuting(spark, fs, path, v0, ddl,
+      val pub = publishNonCommuting(spark, fs, path, m0, ddl,
         add = rewritten, remove = matchedEntries.map(_._1), op = "delete")
       // keep an existing skipping manifest live: the rewritten files gain
       // stats rows incrementally (O(rewritten), not a corpus re-scan)
-      keepStatsLive(spark, fs, path)
-      refreshBloomIndexes(spark, fs, path)
+      keepStatsLive(spark, fs, path, pub)
+      refreshBloomIndexes(spark, fs, path, pub)
       // metadata-only audit count from the manifests' per-file n_rows: rows
       // in the matched (resolved-source) files minus rows in their rewrites
       // — never a dir-listing guess, never a counting scan. Rows a prior
@@ -2197,7 +2130,7 @@ object Lake {
         else liveTombstones(spark, fs, root, m0.dvs, matchedRel.toSeq).count()
       val removed = matchedEntries.map(_._2).sum -
         rewritten.map(_._2).sum - priorTombs
-      (v0, next, removed)
+      (v0, pub.version, removed)
     }
     var (v0, next, total) = onePass()
     if (!strict) return (next, total)
@@ -2271,18 +2204,11 @@ object Lake {
     require(readSchemaManifests(spark, path).isEmpty,
       s"$path is a schema-evolving table; deletion vectors need the " +
         "fixed-schema read path - use the copy-on-write deleteWhere")
-    ensureVersionManifests(spark, path)
     if (!fs.exists(versionsDir(path))) bootstrapRootVersion(spark, fs, path)
-    requireNoColMap(spark, fs, path, "deleteWhereDv")
+    val (v0, m0) = resolveHead(spark, fs, path)
+    refuseColMap(m0.colmap, path, "deleteWhereDv")
     val root = rootPath(fs, hp)
     val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
-    val v0 = readVersionPointer(fs, path).getOrElse {
-      val vs = listVersions(spark, path)
-      require(vs.nonEmpty, s"no versions under $path")
-      vs.last
-    }
-    val m0 = readVersionManifest(spark, fs, path, v0).getOrElse(
-      sys.error(s"version $v0 has no manifest under $path"))
     // Shallow-clone guard (the mirror of shallowClone's DV refusal): an
     // external `../src` entry cannot be keyed table-relatively by
     // relDataPathCol — the sidecar would record the SOURCE-absolute path,
@@ -2339,11 +2265,11 @@ object Lake {
         readTombstones(spark, fs, written.map(e => resolveRef(root, e._1)))
           .select("file").distinct().collect().map(_.getString(0)).toSeq
     }
-    val next = publishNonCommuting(spark, fs, path, v0, m0.schemaDdl,
+    val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
       add = Nil, remove = Nil, op = "dvdelete",
       dvAdd = written.map(e => DvEntry(e._1, e._2, covered)),
       readSet = covered.toSet)
-    (next, nDel)
+    (pub.version, nDel)
   }
 
   /** Materialize a table's deletion vectors: rewrite the covered files
@@ -2367,15 +2293,8 @@ object Lake {
       s"minDeletedFraction must be in [0,1], got $minDeletedFraction")
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoColMap(spark, fs, path, "purgeDeletes")
-    ensureVersionManifests(spark, path)
-    val v0 = readVersionPointer(fs, path).getOrElse {
-      val vs = listVersions(spark, path)
-      require(vs.nonEmpty, s"no versions under $path")
-      vs.last
-    }
-    val m0 = readVersionManifest(spark, fs, path, v0).getOrElse(
-      sys.error(s"version $v0 has no manifest under $path"))
+    val (v0, m0) = resolveHead(spark, fs, path)
+    refuseColMap(m0.colmap, path, "purgeDeletes")
     if (m0.dvs.isEmpty) return (v0, 0L)
     val root = rootPath(fs, hp)
     val covered = m0.dvs.flatMap(_.files).distinct
@@ -2400,13 +2319,13 @@ object Lake {
     val (_, rewritten) = writeClaimedDir(spark, fs, path,
       readFilesWithDv(spark, fs, path, m0,
         dvdRel.map(f => resolveRef(root, f))))
-    val next = publishNonCommuting(spark, fs, path, v0, m0.schemaDdl,
+    val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
       add = rewritten, remove = dvdRel, op = "purge",
       readSet = dvdRel.toSet)
     // keep an existing skipping manifest live over the purged rewrites
-    keepStatsLive(spark, fs, path)
-    refreshBloomIndexes(spark, fs, path)
-    (next, dvdRel.size.toLong)
+    keepStatsLive(spark, fs, path, pub)
+    refreshBloomIndexes(spark, fs, path, pub)
+    (pub.version, dvdRel.size.toLong)
   }
 
   /** METADATA-ONLY row count — `SELECT count(*)` answered from the
@@ -2428,13 +2347,7 @@ object Lake {
     require(fs.exists(versionsDir(path)),
       s"$path carries no version manifests - metadata counts need the " +
         "versioned write path")
-    val v = version.orElse(readVersionPointer(fs, path)).getOrElse {
-      val vs = manifestVersions(fs, path)
-      require(vs.nonEmpty, s"no versions under $path")
-      vs.last
-    }
-    val m = readVersionManifest(spark, fs, path, v).getOrElse(
-      sys.error(s"version $v does not exist under $path"))
+    val m = manifestAt(spark, fs, path, version)
     val physical = m.entries.map(_._2).sum
     if (m.dvs.isEmpty) physical
     else physical - liveTombstones(spark, fs, rootPath(fs, hp), m.dvs,
@@ -2466,27 +2379,16 @@ object Lake {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(versionsDir(path))) return Seq.empty
-    val v = version.orElse(readVersionPointer(fs, path)).getOrElse {
-      val vs = manifestVersions(fs, path)
-      require(vs.nonEmpty, s"no versions under $path")
-      vs.last
-    }
-    readVersionManifest(spark, fs, path, v).toSeq
+    version.fold(Option(resolveHead(spark, fs, path)._2))(
+        readVersionManifest(spark, fs, path, _)).toSeq
       .flatMap(_.dvs.map(d => (d.dv, d.nDel, d.files)))
   }
 
-  /** Refusal gate for paths not yet deletion-vector-aware: a raw file
-    * read under live tombstones would resurrect deleted rows — refusing
-    * loudly beats silently wrong (the vacuum-horizon contract).
+  /** Refusal gate, against the resolved head's dv entries, for paths not
+    * yet deletion-vector-aware: a raw file read under live tombstones would
+    * resurrect deleted rows — refusing loudly beats silently wrong (the
+    * vacuum-horizon contract).
     */
-  private def requireNoDvs(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      opName: String): Unit =
-    if (fs.exists(versionsDir(path)))
-      refuseDvs(headManifest(spark, fs, path).map(_.dvs).getOrElse(Nil),
-        path, opName)
-
-  /** [[requireNoDvs]] against a head manifest already resolved. */
   private def refuseDvs(dvs: Seq[DvEntry], path: String,
       opName: String): Unit =
     require(dvs.isEmpty,
@@ -2522,24 +2424,6 @@ object Lake {
       keyCols: Seq[String],
       filePrune: Option[org.apache.spark.sql.Column] = None,
       maxBroadcastKeys: Long = 1000000L): (Long, (Long, Long)) = {
-    // the colmap guard must precede the schema compare: on a mapped table
-    // the physical-vs-logical mismatch message would mislead (mergeImpl's
-    // own guard would also catch it, but only after this check)
-    requireNoColMap(spark,
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      path, "mergeInto")
-    // exact-schema contract for the plain upsert (the CDC form allows
-    // extra source columns because the delete flag rides there)
-    val priorDdl = currentSchemaDdl(spark, path)
-    priorDdl.foreach { ddl =>
-      val prior = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-      require(source.schema.fields.map(f =>
-          (f.name, f.dataType.catalogString)).toSeq ==
-          prior.fields.map(f => (f.name, f.dataType.catalogString)).toSeq,
-        s"mergeInto schema mismatch: table has ${prior.toDDL}, " +
-          s"source has ${source.schema.toDDL}")
-    }
     val (v, (upd, ins, _)) = mergeImpl(spark, path, source, keyCols,
       deleteWhen = None, filePrune, maxBroadcastKeys)
     (v, (upd, ins))
@@ -2583,11 +2467,9 @@ object Lake {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hp)) None
-    else if (fs.exists(versionsDir(path))) {
-      val v = readVersionPointer(fs, path).orElse(
-        manifestVersions(fs, path).lastOption)
-      v.flatMap(readRawManifest(spark, fs, path, _)).map(_.schemaDdl)
-    } else if (readSchemaManifests(spark, path).nonEmpty)
+    else if (fs.exists(versionsDir(path)))
+      readRawManifest(spark, fs, path, headVersion(fs, path)).map(_.schemaDdl)
+    else if (readSchemaManifests(spark, path).nonEmpty)
       Some(logicalDdl(spark, path))
     else if (listDataFiles(fs, hp).nonEmpty)
       Some(spark.read.parquet(path).schema.toDDL)
@@ -2605,9 +2487,7 @@ object Lake {
     import org.apache.spark.sql.functions.{broadcast, col, count, input_file_name, lit}
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v0 = readVersionPointer(fs, path).getOrElse(
-      manifestVersions(fs, path).last)
-    val m0 = readVersionManifest(spark, fs, path, v0).get
+    val (_, m0) = resolveHead(spark, fs, path)
     val root = rootPath(fs, hp)
     // mirrors mergeImpl's probe exactly: a small source is grouped to
     // per-key rows, collected, and broadcast as a driver-LOCAL relation
@@ -2638,22 +2518,34 @@ object Lake {
     require(keyCols.nonEmpty, "mergeInto needs at least one key column")
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoColMap(spark, fs, path, "mergeInto")
+    // every gate runs before a plain table is bootstrapped, so a refused
+    // merge leaves it unversioned
+    val head = if (fs.exists(versionsDir(path))) Some(resolveHead(spark, fs, path))
+      else None
+    // the colmap guard must precede the schema compare: on a mapped table
+    // the physical-vs-logical mismatch message would mislead
+    refuseColMap(head.map(_._2.colmap).getOrElse(Nil), path, "mergeInto")
+    // exact-schema contract for the plain upsert (the CDC form allows
+    // extra source columns because the delete flag rides there)
+    if (deleteWhen.isEmpty)
+      head.map(_._2.schemaDdl).orElse(currentSchemaDdl(spark, path)).foreach { ddl =>
+        val prior = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+        require(source.schema.fields.map(f =>
+            (f.name, f.dataType.catalogString)).toSeq ==
+            prior.fields.map(f => (f.name, f.dataType.catalogString)).toSeq,
+          s"mergeInto schema mismatch: table has ${prior.toDDL}, " +
+            s"source has ${source.schema.toDDL}")
+      }
     // generated columns: a merge source must carry complete rows and its
     // derived values must MATCH — one aggregate gate, nothing published
     // on violation (computeAbsent=false: an upsert that omitted the
     // column would need per-branch computation; refuse instead)
     applyGeneratedTo(spark, path, source, "mergeInto", computeAbsent = false)
-    ensureVersionManifests(spark, path)
-    requireNoDvs(spark, fs, path, "mergeInto")
-    if (!fs.exists(versionsDir(path))) bootstrapRootVersion(spark, fs, path)
-    val v0 = readVersionPointer(fs, path).getOrElse {
-      val vs = listVersions(spark, path)
-      require(vs.nonEmpty, s"no versions under $path")
-      vs.last
+    refuseDvs(head.map(_._2.dvs).getOrElse(Nil), path, "mergeInto")
+    val (v0, m0) = head.getOrElse {
+      bootstrapRootVersion(spark, fs, path)
+      resolveHead(spark, fs, path)
     }
-    val m0 = readVersionManifest(spark, fs, path, v0).getOrElse(
-      sys.error(s"version $v0 has no manifest under $path"))
     val prior = org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
     prior.fields.foreach { f =>
       require(source.schema.fields.exists(s => s.name == f.name &&
@@ -2756,7 +2648,7 @@ object Lake {
       val matchedEntries = m0.entries.filter(e => matched(resolveRef(root, e._1)))
       val estRows =
         matchedEntries.map(_._2).sum - updated - deleted + (nSrc - nDel)
-      val next = publishMergeRewrite(spark, fs, path, v0, m0, matchedEntries,
+      val next = publishMergeRewrite(spark, fs, path, m0, matchedEntries,
         keptAfterMerge(spark, fs, path, m0, matchedEntries, probe, keyCols),
         src.filter(!delFlag), nUp, estRows, streamBatchId)
       // inserted = upsert rows whose key matched nothing; with a
@@ -2786,7 +2678,7 @@ object Lake {
         .fieldNames.map(col): _*)
   }
 
-  /** The commit tail every merge shares, publishing base `v0` + 1:
+  /** The commit tail every merge shares, publishing base `m0` + 1:
     *   1. gate the rows ENTERING the table (`upserts`, `nUp` of them) on
     *      the CHECK constraints — carried rows were validated when they
     *      entered, deleted rows remove data;
@@ -2798,7 +2690,7 @@ object Lake {
     *      the bloom refresh.
     */
   private def publishMergeRewrite(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String, v0: Long,
+      fs: org.apache.hadoop.fs.FileSystem, path: String,
       m0: VersionManifest, matchedEntries: Seq[(String, Long)],
       keptOld: DataFrame, upserts: DataFrame,
       nUp: Long, estRows: Long, streamBatchId: Option[Long]): Long = {
@@ -2835,13 +2727,13 @@ object Lake {
     // should have been an UPDATE — rebasing would silently insert a
     // duplicate). Delta draws the same line: ConcurrentAppendException
     // for merges that read the table, rebase only for blind appends.
-    val next = v0 + 1
-    writeVersionDelta(spark, fs, path, next, m0.schemaDdl,
-      base = v0, add = rewritten, remove = matchedEntries.map(_._1),
+    val next = m0.version + 1
+    val pub = writeVersionDelta(spark, fs, path, next, m0.schemaDdl,
+      base = m0, add = rewritten, remove = matchedEntries.map(_._1),
       streamBatchId = streamBatchId, op = Some("merge"))
     writeVersionPointer(spark, fs, path, next)
-    keepStatsLive(spark, fs, path)
-    refreshBloomIndexes(spark, fs, path)
+    keepStatsLive(spark, fs, path, pub)
+    refreshBloomIndexes(spark, fs, path, pub)
     next
   }
 
@@ -2929,28 +2821,25 @@ object Lake {
     // including files a delete RETIRED but vacuum still retains, which a
     // naive current-version diff would wrongly re-adopt (resurrecting
     // deleted rows on the next drain)
-    val known: Set[String] = manifestVersions(fs, path).flatMap(v =>
-      readVersionManifest(spark, fs, path, v).toSeq.flatMap(_.entries.map(_._1)))
-      .toSet
+    val retained = manifestVersions(fs, path)
+      .flatMap(readVersionManifest(spark, fs, path, _))
+    val known: Set[String] = retained.flatMap(_.entries.map(_._1)).toSet
     val root = rootPath(fs, hp)
     val fresh = rootFiles().map(_.stripPrefix(root + "/")).filterNot(known)
     if (fresh.isEmpty) return None
     // base on the newest MANIFEST and publish at base+1 — the contiguity
     // contract every delta commit follows (see deleteWhere)
-    val vs = manifestVersions(fs, path)
-    require(vs.nonEmpty, s"no versions under $path")
-    val v0 = vs.last
-    val raw0 = readRawManifest(spark, fs, path, v0).getOrElse(
-      sys.error(s"version $v0 has no manifest under $path"))
+    val base = retained.lastOption.getOrElse(
+      throw new IllegalArgumentException(s"no versions under $path"))
     if (checkConstraints(spark, path).nonEmpty)
       enforceConstraints(spark, path,
         spark.read.parquet(
           qualifyForRead(fs, fresh.map(r => resolveRef(root, r))): _*),
         s"commitStreamVersion($path)")
     val entries = fileEntries(spark, fs, path, fresh.map(r => resolveRef(root, r)))
-    val next = v0 + 1
-    writeVersionDelta(spark, fs, path, next, raw0.schemaDdl,
-      base = v0, add = entries, remove = Seq.empty,
+    val next = base.version + 1
+    val pub = writeVersionDelta(spark, fs, path, next, base.schemaDdl,
+      base = base, add = entries, remove = Seq.empty,
       streamBatchId = streamBatchId, op = Some("stream-adopt"))
     writeVersionPointer(spark, fs, path, next)
     // a drained sink accretes one file set per drain — exactly the
@@ -2958,7 +2847,7 @@ object Lake {
     // stay on disk for log-trusting readers until vacuum, like every
     // optimizeVersioned commit
     autoOptimizePolicy(fs, path).foreach { case (limit, target) =>
-      maybeAutoOptimize(spark, fs, path, limit, target)
+      maybeAutoOptimize(spark, fs, path, pub, limit, target)
     }
     Some(next)
   }
@@ -3364,14 +3253,9 @@ object Lake {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val all = listVersions(spark, path)
-    val current = readVersionPointer(fs, path)
-    val drop = all.dropRight(keepLast).filterNot(current.contains)
-    if (!fs.exists(versionsDir(path))) {
-      // pre-manifest layout: a version owns its dir outright
-      drop.foreach(v =>
-        fs.delete(new org.apache.hadoop.fs.Path(path, s"v=$v"), true))
-      return drop
-    }
+    if (all.isEmpty) return Seq.empty
+    val current = headVersion(fs, path)
+    val drop = all.dropRight(keepLast).filterNot(_ == current)
     val retained = all.filterNot(drop.contains)
     // deletion-vector sidecars are references like any data file: a
     // retained version that still applies a sidecar must keep it on disk
@@ -3504,15 +3388,8 @@ object Lake {
       targetFileBytes: Long = 128L << 20): (Long, Long) = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ensureVersionManifests(spark, path)
-    requireNoColMap(spark, fs, path, "optimizeVersioned")
-    val v0 = readVersionPointer(fs, path).getOrElse {
-      val vs = listVersions(spark, path)
-      require(vs.nonEmpty, s"no versions under $path")
-      vs.last
-    }
-    val m0 = readVersionManifest(spark, fs, path, v0).getOrElse(
-      sys.error(s"version $v0 has no manifest under $path"))
+    val (v0, m0) = resolveHead(spark, fs, path)
+    refuseColMap(m0.colmap, path, "optimizeVersioned")
     val root = rootPath(fs, hp)
     val sized = m0.entries.map { e =>
       (e, fs.getFileStatus(new org.apache.hadoop.fs.Path(resolveRef(root, e._1))).getLen)
@@ -3536,12 +3413,12 @@ object Lake {
       else m0.schemaDdl
     // disjoint-set commit: maintenance must not starve under a steady
     // append stream — concurrent appends rebase this fold behind them
-    val next = publishNonCommuting(spark, fs, path, v0, ddl,
+    val pub = publishNonCommuting(spark, fs, path, m0, ddl,
       add = folded, remove = small.map(_._1._1), op = "optimize")
     // keep an existing skipping manifest live over the folded files
-    keepStatsLive(spark, fs, path)
-    refreshBloomIndexes(spark, fs, path)
-    (next, small.size.toLong)
+    keepStatsLive(spark, fs, path, pub)
+    refreshBloomIndexes(spark, fs, path, pub)
+    (pub.version, small.size.toLong)
   }
 
   /** AUTO-COMPACTION policy — the reference's "automatic maintenance"
@@ -3602,7 +3479,8 @@ object Lake {
     }
   }
 
-  /** Post-commit policy check: count live files under target/2, stopping
+  /** Post-commit policy check over the manifest the commit just published
+    * (`head`): count live files under target/2, stopping
     * as soon as the limit is reached (an append-heavy table stats at most
     * `limit` files before deciding), and fold when at/over it. A file
     * vacuumed between the manifest read and the stat is simply skipped.
@@ -3611,23 +3489,15 @@ object Lake {
     */
   private def maybeAutoOptimize(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
-      limit: Int, target: Long): Unit = {
+      head: VersionManifest, limit: Int, target: Long): Unit = {
     // COLUMN-MAPPED tables skip auto-compaction SILENTLY rather than let
-    // optimizeVersioned's refusal throw INSIDE a caller's publish loop:
-    // appendVersioned catches IllegalArgumentException-with-manifest-
-    // present as a lost manifest race and would re-publish the same batch
-    // on every retry — a duplicate-rows corruption, not just a failure.
+    // optimizeVersioned's refusal fail a commit that already published.
     // The policy is file-size-based and resumes the moment the map is
     // materialized away.
-    if (colMapAtHead(spark, fs, path).nonEmpty) return
-    val head = readVersionPointer(fs, path)
-      .orElse(manifestVersions(fs, path).lastOption)
-    val entries = head
-      .flatMap(readVersionManifest(spark, fs, path, _))
-      .map(_.entries).getOrElse(Seq.empty)
+    if (head.colmap.nonEmpty) return
     val root = rootPath(fs, new org.apache.hadoop.fs.Path(path))
     var small = 0
-    val it = entries.iterator
+    val it = head.entries.iterator
     while (small < limit && it.hasNext) {
       val e = it.next()
       val len =
@@ -3667,17 +3537,11 @@ object Lake {
     require(targetFileRows > 0, "targetFileRows must be positive")
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoColMap(spark, fs, path, "rerangeVersioned")
     require(fs.exists(versionsDir(path)),
       s"$path carries no _graft_versions manifests; use rerange (in-place " +
         "dir swap) for plain tables")
-    val v0 = readVersionPointer(fs, path).getOrElse {
-      val vs = manifestVersions(fs, path)
-      require(vs.nonEmpty, s"no versions under $path")
-      vs.last
-    }
-    val m0 = readVersionManifest(spark, fs, path, v0).getOrElse(
-      sys.error(s"version $v0 has no manifest under $path"))
+    val (v0, m0) = resolveHead(spark, fs, path)
+    refuseColMap(m0.colmap, path, "rerangeVersioned")
     if (m0.entries.isEmpty) return (v0, 0L)
     val nRows = m0.entries.map(_._2).sum
     val nOut = math.max(1L, (nRows + targetFileRows - 1) / targetFileRows)
@@ -3692,17 +3556,56 @@ object Lake {
     // checkpoint-form commit with disjoint-set rebase: a concurrent
     // append's files ride into the new manifest un-reorganized (row-
     // correct; the next pass organizes them)
-    val next = publishNonCommuting(spark, fs, path, v0, ddl,
+    val pub = publishNonCommuting(spark, fs, path, m0, ddl,
       add = rewritten, remove = m0.entries.map(_._1), op = "rerange",
       full = true)
     // the re-range key ALWAYS ends up tracked (rerange's contract): with c
     // already tracked this is an O(new files) append; a manifest not yet
     // tracking c (or absent) rebuilds in full — same cost class as the
     // rewrite that just ran
-    appendStats(spark, path, (StatsManifest.trackedAt(fs, path) :+ c).distinct)
-    refreshBloomIndexes(spark, fs, path)
-    (next, rewritten.size.toLong)
+    val stats = StatsManifest.at(fs, path)
+    appendStatsTo(spark, fs, path,
+      (stats.toSeq.flatMap(_.tracked) :+ c).distinct, stats, Some(pub))
+    refreshBloomIndexes(spark, fs, path, pub)
+    (pub.version, rewritten.size.toLong)
   }
+
+  /** The table's HEAD version: the `_graft_latest` pointer, else the newest
+    * manifest (the pointer is written after its manifest, so it may lag a
+    * publish or be missing mid-swap); refuses a table with neither. Every
+    * operation decides its head here. A commit base that must be the
+    * NEWEST manifest (appendVersioned's publish loop, the rebase in
+    * publishNonCommuting) lists the manifests instead.
+    */
+  private def headVersion(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Long =
+    readVersionPointer(fs, path)
+      .orElse(manifestVersions(fs, path).lastOption)
+      .getOrElse(throw new IllegalArgumentException(s"no versions under $path"))
+
+  /** [[headVersion]] with its resolved manifest — what an operation
+    * resolves once and hands to its guards, reads and upkeep.
+    */
+  private def resolveHead(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem,
+      path: String): (Long, VersionManifest) = {
+    val v = headVersion(fs, path)
+    (v, readVersionManifest(spark, fs, path, v).getOrElse(
+      sys.error(s"version $v has no manifest under $path")))
+  }
+
+  /** Version `version`'s manifest, or the head's when None; refuses a
+    * version that has none.
+    */
+  private def manifestAt(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String,
+      version: Option[Long]): VersionManifest =
+    version.fold(resolveHead(spark, fs, path)._2) { v =>
+      readVersionManifest(spark, fs, path, v).getOrElse(
+        throw new IllegalArgumentException(
+          s"version $v does not exist under $path (have: " +
+            s"${manifestVersions(fs, path).mkString(",")})"))
+    }
 
   private def readVersionPointer(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Option[Long] = {
@@ -3710,7 +3613,7 @@ object Lake {
     if (!fs.exists(ptr)) None
     else
       // the pointer is a HINT, not the truth (manifests are authoritative
-      // and every caller falls back to max(manifest)): a read that races
+      // and headVersion falls back to max(manifest)): a read that races
       // a concurrent swap (local-FS ChecksumFs renames data+crc as two
       // ops) degrades to the fallback instead of failing the caller
       try {
@@ -3755,41 +3658,45 @@ object Lake {
     * replace ~every reference, so a delta would be checkpoint-sized with
     * none of the O(1)-resolution benefit); the rebase then resolves the
     * new head and applies the same set algebra.
+    *
+    * @return the manifest published, as `m0` (or the head it rebased
+    *         onto) plus this commit — what the caller's upkeep covers
     */
   private def publishNonCommuting(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String, v0: Long,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, m0: VersionManifest,
       schemaDdl: String, add: Seq[(String, Long)], remove: Seq[String],
       op: String, full: Boolean = false,
       dvAdd: Seq[DvEntry] = Nil, readSet: Set[String] = Set.empty,
-      streamBatchId: Option[Long] = None): Long = {
+      streamBatchId: Option[Long] = None): VersionManifest = {
     val ourRemove = remove.toSet
-    var base = v0
+    var base = m0
     var attempts = 0
     while (true) {
       attempts += 1
       require(attempts <= MaxCommitRetries,
         s"$op: lost the manifest race under $path $MaxCommitRetries " +
           "times (livelock? raise MaxCommitRetries)")
-      val next = base + 1
+      val next = base.version + 1
       try {
-        if (full) {
-          val resolved = readVersionManifest(spark, fs, path, base)
-            .getOrElse(sys.error(s"version $base has no manifest under $path"))
-          writeVersionManifest(spark, fs, path, next, schemaDdl,
-            resolved.entries.filterNot(e => ourRemove(e._1)) ++ add,
-            op = Some(op), dv = applyDvDelta(resolved.dvs, ourRemove, dvAdd),
-            streamBatchId = streamBatchId)
-        } else
-          writeVersionDelta(spark, fs, path, next, schemaDdl,
-            base = base, add = add, remove = remove, op = Some(op),
-            dvAdd = dvAdd, streamBatchId = streamBatchId)
+        val pub =
+          if (full) {
+            val p = applyCommit(base, next, schemaDdl, add, remove, dvAdd,
+              streamBatchId = streamBatchId).copy(depth = 0L)
+            writeVersionManifest(spark, fs, path, next, schemaDdl, p.entries,
+              op = Some(op), dv = p.dvs, colmap = p.colmap,
+              streamBatchId = streamBatchId)
+            p
+          } else
+            writeVersionDelta(spark, fs, path, next, schemaDdl,
+              base = base, add = add, remove = remove, op = Some(op),
+              dvAdd = dvAdd, streamBatchId = streamBatchId)
         writeVersionPointer(spark, fs, path, next)
-        return next
+        return pub
       } catch {
         case _: IllegalArgumentException
             if fs.exists(versionManifestFile(path, next)) =>
           val head = manifestVersions(fs, path).last
-          ((base + 1) to head).foreach { w =>
+          (next to head).foreach { w =>
             val raw = readRawManifest(spark, fs, path, w).getOrElse(
               sys.error(s"version $w vanished under $path mid-rebase"))
             require(raw.base.isDefined,
@@ -3825,7 +3732,9 @@ object Lake {
                 s"rewrites (${dvLoss.take(3).mkString(", ")}); recompute " +
                 "against the current version")
           }
-          base = head // all winners file-disjoint: rebase and retry
+          // all winners file-disjoint: rebase onto the head and retry
+          base = readVersionManifest(spark, fs, path, head).getOrElse(
+            sys.error(s"version $head vanished under $path mid-rebase"))
       }
     }
     sys.error("unreachable")
@@ -3908,11 +3817,14 @@ object Lake {
     * schema (what a parquet scan of the entries resolves by name), so
     * every internal scan path stays correct unchanged; the logical
     * projection is applied once at the read surface. Empty = identity
-    * (no rename/drop ever committed) — the legacy form.
+    * (no rename/drop ever committed) — the legacy form. `depth` is the
+    * delta-chain depth on disk (0 for a checkpoint) and `streamBatchId`
+    * this version's own stamp.
     */
   private case class VersionManifest(version: Long, schemaDdl: String,
       entries: Seq[(String, Long)], dvs: Seq[DvEntry] = Nil,
-      colmap: Seq[(String, String)] = Nil)
+      colmap: Seq[(String, String)] = Nil, depth: Long = 0L,
+      streamBatchId: Option[Long] = None)
 
   /** Raw on-disk form: full (files defined) or delta (base defined).
     * `ts` is the commit wall-clock (epoch millis), stamped at publish and
@@ -4013,28 +3925,27 @@ object Lake {
   private def isExternalRef(rel: String): Boolean =
     rel.startsWith("../") || rel.contains("/../")
 
+  /** The published version numbers, ascending; empty for a table that
+    * has no `_graft_versions` dir — the manifests are the only versions.
+    */
   private def manifestVersions(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Seq[Long] =
-    fs.listStatus(versionsDir(path)).toSeq.map(_.getPath.getName)
+    (try fs.listStatus(versionsDir(path)).toSeq
+     catch { case _: java.io.FileNotFoundException => Nil })
+      .map(_.getPath.getName)
       .filter(n => n.startsWith("v=") && n.endsWith(".json"))
       .map(_.stripPrefix("v=").stripSuffix(".json").toLong).sorted
 
-  private def dirVersions(fs: org.apache.hadoop.fs.FileSystem,
-      hp: org.apache.hadoop.fs.Path): Seq[Long] =
-    fs.listStatus(hp).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.stripPrefix("v=").toLong).sorted
-
-  /** Next unused version number: above every manifest AND every v= dir, so
-    * a crash-orphaned dir (data written, manifest never published) is
+  /** Next unused data-dir number: above every manifest AND every v= dir,
+    * so a crash-orphaned dir (data written, manifest never published) is
     * skipped over, never collided with.
     */
   private def nextVersion(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Long = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val ms =
-      if (fs.exists(versionsDir(path))) manifestVersions(fs, path) else Nil
-    ((ms ++ dirVersions(fs, hp)) :+ 0L).max + 1
+    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
+      .map(_.getPath.getName.stripPrefix("v=").toLong)
+    ((manifestVersions(fs, path) ++ dirs) :+ 0L).max + 1
   }
 
   /** {relative path, footer row count} for a batch of just-written files —
@@ -4145,29 +4056,26 @@ object Lake {
       replace)
   }
 
-  /** Publish an O(changed-files) DELTA manifest against `base` — or, when
-    * the chain would exceed [[MaxChainDepth]], a full checkpoint built by
-    * resolving base and applying the change (the caller passes `resolved`
-    * lazily so the common case never materializes it).
+  /** Publish an O(changed-files) DELTA manifest against the resolved
+    * `base` — or, when the chain would exceed [[MaxChainDepth]], a full
+    * checkpoint of `base` with the change applied.
+    *
+    * @return the manifest published, resolved in memory
     */
   private def writeVersionDelta(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String, v: Long,
-      schemaDdl: String, base: Long, add: Seq[(String, Long)],
+      schemaDdl: String, base: VersionManifest, add: Seq[(String, Long)],
       remove: Seq[String], streamBatchId: Option[Long] = None,
       op: Option[String] = None, dvAdd: Seq[DvEntry] = Nil,
-      colmap: Seq[(String, String)] = Nil): Unit = {
-    val parentDepth = readRawManifest(spark, fs, path, base)
-      .map(_.depth).getOrElse(
-        sys.error(s"delta base version $base has no manifest under $path"))
-    if (parentDepth + 1 > MaxChainDepth) {
-      val resolved = readVersionManifest(spark, fs, path, base).get
-      val rm = remove.toSet
-      writeVersionManifest(spark, fs, path, v, schemaDdl,
-        resolved.entries.filterNot(e => rm(e._1)) ++ add,
-        streamBatchId = streamBatchId, op = op,
-        dv = applyDvDelta(resolved.dvs, rm, dvAdd),
-        // a checkpoint never inherits: materialize the effective mapping
-        colmap = if (colmap.nonEmpty) colmap else resolved.colmap)
+      colmap: Seq[(String, String)] = Nil): VersionManifest = {
+    val pub = applyCommit(base, v, schemaDdl, add, remove, dvAdd, colmap,
+      streamBatchId)
+    if (pub.depth > MaxChainDepth) {
+      // a checkpoint never inherits: materialize the effective mapping
+      writeVersionManifest(spark, fs, path, v, schemaDdl, pub.entries,
+        streamBatchId = streamBatchId, op = op, dv = pub.dvs,
+        colmap = pub.colmap)
+      pub.copy(depth = 0L)
     } else {
       val removeJson = remove.map(jsonStr).mkString("[", ",", "]")
       val bidField = streamBatchId
@@ -4179,10 +4087,26 @@ object Lake {
       writeManifestFile(fs, path, v,
         s"""{"version":$v,"ts":${System.currentTimeMillis()},$bidField""" +
           s"""$opField$dvField$cmField"schema":${jsonStr(schemaDdl)},""" +
-          s""""depth":${parentDepth + 1},"base":$base,""" +
+          s""""depth":${pub.depth},"base":${base.version},""" +
           s""""add":${entriesJson(add)},"remove":$removeJson}""",
         replace = false)
+      pub
     }
+  }
+
+  /** `base` with one commit applied, as [[readVersionManifest]] resolves
+    * a delta: `remove` leaves the file list and every dv entry's coverage,
+    * `add` and `dvAdd` append, and an empty `colmap` inherits the base's.
+    */
+  private def applyCommit(base: VersionManifest, v: Long, schemaDdl: String,
+      add: Seq[(String, Long)], remove: Seq[String], dvAdd: Seq[DvEntry],
+      colmap: Seq[(String, String)] = Nil,
+      streamBatchId: Option[Long] = None): VersionManifest = {
+    val rm = remove.toSet
+    VersionManifest(v, schemaDdl, base.entries.filterNot(e => rm(e._1)) ++ add,
+      applyDvDelta(base.dvs, rm, dvAdd),
+      if (colmap.nonEmpty) colmap else base.colmap,
+      depth = base.depth + 1, streamBatchId = streamBatchId)
   }
 
   /** Fold one commit's dv change into a base's live dv set: removing a
@@ -4253,22 +4177,21 @@ object Lake {
       raw.files match {
         case Some(entries) =>
           VersionManifest(raw.version, raw.schemaDdl, entries, raw.dv,
-            raw.colmap)
+            raw.colmap, raw.depth, raw.streamBatchId)
         case None =>
           val base = readVersionManifest(spark, fs, path, raw.base.get)
             .getOrElse(sys.error(
               s"version ${raw.version} under $path resolves through " +
                 s"missing base ${raw.base.get} - manifest chain broken"))
-          val rm = raw.remove.toSet
           // a delta that carries no colmap INHERITS its base's: the mapping
           // covers the full column set whenever active, so "explicitly
           // empty" never occurs on deltas — only a full checkpoint
           // (materializeMapping) clears it. Inheritance means a delta
           // writer that forgot to thread the map cannot silently strip it.
-          VersionManifest(raw.version, raw.schemaDdl,
-            base.entries.filterNot(e => rm(e._1)) ++ raw.add,
-            applyDvDelta(base.dvs, rm, raw.dvAdd),
-            if (raw.colmap.nonEmpty) raw.colmap else base.colmap)
+          // The depth is the one on disk: a base vacuum materialized into a
+          // checkpoint keeps its delta's recorded depth
+          applyCommit(base, raw.version, raw.schemaDdl, raw.add, raw.remove,
+            raw.dvAdd, raw.colmap, raw.streamBatchId).copy(depth = raw.depth)
       }
     }
 
@@ -4297,25 +4220,17 @@ object Lake {
     else df.select(colmap.map { case (l, p) =>
       org.apache.spark.sql.functions.col(p).as(l) }: _*)
 
-  /** The HEAD version's column mapping (empty when none / not versioned) —
-    * the guard probe for operations that scan or rewrite physical files.
+  /** The HEAD version's manifest ([[resolveHead]]); None when the table
+    * is not versioned.
     */
-  private def colMapAtHead(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[(String, String)] =
-    headManifest(spark, fs, path).map(_.colmap).getOrElse(Nil)
-
-  /** The HEAD version's manifest (None when none / not versioned). */
   private def headManifest(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
       path: String): Option[VersionManifest] =
     if (!fs.exists(versionsDir(path))) None
-    else readVersionPointer(fs, path)
-      .orElse(manifestVersions(fs, path).lastOption)
-      .flatMap(readVersionManifest(spark, fs, path, _))
+    else Some(resolveHead(spark, fs, path)._2)
 
   /** Refusal for operations whose scans/rewrites/predicates would bypass
-    * the logical-name projection (the [[requireNoDvs]] discipline):
+    * the logical-name projection (the [[refuseDvs]] discipline):
     * running them against physical names would either fail confusingly or
     * silently expose/persist the wrong column names. The escape hatch is
     * [[materializeMapping]] — rewrite once under logical names, then every
@@ -4324,7 +4239,8 @@ object Lake {
   private def requireNoColMap(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
       opName: String): Unit =
-    refuseColMap(colMapAtHead(spark, fs, path), path, opName)
+    refuseColMap(headManifest(spark, fs, path).map(_.colmap).getOrElse(Nil),
+      path, opName)
 
   /** [[requireNoColMap]] against a head manifest already resolved. */
   private def refuseColMap(colmap: Seq[(String, String)], path: String,
@@ -4479,24 +4395,6 @@ object Lake {
     else spark.read.schema(schema).parquet(qualifyForRead(fs, files): _*)
   }
 
-  /** Upgrade a pre-manifest versioned layout in place: every bare `v=N`
-    * dir gets a manifest built from its own files' footers. No-op for
-    * manifested or unversioned tables.
-    */
-  private def ensureVersionManifests(spark: SparkSession,
-      path: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp) || fs.exists(versionsDir(path))) return
-    dirVersions(fs, hp).foreach { v =>
-      val vd = new org.apache.hadoop.fs.Path(path, s"v=$v")
-      val files = listDataFiles(fs, vd)
-      val ddl = spark.read.parquet(vd.toString).schema.toDDL
-      writeVersionManifest(spark, fs, path, v, ddl,
-        fileEntries(spark, fs, path, files))
-    }
-  }
-
   /** Version a plain (or schema-evolving) table in place: the current data
     * files become version 1 by reference — a metadata-only commit, no data
     * is moved or rewritten.
@@ -4524,6 +4422,20 @@ object Lake {
       op = Some("bootstrap"))
     writeVersionPointer(spark, fs, path, 1L)
   }
+
+  /** Whether an unversioned dir holds table data: a data file outside
+    * every commit's claimed `v=N` dir (one carrying a `._graft_claim`
+    * marker is a crashed commit's leavings, which vacuum reclaims once the
+    * table has versions and no version ever adopts).
+    */
+  private def holdsTableData(fs: org.apache.hadoop.fs.FileSystem,
+      hp: org.apache.hadoop.fs.Path): Boolean =
+    fs.exists(hp) && fs.listStatus(hp).exists { s =>
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".") && (!s.isDirectory ||
+        (!fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "._graft_claim")) &&
+          listDataFiles(fs, s.getPath).nonEmpty))
+    }
 
   /** The latest LOGICAL schema of an evolved table as DDL. */
   private def logicalDdl(spark: SparkSession, path: String): String =
@@ -4581,8 +4493,9 @@ object Lake {
     // which cannot also attach the scan-stage _metadata position columns
     // the tombstone anti-join needs — drifting a dv'd table would leave
     // its reads broken. Purge first; the refusal mirrors deleteWhereDv's.
-    requireNoDvs(spark, fs, path, "writeEvolving")
-    requireNoColMap(spark, fs, path, "writeEvolving")
+    val head = headManifest(spark, fs, path)
+    refuseDvs(head.map(_.dvs).getOrElse(Nil), path, "writeEvolving")
+    refuseColMap(head.map(_.colmap).getOrElse(Nil), path, "writeEvolving")
     require(generatedColumns(spark, path).isEmpty,
       s"$path declares GENERATED columns; schema evolution would bypass " +
         "their derivation - drop them first")
@@ -4701,14 +4614,16 @@ object Lake {
     df.write.mode(SaveMode.Append).parquet(path)
     if (versioned) {
       val v0 = manifestVersions(fs, path).last
+      val base = readVersionManifest(spark, fs, path, v0).getOrElse(
+        sys.error(s"version $v0 has no manifest under $path"))
       val freshFiles = listDataFiles(fs, hp).filterNot(before)
       val nextV = v0 + 1
       val ddl = org.apache.spark.sql.types.StructType(newFields.map {
         case (n, t) => org.apache.spark.sql.types.StructField(n,
           org.apache.spark.sql.types.DataType.fromDDL(t))
       }).toDDL
-      writeVersionDelta(spark, fs, path, nextV, ddl,
-        base = v0, add = fileEntries(spark, fs, path, freshFiles),
+      val pub = writeVersionDelta(spark, fs, path, nextV, ddl,
+        base = base, add = fileEntries(spark, fs, path, freshFiles),
         remove = Seq.empty, streamBatchId = streamBatchId,
         op = Some("evolve-append"))
       writeVersionPointer(spark, fs, path, nextV)
@@ -4717,8 +4632,8 @@ object Lake {
       // leaves the manifest stale and every later readSkipping refuses
       // until a full writeStats): O(batch), tracked columns only — the
       // drift is additive, so old tracked columns exist in the new files
-      keepStatsLive(spark, fs, path)
-      refreshBloomIndexes(spark, fs, path)
+      keepStatsLive(spark, fs, path, pub)
+      refreshBloomIndexes(spark, fs, path, pub)
     }
     next
   }
@@ -5070,25 +4985,31 @@ object Lake {
       statsCols: Seq[String]): Long = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    appendStatsTo(spark, fs, path, statsCols, StatsManifest.at(fs, path))
+    appendStatsTo(spark, fs, path, statsCols, StatsManifest.at(fs, path),
+      headManifest(spark, fs, path))
   }
 
-  /** Keep an existing stats manifest live over a commit's new files: an
-    * [[appendStats]] over every column it tracks; no-op without one.
+  /** Keep an existing stats manifest live over the files of `head`, the
+    * manifest a commit just published: an [[appendStats]] over every
+    * column it tracks; no-op without one. A concurrent commit's files are
+    * covered by that commit's own upkeep.
     */
   private def keepStatsLive(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
+      fs: org.apache.hadoop.fs.FileSystem, path: String,
+      head: VersionManifest): Unit =
     StatsManifest.at(fs, path).filter(_.tracked.nonEmpty).foreach(m =>
-      appendStatsTo(spark, fs, path, m.tracked, Some(m)))
+      appendStatsTo(spark, fs, path, m.tracked, Some(m), Some(head)))
 
-  /** [[appendStats]] against the manifest already read (None: none yet). */
+  /** [[appendStats]] against the stats manifest already read (None: none
+    * yet) and the table's head manifest (None: not versioned).
+    */
   private def appendStatsTo(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
-      statsCols: Seq[String], manifest: Option[StatsManifest]): Long = {
+      statsCols: Seq[String], manifest: Option[StatsManifest],
+      head: Option[VersionManifest]): Long = {
     import org.apache.spark.sql.functions._
     require(statsCols.nonEmpty, "appendStats needs at least one column")
     val hp = new org.apache.hadoop.fs.Path(path)
-    val head = headManifest(spark, fs, path)
     refuseColMap(head.map(_.colmap).getOrElse(Nil), path, "appendStats")
     val m = manifest.getOrElse(return writeStats(spark, path, statsCols))
     // append rows for EVERY column the manifest tracks, not just the ones
@@ -5116,7 +5037,7 @@ object Lake {
       val aggs = appendCols.flatMap(c =>
         Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
         count(lit(1)).as("n_rows")
-      manifestLines(readFileSubset(spark, path, fresh)
+      manifestLines(readFileSubset(spark, path, fresh, head)
         .groupBy(input_file_name().as("file"))
         .agg(aggs.head, aggs.tail: _*))
     }
@@ -5180,8 +5101,9 @@ object Lake {
       keep: org.apache.spark.sql.Column): DataFrame = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoDvs(spark, fs, path, "readSkipping")
-    val current = currentDataFiles(spark, fs, hp, path).toSet
+    val head = headManifest(spark, fs, path)
+    refuseDvs(head.map(_.dvs).getOrElse(Nil), path, "readSkipping")
+    val current = currentDataFilesAt(fs, hp, path, head).toSet
     val manifest = validatedManifest(fs, StatsManifest.dir(path), current,
       s"_graft_stats manifest under $path", "writeStats")
     // intersect with the CURRENT file set: a versioned table's stats
@@ -5192,7 +5114,7 @@ object Lake {
     // over the rows on the driver ([[StatsManifest.keeps]])
     val files = manifest.files.zip(manifest.keeps(spark, keep))
       .collect { case (f, true) if current(f) => f }.distinct
-    readFileSubset(spark, path, files)
+    readFileSubset(spark, path, files, head)
   }
 
   // ======================================================================
@@ -5236,13 +5158,12 @@ object Lake {
   def stageAppend(spark: SparkSession, df: DataFrame, path: String): String = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoColMap(spark, fs, path, "stageAppend")
     fs.mkdirs(hp)
-    ensureVersionManifests(spark, path)
     if (!fs.exists(versionsDir(path))) bootstrapRootVersion(spark, fs, path)
+    val (_, m0) = resolveHead(spark, fs, path)
+    refuseColMap(m0.colmap, path, "stageAppend")
     val dfG = applyGeneratedTo(spark, path, df, "stageAppend")
-    val curDdl = readRawManifest(spark, fs, path,
-      manifestVersions(fs, path).last).get.schemaDdl
+    val curDdl = m0.schemaDdl
     val cur = org.apache.spark.sql.types.StructType.fromDDL(curDdl)
     require(dfG.schema.fields.map(f => (f.name, f.dataType.catalogString)).toSeq
         == cur.fields.map(f => (f.name, f.dataType.catalogString)).toSeq,
@@ -5309,7 +5230,8 @@ object Lake {
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (_, entries) = readStagedEntries(fs, path, id)
     val root = rootPath(fs, hp)
-    readFileSubset(spark, path, entries.map(e => resolveRef(root, e._1)))
+    readFileSubset(spark, path, entries.map(e => resolveRef(root, e._1)),
+      headManifest(spark, fs, path))
   }
 
   /** The WOULD-BE table after publish: current snapshot ∪ staged batch —
@@ -5348,14 +5270,12 @@ object Lake {
       streamBatchId: Option[Long] = None): Long = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def headVersion(): Long = readVersionPointer(fs, path).getOrElse(
-      manifestVersions(fs, path).last)
     streamBatchId.foreach { bid =>
       if (streamBatchCommitted(spark, path, bid)) {
         // replayed micro-batch: its rows are already published — the
         // replay's redundant re-stage (if any) is aborted, not folded
         if (fs.exists(stagedMarker(path, id))) abortStaged(spark, path, id)
-        return headVersion()
+        return headVersion(fs, path)
       }
     }
     val claimed = claimedMarker(path, id)
@@ -5376,11 +5296,11 @@ object Lake {
         s"no staged batch '$id' under $path (already published/aborted, " +
           "or a concurrent publish claimed it)")
       val (_, entries) = readMarkerFile(fs, claimed)
-      val headEntries = readVersionManifest(spark, fs, path, headVersion())
-        .map(_.entries.map(_._1).toSet).getOrElse(Set.empty)
+      val (head, m) = resolveHead(spark, fs, path)
+      val headEntries = m.entries.map(_._1).toSet
       if (entries.forall(e => headEntries(e._1))) {
         fs.delete(claimed, false)
-        return headVersion()
+        return head
       }
       throw new IllegalArgumentException(
         s"stage '$id' under $path is claimed by another publish — " +
@@ -5400,11 +5320,10 @@ object Lake {
     // beyond retries) conservatively leaves the claim: the reconcile path
     // above detects a completed publish by head inclusion, and
     // [[recoverStagedPublish]] is the explicit hand-back lever.
-    val (v0, curDdl) =
+    val m0 =
       try {
-        val v0 = headVersion()
-        val curDdl = readRawManifest(spark, fs, path,
-          manifestVersions(fs, path).last).get.schemaDdl
+        val (_, m0) = resolveHead(spark, fs, path)
+        val curDdl = m0.schemaDdl
         require(curDdl == stagedDdl,
           s"publishStaged($id): table schema changed since staging " +
             s"(staged against $stagedDdl, table now $curDdl) - the audit " +
@@ -5412,7 +5331,8 @@ object Lake {
         val cs = checkConstraints(spark, path)
         if (cs.nonEmpty)
           enforceConstraintsOn(spark,
-            readFileSubset(spark, path, entries.map(e => resolveRef(root, e._1))),
+            readFileSubset(spark, path, entries.map(e => resolveRef(root, e._1)),
+              Some(m0)),
             cs, s"publishStaged($path, $id)")
         // generated columns declared AFTER staging get the same
         // publish-time re-validation as constraints: the staged files
@@ -5421,18 +5341,19 @@ object Lake {
         val gs = generatedColumns(spark, path)
         if (gs.nonEmpty)
           validateGeneratedOn(spark,
-            readFileSubset(spark, path, entries.map(e => resolveRef(root, e._1))),
+            readFileSubset(spark, path, entries.map(e => resolveRef(root, e._1)),
+              Some(m0)),
             gs, s"publishStaged($path, $id)")
-        (v0, curDdl)
+        m0
       } catch { case e: Throwable => unclaim(); throw e }
-    val next = publishNonCommuting(spark, fs, path, v0, curDdl,
+    val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
       add = entries, remove = Nil, op = "wap",
       streamBatchId = streamBatchId)
     // same keep-alive invariants as every other committing path
-    keepStatsLive(spark, fs, path)
-    refreshBloomIndexes(spark, fs, path)
+    keepStatsLive(spark, fs, path, pub)
+    refreshBloomIndexes(spark, fs, path, pub)
     fs.delete(claimed, false)
-    next
+    pub.version
   }
 
   /** Hand a claimed-but-unpublished stage back to the staged state — the
@@ -5451,10 +5372,7 @@ object Lake {
     val claimed = claimedMarker(path, id)
     require(fs.exists(claimed), s"no claimed publish of '$id' under $path")
     val (_, entries) = readMarkerFile(fs, claimed)
-    val head = readVersionPointer(fs, path).getOrElse(
-      manifestVersions(fs, path).last)
-    val headEntries = readVersionManifest(spark, fs, path, head)
-      .map(_.entries.map(_._1).toSet).getOrElse(Set.empty)
+    val headEntries = resolveHead(spark, fs, path)._2.entries.map(_._1).toSet
     require(!entries.forall(e => headEntries(e._1)),
       s"claimed publish of '$id' under $path COMPLETED (its files are " +
         "at the head) - publishStaged reconciles it; recovering would " +
@@ -5497,19 +5415,14 @@ object Lake {
       val shp = new org.apache.hadoop.fs.Path(sourcePath)
       val sfs = shp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!sfs.exists(versionsDir(sourcePath))) return None
-      val head = readVersionPointer(sfs, sourcePath)
-        .orElse(manifestVersions(sfs, sourcePath).lastOption)
-        .getOrElse(return None)
       val vfs = new org.apache.hadoop.fs.Path(viewPath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!vfs.exists(versionsDir(viewPath))) return None
-      val viewHead = readVersionPointer(vfs, viewPath)
-        .orElse(manifestVersions(vfs, viewPath).lastOption)
-        .getOrElse(return None)
-      val watermark = readRawManifest(spark, vfs, viewPath, viewHead)
-        .flatMap(_.streamBatchId).getOrElse(return None)
+      val watermark = readRawManifest(spark, vfs, viewPath,
+        headVersion(vfs, viewPath)).flatMap(_.streamBatchId).getOrElse(return None)
+      val (head, m) = resolveHead(spark, sfs, sourcePath)
       if (watermark < head) None
-      else Some(currentDataFiles(spark, sfs, shp, sourcePath).toSet)
+      else Some(currentDataFilesAt(sfs, shp, sourcePath, Some(m)).toSet)
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Relative paths every live staged marker references — vacuum's extra
@@ -5539,14 +5452,12 @@ object Lake {
     currentDataFilesAt(fs, hp, path, headManifest(spark, fs, path))
 
   /** [[currentDataFiles]] against the head manifest already resolved
-    * ([[headManifest]]).
+    * ([[headManifest]]; None lists the unversioned dir).
     */
   private def currentDataFilesAt(fs: org.apache.hadoop.fs.FileSystem,
       hp: org.apache.hadoop.fs.Path, path: String,
       head: Option[VersionManifest]): Seq[String] =
-    if (!fs.exists(versionsDir(path))) listDataFiles(fs, hp)
-    else {
-      val m = head.getOrElse(sys.error(s"no versions under $path"))
+    head.fold(listDataFiles(fs, hp)) { m =>
       val root = rootPath(fs, hp)
       m.entries.map(e => resolveRef(root, e._1))
     }
@@ -5602,40 +5513,52 @@ object Lake {
     * An EVOLVED table's subset resolves through the schema manifests
     * (plain parquet reads over mixed-schema files silently drop columns).
     *
-    * HEAD-ONLY CONTRACT: `files` must come from the table's CURRENT
-    * version — the column mapping applied below is the head's, and a
-    * file list from another version could carry a different era's
-    * physical schema under the head's logical names. All callers
-    * (skipping, probe pruning, bloom lookup, publishStaged) derive their
-    * lists from head manifests; a time-travel subset read would need the
-    * version's own manifest colmap threaded through instead.
+    * HEAD-ONLY CONTRACT: `head` is the table's resolved head manifest
+    * (None: not versioned) and `files` must come from it — the column
+    * mapping applied below is the head's, and a file list from another
+    * version could carry a different era's physical schema under the
+    * head's logical names. All callers (skipping, probe pruning, bloom
+    * lookup, publishStaged) derive their lists from head manifests; a
+    * time-travel subset read would need the version's own manifest colmap
+    * threaded through instead.
     */
   private def readFileSubset(spark: SparkSession, path: String,
-      files: Seq[String]): DataFrame = {
+      files: Seq[String], head: Option[VersionManifest]): DataFrame = {
     val evolved = readSchemaManifests(spark, path).nonEmpty
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versioned = fs.exists(versionsDir(path))
     if (files.isEmpty) {
-      val full = if (versioned) readVersioned(spark, path)
-                 else if (evolved) readEvolving(spark, path)
-                 else spark.read.parquet(path)
+      val full = head.fold(
+        if (evolved) readEvolving(spark, path) else spark.read.parquet(path))(
+        readManifestFiles(spark, fs, path, _))
       full.limit(0)
     } else if (evolved) evolvedRead(spark, path, Some(files))
-    // versioned tables are unpartitioned (our writers): no basePath, which
-    // over `v=N` rewrite dirs would hallucinate a `v` partition column.
-    // The head manifest's DDL is the files' physical schema, so the scan
-    // needs no footer-inference job; a column-mapped table's subset reads
-    // project to logical names like any full read (skipping/probe/lookup
-    // callers see the same schema)
-    else if (versioned) {
-      val head = headManifest(spark, fs, path).getOrElse(
-        sys.error(s"$path has no head version manifest"))
-      applyColMap(spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(head.schemaDdl))
-        .parquet(qualifyForRead(fs, files): _*), head.colmap)
-    } else spark.read.option("basePath", path)
-      .parquet(qualifyForRead(fs, files): _*)
+    else head match {
+      // versioned tables are unpartitioned (our writers): no basePath,
+      // which over `v=N` rewrite dirs would hallucinate a `v` partition
+      // column. The head manifest's DDL is the files' physical schema, so
+      // the scan needs no footer-inference job; a column-mapped table's
+      // subset reads project to logical names like any full read
+      // (skipping/probe/lookup callers see the same schema)
+      case Some(m) =>
+        applyColMap(spark.read
+          .schema(org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl))
+          .parquet(qualifyForRead(fs, files): _*), m.colmap)
+      // a plain dir: Spark's inference reads one footer too, so the first
+      // file's footer, converted the way that inference converts it, is the
+      // schema a read would settle on — read on the driver, it starts no
+      // job. Partition-dir columns still come from the paths under basePath.
+      case None =>
+        import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+        val qualified = qualifyForRead(fs, files)
+        val first = new org.apache.hadoop.fs.Path(qualified.head)
+        val footer = new org.apache.parquet.hadoop.Footer(first,
+          readFooter(spark.sparkContext.hadoopConfiguration, first))
+        val schema = ParquetFileFormat.readSchemaFromFooter(footer,
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).option("basePath", path)
+          .parquet(qualified: _*)
+    }
   }
 
   // ======================================================================
@@ -5810,9 +5733,19 @@ object Lake {
     */
   def lookupFiles(spark: SparkSession, path: String, probes: DataFrame,
       maxProbes: Int = 100000): (Seq[String], Int) = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    lookupFilesAt(spark, fs, path, headManifest(spark, fs, path), probes,
+      maxProbes)
+  }
+
+  /** [[lookupFiles]] against the head manifest already resolved. */
+  private def lookupFilesAt(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String,
+      head: Option[VersionManifest], probes: DataFrame,
+      maxProbes: Int): (Seq[String], Int) = {
     require(probes.columns.nonEmpty, "lookupFiles: no probe columns")
     val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val statsDir = StatsManifest.dir(path)
     val hasStats = fs.exists(statsDir)
     val bloomed = probes.columns.filter(c => fs.exists(bloomDir(path, c))).toSet
@@ -5820,7 +5753,7 @@ object Lake {
     require(indexed.nonEmpty,
       s"lookupFiles: no _graft_stats or _graft_bloom index on any of " +
         s"(${probes.columns.mkString(", ")}) under $path")
-    val current = currentDataFiles(spark, fs, hp, path)
+    val current = currentDataFilesAt(fs, hp, path, head)
     val live = current.toSet
     val stats = if (!hasStats) None else Some(validatedManifest(fs, statsDir,
       live, s"_graft_stats manifest under $path", "writeStats"))
@@ -5847,11 +5780,12 @@ object Lake {
     */
   def readLookup(spark: SparkSession, path: String, probes: DataFrame,
       maxProbes: Int = 100000): DataFrame = {
-    requireNoDvs(spark,
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      path, "readLookup")
-    readFileSubset(spark, path, lookupFiles(spark, path, probes, maxProbes)._1)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val head = headManifest(spark, fs, path)
+    refuseDvs(head.map(_.dvs).getOrElse(Nil), path, "readLookup")
+    readFileSubset(spark, path,
+      lookupFilesAt(spark, fs, path, head, probes, maxProbes)._1, head)
   }
 
   private def bloomDir(path: String, c: String) = {
@@ -5863,20 +5797,22 @@ object Lake {
     new org.apache.hadoop.fs.Path(path, s"_graft_bloom/$c")
   }
 
-  /** Keep every existing bloom index live across a commit — the bloom
-    * sibling of the appendStats keep-alive hooks: O(fresh files) per
-    * indexed column, no-op without an index. Same invariant: commits
-    * that add files are exactly the ones that would otherwise flip the
-    * index's stale guard into refusing every lookup. Dot-named entries
-    * are a publish's staging or aside copies, not indexes.
+  /** Keep every existing bloom index live over the files of `head`, the
+    * manifest a commit just published — the bloom sibling of
+    * [[keepStatsLive]]: O(fresh files) per indexed column, no-op without
+    * an index. Same invariant: commits that add files are exactly the
+    * ones that would otherwise flip the index's stale guard into refusing
+    * every lookup. Dot-named entries are a publish's staging or aside
+    * copies, not indexes.
     */
   private def refreshBloomIndexes(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
+      fs: org.apache.hadoop.fs.FileSystem, path: String,
+      head: VersionManifest): Unit = {
     val root = new org.apache.hadoop.fs.Path(path, "_graft_bloom")
     if (!fs.exists(root)) return
     fs.listStatus(root).map(_.getPath.getName)
       .filterNot(_.startsWith("."))
-      .foreach(c => appendBloomIndex(spark, path, c))
+      .foreach(c => appendBloomIndexAt(spark, fs, path, c, Some(head)))
   }
 
   /** numBits for a target false-positive rate at `n` expected items. */
@@ -5892,13 +5828,14 @@ object Lake {
     * convention.
     */
   private def bloomLines(spark: SparkSession, path: String, c: String,
-      files: Seq[String], expectedPerFile: Long, fpp: Double): Seq[String] = {
+      files: Seq[String], head: Option[VersionManifest],
+      expectedPerFile: Long, fpp: Double): Seq[String] = {
     import org.apache.spark.sql.functions.{base64, col, input_file_name, when, xxhash64}
     // null keys are skipped via a null hash (the aggregate ignores nulls),
     // NOT by pre-filtering rows: an all-null file must still emit its
     // manifest row (null bloom → provably probe-free → prunable), or the
     // stale-coverage guard would refuse the table forever
-    manifestLines(readFileSubset(spark, path, files)
+    manifestLines(readFileSubset(spark, path, files, head)
       .groupBy(input_file_name().as("file"))
       .agg(base64(graft.functions.TextFunctions.bloom_filter_agg(
         when(col(c).isNotNull, xxhash64(col(c))), expectedPerFile,
@@ -5911,12 +5848,22 @@ object Lake {
     */
   def writeBloomIndex(spark: SparkSession, path: String, c: String,
       expectedPerFile: Long = 100000L, fpp: Double = 0.01): Long = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoColMap(spark, fs, path, "writeBloomIndex")
-    val files = currentDataFiles(spark, fs, hp, path)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    writeBloomIndexAt(spark, fs, path, c, headManifest(spark, fs, path),
+      expectedPerFile, fpp)
+  }
+
+  /** [[writeBloomIndex]] against the head manifest already resolved. */
+  private def writeBloomIndexAt(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, c: String,
+      head: Option[VersionManifest], expectedPerFile: Long,
+      fpp: Double): Long = {
+    refuseColMap(head.map(_.colmap).getOrElse(Nil), path, "writeBloomIndex")
+    val files = currentDataFilesAt(fs, new org.apache.hadoop.fs.Path(path),
+      path, head)
     replaceManifest(fs, bloomDir(path, c),
-      bloomLines(spark, path, c, files, expectedPerFile, fpp))
+      bloomLines(spark, path, c, files, head, expectedPerFile, fpp))
     files.size.toLong
   }
 
@@ -5931,16 +5878,27 @@ object Lake {
     */
   def appendBloomIndex(spark: SparkSession, path: String, c: String,
       expectedPerFile: Long = 100000L, fpp: Double = 0.01): Long = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    appendBloomIndexAt(spark, fs, path, c, headManifest(spark, fs, path),
+      expectedPerFile, fpp)
+  }
+
+  /** [[appendBloomIndex]] against the head manifest already resolved. */
+  private def appendBloomIndexAt(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, c: String,
+      head: Option[VersionManifest], expectedPerFile: Long = 100000L,
+      fpp: Double = 0.01): Long = {
     val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoColMap(spark, fs, path, "appendBloomIndex")
+    refuseColMap(head.map(_.colmap).getOrElse(Nil), path, "appendBloomIndex")
     val out = bloomDir(path, c)
-    if (!fs.exists(out)) return writeBloomIndex(spark, path, c, expectedPerFile, fpp)
+    if (!fs.exists(out))
+      return writeBloomIndexAt(spark, fs, path, c, head, expectedPerFile, fpp)
     val covered = StatsManifest.read(fs, out).files.toSet
-    val fresh = currentDataFiles(spark, fs, hp, path).filterNot(covered)
+    val fresh = currentDataFilesAt(fs, hp, path, head).filterNot(covered)
     if (fresh.isEmpty) return 0L
     appendManifest(fs, hp, out,
-      bloomLines(spark, path, c, fresh, expectedPerFile, fpp))
+      bloomLines(spark, path, c, fresh, head, expectedPerFile, fpp))
     fresh.size.toLong
   }
 
@@ -6057,17 +6015,11 @@ object Lake {
     require(targetFileRows > 0, "targetFileRows must be positive")
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoColMap(spark, fs, path, "zorderVersioned")
     require(fs.exists(versionsDir(path)),
       s"$path carries no _graft_versions manifests; use zorderWrite for " +
         "plain tables")
-    val v0 = readVersionPointer(fs, path).getOrElse {
-      val vs = manifestVersions(fs, path)
-      require(vs.nonEmpty, s"no versions under $path")
-      vs.last
-    }
-    val m0 = readVersionManifest(spark, fs, path, v0).getOrElse(
-      sys.error(s"version $v0 has no manifest under $path"))
+    val (v0, m0) = resolveHead(spark, fs, path)
+    refuseColMap(m0.colmap, path, "zorderVersioned")
     if (m0.entries.isEmpty) return (v0, 0L)
     val nRows = m0.entries.map(_._2).sum
     val nOut = math.max(1L, (nRows + targetFileRows - 1) / targetFileRows)
@@ -6080,14 +6032,15 @@ object Lake {
       if (readSchemaManifests(spark, path).nonEmpty) logicalDdl(spark, path)
       else m0.schemaDdl
     // checkpoint-form commit with disjoint-set rebase (see rerange note)
-    val next = publishNonCommuting(spark, fs, path, v0, ddl,
+    val pub = publishNonCommuting(spark, fs, path, m0, ddl,
       add = rewritten, remove = m0.entries.map(_._1), op = "zorder",
       full = true)
     // every clustered column ends up tracked, like rerange's contract
-    appendStats(spark, path,
-      (StatsManifest.trackedAt(fs, path) ++ clusterCols).distinct)
-    refreshBloomIndexes(spark, fs, path)
-    (next, rewritten.size.toLong)
+    val stats = StatsManifest.at(fs, path)
+    appendStatsTo(spark, fs, path,
+      (stats.toSeq.flatMap(_.tracked) ++ clusterCols).distinct, stats, Some(pub))
+    refreshBloomIndexes(spark, fs, path, pub)
+    (pub.version, rewritten.size.toLong)
   }
 
   def compact(spark: SparkSession, path: String,

@@ -274,4 +274,34 @@ class StatsManifestSpec extends SparkSpec {
     assert(Lake.readLookup(spark, dir, probes)
       .filter(col("k").isin(f"${42}%06d", f"${2005}%06d")).count() == 2)
   }
+
+  test("plain-dir skipping and lookup frames take the schema from a footer") {
+    import spark.implicits._
+    val dir = tmp() + "/t"
+    def rows(r: Range) = r.map(i => (f"$i%06d", i.toLong)).toDF("k", "v")
+    rows(1 to 400).repartitionByRange(4, col("k")).write.parquet(dir)
+    Lake.writeStats(spark, dir, Seq("k"))
+    val probes = Seq(f"${42}%06d").toDF("k")
+    val keep = Lake.skipRange("k", lit("000010"), lit("000020"))
+    // the parent inferred the subset's schema with a job each
+    val nLookup = jobsOf(Lake.readLookup(spark, dir, probes))
+    assert(nLookup == 0, s"building a plain-dir readLookup frame started $nLookup jobs")
+    val nSkip = jobsOf(Lake.readSkipping(spark, dir, keep))
+    assert(nSkip == 0, s"building a plain-dir readSkipping frame started $nSkip jobs")
+    assert(Lake.readLookup(spark, dir, probes)
+      .filter(col("k") === f"${42}%06d").count() == 1L)
+    assert(Lake.readSkipping(spark, dir, keep)
+      .filter(col("k").between("000010", "000020")).count() == 11L)
+    // a hive-partitioned dir keeps its partition column, typed as the
+    // unpruned read types it
+    val parted = tmp() + "/p"
+    rows(1 to 400).withColumn("p", col("v") % 3).write.partitionBy("p")
+      .parquet(parted)
+    Lake.writeStats(spark, parted, Seq("k"))
+    val full = spark.read.parquet(parted)
+    val skipped = Lake.readSkipping(spark, parted, lit(true))
+    assert(skipped.schema == full.schema,
+      s"${skipped.schema.toDDL} vs ${full.schema.toDDL}")
+    assert(show(skipped.collect().toSeq) == show(full.collect().toSeq))
+  }
 }
