@@ -100,7 +100,7 @@ object Bench {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings")
       .foreach(t => warm(s"count_$t")(
-        spark.read.parquet(s"$sfDir/$t.parquet").count()))
+        Tables(spark, sfDir, t).count()))
     warm("count_events")(Tables.events(spark, sfDir).count())
     // corpus-admission fixtures: the signature index and the versioned
     // events table are written once when the corpus lands, so

@@ -40,7 +40,7 @@ object ScaleUp {
       // replica with a type mismatch the original testdata never shows
       val base =
         if (table == "events") Tables.events(spark, src)
-        else spark.read.parquet(s"$src/$table.parquet")
+        else Tables(spark, src, table)
       val out =
         if (keys.isEmpty || factor <= 1) base
         else (0 until factor).map { i =>

@@ -33,10 +33,13 @@ object Session {
   }
 }
 
-/** Readers for the driver testdata tables (TESTDATA.md / FIXTURES.md §B). */
+/** Readers for the driver testdata tables (TESTDATA.md / FIXTURES.md §B).
+  * Each frame takes its schema from the one footer Spark's inference would
+  * read, read on the driver, so building it starts no Spark job.
+  */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Lake.readParquet(spark, s"$dir/$name.parquet")
 
   /** Schema-adaptive read of the events table. Driver fixtures have shipped
     * `ts` two ways across regenerations:

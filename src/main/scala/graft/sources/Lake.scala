@@ -48,7 +48,7 @@ object Lake {
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
 
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    readParquet(spark, path)
 
   /** Bucketed managed table (bucketBy requires saveAsTable). `sortBy` the
     * same key so merge-style reads stream in key order.
@@ -542,7 +542,7 @@ object Lake {
         require(version.isEmpty,
           s"$path carries no version manifests; cannot register version $version")
         if (readSchemaManifests(spark, path).nonEmpty) readEvolving(spark, path)
-        else spark.read.parquet(path)
+        else readParquet(spark, path)
       }
     df.createOrReplaceTempView(name)
   }
@@ -2472,7 +2472,7 @@ object Lake {
     else if (readSchemaManifests(spark, path).nonEmpty)
       Some(logicalDdl(spark, path))
     else if (listDataFiles(fs, hp).nonEmpty)
-      Some(spark.read.parquet(path).schema.toDDL)
+      Some(readParquet(spark, path).schema.toDDL)
     else None
   }
 
@@ -2779,7 +2779,16 @@ object Lake {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hp)) return None
-    requireNoColMap(spark, fs, path, "commitStreamVersion")
+    // the newest MANIFEST, resolved once: the column-mapping guard reads
+    // it, and a delta commit publishes at its version + 1 — the
+    // contiguity contract every delta commit follows (see deleteWhere)
+    val retained = manifestVersions(fs, path)
+    val base =
+      if (!fs.exists(versionsDir(path))) None
+      else Some(retained.lastOption.flatMap(readVersionManifest(spark, fs, path, _))
+        .getOrElse(throw new IllegalArgumentException(s"no versions under $path")))
+    refuseColMap(base.fold(Seq.empty[(String, String)])(_.colmap), path,
+      "commitStreamVersion")
     require(generatedColumns(spark, path).isEmpty,
       s"commitStreamVersion($path): table declares GENERATED columns; " +
         "adopted stream files were written outside the derivation gate - " +
@@ -2801,45 +2810,42 @@ object Lake {
         !s.getPath.getName.startsWith("."))
       .map(_.getPath.toUri.getPath)
       .filter(f => logged.forall(_.contains(f)))
-    if (!fs.exists(versionsDir(path))) {
-      // first commit: version 1 is EXACTLY the sink-committed root files
-      // (not a blind dir listing — see the sink-log note above)
-      val rf = rootFiles()
-      if (rf.isEmpty) return None
-      val ddl = spark.read.parquet(qualifyForRead(fs, rf): _*).schema.toDDL
-      if (checkConstraints(spark, path).nonEmpty)
-        enforceConstraints(spark, path,
-          spark.read.parquet(qualifyForRead(fs, rf): _*),
-          s"commitStreamVersion($path)")
-      writeVersionManifest(spark, fs, path, 1L, ddl,
-        fileEntries(spark, fs, path, rf), streamBatchId = streamBatchId,
-        op = Some("stream-adopt"))
-      writeVersionPointer(spark, fs, path, 1L)
-      return Some(1L)
+    val m0 = base match {
+      case Some(m) => m
+      case None =>
+        // first commit: version 1 is EXACTLY the sink-committed root files
+        // (not a blind dir listing — see the sink-log note above)
+        val rf = rootFiles()
+        if (rf.isEmpty) return None
+        val adopted = readParquet(spark, path, rf)
+        if (checkConstraints(spark, path).nonEmpty)
+          enforceConstraints(spark, path, adopted, s"commitStreamVersion($path)")
+        writeVersionManifest(spark, fs, path, 1L, adopted.schema.toDDL,
+          fileEntries(spark, fs, path, rf), streamBatchId = streamBatchId,
+          op = Some("stream-adopt"))
+        writeVersionPointer(spark, fs, path, 1L)
+        return Some(1L)
     }
     // every file ANY retained version references is already owned —
     // including files a delete RETIRED but vacuum still retains, which a
     // naive current-version diff would wrongly re-adopt (resurrecting
-    // deleted rows on the next drain)
-    val retained = manifestVersions(fs, path)
-      .flatMap(readVersionManifest(spark, fs, path, _))
-    val known: Set[String] = retained.flatMap(_.entries.map(_._1)).toSet
+    // deleted rows on the next drain). A version's files are its base's
+    // plus its `add`, and every chain base is retained, so the raw
+    // manifests' `files` and `add` lists name them all, one open each
+    val known: Set[String] = retained
+      .flatMap(readRawManifest(spark, fs, path, _))
+      .flatMap(r => r.files.getOrElse(Nil) ++ r.add).map(_._1).toSet
     val root = rootPath(fs, hp)
     val fresh = rootFiles().map(_.stripPrefix(root + "/")).filterNot(known)
     if (fresh.isEmpty) return None
-    // base on the newest MANIFEST and publish at base+1 — the contiguity
-    // contract every delta commit follows (see deleteWhere)
-    val base = retained.lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no versions under $path"))
     if (checkConstraints(spark, path).nonEmpty)
       enforceConstraints(spark, path,
-        spark.read.parquet(
-          qualifyForRead(fs, fresh.map(r => resolveRef(root, r))): _*),
+        readParquet(spark, path, fresh.map(r => resolveRef(root, r))),
         s"commitStreamVersion($path)")
     val entries = fileEntries(spark, fs, path, fresh.map(r => resolveRef(root, r)))
-    val next = base.version + 1
-    val pub = writeVersionDelta(spark, fs, path, next, base.schemaDdl,
-      base = base, add = entries, remove = Seq.empty,
+    val next = m0.version + 1
+    val pub = writeVersionDelta(spark, fs, path, next, m0.schemaDdl,
+      base = m0, add = entries, remove = Seq.empty,
       streamBatchId = streamBatchId, op = Some("stream-adopt"))
     writeVersionPointer(spark, fs, path, next)
     // a drained sink accretes one file set per drain — exactly the
@@ -2887,16 +2893,19 @@ object Lake {
   }
 
   /** Has a version carrying this stream batch id already been published?
-    * O(retained versions) driver-side metadata reads — the replay check
-    * for continuous-mode [[commitStreamVersion]] callers.
+    * The replay check for continuous-mode callers. One stream stamps a
+    * table with rising batch ids, so the walk goes newest-first, skips
+    * unstamped versions (optimize, delete) and stops at the first stamp
+    * at or below `batchId`: a fresh batch reads back to the previous
+    * batch's manifest, not the whole history.
     */
   def streamBatchCommitted(spark: SparkSession, path: String,
       batchId: Long): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(versionsDir(path)) && manifestVersions(fs, path).exists(v =>
-      readRawManifest(spark, fs, path, v).flatMap(_.streamBatchId)
-        .contains(batchId))
+    fs.exists(versionsDir(path)) && manifestVersions(fs, path).reverseIterator
+      .flatMap(readRawManifest(spark, fs, path, _).flatMap(_.streamBatchId))
+      .find(_ <= batchId).contains(batchId)
   }
 
   /** RESTORE — Delta's `RESTORE TABLE … TO VERSION AS OF v`: publish
@@ -3978,6 +3987,50 @@ object Lake {
     finally s.close()
   }
 
+  /** `spark.read.parquet` over `path` (or over `files` under it, with
+    * `path` as the partition base) with the schema Spark's inference would
+    * settle on, read from that one footer on the driver: inference starts
+    * a job to read it. The choice mirrors `ParquetUtils.inferSchema` with
+    * `mergeSchema` off — the leaf files the file index lists, sorted by
+    * path, then `_common_metadata`, `_metadata` or the first data file —
+    * and the footer converts under the session's parquet confs as they
+    * stand at the call. A streaming sink's dir (its file index is the sink
+    * log, not a listing) and a missing or empty path keep Spark's own
+    * inference, which reads the log or fails loudly.
+    */
+  private[graft] def readParquet(spark: SparkSession, path: String,
+      files: Seq[String] = Nil): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val hp = new Path(path)
+    val fs = hp.getFileSystem(conf)
+    def listed(p: Path) =
+      !org.apache.spark.sql.GraftSqlShims.hiddenFromFileIndex(p.getName)
+    def leaves(p: Path): Seq[Path] = fs.listStatus(p).toSeq
+      .filter(s => listed(s.getPath))
+      .flatMap(s => if (s.isDirectory) leaves(s.getPath) else Seq(s.getPath))
+    val qualified = qualifyForRead(fs, files)
+    def read(r: org.apache.spark.sql.DataFrameReader) =
+      if (files.isEmpty) r.parquet(path)
+      else r.option("basePath", path).parquet(qualified: _*)
+    val sorted = (
+      if (files.nonEmpty) qualified.map(new Path(_)).filter(listed)
+      else if (!fs.exists(hp) || fs.exists(new Path(hp, "_spark_metadata"))) Nil
+      else leaves(hp)
+    ).sortBy(_.toString)
+    val (summaries, data) = sorted.partition(p =>
+      p.getName == PARQUET_COMMON_METADATA_FILE || p.getName == PARQUET_METADATA_FILE)
+    summaries.find(_.getName == PARQUET_COMMON_METADATA_FILE)
+      .orElse(summaries.headOption).orElse(data.headOption)
+      .fold(read(spark.read)) { p =>
+        read(spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(p, readFooter(conf, p)),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))))
+      }
+  }
+
   private def entriesJson(entries: Seq[(String, Long)]): String =
     entries.map { case (rel, n) =>
       s"""{"path":${jsonStr(rel)},"n_rows":$n}""" }.mkString("[", ",", "]")
@@ -4416,7 +4469,7 @@ object Lake {
     require(files.nonEmpty, s"no versions and no data files under $path")
     val ddl =
       if (readSchemaManifests(spark, path).nonEmpty) logicalDdl(spark, path)
-      else spark.read.parquet(path).schema.toDDL
+      else readParquet(spark, path).schema.toDDL
     writeVersionManifest(spark, fs, path, 1L, ddl,
       fileEntries(spark, fs, path, files), streamBatchId = streamBatchId,
       op = Some("bootstrap"))
@@ -4832,7 +4885,7 @@ object Lake {
       if (fs.exists(versionsDir(path))) readVersioned(spark, path)
       else if (readSchemaManifests(spark, path).nonEmpty)
         readEvolving(spark, path)
-      else spark.read.parquet(path)
+      else readParquet(spark, path)
     // one distributed aggregate; its one line per data file is rendered
     // on the driver and published as the whole manifest
     val lines = manifestLines(source
@@ -5529,7 +5582,7 @@ object Lake {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (files.isEmpty) {
       val full = head.fold(
-        if (evolved) readEvolving(spark, path) else spark.read.parquet(path))(
+        if (evolved) readEvolving(spark, path) else readParquet(spark, path))(
         readManifestFiles(spark, fs, path, _))
       full.limit(0)
     } else if (evolved) evolvedRead(spark, path, Some(files))
@@ -5544,20 +5597,9 @@ object Lake {
         applyColMap(spark.read
           .schema(org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl))
           .parquet(qualifyForRead(fs, files): _*), m.colmap)
-      // a plain dir: Spark's inference reads one footer too, so the first
-      // file's footer, converted the way that inference converts it, is the
-      // schema a read would settle on — read on the driver, it starts no
-      // job. Partition-dir columns still come from the paths under basePath.
-      case None =>
-        import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-        val qualified = qualifyForRead(fs, files)
-        val first = new org.apache.hadoop.fs.Path(qualified.head)
-        val footer = new org.apache.parquet.hadoop.Footer(first,
-          readFooter(spark.sparkContext.hadoopConfiguration, first))
-        val schema = ParquetFileFormat.readSchemaFromFooter(footer,
-          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-        spark.read.schema(schema).option("basePath", path)
-          .parquet(qualified: _*)
+      // a plain dir: the footer inference would read, read on the driver;
+      // partition-dir columns still come from the paths under basePath
+      case None => readParquet(spark, path, files)
     }
   }
 
@@ -6102,7 +6144,7 @@ object Lake {
         // discover a half-written "day=X.compacting" as a partition
         val staging = stagingPath(hp)
         val source = if (evolved) readEvolving(spark, path)
-                     else spark.read.parquet(path)
+                     else readParquet(spark, path)
         source
           .coalesce(nOut.toInt)
           .write.mode(SaveMode.Overwrite).parquet(staging.toString)
@@ -6179,7 +6221,7 @@ object Lake {
     // rides into staging so one rename publishes data + manifests together
     val evolved = readSchemaManifests(spark, path).nonEmpty
     def source = if (evolved) readEvolving(spark, path)
-                 else spark.read.parquet(path)
+                 else readParquet(spark, path)
     // the re-range key ALWAYS ends up tracked: re-ranging exists to restore
     // probe pruning on `c`, so a pre-existing manifest that happens not to
     // track c must gain its bounds, not silently keep lacking them

@@ -9,13 +9,21 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
   * the standard escape hatch third-party engines/connectors use to expose
   * custom Catalyst expressions through the public Column API — to the
   * spark-private listener bus, so a profiler can read its listeners'
-  * counters once every posted event has been delivered, and to Catalyst's
-  * interpreted predicate evaluator.
+  * counters once every posted event has been delivered, to Catalyst's
+  * interpreted predicate evaluator, and to the name rule file listings
+  * follow.
   */
 object GraftSqlShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Whether a file index leaves a file or dir of this name out of its
+    * listing: `_` and `.` names, except `_metadata`, `_common_metadata`
+    * and `_k=v` partition dirs.
+    */
+  def hiddenFromFileIndex(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 
   /** `cond` over each row of `local`, a frame over a `LocalRelation`:
     * analysed once (a non-boolean `cond` fails analysis, as in `filter`),
