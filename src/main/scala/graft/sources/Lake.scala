@@ -179,28 +179,33 @@ object Lake {
     // caller still holding stale/physical names — refuse like every other
     // physical-schema op; materializeMapping first makes the logical names
     // physical, after which a snapshot is unambiguous again
-    requireNoColMap(spark, fs, path, "writeVersioned")
-    // when a constraint gate will read the batch before the write does,
-    // persist it so the caller's (possibly expensive) plan runs once
-    val dfG = applyGeneratedTo(spark, path, df, "writeVersioned")
-    val cs = checkConstraints(spark, path)
-    val batch = if (cs.nonEmpty) dfG.persist() else dfG
+    val m0 = headManifest(spark, fs, path)
+    refuseColMap(m0.fold(Seq.empty[(String, String)])(_.colmap), path,
+      "writeVersioned")
+    // the head's properties gate the batch; when a gate will read the
+    // batch before the write does, persist it so the caller's (possibly
+    // expensive) plan runs once
+    val gate = m0.fold(TableProps())(_.props)
+    val dfIn = if (gate.gates) df.persist() else df
     try {
-      if (cs.nonEmpty)
-        enforceConstraintsOn(spark, batch, cs, s"writeVersioned($path)")
-      // snapshot dir is a namespace; the commit number continues the
-      // manifest chain contiguously (base+1) so every commit type
-      // contends on the same next number — the linearization the rename
-      // guard needs
+      val batch = applyGeneratedTo(spark, path, m0, dfIn, "writeVersioned")
+      if (gate.checks.nonEmpty)
+        enforceConstraintsOn(spark, batch, gate.checks, s"writeVersioned($path)")
       val (dataDir, entries) = writeClaimedDir(spark, fs, path, batch)
-      val next = manifestVersions(fs, path).lastOption.fold(dataDir)(_ + 1)
-      reenforceIfChanged(spark, fs, path, cs, entries, batch.schema.toDDL,
+      // an overwrite keeps the table's properties (Delta's rule): it
+      // publishes over the NEWEST manifest, carrying its properties and
+      // enforcing any the gate missed, at its version + 1 — the number
+      // every commit type contends on (the snapshot dir is a namespace)
+      val base = newestManifest(spark, fs, path, m0)
+      val pub = VersionManifest(base.fold(dataDir)(_.version + 1),
+        batch.schema.toDDL, entries, props = base.fold(TableProps())(_.props))
+      enforceNewProps(spark, fs, path, pub, entries.map(_._1), gate,
         s"writeVersioned($path)")
-      writeVersionManifest(spark, fs, path, next, batch.schema.toDDL, entries,
-        streamBatchId = streamBatchId, op = Some("snapshot"))
-      writeVersionPointer(spark, fs, path, next)
-      next
-    } finally { if (cs.nonEmpty) batch.unpersist(); () }
+      writeVersionManifest(spark, fs, path, pub.version, pub.schemaDdl, entries,
+        streamBatchId = streamBatchId, op = Some("snapshot"), props = pub.props)
+      writeVersionPointer(spark, fs, path, pub.version)
+      pub.version
+    } finally { if (gate.gates) dfIn.unpersist(); () }
   }
 
   /** O(batch) versioned APPEND: write only `df`'s files, publish a manifest
@@ -235,26 +240,6 @@ object Lake {
     streamBatchId.foreach { bid =>
       if (streamBatchCommitted(spark, path, bid)) return headVersion(fs, path)
     }
-    // GENERATED specs make the gate run a validation aggregate over the
-    // batch before writeClaimedDir evaluates the caller's plan a second
-    // time — persist around both so a possibly-expensive upstream plan
-    // runs once (the same rationale as the constraints persist below;
-    // persist is lazy, so a no-spec table pays nothing here)
-    val genSpecs = generatedColumns(spark, path)
-    val dfIn = if (genSpecs.nonEmpty) df.persist() else df
-    try appendVersionedImpl(spark, dfIn, path, streamBatchId, genSpecs)
-    finally { if (genSpecs.nonEmpty) dfIn.unpersist(); () }
-  }
-
-  private def appendVersionedImpl(spark: SparkSession, df: DataFrame,
-      path: String, streamBatchId: Option[Long],
-      genSpecs: Seq[(String, String)]): Long = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // GENERATED columns first: compute the ones the batch omits, validate
-    // the ones it carries — before any schema logic, so an omitted
-    // generated column never masquerades as schema drift
-    val dfG = applyGeneratedTo(spark, path, df, "appendVersioned")
     // SCHEMA EVOLUTION IS NOT A REFUSAL: a 24/7 stream appending through
     // this path must survive upstream column drift. Three cases:
     //   1. evolving table, batch matches the current LOGICAL schema →
@@ -274,8 +259,10 @@ object Lake {
     val priors = readSchemaManifests(spark, path)
     if (priors.nonEmpty) {
       // an evolving table carries no column mapping (renameColumns and
-      // dropColumns refuse it), so the batch's names are the table's
-      if (dfG.schema.fields.map(f => f.name -> f.dataType.catalogString)
+      // dropColumns refuse it) and no generated columns (addGeneratedColumn
+      // and writeEvolving refuse the pair), so the batch's names are the
+      // table's
+      if (df.schema.fields.map(f => f.name -> f.dataType.catalogString)
           .toSeq != logicalSchema(priors)) {
         if (fs.exists(versionsDir(path))) {
           writeEvolving(spark, df, path, streamBatchId = streamBatchId)
@@ -300,6 +287,25 @@ object Lake {
       bootstrapRootVersion(spark, fs, path)
     }
     val (_, m0) = resolveHead(spark, fs, path)
+    // the head's CHECK constraints and GENERATED specs gate the batch;
+    // when a gate will read the batch, it is persisted around gate +
+    // write so the caller's (possibly expensive) plan runs once, not twice
+    val dfIn = if (m0.props.gates) df.persist() else df
+    try appendAt(spark, fs, path, dfIn, m0, priors.isEmpty, streamBatchId)
+    finally { if (m0.props.gates) dfIn.unpersist(); () }
+  }
+
+  /** [[appendVersioned]] of `df` over head `m0` (`plain`: the table has
+    * no schema chain).
+    */
+  private def appendAt(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, df: DataFrame,
+      m0: VersionManifest, plain: Boolean, streamBatchId: Option[Long]): Long = {
+    val gate = m0.props
+    // GENERATED columns first: compute the ones the batch omits, validate
+    // the ones it carries — before any schema logic, so an omitted
+    // generated column never masquerades as schema drift
+    val dfG = applyGeneratedTo(spark, path, Some(m0), df, "appendVersioned")
     // COLUMN-MAPPED table: the batch arrives in LOGICAL names and is
     // translated ONCE to the frozen physical names, before any schema
     // logic — the drift checks below then compare physical-vs-physical,
@@ -318,7 +324,7 @@ object Lake {
       }
     val batchFields = dfP.schema.fields
       .map(f => f.name -> f.dataType.catalogString).toSeq
-    if (priors.isEmpty) {
+    if (plain) {
       val cur = org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
         .fields.map(f => f.name -> f.dataType.catalogString).toSeq
       if (batchFields != cur) {
@@ -331,10 +337,10 @@ object Lake {
         // refuse a constrained table anyway, but only after the chain
         // manifest existed — leaving the forbidden constrained+evolving
         // state on disk for every later operation to trip over
-        require(checkConstraints(spark, path).isEmpty,
+        require(gate.checks.isEmpty,
           s"$path carries CHECK constraints; a schema-drifting append " +
             "would bypass their enforcement - drop them first")
-        require(generatedColumns(spark, path).isEmpty,
+        require(gate.generated.isEmpty,
           s"$path carries GENERATED columns; a schema-drifting append " +
             "would bypass their derivation - drop them first")
         // drift gate BEFORE the chain bootstrap, same reason as the
@@ -366,20 +372,13 @@ object Lake {
           s"frame has ${dfP.schema.toDDL}")
     }
     // constraints gate BEFORE any write: a violating batch refuses with
-    // nothing on disk, not even an unpublished claimed dir. The batch is
-    // persisted around gate + write so the caller's (possibly expensive)
-    // plan runs once, not twice.
-    val cs = checkConstraints(spark, path)
-    val batch = if (cs.nonEmpty) dfP.persist() else dfP
-    val fresh =
-      try {
-        if (cs.nonEmpty)
-          enforceConstraintsOn(spark, batch, cs, s"appendVersioned($path)")
-        // phase 1 — write the batch ONCE into a uniquely-claimed dir (see
-        // writeClaimedDir for the claim protocol and why the dir number
-        // is a namespace, not the commit number)
-        writeClaimedDir(spark, fs, path, batch)._2
-      } finally { if (cs.nonEmpty) batch.unpersist(); () }
+    // nothing on disk, not even an unpublished claimed dir
+    if (gate.checks.nonEmpty)
+      enforceConstraintsOn(spark, dfP, gate.checks, s"appendVersioned($path)")
+    // phase 1 — write the batch ONCE into a uniquely-claimed dir (see
+    // writeClaimedDir for the claim protocol and why the dir number is a
+    // namespace, not the commit number)
+    val fresh = writeClaimedDir(spark, fs, path, dfP)._2
     // phase 2 — publish the delta manifest, REBASING on conflict: the
     // base is re-read each attempt, so after losing a race the commit
     // chains behind the winner instead of forking a sibling lineage
@@ -392,32 +391,14 @@ object Lake {
       // the base is the NEWEST MANIFEST, never the pointer: the pointer
       // can lag a concurrent commit (it is written after the manifest),
       // and chaining a delta onto a lagging base would silently drop the
-      // newer commit's files from this lineage. The head resolved above
-      // is that manifest unless a commit landed since.
-      val v0 = manifestVersions(fs, path).last
-      val base =
-        if (v0 == m0.version) m0
-        else readVersionManifest(spark, fs, path, v0).getOrElse(
-          sys.error(s"version $v0 has no manifest under $path"))
+      // newer commit's files from this lineage
+      val base = newestManifest(spark, fs, path, Some(m0)).get
       schemaCheck(base.schemaDdl) // a concurrent evolve/merge may have changed it
-      // a constraint may have landed since the gate: re-enforce the NEW
-      // ones against the written batch files before publishing
-      reenforceIfChanged(spark, fs, path, cs, fresh, base.schemaDdl,
+      // a constraint or generated spec that landed since the gate is
+      // enforced on the written batch files before the manifest rename
+      enforceNewProps(spark, fs, path, base, fresh.map(_._1), gate,
         s"appendVersioned($path)")
-      // mirror for GENERATED columns: a spec declared since the gate gets
-      // validated against the written batch files before the manifest
-      // rename (addGeneratedColumn requires the column to exist in the
-      // table schema and schemaCheck above proved the batch carries it —
-      // only the gate's validation predates the spec)
-      val freshGen = generatedColumns(spark, path).filterNot(genSpecs.contains)
-      if (freshGen.nonEmpty && fresh.nonEmpty) {
-        val root = rootPath(fs, new org.apache.hadoop.fs.Path(path))
-        validateGeneratedOn(spark,
-          readSomeFiles(spark, fs, path,
-            fresh.map(e => resolveRef(root, e._1)), base.schemaDdl),
-          freshGen, s"appendVersioned($path) post-gate spec")
-      }
-      val next = v0 + 1
+      val next = base.version + 1
       val published =
         try Some(writeVersionDelta(spark, fs, path, next, base.schemaDdl,
           base, add = fresh, remove = Seq.empty,
@@ -436,12 +417,11 @@ object Lake {
         // O(batch) — stats are computed for the fresh files only
         keepStatsLive(spark, fs, path, pub)
         refreshBloomIndexes(spark, fs, path, pub)
-        // table-level auto-compaction (see setAutoOptimize): runs AFTER
-        // this commit published, in its own maintenance commit — the
-        // append's version contract is unchanged
-        autoOptimizePolicy(fs, path).foreach { case (limit, target) =>
-          maybeAutoOptimize(spark, fs, path, pub, limit, target)
-        }
+        // table-level auto-compaction (see setAutoOptimize), under the
+        // policy of the version this commit published: runs AFTER this
+        // commit published, in its own maintenance commit — the append's
+        // version contract is unchanged
+        maybeAutoOptimize(spark, fs, path, pub)
         return next
       }
     }
@@ -1384,7 +1364,7 @@ object Lake {
         StructType(delta.schema.fields ++ valueCols.map(viewSchema(_))))
       val mergedLocal = joined.select(mergedCols: _*)
       // the generated-column gate mergeCdc applies to its source
-      applyGeneratedTo(spark, viewPath, mergedLocal, "mergeInto",
+      applyGeneratedTo(spark, viewPath, Some(m0), mergedLocal, "mergeInto",
         computeAbsent = false)
       val upserts = mergedLocal.withColumn("_graft_del", deleteRule)
         .collect().filterNot(_.getBoolean(width))
@@ -1403,7 +1383,7 @@ object Lake {
         Some(stamp))
     }
     // the generated-column gate mergeCdc applies to its source
-    applyGeneratedTo(spark, viewPath, merged(view, Nil), "mergeInto",
+    applyGeneratedTo(spark, viewPath, Some(m0), merged(view, Nil), "mergeInto",
       computeAbsent = false)
     // file name bound AT THE SCAN — after the join the row has two
     // sources and input_file_name is undefined
@@ -1815,7 +1795,7 @@ object Lake {
       .relativize(java.nio.file.Paths.get(rootPath(sfs, shp))).toString
     writeVersionManifest(spark, dfs, dstPath, 1L, m.schemaDdl,
       m.entries.map { case (f, n) => (s"$rel/$f", n) }, op = Some("clone"),
-      colmap = m.colmap)
+      colmap = m.colmap, props = m.props)
     writeVersionPointer(spark, dfs, dstPath, 1L)
     1L
   }
@@ -1854,7 +1834,7 @@ object Lake {
       else org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
         .fields.toSeq.map(f => (f.name, f.name))
     val logical0 = cm0.map(_._1)
-    requireNoMaintenanceArtifacts(spark, fs, path, "renameColumns")
+    requireNoMaintenanceArtifacts(fs, path, m0.props, "renameColumns")
     renames.foreach { case (from, to) =>
       require(logical0.contains(from),
         s"renameColumns: '$from' is not a column of $path@v$v0 " +
@@ -1898,7 +1878,7 @@ object Lake {
     val cm0: Seq[(String, String)] =
       if (m0.colmap.nonEmpty) m0.colmap
       else phys.fields.toSeq.map(f => (f.name, f.name))
-    requireNoMaintenanceArtifacts(spark, fs, path, "dropColumns")
+    requireNoMaintenanceArtifacts(fs, path, m0.props, "dropColumns")
     cols.foreach(c => require(cm0.exists(_._1 == c),
       s"dropColumns: '$c' is not a column of $path@v$v0 " +
         s"(have: ${cm0.map(_._1).mkString(", ")})"))
@@ -1934,7 +1914,7 @@ object Lake {
     val (_, entries) = writeClaimedDir(spark, fs, path, logical)
     val next = v0 + 1
     writeVersionManifest(spark, fs, path, next, logical.schema.toDDL,
-      entries, op = Some("remap"))
+      entries, op = Some("remap"), props = m0.props)
     writeVersionPointer(spark, fs, path, next)
     (next, entries.size.toLong)
   }
@@ -2459,16 +2439,14 @@ object Lake {
     mergeImpl(spark, path, source, keyCols, Some(deleteWhen), filePrune,
       maxBroadcastKeys, streamBatchId)
 
-  /** The table's current schema DDL if it is already versioned/evolved/
-    * readable — None only when nothing exists yet to compare against.
+  /** An UNVERSIONED table's schema DDL (a versioned one's is its head
+    * manifest's) — None only when nothing exists yet to compare against.
     */
   private def currentSchemaDdl(spark: SparkSession,
       path: String): Option[String] = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hp)) None
-    else if (fs.exists(versionsDir(path)))
-      readRawManifest(spark, fs, path, headVersion(fs, path)).map(_.schemaDdl)
     else if (readSchemaManifests(spark, path).nonEmpty)
       Some(logicalDdl(spark, path))
     else if (listDataFiles(fs, hp).nonEmpty)
@@ -2540,7 +2518,8 @@ object Lake {
     // derived values must MATCH — one aggregate gate, nothing published
     // on violation (computeAbsent=false: an upsert that omitted the
     // column would need per-branch computation; refuse instead)
-    applyGeneratedTo(spark, path, source, "mergeInto", computeAbsent = false)
+    applyGeneratedTo(spark, path, head.map(_._2), source, "mergeInto",
+      computeAbsent = false)
     refuseDvs(head.map(_._2.dvs).getOrElse(Nil), path, "mergeInto")
     val (v0, m0) = head.getOrElse {
       bootstrapRootVersion(spark, fs, path)
@@ -2680,14 +2659,14 @@ object Lake {
 
   /** The commit tail every merge shares, publishing base `m0` + 1:
     *   1. gate the rows ENTERING the table (`upserts`, `nUp` of them) on
-    *      the CHECK constraints — carried rows were validated when they
+    *      `m0`'s CHECK constraints — carried rows were validated when they
     *      entered, deleted rows remove data;
     *   2. write `keptOld` (the surviving rows of the matched files, in
     *      the table's column order) plus the upserts into one claimed
     *      dir, shaped to `estRows` rows;
-    *   3. re-gate constraints that landed since step 1;
-    *   4. publish the delta manifest, the pointer, the stats append and
-    *      the bloom refresh.
+    *   3. publish the delta manifest, the pointer, the stats append and
+    *      the bloom refresh. The publish is strictly at `m0` + 1, so a
+    *      constraint added since step 1 makes it lose the race loudly.
     */
   private def publishMergeRewrite(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
@@ -2698,9 +2677,9 @@ object Lake {
     val prior = org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
     val entering = upserts.select(prior.fieldNames.map(col): _*)
     val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
-    val cs0 = checkConstraints(spark, path)
-    if (nUp > 0L && cs0.nonEmpty)
-      enforceConstraintsOn(spark, entering, cs0, s"mergeInto($path)")
+    val cs = m0.props.checks
+    if (nUp > 0L && cs.nonEmpty)
+      enforceConstraintsOn(spark, entering, cs, s"mergeInto($path)")
     // rewrite = unmatched rows of matched files + every UPSERT row
     // (updated keys replace, new keys insert; delete-flagged keys
     // contribute removals only) — one write into a claimed namespace
@@ -2715,11 +2694,6 @@ object Lake {
       if (fs.exists(statsDir)) rewriteAll
       else rewriteAll.coalesce(commitFileParts(estRows))
     val (_, rewritten) = writeClaimedDir(spark, fs, path, rewriteDf)
-    // a constraint may have landed since the gate: re-enforce the NEW
-    // ones against the upsert arm
-    val csNow = checkConstraints(spark, path).filterNot(cs0.contains)
-    if (nUp > 0L && csNow.nonEmpty)
-      enforceConstraintsOn(spark, entering, csNow, s"mergeInto($path)")
     // MERGE deliberately keeps the strict publish (no disjoint-set
     // rebase): its match/insert split was computed against the WHOLE
     // key set of the base version, so even a file-disjoint concurrent
@@ -2779,9 +2753,10 @@ object Lake {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hp)) return None
-    // the newest MANIFEST, resolved once: the column-mapping guard reads
-    // it, and a delta commit publishes at its version + 1 — the
-    // contiguity contract every delta commit follows (see deleteWhere)
+    // the newest MANIFEST, resolved once: the column-mapping and property
+    // guards read it, and a delta commit publishes at its version + 1 —
+    // the contiguity contract every delta commit follows (see
+    // deleteWhere), so a concurrent alter makes it lose the race loudly
     val retained = manifestVersions(fs, path)
     val base =
       if (!fs.exists(versionsDir(path))) None
@@ -2789,7 +2764,8 @@ object Lake {
         .getOrElse(throw new IllegalArgumentException(s"no versions under $path")))
     refuseColMap(base.fold(Seq.empty[(String, String)])(_.colmap), path,
       "commitStreamVersion")
-    require(generatedColumns(spark, path).isEmpty,
+    val props = base.fold(TableProps())(_.props)
+    require(props.generated.isEmpty,
       s"commitStreamVersion($path): table declares GENERATED columns; " +
         "adopted stream files were written outside the derivation gate - " +
         "append through appendVersioned, or drop the generated spec")
@@ -2818,8 +2794,6 @@ object Lake {
         val rf = rootFiles()
         if (rf.isEmpty) return None
         val adopted = readParquet(spark, path, rf)
-        if (checkConstraints(spark, path).nonEmpty)
-          enforceConstraints(spark, path, adopted, s"commitStreamVersion($path)")
         writeVersionManifest(spark, fs, path, 1L, adopted.schema.toDDL,
           fileEntries(spark, fs, path, rf), streamBatchId = streamBatchId,
           op = Some("stream-adopt"))
@@ -2838,10 +2812,10 @@ object Lake {
     val root = rootPath(fs, hp)
     val fresh = rootFiles().map(_.stripPrefix(root + "/")).filterNot(known)
     if (fresh.isEmpty) return None
-    if (checkConstraints(spark, path).nonEmpty)
-      enforceConstraints(spark, path,
+    if (props.checks.nonEmpty)
+      enforceConstraintsOn(spark,
         readParquet(spark, path, fresh.map(r => resolveRef(root, r))),
-        s"commitStreamVersion($path)")
+        props.checks, s"commitStreamVersion($path)")
     val entries = fileEntries(spark, fs, path, fresh.map(r => resolveRef(root, r)))
     val next = m0.version + 1
     val pub = writeVersionDelta(spark, fs, path, next, m0.schemaDdl,
@@ -2852,9 +2826,7 @@ object Lake {
     // auto-compaction target case (see setAutoOptimize); folded originals
     // stay on disk for log-trusting readers until vacuum, like every
     // optimizeVersioned commit
-    autoOptimizePolicy(fs, path).foreach { case (limit, target) =>
-      maybeAutoOptimize(spark, fs, path, pub, limit, target)
-    }
+    maybeAutoOptimize(spark, fs, path, pub)
     Some(next)
   }
 
@@ -2925,29 +2897,30 @@ object Lake {
     val m = readVersionManifest(spark, fs, path, v).getOrElse(
       sys.error(s"version $v does not exist under $path (have: " +
         s"${manifestVersions(fs, path).mkString(",")})"))
-    val v0 = manifestVersions(fs, path).last
-    if (v == v0) return v0 // restoring the latest is a no-op
-    // a version published BEFORE addGeneratedColumn/addCheckConstraint may
-    // hold rows the current specs reject; re-publishing it at head would
-    // break the invariant every write path enforces (no commit publishes a
-    // violating row), so validate the restored data first — one
-    // column-pruned aggregate per artifact kind, zero cost when the table
-    // declares neither (the common case)
-    val gens = generatedColumns(spark, path)
+    val head = newestManifest(spark, fs, path).get
+    if (v == head.version) return v // restoring the latest is a no-op
+    // the restore keeps the HEAD's properties (a restore rolls data back,
+    // not the table's constraints). A version published BEFORE
+    // addGeneratedColumn/addCheckConstraint may hold rows they reject;
+    // re-publishing it at head would break the invariant every write path
+    // enforces (no commit publishes a violating row), so validate the
+    // restored data first — one column-pruned aggregate per artifact
+    // kind, zero cost when the table declares neither (the common case)
+    val gens = head.props.generated
     if (gens.nonEmpty)
-      validateGeneratedOn(spark, readVersioned(spark, path, Some(v)), gens,
+      validateGeneratedOn(spark, readManifestFiles(spark, fs, path, m), gens,
         s"restoreVersion($path, v=$v)")
-    val resCs = checkConstraints(spark, path)
+    val resCs = head.props.checks
     if (resCs.nonEmpty)
-      enforceConstraintsOn(spark, readVersioned(spark, path, Some(v)), resCs,
+      enforceConstraintsOn(spark, readManifestFiles(spark, fs, path, m), resCs,
         s"restoreVersion($path, v=$v)")
-    val next = v0 + 1
+    val next = head.version + 1
     // the restored version's live deletion vectors travel with it — a
     // restore to a pre-purge version re-applies that version's sidecars —
     // and so does its column mapping (restoring past a rename restores
-    // that version's own logical names)
+    // that version's own logical names); published strictly at head + 1
     writeVersionManifest(spark, fs, path, next, m.schemaDdl, m.entries,
-      op = Some("restore"), dv = m.dvs, colmap = m.colmap)
+      op = Some("restore"), dv = m.dvs, colmap = m.colmap, props = head.props)
     writeVersionPointer(spark, fs, path, next)
     next
   }
@@ -2955,11 +2928,12 @@ object Lake {
   /** CHECK CONSTRAINTS for versioned tables — Delta's `ALTER TABLE ADD
     * CONSTRAINT` semantics: a named SQL predicate every row entering the
     * table must satisfy, from this commit on. Adding a constraint
-    * VALIDATES EXISTING DATA first (one column-pruned pass — refusing a
-    * constraint the table already violates is the honest contract);
-    * thereafter every [[appendVersioned]]/[[writeVersioned]]/
-    * [[mergeInto]]/[[mergeCdc]]-upsert batch and every
-    * [[commitStreamVersion]] adoption is checked in ONE extra narrow
+    * VALIDATES EXISTING DATA first (one column-pruned aggregate over the
+    * head it resolved — refusing a constraint the table already violates
+    * is the honest contract, and an unparseable predicate fails there
+    * too); thereafter every [[appendVersioned]]/[[writeVersioned]]/
+    * [[mergeInto]]/[[mergeCdc]]-upsert batch, every [[publishStaged]] and
+    * every [[commitStreamVersion]] adoption is checked in ONE extra narrow
     * pass (all constraints folded into a single aggregate — cost is one
     * scan of the BATCH, never the table) and a violating commit is
     * refused loudly with per-constraint counts before any manifest
@@ -2967,13 +2941,17 @@ object Lake {
     * predicate is definitively FALSE; NULL passes (use an explicit
     * `IS NOT NULL` constraint for null rejection).
     *
-    * Constraints live as one JSON file per name under
-    * `_graft_constraints/` (tmp-write + rename, duplicate names
-    * refused), so they survive restarts and travel with the table.
+    * A constraint is a table property, so adding one is a commit: an
+    * `alter` version (no file added or removed) that races every other
+    * commit for its version number. A commit that published after the
+    * validated head is a winner the alter rebases over, and the rows it
+    * added are checked against the constraint first; a commit publishing
+    * after the alter finds the constraint in its base and enforces it
+    * ([[enforceNewProps]]). Either way the head never holds a constraint
+    * together with a row violating it. Duplicate names are refused.
     */
   def addCheckConstraint(spark: SparkSession, path: String, name: String,
       sqlExpr: String): Unit = {
-    import org.apache.spark.sql.functions.expr
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
       s"constraint name '$name' must be [A-Za-z0-9_]+")
     // schema-evolving tables are refused: writeEvolving bypasses the
@@ -2985,38 +2963,26 @@ object Lake {
         "fixed-schema versioned write path")
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoColMap(spark, fs, path, "addCheckConstraint")
-    // fail fast on unparseable SQL before publishing anything
-    readVersioned(spark, path).filter(expr(sqlExpr)).limit(0).count()
-    // PUBLISH FIRST, validate second, roll back on failure: once the
-    // constraint file lands every new commit's gate enforces it, so the
-    // existing-data scan (which reads the table as of AFTER the publish)
-    // races no one — a validate-then-publish order would let a commit
-    // slip violating rows in during the seconds the scan takes. The cost
-    // of this order is transient: until validation finishes, concurrent
-    // valid commits are gated by a constraint that may yet be rolled
-    // back (they simply pass it), and a violating concurrent commit is
-    // correctly refused.
-    val dst = publishNamedExpr(fs, path, "_graft_constraints", name, sqlExpr,
-      s"constraint '$name' already exists on $path")
-    // post-publish cross-check against a concurrent writeEvolving: both
-    // sides re-check the other's artifact after publishing their own, and
-    // the CONSTRAINT side yields (rolls back) — whoever publishes second
+    val (_, m0) = resolveHead(spark, fs, path)
+    refuseColMap(m0.colmap, path, "addCheckConstraint")
+    require(!m0.props.checks.exists(_._1 == name),
+      s"constraint '$name' already exists on $path (drop it first)")
+    enforceConstraintsOn(spark, readManifestFiles(spark, fs, path, m0),
+      Seq(name -> sqlExpr), s"addCheckConstraint($name) on existing data of $path")
+    publishAlter(spark, fs, path, m0, m0.props.copy(
+      checks = (m0.props.checks :+ (name -> sqlExpr)).sortBy(_._1)))
+    // cross-check against a concurrent writeEvolving: both sides re-check
+    // the other's artifact after publishing their own, and the CONSTRAINT
+    // side yields by committing its own drop — whoever publishes second
     // must observe the first, so the forbidden constrained-evolving state
-    // cannot persist (writeEvolving's v1 publish runs the mirror check)
+    // cannot persist (writeEvolving's v1 publish runs the mirror check).
+    // The drop retries: the evolving writer's own commits may win the
+    // version number it races for
     if (readSchemaManifests(spark, path).nonEmpty) {
-      fs.delete(dst, false)
+      Iterator.continually(scala.util.Try(dropCheckConstraint(spark, path, name)))
+        .take(MaxCommitRetries).find(_.isSuccess)
       sys.error(s"$path started schema evolution concurrently; " +
-        "constraint rolled back - constraints require the fixed-schema path")
-    }
-    try
-      enforceConstraintsOn(spark, readVersioned(spark, path),
-        Seq(name -> sqlExpr),
-        s"addCheckConstraint($name) on existing data of $path")
-    catch {
-      case e: Throwable =>
-        fs.delete(dst, false) // roll back: an invalid constraint never sticks
-        throw e
+        "constraint dropped again - constraints require the fixed-schema path")
     }
   }
 
@@ -3026,18 +2992,20 @@ object Lake {
   // Append-path batches may OMIT the column (the engine computes it) or
   // carry it (the engine VALIDATES it matches, one aggregate pass — the
   // CHECK-constraint cost shape); either way no commit can publish a row
-  // where column ≠ expr. The spec lives as `_graft_generated/<name>.json`
-  // (tmp+rename, like constraints), added against EXISTING data with a
-  // validate-or-rollback pass. The 100 TB point is partition-prune
-  // synergy: a stats manifest over a generated day/bucket column prunes
-  // scans while writers never hand-maintain the derivation.
+  // where column ≠ expr. A spec is a table property: declaring it
+  // validates the existing data at the head it resolved, then publishes
+  // an `alter` commit raced exactly like a CHECK constraint's (see
+  // addCheckConstraint); dropping it is an `alter` commit with no Spark
+  // job. The 100 TB point is partition-prune synergy: a stats manifest
+  // over a generated day/bucket column prunes scans while writers never
+  // hand-maintain the derivation.
   // ======================================================================
 
   /** Declare `name` (already in the table schema) as GENERATED ALWAYS AS
     * `sqlExpr`. Refuses: evolving tables, column mappings, a type
-    * mismatch between the expression and the declared column, and
-    * existing rows that violate the derivation (validated in one pass,
-    * spec rolled back on failure — an invalid spec never sticks).
+    * mismatch between the expression and the declared column, a name
+    * already declared, and existing rows that violate the derivation
+    * (validated in one pass before anything publishes).
     */
   def addGeneratedColumn(spark: SparkSession, path: String, name: String,
       sqlExpr: String): Unit = {
@@ -3049,8 +3017,9 @@ object Lake {
         "fixed-schema versioned write path")
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoColMap(spark, fs, path, "addGeneratedColumn")
-    val cur = readVersioned(spark, path)
+    val (_, m0) = resolveHead(spark, fs, path)
+    refuseColMap(m0.colmap, path, "addGeneratedColumn")
+    val cur = readManifestFiles(spark, fs, path, m0)
     require(cur.schema.fieldNames.contains(name),
       s"addGeneratedColumn($path): '$name' is not a column of the table " +
         s"(have: ${cur.schema.fieldNames.mkString(", ")})")
@@ -3060,78 +3029,57 @@ object Lake {
     require(computed == declared,
       s"addGeneratedColumn($path): expression type $computed does not " +
         s"match declared column type $declared")
-    val dst = publishNamedExpr(fs, path, "_graft_generated", name, sqlExpr,
-      s"generated column '$name' already declared on $path")
-    // validate EXISTING data after publish (the addCheckConstraint order:
-    // once the spec is visible every new commit enforces it, so the scan
-    // races no one); roll back on violation
-    try validateGeneratedOn(spark, cur, Seq(name -> sqlExpr),
+    require(!m0.props.generated.exists(_._1 == name),
+      s"generated column '$name' already declared on $path (drop it first)")
+    validateGeneratedOn(spark, cur, Seq(name -> sqlExpr),
       s"addGeneratedColumn($name) on existing data of $path")
-    catch {
-      case e: Throwable =>
-        fs.delete(dst, false)
-        throw e
-    }
+    publishAlter(spark, fs, path, m0, m0.props.copy(
+      generated = (m0.props.generated :+ (name -> sqlExpr)).sortBy(_._1)))
   }
 
   def dropGeneratedColumn(spark: SparkSession, path: String,
-      name: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(
-      new org.apache.hadoop.fs.Path(path, s"_graft_generated/$name.json"),
-      false)
-  }
+      name: String): Boolean =
+    alterProps(spark, path)(p =>
+      p.copy(generated = p.generated.filterNot(_._1 == name)))
 
   /** The table's (column, sql) generated-column specs, name-ascending. */
   def generatedColumns(spark: SparkSession,
       path: String): Seq[(String, String)] =
-    namedExprs(spark, path, "_graft_generated")
+    headProps(spark, path).generated
 
-  /** The `{"name","expr"}` specs of sidecar dir `sub` (CHECK constraints,
-    * generated columns), name-ascending; empty without the dir.
-    */
-  private def namedExprs(spark: SparkSession, path: String,
-      sub: String): Seq[(String, String)] = {
-    val dir = new org.apache.hadoop.fs.Path(path, sub)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      fs.listStatus(dir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".json") &&
-          !s.getPath.getName.startsWith("."))
-        .map { st =>
-          val in = fs.open(st.getPath)
-          val txt =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          val n = m.readTree(txt)
-          (n.get("name").asText, n.get("expr").asText)
-        }.sortBy(_._1)
-    }
+  /** The head version's properties; none on an unversioned path. */
+  private def headProps(spark: SparkSession, path: String): TableProps = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    headManifest(spark, fs, path).fold(TableProps())(_.props)
   }
 
-  /** Publish spec `name` → `sqlExpr` as `<sub>/<name>.json` (tmp-write +
-    * rename). Refuses, with `taken` as the message stem, a name already
-    * published or one a concurrent writer published first. Returns the
-    * published file.
+  /** Commit `props` as the table's whole property set over head `m0`: an
+    * `alter` version with no file added or removed.
     */
-  private def publishNamedExpr(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, sub: String, name: String, sqlExpr: String,
-      taken: String): org.apache.hadoop.fs.Path = {
-    val dir = new org.apache.hadoop.fs.Path(path, sub)
-    fs.mkdirs(dir)
-    val dst = new org.apache.hadoop.fs.Path(dir, s"$name.json")
-    require(!fs.exists(dst), s"$taken (drop it first)")
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
-    val out = fs.create(tmp, true)
-    out.write(
-      s"""{"name":${jsonStr(name)},"expr":${jsonStr(sqlExpr)}}"""
-        .getBytes("UTF-8"))
-    out.close()
-    require(fs.rename(tmp, dst), s"$taken (concurrent writer?)")
-    dst
+  private def publishAlter(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, m0: VersionManifest,
+      props: TableProps): Unit = {
+    publishNonCommuting(spark, fs, path, m0, m0.schemaDdl, add = Nil,
+      remove = Nil, op = "alter", props = Some(props))
+    ()
+  }
+
+  /** Change the head's properties with one `alter` commit — metadata
+    * only, no Spark job. False, with nothing published, when `change`
+    * leaves them as they are or the path has no versions (a plain table
+    * is versioned first when `bootstrap` is set).
+    */
+  private def alterProps(spark: SparkSession, path: String,
+      bootstrap: Boolean = false)(change: TableProps => TableProps): Boolean = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (bootstrap && !fs.exists(versionsDir(path)))
+      bootstrapRootVersion(spark, fs, path)
+    headManifest(spark, fs, path).exists { m0 =>
+      val props = change(m0.props)
+      props != m0.props && { publishAlter(spark, fs, path, m0, props); true }
+    }
   }
 
   /** One aggregate pass refusing any row where a generated column's
@@ -3139,29 +3087,22 @@ object Lake {
     */
   private def validateGeneratedOn(spark: SparkSession, incoming: DataFrame,
       specs: Seq[(String, String)], what: String): Unit = {
-    import org.apache.spark.sql.functions.{col, expr, sum, when, lit}
-    val aggs = specs.map { case (n, e) =>
-      sum(when(!(col(n) <=> expr(e)), 1L).otherwise(0L)).as(n)
-    }
-    val row = incoming.agg(aggs.head, aggs.tail: _*).head()
-    val bad = specs.indices.map(i => specs(i)._1 -> (
-      if (row.isNullAt(i)) 0L else row.getLong(i))).filter(_._2 > 0)
-    require(bad.isEmpty,
-      s"GENERATED column violation in $what: " +
-        bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", ") +
-        " - commit refused, nothing published")
+    import org.apache.spark.sql.functions.{col, expr}
+    refuseRows(incoming, specs, s"GENERATED column violation in $what")(
+      (n, e) => !(col(n) <=> expr(e)))
   }
 
-  /** Apply the table's generated-column specs to an incoming batch:
+  /** Apply head `m`'s generated-column specs to an incoming batch:
     * COMPUTE columns the batch omits, VALIDATE ones it carries, and
     * return the frame in the table's column order (compute appends at
     * the end, which the exact-schema append contract would refuse).
-    * No specs → the batch passes through untouched.
+    * No specs (or no head) → the batch passes through untouched.
     */
   private def applyGeneratedTo(spark: SparkSession, path: String,
-      df: DataFrame, what: String, computeAbsent: Boolean = true): DataFrame = {
+      m: Option[VersionManifest], df: DataFrame, what: String,
+      computeAbsent: Boolean = true): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
-    val specs = generatedColumns(spark, path)
+    val specs = m.fold(Seq.empty[(String, String)])(_.props.generated)
     if (specs.isEmpty) return df
     var out = df
     val toValidate = scala.collection.mutable.ListBuffer.empty[(String, String)]
@@ -3176,79 +3117,70 @@ object Lake {
     if (toValidate.nonEmpty)
       validateGeneratedOn(spark, out, toValidate.toSeq, what)
     // restore the table's column order when the schemas now agree as SETS
-    currentSchemaDdl(spark, path).foreach { ddl =>
-      val tableCols = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-        .fieldNames.toSeq
-      if (out.columns.toSeq != tableCols &&
-        out.columns.toSet == tableCols.toSet)
-        out = out.select(tableCols.map(col): _*)
-    }
+    val tableCols = org.apache.spark.sql.types.StructType.fromDDL(m.get.schemaDdl)
+      .fieldNames.toSeq
+    if (out.columns.toSeq != tableCols && out.columns.toSet == tableCols.toSet)
+      out = out.select(tableCols.map(col): _*)
     out
   }
 
   def dropCheckConstraint(spark: SparkSession, path: String,
-      name: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(
-      new org.apache.hadoop.fs.Path(path, s"_graft_constraints/$name.json"),
-      false)
-  }
+      name: String): Boolean =
+    alterProps(spark, path)(p => p.copy(checks = p.checks.filterNot(_._1 == name)))
 
   /** The table's (name, sql) CHECK constraints, name-ascending. */
   def checkConstraints(spark: SparkSession,
       path: String): Seq[(String, String)] =
-    namedExprs(spark, path, "_graft_constraints")
+    headProps(spark, path).checks
+
+  /** THE publish-time rule for table properties. A commit publishes over
+    * a base whose properties it has enforced. When the manifest it is
+    * about to publish (`m`, the base it rebased onto plus the commit)
+    * carries CHECK constraints or generated specs that the properties its
+    * gate enforced (`have`) lack, they are enforced here on `files`
+    * (manifest-relative, read through `m`'s schema and deletion vectors)
+    * before the manifest rename: one narrow pass per kind, none when
+    * nothing is new. A commit publishing strictly at its gate head + 1
+    * (merge, the stream adoption) needs no call: a concurrent alter makes
+    * it lose the race loudly.
+    */
+  private def enforceNewProps(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, m: VersionManifest,
+      files: Seq[String], have: TableProps, what: String): Unit = {
+    val cs = m.props.checks.filterNot(have.checks.contains)
+    val gs = m.props.generated.filterNot(have.generated.contains)
+    if (files.nonEmpty && (cs.nonEmpty || gs.nonEmpty)) {
+      val root = rootPath(fs, new org.apache.hadoop.fs.Path(path))
+      val rows = readFilesWithDv(spark, fs, path, m, files.map(resolveRef(root, _)))
+      if (cs.nonEmpty) enforceConstraintsOn(spark, rows, cs, what)
+      if (gs.nonEmpty) validateGeneratedOn(spark, rows, gs, what)
+    }
+  }
 
   /** Refuse `incoming` unless every row satisfies every constraint — ONE
     * aggregate pass whatever the constraint count (a violation is
     * `NOT coalesce(expr, true)`: SQL CHECK lets NULL pass).
     */
-  private def enforceConstraints(spark: SparkSession, path: String,
-      incoming: DataFrame, what: String): Unit = {
-    val cs = checkConstraints(spark, path)
-    if (cs.nonEmpty) enforceConstraintsOn(spark, incoming, cs, what)
-  }
-
-  /** Re-enforce constraints that appeared AFTER a commit's gate read,
-    * against the batch's already-written files — closing the
-    * add-constraint-vs-commit race from the commit side: the publish
-    * attempt re-reads the constraint set, and any constraint that landed
-    * since the gate gets enforced in one column-pruned pass over the
-    * BATCH files before the manifest rename. A constraint landing after
-    * our rename is covered from the ADD side instead: its existing-data
-    * scan reads the table as of after its own publish, which includes
-    * us. (The residual is the pair of metadata ops between this re-read
-    * and the rename — the same local-FS window the schema-manifest
-    * guards document; HDFS/object-store renames close it.)
-    */
-  private def reenforceIfChanged(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      gateCs: Seq[(String, String)], entries: Seq[(String, Long)],
-      schemaDdl: String, what: String): Unit = {
-    val fresh = checkConstraints(spark, path).filterNot(gateCs.contains)
-    if (fresh.nonEmpty && entries.nonEmpty) {
-      val root = rootPath(fs, new org.apache.hadoop.fs.Path(path))
-      enforceConstraintsOn(spark,
-        readSomeFiles(spark, fs, path,
-          entries.map(e => resolveRef(root, e._1)), schemaDdl),
-        fresh, what)
-    }
-  }
-
   private def enforceConstraintsOn(spark: SparkSession, incoming: DataFrame,
       cs: Seq[(String, String)], what: String): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when}
-    val aggs = cs.map { case (n, e) =>
-      sum(when(!coalesce(expr(e), lit(true)), 1L).otherwise(0L)).as(n)
-    }
+    import org.apache.spark.sql.functions.{coalesce, expr, lit}
+    refuseRows(incoming, cs, s"CHECK constraint violation in $what")(
+      (_, e) => !coalesce(expr(e), lit(true)))
+  }
+
+  /** One aggregate counting, per (name, sql) spec, the rows `bad` flags;
+    * refuses with `stem` and each flagged spec's count.
+    */
+  private def refuseRows(incoming: DataFrame, specs: Seq[(String, String)],
+      stem: String)(bad: (String, String) => org.apache.spark.sql.Column): Unit = {
+    import org.apache.spark.sql.functions.{sum, when}
+    val aggs = specs.map { case (n, e) => sum(when(bad(n, e), 1L).otherwise(0L)).as(n) }
     val row = incoming.agg(aggs.head, aggs.tail: _*).head()
-    val bad = cs.indices.map(i => cs(i)._1 -> (
+    val hits = specs.indices.map(i => specs(i)._1 -> (
       if (row.isNullAt(i)) 0L else row.getLong(i))).filter(_._2 > 0)
-    require(bad.isEmpty,
-      s"CHECK constraint violation in $what: " +
-        bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", ") +
-        " - commit refused, nothing published")
+    require(hits.isEmpty, s"$stem: " +
+      hits.map { case (n, c) => s"$n ($c rows)" }.mkString(", ") +
+      " - commit refused, nothing published")
   }
 
   /** Remove versions older than the newest `keepLast` (the published
@@ -3302,7 +3234,8 @@ object Lake {
         writeVersionManifest(spark, fs, path, v, m.schemaDdl, m.entries,
           replace = true, ts = orig.flatMap(_.ts),
           streamBatchId = orig.flatMap(_.streamBatchId),
-          op = orig.flatMap(_.op), dv = m.dvs, colmap = m.colmap)
+          op = orig.flatMap(_.op), dv = m.dvs, colmap = m.colmap,
+          props = m.props)
       }
     }
     val root = rootPath(fs, hp)
@@ -3445,51 +3378,34 @@ object Lake {
     * growing one file per batch forever. A concurrent appender losing
     * the maintenance race simply rebases (disjoint-set commits); the
     * policy is re-checked on its own next append.
+    *
+    * Setting or clearing the policy is an `alter` commit (metadata only,
+    * no Spark job; a plain table is versioned first), so a commit sees
+    * the policy of the version it published over, and time travel and
+    * restore see it per version.
     */
   def setAutoOptimize(spark: SparkSession, path: String,
       smallFileLimit: Int = 16, targetFileBytes: Long = 128L << 20): Unit = {
     require(smallFileLimit >= 2,
       s"smallFileLimit must be >= 2, got $smallFileLimit")
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(hp, "_graft_policy")
-    fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".auto_optimize.json.tmp")
-    val dst = new org.apache.hadoop.fs.Path(dir, "auto_optimize.json")
-    val out = fs.create(tmp, true)
-    out.write(
-      s"""{"smallFileLimit":$smallFileLimit,"targetFileBytes":$targetFileBytes}"""
-        .getBytes("UTF-8"))
-    out.close()
-    fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"failed to publish auto-optimize policy at $dst")
-  }
-
-  def clearAutoOptimize(spark: SparkSession, path: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(hp, "_graft_policy/auto_optimize.json"),
-      false)
+    alterProps(spark, path, bootstrap = true)(
+      _.copy(autoOptimize = Some((smallFileLimit, targetFileBytes))))
     ()
   }
 
-  private[graft] def autoOptimizePolicy(
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[(Int, Long)] = {
-    val f = new org.apache.hadoop.fs.Path(path, "_graft_policy/auto_optimize.json")
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-      Some((n.get("smallFileLimit").asInt, n.get("targetFileBytes").asLong))
-    }
+  def clearAutoOptimize(spark: SparkSession, path: String): Unit = {
+    alterProps(spark, path)(_.copy(autoOptimize = None))
+    ()
   }
 
+  /** The head's (smallFileLimit, targetFileBytes) policy, if set. */
+  private[graft] def autoOptimizePolicy(spark: SparkSession,
+      path: String): Option[(Int, Long)] =
+    headProps(spark, path).autoOptimize
+
   /** Post-commit policy check over the manifest the commit just published
-    * (`head`): count live files under target/2, stopping
+    * (`head`), under the policy that manifest carries: count live files
+    * under target/2, stopping
     * as soon as the limit is reached (an append-heavy table stats at most
     * `limit` files before deciding), and fold when at/over it. A file
     * vacuumed between the manifest read and the stat is simply skipped.
@@ -3498,24 +3414,26 @@ object Lake {
     */
   private def maybeAutoOptimize(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
-      head: VersionManifest, limit: Int, target: Long): Unit = {
+      head: VersionManifest): Unit = {
     // COLUMN-MAPPED tables skip auto-compaction SILENTLY rather than let
     // optimizeVersioned's refusal fail a commit that already published.
     // The policy is file-size-based and resumes the moment the map is
     // materialized away.
     if (head.colmap.nonEmpty) return
-    val root = rootPath(fs, new org.apache.hadoop.fs.Path(path))
-    var small = 0
-    val it = head.entries.iterator
-    while (small < limit && it.hasNext) {
-      val e = it.next()
-      val len =
-        try fs.getFileStatus(
-          new org.apache.hadoop.fs.Path(resolveRef(root, e._1))).getLen
-        catch { case _: java.io.FileNotFoundException => Long.MaxValue }
-      if (len < target / 2) small += 1
+    head.props.autoOptimize.foreach { case (limit, target) =>
+      val root = rootPath(fs, new org.apache.hadoop.fs.Path(path))
+      var small = 0
+      val it = head.entries.iterator
+      while (small < limit && it.hasNext) {
+        val e = it.next()
+        val len =
+          try fs.getFileStatus(
+            new org.apache.hadoop.fs.Path(resolveRef(root, e._1))).getLen
+          catch { case _: java.io.FileNotFoundException => Long.MaxValue }
+        if (len < target / 2) small += 1
+      }
+      if (small >= limit) { optimizeVersioned(spark, path, target); () }
     }
-    if (small >= limit) { optimizeVersioned(spark, path, target); () }
   }
 
   /** Sort-order OPTIMIZE for VERSIONED tables — the [[rerange]] analog
@@ -3603,6 +3521,18 @@ object Lake {
       sys.error(s"version $v has no manifest under $path")))
   }
 
+  /** The NEWEST manifest — the base a commit publishes over (the pointer
+    * can lag a concurrent publish) — reusing `known` when no commit has
+    * landed since it was resolved; None for a table without versions.
+    */
+  private def newestManifest(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String,
+      known: Option[VersionManifest] = None): Option[VersionManifest] =
+    manifestVersions(fs, path).lastOption.map(v =>
+      known.filter(_.version == v).getOrElse(
+        readVersionManifest(spark, fs, path, v).getOrElse(
+          sys.error(s"version $v has no manifest under $path"))))
+
   /** Version `version`'s manifest, or the head's when None; refuses a
     * version that has none.
     */
@@ -3668,6 +3598,14 @@ object Lake {
     * none of the O(1)-resolution benefit); the rebase then resolves the
     * new head and applies the same set algebra.
     *
+    * TABLE PROPERTIES follow [[enforceNewProps]]'s rule: the caller gated
+    * its batch against `m0.props`, so a rebase onto a head whose
+    * properties gained a constraint or spec enforces it on `add`. An
+    * ALTER commit (`props` defined: the whole new property set, no add,
+    * no remove) refuses over a winner that changed the properties or the
+    * column mapping (its set was derived from `m0`'s), and applies its
+    * new properties to the files the winners added before rebasing.
+    *
     * @return the manifest published, as `m0` (or the head it rebased
     *         onto) plus this commit — what the caller's upkeep covers
     */
@@ -3676,9 +3614,13 @@ object Lake {
       schemaDdl: String, add: Seq[(String, Long)], remove: Seq[String],
       op: String, full: Boolean = false,
       dvAdd: Seq[DvEntry] = Nil, readSet: Set[String] = Set.empty,
-      streamBatchId: Option[Long] = None): VersionManifest = {
+      streamBatchId: Option[Long] = None,
+      props: Option[TableProps] = None): VersionManifest = {
     val ourRemove = remove.toSet
     var base = m0
+    // the files whose rows an alter has validated: m0's, then each
+    // rebase's winners'
+    var validated = m0.entries.map(_._1).toSet
     var attempts = 0
     while (true) {
       attempts += 1
@@ -3690,15 +3632,15 @@ object Lake {
         val pub =
           if (full) {
             val p = applyCommit(base, next, schemaDdl, add, remove, dvAdd,
-              streamBatchId = streamBatchId).copy(depth = 0L)
+              streamBatchId = streamBatchId, props = props).copy(depth = 0L)
             writeVersionManifest(spark, fs, path, next, schemaDdl, p.entries,
               op = Some(op), dv = p.dvs, colmap = p.colmap,
-              streamBatchId = streamBatchId)
+              streamBatchId = streamBatchId, props = p.props)
             p
           } else
             writeVersionDelta(spark, fs, path, next, schemaDdl,
               base = base, add = add, remove = remove, op = Some(op),
-              dvAdd = dvAdd, streamBatchId = streamBatchId)
+              dvAdd = dvAdd, streamBatchId = streamBatchId, props = props)
         writeVersionPointer(spark, fs, path, next)
         return pub
       } catch {
@@ -3716,6 +3658,10 @@ object Lake {
               s"$op($path): version $next already published — concurrent " +
                 s"commit $w changed the table schema; recompute against " +
                 "the new state")
+            require(props.isEmpty || (raw.props.isEmpty && raw.colmap.isEmpty),
+              s"$op($path): version $next already published — concurrent " +
+                s"commit $w changed the table properties or column mapping; " +
+                "recompute against the new state")
             val overlap = raw.remove.toSet.intersect(ourRemove)
             require(overlap.isEmpty,
               s"$op($path): version $next already published — concurrent " +
@@ -3744,6 +3690,16 @@ object Lake {
           // all winners file-disjoint: rebase onto the head and retry
           base = readVersionManifest(spark, fs, path, head).getOrElse(
             sys.error(s"version $head vanished under $path mid-rebase"))
+          props match {
+            case Some(p) =>
+              val won = base.entries.map(_._1).filterNot(validated)
+              enforceNewProps(spark, fs, path, base.copy(props = p), won,
+                m0.props, s"$op($path) over concurrently added files")
+              validated ++= won
+            case None =>
+              enforceNewProps(spark, fs, path, base, add.map(_._1), m0.props,
+                s"$op($path)")
+          }
       }
     }
     sys.error("unreachable")
@@ -3804,7 +3760,8 @@ object Lake {
   // manifest instead — the self-checkpointing that bounds resolution to
   // O(MaxChainDepth) metadata reads). vacuum materializes any retained
   // manifest whose chain passes through a dropped version before dropping
-  // it, so resolution never dangles.
+  // it, so resolution never dangles. Either shape may carry "props", the
+  // table's properties (a delta without it inherits its base's).
 
   /** One DELETION-VECTOR sidecar reference in a manifest: `dv` is the
     * tombstone parquet's table-relative path (rows `(file string, pos
@@ -3827,25 +3784,41 @@ object Lake {
     * every internal scan path stays correct unchanged; the logical
     * projection is applied once at the read surface. Empty = identity
     * (no rename/drop ever committed) — the legacy form. `depth` is the
-    * delta-chain depth on disk (0 for a checkpoint) and `streamBatchId`
-    * this version's own stamp.
+    * delta-chain depth on disk (0 for a checkpoint), `streamBatchId`
+    * this version's own stamp and `props` the table's properties as of
+    * this version.
     */
   private case class VersionManifest(version: Long, schemaDdl: String,
       entries: Seq[(String, Long)], dvs: Seq[DvEntry] = Nil,
       colmap: Seq[(String, String)] = Nil, depth: Long = 0L,
-      streamBatchId: Option[Long] = None)
+      streamBatchId: Option[Long] = None, props: TableProps = TableProps())
+
+  /** A table's PROPERTIES — the metadata entry of Delta's log: CHECK
+    * constraints and GENERATED column specs ((name, sql), name-ascending)
+    * and the auto-optimize policy (smallFileLimit, targetFileBytes). A
+    * change to them is a commit (op "alter") like any other.
+    */
+  private case class TableProps(checks: Seq[(String, String)] = Nil,
+      generated: Seq[(String, String)] = Nil,
+      autoOptimize: Option[(Int, Long)] = None) {
+    def isEmpty: Boolean = this == TableProps()
+    /** Whether a batch entering the table is gated (read) before it lands. */
+    def gates: Boolean = checks.nonEmpty || generated.nonEmpty
+  }
 
   /** Raw on-disk form: full (files defined) or delta (base defined).
     * `ts` is the commit wall-clock (epoch millis), stamped at publish and
     * PRESERVED by vacuum's materialization rewrite; None only for
-    * manifests written before timestamps existed.
+    * manifests written before timestamps existed. `props` is None when
+    * the manifest carries none: a delta then inherits its base's, a
+    * checkpoint has none.
     */
   private case class RawManifest(version: Long, schemaDdl: String,
       depth: Long, files: Option[Seq[(String, Long)]], base: Option[Long],
       add: Seq[(String, Long)], remove: Seq[String], ts: Option[Long],
       streamBatchId: Option[Long], op: Option[String],
       dv: Seq[DvEntry] = Nil, dvAdd: Seq[DvEntry] = Nil,
-      colmap: Seq[(String, String)] = Nil)
+      colmap: Seq[(String, String)] = Nil, props: Option[TableProps] = None)
 
   private val MaxChainDepth = 32L
 
@@ -4082,13 +4055,27 @@ object Lake {
       s"""{"logical":${jsonStr(l)},"physical":${jsonStr(p)}}"""
     }.mkString("[", ",", "]")
 
+  /** `"props":{…},` — one object holding only the non-empty properties. */
+  private def propsField(p: TableProps): String = {
+    def named(key: String, es: Seq[(String, String)]) =
+      if (es.isEmpty) None
+      else Some(s""""$key":""" + es.map { case (n, e) =>
+        s"""{"name":${jsonStr(n)},"expr":${jsonStr(e)}}"""
+      }.mkString("[", ",", "]"))
+    val fields = named("checks", p.checks) ++ named("generated", p.generated) ++
+      p.autoOptimize.map { case (limit, target) =>
+        s""""autoOptimize":{"smallFileLimit":$limit,"targetFileBytes":$target}""" }
+    s""""props":${fields.mkString("{", ",", "}")},"""
+  }
+
   private def writeVersionManifest(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String, v: Long,
       schemaDdl: String, entries: Seq[(String, Long)],
       replace: Boolean = false, ts: Option[Long] = None,
       streamBatchId: Option[Long] = None,
       op: Option[String] = None, dv: Seq[DvEntry] = Nil,
-      colmap: Seq[(String, String)] = Nil): Unit = {
+      colmap: Seq[(String, String)] = Nil,
+      props: TableProps = TableProps()): Unit = {
     // a fresh commit stamps now; a materialization rewrite (replace)
     // carries the original ts through — or keeps having NONE for
     // pre-timestamp manifests (stamping those "now" would teleport an old
@@ -4102,8 +4089,9 @@ object Lake {
     val dvField = if (dv.isEmpty) "" else s""""dv":${dvJson(dv)},"""
     val cmField =
       if (colmap.isEmpty) "" else s""""colmap":${colmapJson(colmap)},"""
+    val propsJson = if (props.isEmpty) "" else propsField(props)
     writeManifestFile(fs, path, v,
-      s"""{"version":$v,$tsField$bidField$opField$dvField$cmField""" +
+      s"""{"version":$v,$tsField$bidField$opField$dvField$cmField$propsJson""" +
         s""""schema":${jsonStr(schemaDdl)},""" +
         s""""depth":0,"files":${entriesJson(entries)}}""",
       replace)
@@ -4111,7 +4099,8 @@ object Lake {
 
   /** Publish an O(changed-files) DELTA manifest against the resolved
     * `base` — or, when the chain would exceed [[MaxChainDepth]], a full
-    * checkpoint of `base` with the change applied.
+    * checkpoint of `base` with the change applied. `props` is the
+    * commit's whole new property set (None: unchanged, inherited).
     *
     * @return the manifest published, resolved in memory
     */
@@ -4120,14 +4109,16 @@ object Lake {
       schemaDdl: String, base: VersionManifest, add: Seq[(String, Long)],
       remove: Seq[String], streamBatchId: Option[Long] = None,
       op: Option[String] = None, dvAdd: Seq[DvEntry] = Nil,
-      colmap: Seq[(String, String)] = Nil): VersionManifest = {
+      colmap: Seq[(String, String)] = Nil,
+      props: Option[TableProps] = None): VersionManifest = {
     val pub = applyCommit(base, v, schemaDdl, add, remove, dvAdd, colmap,
-      streamBatchId)
+      streamBatchId, props)
     if (pub.depth > MaxChainDepth) {
       // a checkpoint never inherits: materialize the effective mapping
+      // and properties
       writeVersionManifest(spark, fs, path, v, schemaDdl, pub.entries,
         streamBatchId = streamBatchId, op = op, dv = pub.dvs,
-        colmap = pub.colmap)
+        colmap = pub.colmap, props = pub.props)
       pub.copy(depth = 0L)
     } else {
       val removeJson = remove.map(jsonStr).mkString("[", ",", "]")
@@ -4137,9 +4128,10 @@ object Lake {
       val dvField = if (dvAdd.isEmpty) "" else s""""dvAdd":${dvJson(dvAdd)},"""
       val cmField =
         if (colmap.isEmpty) "" else s""""colmap":${colmapJson(colmap)},"""
+      val propsJson = props.fold("")(propsField)
       writeManifestFile(fs, path, v,
         s"""{"version":$v,"ts":${System.currentTimeMillis()},$bidField""" +
-          s"""$opField$dvField$cmField"schema":${jsonStr(schemaDdl)},""" +
+          s"""$opField$dvField$cmField$propsJson"schema":${jsonStr(schemaDdl)},""" +
           s""""depth":${pub.depth},"base":${base.version},""" +
           s""""add":${entriesJson(add)},"remove":$removeJson}""",
         replace = false)
@@ -4149,17 +4141,20 @@ object Lake {
 
   /** `base` with one commit applied, as [[readVersionManifest]] resolves
     * a delta: `remove` leaves the file list and every dv entry's coverage,
-    * `add` and `dvAdd` append, and an empty `colmap` inherits the base's.
+    * `add` and `dvAdd` append, an empty `colmap` inherits the base's and
+    * so does an absent `props`.
     */
   private def applyCommit(base: VersionManifest, v: Long, schemaDdl: String,
       add: Seq[(String, Long)], remove: Seq[String], dvAdd: Seq[DvEntry],
       colmap: Seq[(String, String)] = Nil,
-      streamBatchId: Option[Long] = None): VersionManifest = {
+      streamBatchId: Option[Long] = None,
+      props: Option[TableProps] = None): VersionManifest = {
     val rm = remove.toSet
     VersionManifest(v, schemaDdl, base.entries.filterNot(e => rm(e._1)) ++ add,
       applyDvDelta(base.dvs, rm, dvAdd),
       if (colmap.nonEmpty) colmap else base.colmap,
-      depth = base.depth + 1, streamBatchId = streamBatchId)
+      depth = base.depth + 1, streamBatchId = streamBatchId,
+      props = props.getOrElse(base.props))
   }
 
   /** Fold one commit's dv change into a base's live dv set: removing a
@@ -4205,6 +4200,13 @@ object Lake {
       val colmap = opt("colmap").fold(Seq.empty[(String, String)])(a =>
         (0 until a.size).map(i =>
           (a.get(i).get("logical").asText, a.get(i).get("physical").asText)))
+      val props = opt("props").map { p =>
+        def named(key: String) = Option(p.get(key)).fold(Seq.empty[(String, String)])(a =>
+          (0 until a.size).map(i => (a.get(i).get("name").asText, a.get(i).get("expr").asText)))
+        TableProps(named("checks"), named("generated"),
+          Option(p.get("autoOptimize")).map(a =>
+            (a.get("smallFileLimit").asInt, a.get("targetFileBytes").asLong)))
+      }
       Some(RawManifest(n.get("version").asLong, n.get("schema").asText,
         opt("depth").fold(0L)(_.asLong),
         opt("files").map(_ => pairs("files")),
@@ -4216,7 +4218,7 @@ object Lake {
         opt("streamBatchId").map(_.asLong),
         opt("op").map(_.asText),
         dv = dvEntries("dv"), dvAdd = dvEntries("dvAdd"),
-        colmap = colmap))
+        colmap = colmap, props = props))
     }
   }
 
@@ -4230,7 +4232,8 @@ object Lake {
       raw.files match {
         case Some(entries) =>
           VersionManifest(raw.version, raw.schemaDdl, entries, raw.dv,
-            raw.colmap, raw.depth, raw.streamBatchId)
+            raw.colmap, raw.depth, raw.streamBatchId,
+            raw.props.getOrElse(TableProps()))
         case None =>
           val base = readVersionManifest(spark, fs, path, raw.base.get)
             .getOrElse(sys.error(
@@ -4241,10 +4244,14 @@ object Lake {
           // empty" never occurs on deltas — only a full checkpoint
           // (materializeMapping) clears it. Inheritance means a delta
           // writer that forgot to thread the map cannot silently strip it.
+          // `props` inherits only when ABSENT: an alter commit writes its
+          // whole new property set, and an empty object is a real value
+          // (the last constraint dropped), not "inherit".
           // The depth is the one on disk: a base vacuum materialized into a
           // checkpoint keeps its delta's recorded depth
           applyCommit(base, raw.version, raw.schemaDdl, raw.add, raw.remove,
-            raw.dvAdd, raw.colmap, raw.streamBatchId).copy(depth = raw.depth)
+            raw.dvAdd, raw.colmap, raw.streamBatchId, raw.props)
+            .copy(depth = raw.depth)
       }
     }
 
@@ -4311,8 +4318,8 @@ object Lake {
     * loop) is exactly the failure mode this forbids. Drop them, rename,
     * rebuild under the new names.
     */
-  private def requireNoMaintenanceArtifacts(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
+  private def requireNoMaintenanceArtifacts(
+      fs: org.apache.hadoop.fs.FileSystem, path: String, props: TableProps,
       opName: String): Unit = {
     require(!fs.exists(new org.apache.hadoop.fs.Path(path, "_graft_stats")),
       s"$opName($path): a data-skipping stats manifest exists and is " +
@@ -4321,10 +4328,10 @@ object Lake {
     require(!fs.exists(new org.apache.hadoop.fs.Path(path, "_graft_bloom")),
       s"$opName($path): bloom indexes exist and are keyed by the current " +
         "column names - drop _graft_bloom first and rebuild after")
-    require(checkConstraints(spark, path).isEmpty,
+    require(props.checks.isEmpty,
       s"$opName($path): CHECK constraints reference the current column " +
         "names - drop them first and re-add against the new names")
-    require(generatedColumns(spark, path).isEmpty,
+    require(props.generated.isEmpty,
       s"$opName($path): GENERATED column specs reference the current " +
         "column names - drop them first and re-declare after")
   }
@@ -4549,7 +4556,8 @@ object Lake {
     val head = headManifest(spark, fs, path)
     refuseDvs(head.map(_.dvs).getOrElse(Nil), path, "writeEvolving")
     refuseColMap(head.map(_.colmap).getOrElse(Nil), path, "writeEvolving")
-    require(generatedColumns(spark, path).isEmpty,
+    val props = head.fold(TableProps())(_.props)
+    require(props.generated.isEmpty,
       s"$path declares GENERATED columns; schema evolution would bypass " +
         "their derivation - drop them first")
     // the constraint contract is two-sided: addCheckConstraint refuses
@@ -4558,9 +4566,10 @@ object Lake {
     // CONCURRENT pair could pass both — the post-publish cross-checks
     // (below, and in addCheckConstraint) resolve that race: each side
     // re-checks the other's artifact after publishing its own and the
-    // detected loser rolls back, so the forbidden constrained-evolving
-    // state never persists
-    require(checkConstraints(spark, path).isEmpty,
+    // detected loser backs out (here: deletes its schema manifest; there:
+    // commits the constraint's drop), so the forbidden constrained-
+    // evolving state never persists
+    require(props.checks.isEmpty,
       s"$path carries CHECK constraints; schema evolution would bypass " +
         "their enforcement - drop them first")
     val prior = readSchemaManifests(spark, path)
@@ -4652,8 +4661,10 @@ object Lake {
     // the FIRST schema version and a constraint landed concurrently (its
     // gate read ran before our manifest), the EVOLUTION side rolls back —
     // no data has been written yet, so deleting our own v=1 manifest is a
-    // clean abort, and one of the two racing sides always yields
-    if (next == 1L && checkConstraints(spark, path).nonEmpty) {
+    // clean abort, and one of the two racing sides always yields. The
+    // newest manifest, not the pointer: the pointer lags a publish
+    if (next == 1L &&
+        newestManifest(spark, fs, path).exists(_.props.checks.nonEmpty)) {
       fs.delete(dst, false)
       sys.error(s"$path gained CHECK constraints concurrently; schema " +
         "evolution rolled back - drop the constraints first")
@@ -4666,11 +4677,9 @@ object Lake {
       if (versioned) listDataFiles(fs, hp).toSet else Set.empty
     df.write.mode(SaveMode.Append).parquet(path)
     if (versioned) {
-      val v0 = manifestVersions(fs, path).last
-      val base = readVersionManifest(spark, fs, path, v0).getOrElse(
-        sys.error(s"version $v0 has no manifest under $path"))
+      val base = newestManifest(spark, fs, path).get
       val freshFiles = listDataFiles(fs, hp).filterNot(before)
-      val nextV = v0 + 1
+      val nextV = base.version + 1
       val ddl = org.apache.spark.sql.types.StructType(newFields.map {
         case (n, t) => org.apache.spark.sql.types.StructField(n,
           org.apache.spark.sql.types.DataType.fromDDL(t))
@@ -4765,33 +4774,31 @@ object Lake {
   private case class SchemaVersion(version: Long,
       fields: Seq[(String, String)], renames: Seq[(String, String)])
 
-  /** All schema manifests, version-ascending. Metadata-sized driver read. */
+  /** All schema manifests, version-ascending. Each is a KB-sized JSON
+    * object parsed on the driver, as the version manifests are: building
+    * a read frame of an evolving table starts no Spark job.
+    */
   private def readSchemaManifests(spark: SparkSession,
       path: String): Seq[SchemaVersion] = {
     val dir = new org.apache.hadoop.fs.Path(path, "_graft_schema")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) Seq.empty
     else {
-      val files = fs.listStatus(dir).toSeq.map(_.getPath)
+      val m = new com.fasterxml.jackson.databind.ObjectMapper()
+      fs.listStatus(dir).toSeq.map(_.getPath)
         .filter(p => p.getName.startsWith("v=") && p.getName.endsWith(".json"))
-      if (files.isEmpty) Seq.empty
-      else {
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          StructField("version", LongType),
-          StructField("fields", ArrayType(StructType(Seq(
-            StructField("name", StringType), StructField("type", StringType))))),
-          StructField("renames", ArrayType(StructType(Seq(
-            StructField("from", StringType), StructField("to", StringType)))))))
-        spark.read.schema(schema).json(files.map(_.toString): _*)
-          .collect().toSeq
-          .map { r =>
-            def pairs(i: Int) = r.getSeq[org.apache.spark.sql.Row](i)
-              .map(p => (p.getString(0), p.getString(1)))
-            SchemaVersion(r.getLong(0), pairs(1), pairs(2))
-          }
-          .sortBy(_.version)
-      }
+        .map { f =>
+          val in = fs.open(f)
+          val n =
+            try m.readTree(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+            finally in.close()
+          def pairs(key: String, a: String, b: String) = Option(n.get(key))
+            .fold(Seq.empty[(String, String)])(arr => (0 until arr.size).map(i =>
+              (arr.get(i).get(a).asText, arr.get(i).get(b).asText)))
+          SchemaVersion(n.get("version").asLong, pairs("fields", "name", "type"),
+            pairs("renames", "from", "to"))
+        }
+        .sortBy(_.version)
     }
   }
 
@@ -5215,7 +5222,7 @@ object Lake {
     if (!fs.exists(versionsDir(path))) bootstrapRootVersion(spark, fs, path)
     val (_, m0) = resolveHead(spark, fs, path)
     refuseColMap(m0.colmap, path, "stageAppend")
-    val dfG = applyGeneratedTo(spark, path, df, "stageAppend")
+    val dfG = applyGeneratedTo(spark, path, Some(m0), df, "stageAppend")
     val curDdl = m0.schemaDdl
     val cur = org.apache.spark.sql.types.StructType.fromDDL(curDdl)
     require(dfG.schema.fields.map(f => (f.name, f.dataType.catalogString)).toSeq
@@ -5361,7 +5368,6 @@ object Lake {
           "landed (recoverStagedPublish to hand the stage back)")
     }
     val (stagedDdl, entries) = readMarkerFile(fs, claimed)
-    val root = rootPath(fs, hp)
     def unclaim(): Unit = { fs.rename(claimed, stagedMarker(path, id)); () }
     // Unclaim ONLY on failures provably BEFORE any manifest write (stale
     // schema, constraint refusal, head read) — those hand the stage back
@@ -5381,22 +5387,13 @@ object Lake {
           s"publishStaged($id): table schema changed since staging " +
             s"(staged against $stagedDdl, table now $curDdl) - the audit " +
             "validated a stale shape; abort and restage")
-        val cs = checkConstraints(spark, path)
-        if (cs.nonEmpty)
-          enforceConstraintsOn(spark,
-            readFileSubset(spark, path, entries.map(e => resolveRef(root, e._1)),
-              Some(m0)),
-            cs, s"publishStaged($path, $id)")
-        // generated columns declared AFTER staging get the same
-        // publish-time re-validation as constraints: the staged files
-        // were written before the derivation existed, so a violating
-        // stage must unclaim (back to staged for abort), never fold in
-        val gs = generatedColumns(spark, path)
-        if (gs.nonEmpty)
-          validateGeneratedOn(spark,
-            readFileSubset(spark, path, entries.map(e => resolveRef(root, e._1)),
-              Some(m0)),
-            gs, s"publishStaged($path, $id)")
+        // the head's constraints and generated specs gate the staged
+        // files: they were written at staging, maybe before a constraint
+        // or derivation existed, so a violating stage must unclaim (back
+        // to staged for abort), never fold in. A property added after
+        // this gate is enforced by publishNonCommuting's rebase.
+        enforceNewProps(spark, fs, path, m0, entries.map(_._1), TableProps(),
+          s"publishStaged($path, $id)")
         m0
       } catch { case e: Throwable => unclaim(); throw e }
     val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,

@@ -1736,14 +1736,15 @@ class LakeSpec extends SparkSpec {
       Lake.addCheckConstraint(spark, dir, "v_nonneg", "v >= 0")
     }
     // valid append passes; violating append refuses with NOTHING
-    // published — not even an unpublished data dir
-    assert(Lake.appendVersioned(spark, rows(Seq(101 -> 5L)), dir) == 2L)
+    // published — not even an unpublished data dir (the constraint itself
+    // is version 2: an alter commit)
+    assert(Lake.appendVersioned(spark, rows(Seq(101 -> 5L)), dir) == 3L)
     val before = fileIdentity(dir)
     val e = intercept[IllegalArgumentException] {
       Lake.appendVersioned(spark, rows(Seq(102 -> -7L)), dir)
     }
     assert(e.getMessage.contains("v_nonneg (1 rows)"), e.getMessage)
-    assert(Lake.listVersions(spark, dir) == Seq(1L, 2L))
+    assert(Lake.listVersions(spark, dir) == Seq(1L, 2L, 3L))
     assert(fileIdentity(dir) == before, "refused commit left files behind")
     // merge: the UPSERT arm is checked; a delete-only CDC batch is exempt
     // (its data columns never enter the table)
