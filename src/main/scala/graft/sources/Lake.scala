@@ -359,7 +359,9 @@ object Lake {
               "widening (tinyint<smallint<int<bigint, float<double) is " +
               "supported")
         }
-        bootstrapSchemaChain(fs, new org.apache.hadoop.fs.Path(path), cur)
+        // the bridge to the chain: v1 declares the table's current schema
+        // (no file reads), and the batch publishes v2 through writeEvolving
+        publishSchemaEntry(fs, new org.apache.hadoop.fs.Path(path), 1L, cur, Map.empty)
         writeEvolving(spark, df, path, streamBatchId = streamBatchId)
         return headVersion(fs, path)
       }
@@ -2976,11 +2978,13 @@ object Lake {
     // side yields by committing its own drop — whoever publishes second
     // must observe the first, so the forbidden constrained-evolving state
     // cannot persist (writeEvolving's v1 publish runs the mirror check).
-    // The drop retries: the evolving writer's own commits may win the
-    // version number it races for
+    // The drop rebases over the evolving writer's version commit (an
+    // alter rebases over a schema change)
     if (readSchemaManifests(spark, path).nonEmpty) {
-      Iterator.continually(scala.util.Try(dropCheckConstraint(spark, path, name)))
-        .take(MaxCommitRetries).find(_.isSuccess)
+      scala.util.Try(dropCheckConstraint(spark, path, name)).failed.foreach(e =>
+        throw new IllegalStateException(s"$path started schema evolution " +
+          s"concurrently and constraint '$name' could not be dropped again; " +
+          "it is still present - drop it before the next write", e))
       sys.error(s"$path started schema evolution concurrently; " +
         "constraint dropped again - constraints require the fixed-schema path")
     }
@@ -3067,15 +3071,12 @@ object Lake {
 
   /** Change the head's properties with one `alter` commit — metadata
     * only, no Spark job. False, with nothing published, when `change`
-    * leaves them as they are or the path has no versions (a plain table
-    * is versioned first when `bootstrap` is set).
+    * leaves them as they are or the path has no versions.
     */
-  private def alterProps(spark: SparkSession, path: String,
-      bootstrap: Boolean = false)(change: TableProps => TableProps): Boolean = {
+  private def alterProps(spark: SparkSession,
+      path: String)(change: TableProps => TableProps): Boolean = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (bootstrap && !fs.exists(versionsDir(path)))
-      bootstrapRootVersion(spark, fs, path)
     headManifest(spark, fs, path).exists { m0 =>
       val props = change(m0.props)
       props != m0.props && { publishAlter(spark, fs, path, m0, props); true }
@@ -3388,7 +3389,10 @@ object Lake {
       smallFileLimit: Int = 16, targetFileBytes: Long = 128L << 20): Unit = {
     require(smallFileLimit >= 2,
       s"smallFileLimit must be >= 2, got $smallFileLimit")
-    alterProps(spark, path, bootstrap = true)(
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(versionsDir(path))) bootstrapRootVersion(spark, fs, path)
+    alterProps(spark, path)(
       _.copy(autoOptimize = Some((smallFileLimit, targetFileBytes))))
     ()
   }
@@ -3603,8 +3607,9 @@ object Lake {
     * properties gained a constraint or spec enforces it on `add`. An
     * ALTER commit (`props` defined: the whole new property set, no add,
     * no remove) refuses over a winner that changed the properties or the
-    * column mapping (its set was derived from `m0`'s), and applies its
-    * new properties to the files the winners added before rebasing.
+    * column mapping (its set was derived from `m0`'s), keeps the schema of
+    * the base it lands on, and applies its new properties to the files
+    * the winners added before rebasing.
     *
     * @return the manifest published, as `m0` (or the head it rebased
     *         onto) plus this commit — what the caller's upkeep covers
@@ -3618,9 +3623,6 @@ object Lake {
       props: Option[TableProps] = None): VersionManifest = {
     val ourRemove = remove.toSet
     var base = m0
-    // the files whose rows an alter has validated: m0's, then each
-    // rebase's winners'
-    var validated = m0.entries.map(_._1).toSet
     var attempts = 0
     while (true) {
       attempts += 1
@@ -3628,17 +3630,19 @@ object Lake {
         s"$op: lost the manifest race under $path $MaxCommitRetries " +
           "times (livelock? raise MaxCommitRetries)")
       val next = base.version + 1
+      // an alter changes no schema: it keeps the one of the base it lands on
+      val ddl = if (props.isDefined) base.schemaDdl else schemaDdl
       try {
         val pub =
           if (full) {
-            val p = applyCommit(base, next, schemaDdl, add, remove, dvAdd,
+            val p = applyCommit(base, next, ddl, add, remove, dvAdd,
               streamBatchId = streamBatchId, props = props).copy(depth = 0L)
-            writeVersionManifest(spark, fs, path, next, schemaDdl, p.entries,
+            writeVersionManifest(spark, fs, path, next, ddl, p.entries,
               op = Some(op), dv = p.dvs, colmap = p.colmap,
               streamBatchId = streamBatchId, props = p.props)
             p
           } else
-            writeVersionDelta(spark, fs, path, next, schemaDdl,
+            writeVersionDelta(spark, fs, path, next, ddl,
               base = base, add = add, remove = remove, op = Some(op),
               dvAdd = dvAdd, streamBatchId = streamBatchId, props = props)
         writeVersionPointer(spark, fs, path, next)
@@ -3654,11 +3658,17 @@ object Lake {
               s"$op($path): version $next already published — concurrent " +
                 s"SNAPSHOT commit $w replaced the table; recompute " +
                 "against the new state")
-            require(raw.schemaDdl == schemaDdl,
+            // a winner keeping the schema this commit read, or landing the
+            // one it publishes, leaves its files readable; an alter adds no
+            // file and rebases over any schema
+            require(props.isDefined || raw.schemaDdl == m0.schemaDdl ||
+                raw.schemaDdl == schemaDdl,
               s"$op($path): version $next already published — concurrent " +
                 s"commit $w changed the table schema; recompute against " +
                 "the new state")
-            require(props.isEmpty || (raw.props.isEmpty && raw.colmap.isEmpty),
+            // a delta carries props or a colmap only where it sets them
+            require(props.isEmpty || (raw.props.forall(_ == m0.props) &&
+                (raw.colmap.isEmpty || raw.colmap == m0.colmap)),
               s"$op($path): version $next already published — concurrent " +
                 s"commit $w changed the table properties or column mapping; " +
                 "recompute against the new state")
@@ -3688,14 +3698,16 @@ object Lake {
                 "against the current version")
           }
           // all winners file-disjoint: rebase onto the head and retry
+          val prev = base
           base = readVersionManifest(spark, fs, path, head).getOrElse(
             sys.error(s"version $head vanished under $path mid-rebase"))
           props match {
             case Some(p) =>
-              val won = base.entries.map(_._1).filterNot(validated)
-              enforceNewProps(spark, fs, path, base.copy(props = p), won,
-                m0.props, s"$op($path) over concurrently added files")
-              validated ++= won
+              // the previous base's rows are validated (m0's by the caller)
+              val had = prev.entries.map(_._1).toSet
+              enforceNewProps(spark, fs, path, base.copy(props = p),
+                base.entries.map(_._1).filterNot(had), m0.props,
+                s"$op($path) over concurrently added files")
             case None =>
               enforceNewProps(spark, fs, path, base, add.map(_._1), m0.props,
                 s"$op($path)")
@@ -4499,11 +4511,14 @@ object Lake {
 
   /** The latest LOGICAL schema of an evolved table as DDL. */
   private def logicalDdl(spark: SparkSession, path: String): String =
-    org.apache.spark.sql.types.StructType(
-      logicalSchema(readSchemaManifests(spark, path)).map { case (n, t) =>
-        org.apache.spark.sql.types.StructField(n,
-          org.apache.spark.sql.types.DataType.fromDDL(t))
-      }).toDDL
+    fieldsDdl(logicalSchema(readSchemaManifests(spark, path)))
+
+  /** The DDL of (name, catalog type) fields. */
+  private def fieldsDdl(fields: Seq[(String, String)]): String =
+    org.apache.spark.sql.types.StructType(fields.map { case (n, t) =>
+      org.apache.spark.sql.types.StructField(n,
+        org.apache.spark.sql.types.DataType.fromDDL(t))
+    }).toDDL
 
   /** SCHEMA EVOLUTION for plain-parquet lake tables — the versioned-schema
     * half of what Delta/Iceberg column mapping does, on an explicit
@@ -4574,7 +4589,7 @@ object Lake {
         "their enforcement - drop them first")
     val prior = readSchemaManifests(spark, path)
     val next = prior.lastOption.map(_.version + 1).getOrElse(1L)
-    val newFields = df.schema.fields.map(f => f.name -> f.dataType.catalogString)
+    val newFields = df.schema.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
     if (prior.isEmpty) {
       require(renames.isEmpty, "first write cannot declare renames")
     } else {
@@ -4632,31 +4647,7 @@ object Lake {
           s"column name '$name' was retired by an earlier rename and " +
             "cannot be reused"))
     }
-    fs.mkdirs(new org.apache.hadoop.fs.Path(hp, "_graft_schema"))
-    val fieldsJson = newFields.map { case (n, t) =>
-      s"""{"name":${jsonStr(n)},"type":${jsonStr(t)}}""" }.mkString("[", ",", "]")
-    val renamesJson = renames.toSeq.sortBy(_._1).map { case (f, t) =>
-      s"""{"from":${jsonStr(f)},"to":${jsonStr(t)}}""" }.mkString("[", ",", "]")
-    val tmp = new org.apache.hadoop.fs.Path(hp, s"_graft_schema/.v=$next.tmp")
-    val dst = new org.apache.hadoop.fs.Path(hp, s"_graft_schema/v=$next.json")
-    val out = fs.create(tmp, true)
-    out.write(
-      s"""{"version":$next,"fields":$fieldsJson,"renames":$renamesJson}"""
-        .getBytes("UTF-8"))
-    out.close()
-    // Concurrent-publish guard: two writers racing to the same next
-    // version must fail loudly, not silently clobber each other's schema.
-    // On HDFS-like filesystems rename-to-existing fails by contract; on
-    // the LOCAL filesystem it silently replaces (POSIX rename), so the
-    // explicit exists-check below carries the guard there — a residual
-    // check-then-rename window remains on local FS (single-writer is the
-    // local contract; production object stores/HDFS give the atomic form).
-    require(!fs.exists(dst),
-      s"writeEvolving: schema version $next already published under $path " +
-        "(concurrent writer?) - re-read schemaVersions and retry")
-    require(fs.rename(tmp, dst),
-      s"writeEvolving: schema version $next already published under $path " +
-        "(concurrent writer?) - re-read schemaVersions and retry")
+    val dst = publishSchemaEntry(fs, hp, next, newFields, renames)
     // mirror of addCheckConstraint's post-publish cross-check: if this is
     // the FIRST schema version and a constraint landed concurrently (its
     // gate read ran before our manifest), the EVOLUTION side rolls back —
@@ -4669,26 +4660,29 @@ object Lake {
       sys.error(s"$path gained CHECK constraints concurrently; schema " +
         "evolution rolled back - drop the constraints first")
     }
-    // a deleteWhere may have versioned this table: the append then also
-    // publishes a version manifest (prior files by reference + the new
-    // files) so version-resolving readers see the appended rows
-    val versioned = fs.exists(versionsDir(path))
-    val before: Set[String] =
-      if (versioned) listDataFiles(fs, hp).toSet else Set.empty
-    df.write.mode(SaveMode.Append).parquet(path)
-    if (versioned) {
-      val base = newestManifest(spark, fs, path).get
-      val freshFiles = listDataFiles(fs, hp).filterNot(before)
-      val nextV = base.version + 1
-      val ddl = org.apache.spark.sql.types.StructType(newFields.map {
-        case (n, t) => org.apache.spark.sql.types.StructField(n,
-          org.apache.spark.sql.types.DataType.fromDDL(t))
-      }).toDDL
-      val pub = writeVersionDelta(spark, fs, path, nextV, ddl,
-        base = base, add = fileEntries(spark, fs, path, freshFiles),
-        remove = Seq.empty, streamBatchId = streamBatchId,
-        op = Some("evolve-append"))
-      writeVersionPointer(spark, fs, path, nextV)
+    // a deleteWhere may have versioned this table: the append then writes
+    // a claimed dir and publishes a version (prior files by reference +
+    // the new files), so version-resolving readers see the appended rows.
+    // It rebases like any commit over the head the guards above read,
+    // enforcing a constraint that landed since on its files
+    val published =
+      try {
+        if (!fs.exists(versionsDir(path))) {
+          df.write.mode(SaveMode.Append).parquet(path)
+          None
+        } else {
+          Some(publishNonCommuting(spark, fs, path,
+            head.getOrElse(newestManifest(spark, fs, path).get),
+            fieldsDdl(newFields),
+            add = writeClaimedDir(spark, fs, path, df)._2, remove = Nil,
+            op = "evolve-append", streamBatchId = streamBatchId))
+        }
+      } catch {
+        // a refused write backs its schema entry out: no version reads it
+        // (an unpublished claimed dir is vacuum's to reclaim)
+        case e: Throwable => fs.delete(dst, false); throw e
+      }
+    published.foreach { pub =>
       // keep an existing skipping manifest live over the appended files
       // (appendVersioned's invariant — without this a DRIFTED append
       // leaves the manifest stale and every later readSkipping refuses
@@ -4700,25 +4694,29 @@ object Lake {
     next
   }
 
-  /** Declare an existing PLAIN table's schema as chain version 1 — the
-    * bridge that lets [[appendVersioned]] accept a drifted batch on a
-    * table that never evolved before: v1 is written from the version
-    * manifest's DDL (no file reads), then the drifted batch publishes v2
-    * through [[writeEvolving]]'s normal validation.
+  /** Publish schema-chain entry `v` — (name, catalog type) `fields` and
+    * from → to `renames` — refusing loudly when a writer already
+    * published it. Rename-to-existing fails on HDFS-like filesystems; the
+    * LOCAL filesystem silently replaces (POSIX rename), so the exists
+    * check carries the guard there, with a residual check-then-rename
+    * window (single-writer is the local contract).
     */
-  private def bootstrapSchemaChain(fs: org.apache.hadoop.fs.FileSystem,
-      hp: org.apache.hadoop.fs.Path, fields: Seq[(String, String)]): Unit = {
-    fs.mkdirs(new org.apache.hadoop.fs.Path(hp, "_graft_schema"))
-    val fieldsJson = fields.map { case (n, t) =>
-      s"""{"name":${jsonStr(n)},"type":${jsonStr(t)}}""" }.mkString("[", ",", "]")
-    val tmp = new org.apache.hadoop.fs.Path(hp, "_graft_schema/.v=1.tmp")
-    val dst = new org.apache.hadoop.fs.Path(hp, "_graft_schema/v=1.json")
+  private def publishSchemaEntry(fs: org.apache.hadoop.fs.FileSystem,
+      hp: org.apache.hadoop.fs.Path, v: Long, fields: Seq[(String, String)],
+      renames: Map[String, String]): org.apache.hadoop.fs.Path = {
+    def objs(kv: Seq[(String, String)], a: String, b: String) = kv.map {
+      case (x, y) => s"""{"$a":${jsonStr(x)},"$b":${jsonStr(y)}}""" }.mkString("[", ",", "]")
+    val tmp = new org.apache.hadoop.fs.Path(hp,
+      s"_graft_schema/.v=$v.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val dst = new org.apache.hadoop.fs.Path(hp, s"_graft_schema/v=$v.json")
     val out = fs.create(tmp, true)
-    out.write(
-      s"""{"version":1,"fields":$fieldsJson,"renames":[]}""".getBytes("UTF-8"))
+    out.write((s"""{"version":$v,"fields":${objs(fields, "name", "type")},""" +
+      s""""renames":${objs(renames.toSeq.sortBy(_._1), "from", "to")}}""").getBytes("UTF-8"))
     out.close()
     require(!fs.exists(dst) && fs.rename(tmp, dst),
-      s"schema chain already bootstrapped under $hp (concurrent writer?)")
+      s"schema version $v already published under $hp (concurrent writer?) " +
+        "- re-read schemaVersions and retry")
+    dst
   }
 
   def readEvolving(spark: SparkSession, path: String): DataFrame = {

@@ -231,11 +231,29 @@ class TablePropsSpec extends SparkSpec {
       assert(!(constrained && evolving),
         s"round $round: constrained and evolving ($addR, $evoR)")
       assert(constrained == addR.isSuccess, s"round $round: $addR")
-      // (a refused writeEvolving may leave its declared schema entry: its
-      // version publish is strict, and the constraint's own drop can win
-      // the number it races for)
-      assert(evolving || evoR.isFailure, s"round $round: $evoR")
+      // a refused writeEvolving leaves no schema entry, and its row lands
+      // exactly when it succeeds
+      assert(evolving == evoR.isSuccess, s"round $round: $evoR")
+      assert(Lake.readVersioned(spark, t).count() == (if (evolving) 11L else 10L),
+        s"round $round: $evoR")
     }
+  }
+
+  test("a schema evolution refused after its schema entry backs the entry out") {
+    val t = tmp() + "/evfail"
+    Lake.writeVersioned(spark, (1L to 10L).map(i => (i, i)).toDF("id", "v"), t)
+    val before = Lake.listVersions(spark, t)
+    // the batch fails only when its rows are written: after the schema
+    // entry published and the concurrent-constraint check passed
+    val boom = Seq((11L, 11L)).toDF("id", "v")
+      .withColumn("tag", expr("if(id > 0, raise_error('boom'), 'x')"))
+    intercept[Exception](Lake.writeEvolving(spark, boom, t))
+    assert(Lake.schemaVersions(spark, t).isEmpty)
+    assert(Lake.listVersions(spark, t) == before)
+    assert(Lake.readVersioned(spark, t).count() == 10L)
+    Lake.writeEvolving(spark, Seq((11L, 11L, "x")).toDF("id", "v", "tag"), t)
+    assert(Lake.schemaVersions(spark, t) == Seq(1L))
+    assert(Lake.readVersioned(spark, t).count() == 11L)
   }
 
   test("alter commits: the change feed skips them, views and the replay gate see through") {
