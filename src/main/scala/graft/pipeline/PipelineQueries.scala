@@ -1076,8 +1076,8 @@ object PipelineQueries {
     //      added column for era-1 rows; the oracle recomputes both eras
     //      from raw events, so a dropped era, a misfolded rename, or a
     //      phantom non-null `source` all break the hash. The reader builds
-    //      its schema from the _graft_schema manifests — no mergeSchema
-    //      footer sweep (Lake.writeEvolving scaladoc). ----
+    //      its schema from the schema log in the version manifest — no
+    //      mergeSchema footer sweep (Lake.writeEvolving scaladoc). ----
     QueryDef(
       "lake_schema_evolution",
       (sp, dir) => {
@@ -1801,8 +1801,8 @@ object PipelineQueries {
     // ---- SCHEMA DRIFT through the STREAMING append path: a versioned
     //      table built from early events takes a later batch that carries
     //      a NEW column (the upstream-drift event a 24/7 stream must
-    //      survive). appendVersioned bootstraps the schema chain and
-    //      publishes the drifted batch with the commit; the read then
+    //      survive). appendVersioned starts the schema log and
+    //      publishes it with the drifted batch in one commit; the read then
     //      spans both schema eras (old files resolve the new column as
     //      null). The oracle recomputes the same per-era aggregate from
     //      raw events — a dropped era, a misfolded column, or rows lost

@@ -171,15 +171,15 @@ object Lake {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(hp)
-    require(readSchemaManifests(spark, path).isEmpty,
-      s"$path is a schema-evolving table; append via writeEvolving (delete " +
-        "via deleteWhere) - writeVersioned would bypass the schema chain")
     // a full-snapshot overwrite of a column-mapped table would publish a
     // manifest WITHOUT the colmap, silently discarding the rename for a
     // caller still holding stale/physical names — refuse like every other
     // physical-schema op; materializeMapping first makes the logical names
     // physical, after which a snapshot is unambiguous again
     val m0 = headManifest(spark, fs, path)
+    require(m0.forall(_.schemaLog.isEmpty),
+      s"$path is a schema-evolving table; append via writeEvolving (delete " +
+        "via deleteWhere) - writeVersioned would bypass the schema log")
     refuseColMap(m0.fold(Seq.empty[(String, String)])(_.colmap), path,
       "writeVersioned")
     // the head's properties gate the batch; when a gate will read the
@@ -201,8 +201,8 @@ object Lake {
         batch.schema.toDDL, entries, props = base.fold(TableProps())(_.props))
       enforceNewProps(spark, fs, path, pub, entries.map(_._1), gate,
         s"writeVersioned($path)")
-      writeVersionManifest(spark, fs, path, pub.version, pub.schemaDdl, entries,
-        streamBatchId = streamBatchId, op = Some("snapshot"), props = pub.props)
+      writeVersionManifest(fs, path, pub.copy(streamBatchId = streamBatchId),
+        op = Some("snapshot"))
       writeVersionPointer(spark, fs, path, pub.version)
       pub.version
     } finally { if (gate.gates) dfIn.unpersist(); () }
@@ -240,47 +240,11 @@ object Lake {
     streamBatchId.foreach { bid =>
       if (streamBatchCommitted(spark, path, bid)) return headVersion(fs, path)
     }
-    // SCHEMA EVOLUTION IS NOT A REFUSAL: a 24/7 stream appending through
-    // this path must survive upstream column drift. Three cases:
-    //   1. evolving table, batch matches the current LOGICAL schema →
-    //      plain delta append below (no new chain entry — per-batch
-    //      chain growth would pile thousands of identical versions).
-    //   2. evolving table, batch schema DRIFTED → the drift publishes the
-    //      next schema-chain entry WITH the commit (writeEvolving, which
-    //      validates the drift is additive/widening and stamps the
-    //      version delta with this batch id).
-    //   3. PLAIN versioned table, batch schema drifted → the chain is
-    //      bootstrapped (v1 = the table's current schema, declared from
-    //      the manifest DDL — no file reads) and the batch lands as
-    //      schema v2 via writeEvolving. Invalid drift (dropped column,
-    //      narrowing) still refuses, loudly, inside writeEvolving.
-    // writeEvolving returns the SCHEMA version; this method's contract is
-    // the TABLE version, re-read as the head after an evolving delegation
-    val priors = readSchemaManifests(spark, path)
-    if (priors.nonEmpty) {
-      // an evolving table carries no column mapping (renameColumns and
-      // dropColumns refuse it) and no generated columns (addGeneratedColumn
-      // and writeEvolving refuse the pair), so the batch's names are the
-      // table's
-      if (df.schema.fields.map(f => f.name -> f.dataType.catalogString)
-          .toSeq != logicalSchema(priors)) {
-        if (fs.exists(versionsDir(path))) {
-          writeEvolving(spark, df, path, streamBatchId = streamBatchId)
-          return headVersion(fs, path)
-        } else {
-          // evolving-but-unversioned: land the drifted batch, then adopt
-          // ALL files (batch included) as version 1 carrying this batch id
-          writeEvolving(spark, df, path)
-          bootstrapRootVersion(spark, fs, path, streamBatchId)
-          return 1L
-        }
-      }
-    }
     // the manifests are the only versions. An unversioned dir holding data
-    // files is a plain (or evolving) table: its files become version 1, the
-    // adopt rule deleteWhere, mergeInto and stageAppend follow, and the
-    // batch appends to them. An empty dir, or one holding only a crashed
-    // commit's claimed dir, starts at this batch.
+    // files is a plain table: its files become version 1, the adopt rule
+    // deleteWhere, mergeInto and stageAppend follow, and the batch appends
+    // to them. An empty dir, or one holding only a crashed commit's
+    // claimed dir, starts at this batch.
     if (manifestVersions(fs, path).isEmpty) {
       if (!holdsTableData(fs, hp))
         return writeVersioned(spark, df, path, streamBatchId)
@@ -291,16 +255,14 @@ object Lake {
     // when a gate will read the batch, it is persisted around gate +
     // write so the caller's (possibly expensive) plan runs once, not twice
     val dfIn = if (m0.props.gates) df.persist() else df
-    try appendAt(spark, fs, path, dfIn, m0, priors.isEmpty, streamBatchId)
+    try appendAt(spark, fs, path, dfIn, m0, streamBatchId)
     finally { if (m0.props.gates) dfIn.unpersist(); () }
   }
 
-  /** [[appendVersioned]] of `df` over head `m0` (`plain`: the table has
-    * no schema chain).
-    */
+  /** [[appendVersioned]] of `df` over head `m0`. */
   private def appendAt(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String, df: DataFrame,
-      m0: VersionManifest, plain: Boolean, streamBatchId: Option[Long]): Long = {
+      m0: VersionManifest, streamBatchId: Option[Long]): Long = {
     val gate = m0.props
     // GENERATED columns first: compute the ones the batch omits, validate
     // the ones it carries — before any schema logic, so an omitted
@@ -324,48 +286,20 @@ object Lake {
       }
     val batchFields = dfP.schema.fields
       .map(f => f.name -> f.dataType.catalogString).toSeq
-    if (plain) {
-      val cur = org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
-        .fields.map(f => f.name -> f.dataType.catalogString).toSeq
-      if (batchFields != cur) {
-        // a column-mapped table cannot drift into the evolving chain: the
-        // chain's fold logic knows nothing of the physical-name map
-        require(m0.colmap.isEmpty,
-          s"appendVersioned($path): schema drift on a column-mapped table " +
-            "is not supported - materializeMapping first")
-        // constraint gate BEFORE the chain bootstrap: writeEvolving would
-        // refuse a constrained table anyway, but only after the chain
-        // manifest existed — leaving the forbidden constrained+evolving
-        // state on disk for every later operation to trip over
-        require(gate.checks.isEmpty,
-          s"$path carries CHECK constraints; a schema-drifting append " +
-            "would bypass their enforcement - drop them first")
-        require(gate.generated.isEmpty,
-          s"$path carries GENERATED columns; a schema-drifting append " +
-            "would bypass their derivation - drop them first")
-        // drift gate BEFORE the chain bootstrap, same reason as the
-        // constraint gate above: writeEvolving would refuse an invalid
-        // drift (dropped / narrowed column) anyway, but only after the v1
-        // chain manifest existed — permanently flipping the plain table
-        // into evolving mode (writeVersioned thereafter refuses). Validate
-        // against the CURRENT schema first so a refusal leaves no state.
-        cur.foreach { case (name, tpe) =>
-          require(batchFields.exists(_._1 == name),
-            s"column '$name' is missing from the appended frame; dropping " +
-              "columns is not supported - carry it (null-filled if needed)")
-          val newTpe = batchFields.find(_._1 == name).get._2
-          require(newTpe == tpe || widens(tpe, newTpe),
-            s"column '$name' changes type $tpe -> $newTpe; only lossless " +
-              "widening (tinyint<smallint<int<bigint, float<double) is " +
-              "supported")
-        }
-        // the bridge to the chain: v1 declares the table's current schema
-        // (no file reads), and the batch publishes v2 through writeEvolving
-        publishSchemaEntry(fs, new org.apache.hadoop.fs.Path(path), 1L, cur, Map.empty)
-        writeEvolving(spark, df, path, streamBatchId = streamBatchId)
-        return headVersion(fs, path)
-      }
-    }
+    // SCHEMA EVOLUTION IS NOT A REFUSAL: a 24/7 stream appending through
+    // this path must survive upstream column drift. A DRIFTED batch
+    // publishes the schema log's next entry WITH its files in one
+    // evolve-append commit (the same validation as writeEvolving: additive
+    // or widening only, stamped with this batch id); on a plain table the
+    // log starts as [current schema, batch schema]. A batch matching the
+    // current schema is a plain delta append (no log entry — per-batch log
+    // growth would pile thousands of identical versions)
+    val cur = org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
+      .fields.map(f => f.name -> f.dataType.catalogString).toSeq
+    if (batchFields != cur)
+      return evolve(spark, fs, path, df, Some(m0), Map.empty, streamBatchId,
+        if (m0.schemaLog.nonEmpty) m0.schemaLog
+        else Seq(SchemaVersion(1L, cur, Nil)))._2.version
     def schemaCheck(baseDdl: String): Unit = {
       val prior = org.apache.spark.sql.types.StructType.fromDDL(baseDdl)
       require(batchFields ==
@@ -506,7 +440,7 @@ object Lake {
     * against versioned/evolving/plain Lake tables alike. Resolution
     * picks the strongest table shape: version manifests (current
     * published version, or `version` for a named time-travel view) →
-    * schema chain → plain parquet dir. Re-registering replaces the view.
+    * plain parquet dir. Re-registering replaces the view.
     *
     * The view captures the MANIFEST RESOLUTION at registration time (a
     * Spark temp view holds the logical plan): re-register after commits
@@ -523,8 +457,7 @@ object Lake {
       else {
         require(version.isEmpty,
           s"$path carries no version manifests; cannot register version $version")
-        if (readSchemaManifests(spark, path).nonEmpty) readEvolving(spark, path)
-        else readParquet(spark, path)
+        readParquet(spark, path)
       }
     df.createOrReplaceTempView(name)
   }
@@ -573,9 +506,11 @@ object Lake {
       s"readChangeFeed: fromVersion $fromVersion > toVersion $toVersion")
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoColMap(spark, fs, path, "readChangeFeed")  // feed rows would expose
-    // physical names, and deltas across a rename version would mix eras
     require(fs.exists(versionsDir(path)), s"no versions under $path")
+    // feed rows would expose physical names, and deltas across a rename
+    // version would mix eras
+    val head = resolveHead(spark, fs, path)._2
+    refuseColMap(head.colmap, path, "readChangeFeed")
     val all = manifestVersions(fs, path)
     val inRange = all.filter(v => v >= fromVersion && v <= toVersion)
     // a version vacuumed out of the requested range must REFUSE, never be
@@ -609,9 +544,11 @@ object Lake {
               " retention; recompute downstream state in full")
           Nil
       }
-    // a stand-in manifest carrying only what readFilesWithDv consults
+    // a stand-in manifest carrying only what readFilesWithDv consults;
+    // every commit's files read through the head's schema log, so the
+    // commits before a schema evolution resolve the evolved schema
     def dvView(ddl: String, dvs: Seq[DvEntry]) =
-      VersionManifest(0L, ddl, Nil, dvs)
+      VersionManifest(0L, ddl, Nil, dvs, schemaLog = head.schemaLog)
     def tombFrame(dvs: Seq[DvEntry]): DataFrame = readTombstones(spark, fs,
       dvs.map(d => resolveRef(root, d.dv)))
     val parts: Seq[DataFrame] = inRange.flatMap { v =>
@@ -1303,9 +1240,9 @@ object Lake {
     refuseColMap(m0.colmap, viewPath, "mergeInto")
     refuseDvs(m0.dvs, viewPath, "mergeInto")
     val root = rootPath(fs, hp)
-    val evolving = readSchemaManifests(spark, viewPath).nonEmpty
-    lazy val view = readSomeFiles(spark, fs, viewPath,
-      m0.entries.map(e => resolveRef(root, e._1)), m0.schemaDdl)
+    val evolving = m0.schemaLog.nonEmpty
+    lazy val view = readSomeFiles(spark, fs,
+      m0.entries.map(e => resolveRef(root, e._1)), m0)
     val viewSchema =
       if (evolving) view.schema else StructType.fromDDL(m0.schemaDdl)
     val viewTypes = viewSchema.map(f => f.name -> f.dataType).toMap
@@ -1795,9 +1732,9 @@ object Lake {
         "references cannot cross them - deep-copy instead")
     val rel = java.nio.file.Paths.get(rootPath(dfs, dhp))
       .relativize(java.nio.file.Paths.get(rootPath(sfs, shp))).toString
-    writeVersionManifest(spark, dfs, dstPath, 1L, m.schemaDdl,
-      m.entries.map { case (f, n) => (s"$rel/$f", n) }, op = Some("clone"),
-      colmap = m.colmap, props = m.props)
+    writeVersionManifest(dfs, dstPath, m.copy(version = 1L,
+      entries = m.entries.map { case (f, n) => (s"$rel/$f", n) },
+      streamBatchId = None), op = Some("clone"))
     writeVersionPointer(spark, dfs, dstPath, 1L)
     1L
   }
@@ -1826,11 +1763,11 @@ object Lake {
     require(renames.nonEmpty, "renameColumns: empty rename set")
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(readSchemaManifests(spark, path).isEmpty,
-      s"$path is a schema-evolving table; rename through writeEvolving's " +
-        "renames parameter instead")
     if (!fs.exists(versionsDir(path))) bootstrapRootVersion(spark, fs, path)
     val (v0, m0) = resolveHead(spark, fs, path)
+    require(m0.schemaLog.isEmpty,
+      s"$path is a schema-evolving table; rename through writeEvolving's " +
+        "renames parameter instead")
     val cm0: Seq[(String, String)] =
       if (m0.colmap.nonEmpty) m0.colmap
       else org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
@@ -1871,11 +1808,11 @@ object Lake {
     require(cols.nonEmpty, "dropColumns: empty column set")
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(readSchemaManifests(spark, path).isEmpty,
-      s"$path is a schema-evolving table; evolving drops are refused by " +
-        "design (writeEvolving's carry-or-rename contract)")
     if (!fs.exists(versionsDir(path))) bootstrapRootVersion(spark, fs, path)
     val (v0, m0) = resolveHead(spark, fs, path)
+    require(m0.schemaLog.isEmpty,
+      s"$path is a schema-evolving table; evolving drops are refused by " +
+        "design (writeEvolving's carry-or-rename contract)")
     val phys = org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
     val cm0: Seq[(String, String)] =
       if (m0.colmap.nonEmpty) m0.colmap
@@ -1915,8 +1852,9 @@ object Lake {
     val logical = readManifestFiles(spark, fs, path, m0)
     val (_, entries) = writeClaimedDir(spark, fs, path, logical)
     val next = v0 + 1
-    writeVersionManifest(spark, fs, path, next, logical.schema.toDDL,
-      entries, op = Some("remap"), props = m0.props)
+    writeVersionManifest(fs, path, VersionManifest(next,
+      logical.schema.toDDL, entries, props = m0.props, schemaLog = m0.schemaLog),
+      op = Some("remap"))
     writeVersionPointer(spark, fs, path, next)
     (next, entries.size.toLong)
   }
@@ -2003,11 +1941,10 @@ object Lake {
     * pipeline wants: audit first, destroy second.
     *
     * Works on any table shape: versioned tables delete in place; a plain
-    * or schema-evolving table is BOOTSTRAPPED (current files become
-    * version 1) and the delete publishes version 2 — evolved tables
-    * resolve through their schema manifests on every read and rewrite,
-    * and the rewritten files carry the latest logical schema (the same
-    * invariant as [[compact]] on an evolved table).
+    * table is BOOTSTRAPPED (current files become version 1) and the
+    * delete publishes version 2 — evolved tables resolve through their
+    * schema log on every read and rewrite, and the rewritten files carry
+    * the latest logical schema.
     *
     * Isolation: by default a delete that loses the commit race REBASES
     * over disjoint winners (see [[publishNonCommuting]]) — rows APPENDED
@@ -2063,7 +2000,7 @@ object Lake {
           readFilesWithDvTagged(spark, fs, path, m0, candidates)
             .filter(pred).select(col(DvSrcFileCol)).distinct()
             .collect().map(r => resolveRef(root, r.getString(0))).toSet
-        else readSomeFiles(spark, fs, path, candidates, m0.schemaDdl)
+        else readSomeFiles(spark, fs, candidates, m0)
           .filter(pred).select(input_file_name().as("f")).distinct()
           .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
       if (matched.isEmpty) return (v0, v0, 0L)
@@ -2084,17 +2021,12 @@ object Lake {
       val (_, rewritten) = writeClaimedDir(spark, fs, path,
         if (fs.exists(statsDir)) survivors
         else survivors.coalesce(commitFileParts(matchedEntries.map(_._2).sum)))
-      // an evolved rewrite lands latest-LOGICAL-schema files (compact's
-      // invariant); the manifest schema follows
-      val ddl =
-        if (readSchemaManifests(spark, path).nonEmpty) logicalDdl(spark, path)
-        else m0.schemaDdl
       // O(changed-files) delta commit with disjoint-set conflict handling:
       // a concurrent commit that touched NONE of our matched files (append,
       // disjoint delete) rebases this delete behind it; a commit that
       // removed one of them refuses loudly (our rewrite would resurrect
       // rows it dropped) — see publishNonCommuting
-      val pub = publishNonCommuting(spark, fs, path, m0, ddl,
+      val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
         add = rewritten, remove = matchedEntries.map(_._1), op = "delete")
       // keep an existing skipping manifest live: the rewritten files gain
       // stats rows incrementally (O(rewritten), not a corpus re-scan)
@@ -2134,8 +2066,8 @@ object Lake {
         readRawManifest(spark, fs, path, w).toSeq.flatMap(_.add.map(_._1)))
         .distinct.filter(liveFiles)
       if (winnerAdds.isEmpty) return (next, total)
-      val anyMatch = winnerAdds.nonEmpty && !readSomeFiles(spark, fs, path,
-        winnerAdds.map(f => resolveRef(root, f)), live.schemaDdl).filter(pred).isEmpty
+      val anyMatch = winnerAdds.nonEmpty && !readSomeFiles(spark, fs,
+        winnerAdds.map(f => resolveRef(root, f)), live).filter(pred).isEmpty
       if (!anyMatch) return (next, total)
       val r = onePass()
       v0 = r._1; next = r._2; total += r._3
@@ -2171,7 +2103,7 @@ object Lake {
     *    discovery pass are not re-screened (pass `strict` there for that).
     *
     * Schema-evolving tables refuse (their reads resolve through the
-    * column-mapping projection, which has no `_metadata` contract);
+    * rename-fold projection, which has no `_metadata` contract);
     * copy-on-write [[deleteWhere]] covers them.
     *
     * @return (published version, rows tombstoned); (current, 0) when
@@ -2183,11 +2115,11 @@ object Lake {
     import org.apache.spark.sql.functions.col
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(readSchemaManifests(spark, path).isEmpty,
-      s"$path is a schema-evolving table; deletion vectors need the " +
-        "fixed-schema read path - use the copy-on-write deleteWhere")
     if (!fs.exists(versionsDir(path))) bootstrapRootVersion(spark, fs, path)
     val (v0, m0) = resolveHead(spark, fs, path)
+    require(m0.schemaLog.isEmpty,
+      s"$path is a schema-evolving table; deletion vectors need the " +
+        "fixed-schema read path - use the copy-on-write deleteWhere")
     refuseColMap(m0.colmap, path, "deleteWhereDv")
     val root = rootPath(fs, hp)
     val statsDir = new org.apache.hadoop.fs.Path(path, "_graft_stats")
@@ -2449,8 +2381,6 @@ object Lake {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hp)) None
-    else if (readSchemaManifests(spark, path).nonEmpty)
-      Some(logicalDdl(spark, path))
     else if (listDataFiles(fs, hp).nonEmpty)
       Some(readParquet(spark, path).schema.toDDL)
     else None
@@ -2481,8 +2411,7 @@ object Lake {
         broadcast(spark.createDataFrame(
           java.util.Arrays.asList(pdf.collect(): _*), pdf.schema))
       } else source.select(keyCols.map(col): _*)
-    readSomeFiles(spark, fs, path, m0.entries.map(e => resolveRef(root, e._1)),
-      m0.schemaDdl)
+    readSomeFiles(spark, fs, m0.entries.map(e => resolveRef(root, e._1)), m0)
       .withColumn("_graft_file", input_file_name())
       .select((keyCols.map(col) :+ col("_graft_file")): _*)
       .join(probe, keyCols, "inner")
@@ -2608,7 +2537,7 @@ object Lake {
       // input_file_name is undefined)
       val fileArms: Seq[(String, Long, Long)] =
         if (candidates.isEmpty) Seq.empty
-        else readSomeFiles(spark, fs, path, candidates, m0.schemaDdl)
+        else readSomeFiles(spark, fs, candidates, m0)
           .withColumn("_graft_file", input_file_name())
           .select((keyCols.map(col) :+ col("_graft_file")): _*)
           .join(probe, keyCols, "inner")
@@ -2652,8 +2581,7 @@ object Lake {
       keysOut: DataFrame, keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
     val root = rootPath(fs, new org.apache.hadoop.fs.Path(path))
-    readSomeFiles(spark, fs, path,
-        matchedEntries.map(e => resolveRef(root, e._1)), m0.schemaDdl)
+    readSomeFiles(spark, fs, matchedEntries.map(e => resolveRef(root, e._1)), m0)
       .join(keysOut, keyCols, "left_anti")
       .select(org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
         .fieldNames.map(col): _*)
@@ -2771,7 +2699,7 @@ object Lake {
       s"commitStreamVersion($path): table declares GENERATED columns; " +
         "adopted stream files were written outside the derivation gate - " +
         "append through appendVersioned, or drop the generated spec")
-    require(readSchemaManifests(spark, path).isEmpty,
+    require(base.forall(_.schemaLog.isEmpty),
       s"$path is a schema-evolving table; streamed commits assume the " +
         "sink's fixed schema (evolve via writeEvolving, not a stream)")
     if (streamBatchId.exists(streamBatchCommitted(spark, path, _)))
@@ -2796,8 +2724,8 @@ object Lake {
         val rf = rootFiles()
         if (rf.isEmpty) return None
         val adopted = readParquet(spark, path, rf)
-        writeVersionManifest(spark, fs, path, 1L, adopted.schema.toDDL,
-          fileEntries(spark, fs, path, rf), streamBatchId = streamBatchId,
+        writeVersionManifest(fs, path, VersionManifest(1L, adopted.schema.toDDL,
+          fileEntries(spark, fs, path, rf), streamBatchId = streamBatchId),
           op = Some("stream-adopt"))
         writeVersionPointer(spark, fs, path, 1L)
         return Some(1L)
@@ -2916,13 +2844,21 @@ object Lake {
     if (resCs.nonEmpty)
       enforceConstraintsOn(spark, readManifestFiles(spark, fs, path, m), resCs,
         s"restoreVersion($path, v=$v)")
+    // the restored version's schema log describes its files, and the
+    // head's properties never join a schema log (publishNonCommuting's
+    // rule)
+    require(m.schemaLog.isEmpty || !head.props.gates,
+      s"restoreVersion($path, v=$v): version $v is schema-evolving and " +
+        "the table carries CHECK constraints or GENERATED columns - drop " +
+        "them first")
     val next = head.version + 1
     // the restored version's live deletion vectors travel with it — a
     // restore to a pre-purge version re-applies that version's sidecars —
-    // and so does its column mapping (restoring past a rename restores
-    // that version's own logical names); published strictly at head + 1
-    writeVersionManifest(spark, fs, path, next, m.schemaDdl, m.entries,
-      op = Some("restore"), dv = m.dvs, colmap = m.colmap, props = head.props)
+    // and so do its column mapping (restoring past a rename restores
+    // that version's own logical names) and its schema log; published
+    // strictly at head + 1
+    writeVersionManifest(fs, path, m.copy(version = next,
+      streamBatchId = None, props = head.props), op = Some("restore"))
     writeVersionPointer(spark, fs, path, next)
     next
   }
@@ -2956,16 +2892,17 @@ object Lake {
       sqlExpr: String): Unit = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
       s"constraint name '$name' must be [A-Za-z0-9_]+")
-    // schema-evolving tables are refused: writeEvolving bypasses the
-    // versioned-commit gates, and a rename could silently detach the
-    // constraint from the column it was written against — an unenforced
-    // constraint is worse than none
-    require(readSchemaManifests(spark, path).isEmpty,
-      s"$path is a schema-evolving table; CHECK constraints require the " +
-        "fixed-schema versioned write path")
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (_, m0) = resolveHead(spark, fs, path)
+    // schema-evolving tables are refused: writeEvolving bypasses the
+    // versioned-commit gates, and a rename could silently detach the
+    // constraint from the column it was written against — an unenforced
+    // constraint is worse than none. An evolution that lands concurrently
+    // makes this alter's rebase refuse (publishNonCommuting)
+    require(m0.schemaLog.isEmpty,
+      s"$path is a schema-evolving table; CHECK constraints require the " +
+        "fixed-schema versioned write path")
     refuseColMap(m0.colmap, path, "addCheckConstraint")
     require(!m0.props.checks.exists(_._1 == name),
       s"constraint '$name' already exists on $path (drop it first)")
@@ -2973,21 +2910,6 @@ object Lake {
       Seq(name -> sqlExpr), s"addCheckConstraint($name) on existing data of $path")
     publishAlter(spark, fs, path, m0, m0.props.copy(
       checks = (m0.props.checks :+ (name -> sqlExpr)).sortBy(_._1)))
-    // cross-check against a concurrent writeEvolving: both sides re-check
-    // the other's artifact after publishing their own, and the CONSTRAINT
-    // side yields by committing its own drop — whoever publishes second
-    // must observe the first, so the forbidden constrained-evolving state
-    // cannot persist (writeEvolving's v1 publish runs the mirror check).
-    // The drop rebases over the evolving writer's version commit (an
-    // alter rebases over a schema change)
-    if (readSchemaManifests(spark, path).nonEmpty) {
-      scala.util.Try(dropCheckConstraint(spark, path, name)).failed.foreach(e =>
-        throw new IllegalStateException(s"$path started schema evolution " +
-          s"concurrently and constraint '$name' could not be dropped again; " +
-          "it is still present - drop it before the next write", e))
-      sys.error(s"$path started schema evolution concurrently; " +
-        "constraint dropped again - constraints require the fixed-schema path")
-    }
   }
 
   // ======================================================================
@@ -3016,12 +2938,12 @@ object Lake {
     import org.apache.spark.sql.functions.expr
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
       s"generated column name '$name' must be [A-Za-z0-9_]+")
-    require(readSchemaManifests(spark, path).isEmpty,
-      s"$path is a schema-evolving table; generated columns require the " +
-        "fixed-schema versioned write path")
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (_, m0) = resolveHead(spark, fs, path)
+    require(m0.schemaLog.isEmpty,
+      s"$path is a schema-evolving table; generated columns require the " +
+        "fixed-schema versioned write path")
     refuseColMap(m0.colmap, path, "addGeneratedColumn")
     val cur = readManifestFiles(spark, fs, path, m0)
     require(cur.schema.fieldNames.contains(name),
@@ -3232,11 +3154,8 @@ object Lake {
         // checkpoint: asOf resolution and batch-replay idempotence must
         // behave identically before and after a vacuum
         val orig = readRawManifest(spark, fs, path, v)
-        writeVersionManifest(spark, fs, path, v, m.schemaDdl, m.entries,
-          replace = true, ts = orig.flatMap(_.ts),
-          streamBatchId = orig.flatMap(_.streamBatchId),
-          op = orig.flatMap(_.op), dv = m.dvs, colmap = m.colmap,
-          props = m.props)
+        writeVersionManifest(fs, path, m, orig.flatMap(_.op),
+          replace = true, ts = orig.flatMap(_.ts))
       }
     }
     val root = rootPath(fs, hp)
@@ -3351,12 +3270,9 @@ object Lake {
       readFilesWithDv(spark, fs, path, m0,
         small.map(e => resolveRef(root, e._1._1)))
         .coalesce(nOut)) // NARROW: compaction moves bytes, never an exchange
-    val ddl =
-      if (readSchemaManifests(spark, path).nonEmpty) logicalDdl(spark, path)
-      else m0.schemaDdl
     // disjoint-set commit: maintenance must not starve under a steady
     // append stream — concurrent appends rebase this fold behind them
-    val pub = publishNonCommuting(spark, fs, path, m0, ddl,
+    val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
       add = folded, remove = small.map(_._1._1), op = "optimize")
     // keep an existing skipping manifest live over the folded files
     keepStatsLive(spark, fs, path, pub)
@@ -3481,13 +3397,10 @@ object Lake {
     val (_, rewritten) = writeClaimedDir(spark, fs, path,
       readManifestFiles(spark, fs, path, m0)
         .repartitionByRange(nOut.toInt, col(c)))
-    val ddl =
-      if (readSchemaManifests(spark, path).nonEmpty) logicalDdl(spark, path)
-      else m0.schemaDdl
     // checkpoint-form commit with disjoint-set rebase: a concurrent
     // append's files ride into the new manifest un-reorganized (row-
     // correct; the next pass organizes them)
-    val pub = publishNonCommuting(spark, fs, path, m0, ddl,
+    val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
       add = rewritten, remove = m0.entries.map(_._1), op = "rerange",
       full = true)
     // the re-range key ALWAYS ends up tracked (rerange's contract): with c
@@ -3573,19 +3486,23 @@ object Lake {
     * DISJOINT-SET conflict detection — Delta's WriteSerializable rule
     * instead of refuse-on-any-race. The commit's add/remove sets were
     * computed against base `v0`; if another commit wins the version
-    * number, the winner chain `v0+1..head` is inspected:
+    * number, the winner chain `v0+1..head` is inspected, each winner's
+    * change being its file set against its predecessor's (a delta's
+    * add/remove; a checkpoint — an append past [[MaxChainDepth]], zorder,
+    * rerange — lists the whole table, so only the diff tells):
     *
-    *   - every winner is a DELTA that removed NO file this commit removes
-    *     and left the schema unchanged → the two commits touch disjoint
-    *     file sets, so they COMMUTE at file granularity; REBASE: republish
-    *     the same add/remove against the new head (data files already on
-    *     disk are never rewritten). This is what lets maintenance
+    *   - every winner removed NO file this commit removes and left the
+    *     schema unchanged → the two commits touch disjoint file sets, so
+    *     they COMMUTE at file granularity; REBASE: republish the same
+    *     add/remove against the new head (data files already on disk are
+    *     never rewritten). This is what lets maintenance
     *     (optimize/zorder/rerange) and takedown deletes land under a
     *     steady append stream instead of starving.
     *   - a winner removed one of OUR removed files (our rewrite is stale —
     *     rewriting it would resurrect rows the winner dropped), replaced
-    *     the table wholesale (snapshot commit), or changed the schema →
-    *     REFUSE loudly; the caller must recompute against the new state.
+    *     the table wholesale (snapshot or restore commit), or changed the
+    *     schema → REFUSE loudly; the caller must recompute against the new
+    *     state.
     *
     * Semantics note: rows APPENDED by a winner that would have matched a
     * rebased delete's predicate are NOT deleted — the delete applies to
@@ -3599,17 +3516,20 @@ object Lake {
     *
     * `full = true` publishes checkpoint-form manifests (zorder/rerange
     * replace ~every reference, so a delta would be checkpoint-sized with
-    * none of the O(1)-resolution benefit); the rebase then resolves the
-    * new head and applies the same set algebra.
+    * none of the O(1)-resolution benefit).
     *
-    * TABLE PROPERTIES follow [[enforceNewProps]]'s rule: the caller gated
+    * TABLE METADATA follows [[enforceNewProps]]'s rule: the caller gated
     * its batch against `m0.props`, so a rebase onto a head whose
     * properties gained a constraint or spec enforces it on `add`. An
     * ALTER commit (`props` defined: the whole new property set, no add,
     * no remove) refuses over a winner that changed the properties or the
     * column mapping (its set was derived from `m0`'s), keeps the schema of
     * the base it lands on, and applies its new properties to the files
-    * the winners added before rebasing.
+    * the winners added before rebasing. A schema-evolving commit
+    * (`schemaLog` defined: the whole new log) refuses over a winner that
+    * changed the log or the column mapping. And no rebase publishes a
+    * schema log together with CHECK constraints or generated columns:
+    * evolved reads bypass the gates that enforce them.
     *
     * @return the manifest published, as `m0` (or the head it rebased
     *         onto) plus this commit — what the caller's upkeep covers
@@ -3620,7 +3540,8 @@ object Lake {
       op: String, full: Boolean = false,
       dvAdd: Seq[DvEntry] = Nil, readSet: Set[String] = Set.empty,
       streamBatchId: Option[Long] = None,
-      props: Option[TableProps] = None): VersionManifest = {
+      props: Option[TableProps] = None,
+      schemaLog: Option[Seq[SchemaVersion]] = None): VersionManifest = {
     val ourRemove = remove.toSet
     var base = m0
     var attempts = 0
@@ -3636,71 +3557,76 @@ object Lake {
         val pub =
           if (full) {
             val p = applyCommit(base, next, ddl, add, remove, dvAdd,
-              streamBatchId = streamBatchId, props = props).copy(depth = 0L)
-            writeVersionManifest(spark, fs, path, next, ddl, p.entries,
-              op = Some(op), dv = p.dvs, colmap = p.colmap,
-              streamBatchId = streamBatchId, props = p.props)
+              streamBatchId = streamBatchId, props = props,
+              schemaLog = schemaLog).copy(depth = 0L)
+            writeVersionManifest(fs, path, p, Some(op))
             p
           } else
             writeVersionDelta(spark, fs, path, next, ddl,
               base = base, add = add, remove = remove, op = Some(op),
-              dvAdd = dvAdd, streamBatchId = streamBatchId, props = props)
+              dvAdd = dvAdd, streamBatchId = streamBatchId, props = props,
+              schemaLog = schemaLog)
         writeVersionPointer(spark, fs, path, next)
         return pub
       } catch {
         case _: IllegalArgumentException
             if fs.exists(versionManifestFile(path, next)) =>
-          val head = manifestVersions(fs, path).last
-          (next to head).foreach { w =>
+          def lost(why: String): String =
+            s"$op($path): version $next already published — concurrent " +
+              s"commit $why; recompute against the new state"
+          val prev = base
+          (next to manifestVersions(fs, path).last).foreach { w =>
             val raw = readRawManifest(spark, fs, path, w).getOrElse(
               sys.error(s"version $w vanished under $path mid-rebase"))
-            require(raw.base.isDefined,
-              s"$op($path): version $next already published — concurrent " +
-                s"SNAPSHOT commit $w replaced the table; recompute " +
-                "against the new state")
+            require(!raw.op.exists(Set("snapshot", "restore")),
+              lost(s"$w replaced the table (${raw.op.get})"))
+            val cur = resolveRaw(raw, b =>
+              if (b == base.version) base
+              else readVersionManifest(spark, fs, path, b).getOrElse(
+                sys.error(s"version $b vanished under $path mid-rebase")))
+            val curFiles = cur.entries.map(_._1).toSet
+            val removed = base.entries.map(_._1).toSet -- curFiles
             // a winner keeping the schema this commit read, or landing the
             // one it publishes, leaves its files readable; an alter adds no
             // file and rebases over any schema
-            require(props.isDefined || raw.schemaDdl == m0.schemaDdl ||
-                raw.schemaDdl == schemaDdl,
-              s"$op($path): version $next already published — concurrent " +
-                s"commit $w changed the table schema; recompute against " +
-                "the new state")
-            // a delta carries props or a colmap only where it sets them
-            require(props.isEmpty || (raw.props.forall(_ == m0.props) &&
-                (raw.colmap.isEmpty || raw.colmap == m0.colmap)),
-              s"$op($path): version $next already published — concurrent " +
-                s"commit $w changed the table properties or column mapping; " +
-                "recompute against the new state")
-            val overlap = raw.remove.toSet.intersect(ourRemove)
+            require(props.isDefined || cur.schemaDdl == m0.schemaDdl ||
+                cur.schemaDdl == schemaDdl,
+              lost(s"$w changed the table schema"))
+            require((props.isEmpty || cur.props == m0.props) &&
+                (schemaLog.isEmpty || cur.schemaLog == m0.schemaLog) &&
+                (props.isEmpty && schemaLog.isEmpty || cur.colmap == m0.colmap),
+              lost(s"$w changed the table properties, schema log or column " +
+                "mapping"))
+            val overlap = removed.intersect(ourRemove)
             require(overlap.isEmpty,
-              s"$op($path): version $next already published — concurrent " +
-                s"commit $w removed file(s) this commit also rewrites " +
-                s"(${overlap.take(3).mkString(", ")}); recompute against " +
-                "the current version")
+              lost(s"$w removed file(s) this commit also rewrites " +
+                s"(${overlap.take(3).mkString(", ")})"))
             // deletion-vector disjointness, both directions. A winner that
             // REWROTE a file we tombstoned would resurrect our deleted
             // rows (positions don't survive a rewrite); a winner that
             // TOMBSTONED a file we are removing wrote positions into a
             // file our rewrite is about to retire — its deletes would
             // silently evaporate.
-            val dvHit = raw.remove.toSet.intersect(readSet)
+            val dvHit = removed.intersect(readSet)
             require(dvHit.isEmpty,
-              s"$op($path): version $next already published — concurrent " +
-                s"commit $w rewrote file(s) this commit tombstones " +
-                s"(${dvHit.take(3).mkString(", ")}); recompute against " +
-                "the current version")
-            val dvLoss = raw.dvAdd.flatMap(_.files).toSet.intersect(ourRemove)
+              lost(s"$w rewrote file(s) this commit tombstones " +
+                s"(${dvHit.take(3).mkString(", ")})"))
+            val dvLoss = cur.dvs.filterNot(d => base.dvs.exists(_.dv == d.dv))
+              .flatMap(_.files).toSet.intersect(ourRemove)
             require(dvLoss.isEmpty,
-              s"$op($path): version $next already published — concurrent " +
-                s"commit $w added deletion vectors on file(s) this commit " +
-                s"rewrites (${dvLoss.take(3).mkString(", ")}); recompute " +
-                "against the current version")
+              lost(s"$w added deletion vectors on file(s) this commit " +
+                s"rewrites (${dvLoss.take(3).mkString(", ")})"))
+            base = cur
           }
-          // all winners file-disjoint: rebase onto the head and retry
-          val prev = base
-          base = readVersionManifest(spark, fs, path, head).getOrElse(
-            sys.error(s"version $head vanished under $path mid-rebase"))
+          // all winners file-disjoint: rebase onto the head and retry —
+          // unless the head plus this commit would hold a schema log
+          // together with CHECK constraints or generated columns
+          require(schemaLog.getOrElse(base.schemaLog).isEmpty ||
+              !props.getOrElse(base.props).gates,
+            lost("made the table " +
+              (if (schemaLog.isDefined) "constrained" else "schema-evolving") +
+              " - a schema-evolving table carries no CHECK constraints or " +
+              "GENERATED columns"))
           props match {
             case Some(p) =>
               // the previous base's rows are validated (m0's by the caller)
@@ -3773,7 +3699,8 @@ object Lake {
   // O(MaxChainDepth) metadata reads). vacuum materializes any retained
   // manifest whose chain passes through a dropped version before dropping
   // it, so resolution never dangles. Either shape may carry "props", the
-  // table's properties (a delta without it inherits its base's).
+  // table's properties, and "schemaLog", its schema-evolution log (a delta
+  // without one inherits its base's).
 
   /** One DELETION-VECTOR sidecar reference in a manifest: `dv` is the
     * tombstone parquet's table-relative path (rows `(file string, pos
@@ -3797,13 +3724,22 @@ object Lake {
     * projection is applied once at the read surface. Empty = identity
     * (no rename/drop ever committed) — the legacy form. `depth` is the
     * delta-chain depth on disk (0 for a checkpoint), `streamBatchId`
-    * this version's own stamp and `props` the table's properties as of
-    * this version.
+    * this version's own stamp, `props` the table's properties as of
+    * this version and `schemaLog` its schema-evolution log (empty: the
+    * table does not evolve; else `schemaDdl` is the last entry's fields).
     */
   private case class VersionManifest(version: Long, schemaDdl: String,
       entries: Seq[(String, Long)], dvs: Seq[DvEntry] = Nil,
       colmap: Seq[(String, String)] = Nil, depth: Long = 0L,
-      streamBatchId: Option[Long] = None, props: TableProps = TableProps())
+      streamBatchId: Option[Long] = None, props: TableProps = TableProps(),
+      schemaLog: Seq[SchemaVersion] = Nil)
+
+  /** One entry of a schema-evolving table's log: the (name, catalog type)
+    * fields of schema version `version` and its from → to renames
+    * relative to the previous entry (see [[writeEvolving]]).
+    */
+  private case class SchemaVersion(version: Long,
+      fields: Seq[(String, String)], renames: Seq[(String, String)])
 
   /** A table's PROPERTIES — the metadata entry of Delta's log: CHECK
     * constraints and GENERATED column specs ((name, sql), name-ascending)
@@ -3821,16 +3757,17 @@ object Lake {
   /** Raw on-disk form: full (files defined) or delta (base defined).
     * `ts` is the commit wall-clock (epoch millis), stamped at publish and
     * PRESERVED by vacuum's materialization rewrite; None only for
-    * manifests written before timestamps existed. `props` is None when
-    * the manifest carries none: a delta then inherits its base's, a
-    * checkpoint has none.
+    * manifests written before timestamps existed. `props` and
+    * `schemaLog` are None when the manifest carries none: a delta then
+    * inherits its base's, a checkpoint has none.
     */
   private case class RawManifest(version: Long, schemaDdl: String,
       depth: Long, files: Option[Seq[(String, Long)]], base: Option[Long],
       add: Seq[(String, Long)], remove: Seq[String], ts: Option[Long],
       streamBatchId: Option[Long], op: Option[String],
       dv: Seq[DvEntry] = Nil, dvAdd: Seq[DvEntry] = Nil,
-      colmap: Seq[(String, String)] = Nil, props: Option[TableProps] = None)
+      colmap: Seq[(String, String)] = Nil, props: Option[TableProps] = None,
+      schemaLog: Option[Seq[SchemaVersion]] = None)
 
   private val MaxChainDepth = 32L
 
@@ -4040,8 +3977,8 @@ object Lake {
           dst.toUri, fs.getConf)
         .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     } else {
-      // same concurrent-publish guard as the schema manifests: two writers
-      // racing to one version number must fail loudly, not clobber
+      // concurrent-publish guard: two writers racing to one version
+      // number must fail loudly, not clobber
       def lost(): Nothing = {
         fs.delete(tmp, false)
         throw new IllegalArgumentException(
@@ -4052,42 +3989,47 @@ object Lake {
     }
   }
 
-  /** Publish a FULL (checkpoint) manifest: the complete file list. `ts`
-    * defaults to now; vacuum's materialization passes the ORIGINAL commit
-    * time through so `asOf` resolution survives checkpointing.
-    */
   private def dvJson(dvs: Seq[DvEntry]): String =
     dvs.map(d =>
       s"""{"path":${jsonStr(d.dv)},"n_del":${d.nDel},""" +
         s""""files":${d.files.map(jsonStr).mkString("[", ",", "]")}}""")
       .mkString("[", ",", "]")
 
-  private def colmapJson(cm: Seq[(String, String)]): String =
-    cm.map { case (l, p) =>
-      s"""{"logical":${jsonStr(l)},"physical":${jsonStr(p)}}"""
-    }.mkString("[", ",", "]")
+  /** `[{"a":x,"b":y},…]` — the JSON shape of every (string, string) list
+    * a manifest carries.
+    */
+  private def pairsJson(kv: Seq[(String, String)], a: String,
+      b: String): String =
+    kv.map { case (x, y) => s"""{"$a":${jsonStr(x)},"$b":${jsonStr(y)}}""" }
+      .mkString("[", ",", "]")
 
   /** `"props":{…},` — one object holding only the non-empty properties. */
   private def propsField(p: TableProps): String = {
     def named(key: String, es: Seq[(String, String)]) =
       if (es.isEmpty) None
-      else Some(s""""$key":""" + es.map { case (n, e) =>
-        s"""{"name":${jsonStr(n)},"expr":${jsonStr(e)}}"""
-      }.mkString("[", ",", "]"))
+      else Some(s""""$key":""" + pairsJson(es, "name", "expr"))
     val fields = named("checks", p.checks) ++ named("generated", p.generated) ++
       p.autoOptimize.map { case (limit, target) =>
         s""""autoOptimize":{"smallFileLimit":$limit,"targetFileBytes":$target}""" }
     s""""props":${fields.mkString("{", ",", "}")},"""
   }
 
-  private def writeVersionManifest(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String, v: Long,
-      schemaDdl: String, entries: Seq[(String, Long)],
-      replace: Boolean = false, ts: Option[Long] = None,
-      streamBatchId: Option[Long] = None,
-      op: Option[String] = None, dv: Seq[DvEntry] = Nil,
-      colmap: Seq[(String, String)] = Nil,
-      props: TableProps = TableProps()): Unit = {
+  /** `"schemaLog":[…],` — one object per schema version. */
+  private def schemaLogField(log: Seq[SchemaVersion]): String =
+    s""""schemaLog":""" + log.map(s =>
+      s"""{"version":${s.version},"fields":${pairsJson(s.fields, "name", "type")},""" +
+        s""""renames":${pairsJson(s.renames, "from", "to")}}""")
+      .mkString("[", ",", "]") + ","
+
+  /** Publish `m` as a FULL (checkpoint) manifest: the complete file list
+    * and every metadata field of the version, so a checkpoint never
+    * inherits. `ts` defaults to now; vacuum's materialization (`replace`)
+    * passes the ORIGINAL commit time through so `asOf` resolution survives
+    * checkpointing.
+    */
+  private def writeVersionManifest(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, m: VersionManifest, op: Option[String],
+      replace: Boolean = false, ts: Option[Long] = None): Unit = {
     // a fresh commit stamps now; a materialization rewrite (replace)
     // carries the original ts through — or keeps having NONE for
     // pre-timestamp manifests (stamping those "now" would teleport an old
@@ -4095,24 +4037,26 @@ object Lake {
     val tsField = (if (replace) ts
                    else ts.orElse(Some(System.currentTimeMillis())))
       .map(t => s""""ts":$t,""").getOrElse("")
-    val bidField = streamBatchId
+    val bidField = m.streamBatchId
       .map(b => s""""streamBatchId":$b,""").getOrElse("")
     val opField = op.map(o => s""""op":${jsonStr(o)},""").getOrElse("")
-    val dvField = if (dv.isEmpty) "" else s""""dv":${dvJson(dv)},"""
-    val cmField =
-      if (colmap.isEmpty) "" else s""""colmap":${colmapJson(colmap)},"""
-    val propsJson = if (props.isEmpty) "" else propsField(props)
-    writeManifestFile(fs, path, v,
-      s"""{"version":$v,$tsField$bidField$opField$dvField$cmField$propsJson""" +
-        s""""schema":${jsonStr(schemaDdl)},""" +
-        s""""depth":0,"files":${entriesJson(entries)}}""",
+    val dvField = if (m.dvs.isEmpty) "" else s""""dv":${dvJson(m.dvs)},"""
+    val cmField = if (m.colmap.isEmpty) ""
+      else s""""colmap":${pairsJson(m.colmap, "logical", "physical")},"""
+    val propsJson = if (m.props.isEmpty) "" else propsField(m.props)
+    val logJson = if (m.schemaLog.isEmpty) "" else schemaLogField(m.schemaLog)
+    writeManifestFile(fs, path, m.version,
+      s"""{"version":${m.version},$tsField$bidField$opField$dvField$cmField""" +
+        s"""$propsJson$logJson"schema":${jsonStr(m.schemaDdl)},""" +
+        s""""depth":0,"files":${entriesJson(m.entries)}}""",
       replace)
   }
 
   /** Publish an O(changed-files) DELTA manifest against the resolved
     * `base` — or, when the chain would exceed [[MaxChainDepth]], a full
     * checkpoint of `base` with the change applied. `props` is the
-    * commit's whole new property set (None: unchanged, inherited).
+    * commit's whole new property set and `schemaLog` its whole new schema
+    * log (None: unchanged, inherited).
     *
     * @return the manifest published, resolved in memory
     */
@@ -4122,15 +4066,12 @@ object Lake {
       remove: Seq[String], streamBatchId: Option[Long] = None,
       op: Option[String] = None, dvAdd: Seq[DvEntry] = Nil,
       colmap: Seq[(String, String)] = Nil,
-      props: Option[TableProps] = None): VersionManifest = {
+      props: Option[TableProps] = None,
+      schemaLog: Option[Seq[SchemaVersion]] = None): VersionManifest = {
     val pub = applyCommit(base, v, schemaDdl, add, remove, dvAdd, colmap,
-      streamBatchId, props)
+      streamBatchId, props, schemaLog)
     if (pub.depth > MaxChainDepth) {
-      // a checkpoint never inherits: materialize the effective mapping
-      // and properties
-      writeVersionManifest(spark, fs, path, v, schemaDdl, pub.entries,
-        streamBatchId = streamBatchId, op = op, dv = pub.dvs,
-        colmap = pub.colmap, props = pub.props)
+      writeVersionManifest(fs, path, pub, op)
       pub.copy(depth = 0L)
     } else {
       val removeJson = remove.map(jsonStr).mkString("[", ",", "]")
@@ -4138,12 +4079,14 @@ object Lake {
         .map(b => s""""streamBatchId":$b,""").getOrElse("")
       val opField = op.map(o => s""""op":${jsonStr(o)},""").getOrElse("")
       val dvField = if (dvAdd.isEmpty) "" else s""""dvAdd":${dvJson(dvAdd)},"""
-      val cmField =
-        if (colmap.isEmpty) "" else s""""colmap":${colmapJson(colmap)},"""
+      val cmField = if (colmap.isEmpty) ""
+        else s""""colmap":${pairsJson(colmap, "logical", "physical")},"""
       val propsJson = props.fold("")(propsField)
+      val logJson = schemaLog.fold("")(schemaLogField)
       writeManifestFile(fs, path, v,
         s"""{"version":$v,"ts":${System.currentTimeMillis()},$bidField""" +
-          s"""$opField$dvField$cmField$propsJson"schema":${jsonStr(schemaDdl)},""" +
+          s"""$opField$dvField$cmField$propsJson$logJson""" +
+          s""""schema":${jsonStr(schemaDdl)},""" +
           s""""depth":${pub.depth},"base":${base.version},""" +
           s""""add":${entriesJson(add)},"remove":$removeJson}""",
         replace = false)
@@ -4154,19 +4097,21 @@ object Lake {
   /** `base` with one commit applied, as [[readVersionManifest]] resolves
     * a delta: `remove` leaves the file list and every dv entry's coverage,
     * `add` and `dvAdd` append, an empty `colmap` inherits the base's and
-    * so does an absent `props`.
+    * so do an absent `props` and `schemaLog`.
     */
   private def applyCommit(base: VersionManifest, v: Long, schemaDdl: String,
       add: Seq[(String, Long)], remove: Seq[String], dvAdd: Seq[DvEntry],
       colmap: Seq[(String, String)] = Nil,
       streamBatchId: Option[Long] = None,
-      props: Option[TableProps] = None): VersionManifest = {
+      props: Option[TableProps] = None,
+      schemaLog: Option[Seq[SchemaVersion]] = None): VersionManifest = {
     val rm = remove.toSet
     VersionManifest(v, schemaDdl, base.entries.filterNot(e => rm(e._1)) ++ add,
       applyDvDelta(base.dvs, rm, dvAdd),
       if (colmap.nonEmpty) colmap else base.colmap,
       depth = base.depth + 1, streamBatchId = streamBatchId,
-      props = props.getOrElse(base.props))
+      props = props.getOrElse(base.props),
+      schemaLog = schemaLog.getOrElse(base.schemaLog))
   }
 
   /** Fold one commit's dv change into a base's live dv set: removing a
@@ -4195,12 +4140,17 @@ object Lake {
       val txt =
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
+      type Node = com.fasterxml.jackson.databind.JsonNode
       val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
       def opt(name: String) = Option(n.get(name)).filterNot(_.isNull)
       def pairs(name: String): Seq[(String, Long)] =
         opt(name).fold(Seq.empty[(String, Long)])(a =>
           (0 until a.size).map(i =>
             (a.get(i).get("path").asText, a.get(i).get("n_rows").asLong)))
+      def strPairs(o: Node, key: String, a: String, b: String) =
+        Option(o.get(key)).fold(Seq.empty[(String, String)])(arr =>
+          (0 until arr.size).map(i =>
+            (arr.get(i).get(a).asText, arr.get(i).get(b).asText)))
       def dvEntries(name: String): Seq[DvEntry] =
         opt(name).fold(Seq.empty[DvEntry])(a =>
           (0 until a.size).map { i =>
@@ -4209,16 +4159,17 @@ object Lake {
             DvEntry(e.get("path").asText, e.get("n_del").asLong,
               (0 until fl.size).map(fl.get(_).asText))
           })
-      val colmap = opt("colmap").fold(Seq.empty[(String, String)])(a =>
-        (0 until a.size).map(i =>
-          (a.get(i).get("logical").asText, a.get(i).get("physical").asText)))
       val props = opt("props").map { p =>
-        def named(key: String) = Option(p.get(key)).fold(Seq.empty[(String, String)])(a =>
-          (0 until a.size).map(i => (a.get(i).get("name").asText, a.get(i).get("expr").asText)))
-        TableProps(named("checks"), named("generated"),
+        TableProps(strPairs(p, "checks", "name", "expr"),
+          strPairs(p, "generated", "name", "expr"),
           Option(p.get("autoOptimize")).map(a =>
             (a.get("smallFileLimit").asInt, a.get("targetFileBytes").asLong)))
       }
+      val schemaLog = opt("schemaLog").map(a => (0 until a.size).map { i =>
+        val s = a.get(i)
+        SchemaVersion(s.get("version").asLong, strPairs(s, "fields", "name", "type"),
+          strPairs(s, "renames", "from", "to"))
+      })
       Some(RawManifest(n.get("version").asLong, n.get("schema").asText,
         opt("depth").fold(0L)(_.asLong),
         opt("files").map(_ => pairs("files")),
@@ -4230,7 +4181,8 @@ object Lake {
         opt("streamBatchId").map(_.asLong),
         opt("op").map(_.asText),
         dv = dvEntries("dv"), dvAdd = dvEntries("dvAdd"),
-        colmap = colmap, props = props))
+        colmap = strPairs(n, "colmap", "logical", "physical"), props = props,
+        schemaLog = schemaLog))
     }
   }
 
@@ -4240,37 +4192,41 @@ object Lake {
   private def readVersionManifest(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
       v: Long): Option[VersionManifest] =
-    readRawManifest(spark, fs, path, v).map { raw =>
-      raw.files match {
-        case Some(entries) =>
-          VersionManifest(raw.version, raw.schemaDdl, entries, raw.dv,
-            raw.colmap, raw.depth, raw.streamBatchId,
-            raw.props.getOrElse(TableProps()))
-        case None =>
-          val base = readVersionManifest(spark, fs, path, raw.base.get)
-            .getOrElse(sys.error(
-              s"version ${raw.version} under $path resolves through " +
-                s"missing base ${raw.base.get} - manifest chain broken"))
-          // a delta that carries no colmap INHERITS its base's: the mapping
-          // covers the full column set whenever active, so "explicitly
-          // empty" never occurs on deltas — only a full checkpoint
-          // (materializeMapping) clears it. Inheritance means a delta
-          // writer that forgot to thread the map cannot silently strip it.
-          // `props` inherits only when ABSENT: an alter commit writes its
-          // whole new property set, and an empty object is a real value
-          // (the last constraint dropped), not "inherit".
-          // The depth is the one on disk: a base vacuum materialized into a
-          // checkpoint keeps its delta's recorded depth
-          applyCommit(base, raw.version, raw.schemaDdl, raw.add, raw.remove,
-            raw.dvAdd, raw.colmap, raw.streamBatchId, raw.props)
-            .copy(depth = raw.depth)
-      }
+    readRawManifest(spark, fs, path, v).map(raw =>
+      resolveRaw(raw, b => readVersionManifest(spark, fs, path, b).getOrElse(
+        sys.error(s"version ${raw.version} under $path resolves through " +
+          s"missing base $b - manifest chain broken"))))
+
+  /** `raw` resolved: a checkpoint as it stands, a delta applied to its
+    * base (`base(n)` resolves version n).
+    */
+  private def resolveRaw(raw: RawManifest,
+      base: Long => VersionManifest): VersionManifest =
+    raw.files match {
+      case Some(entries) =>
+        VersionManifest(raw.version, raw.schemaDdl, entries, raw.dv,
+          raw.colmap, raw.depth, raw.streamBatchId,
+          raw.props.getOrElse(TableProps()), raw.schemaLog.getOrElse(Nil))
+      case None =>
+        // a delta that carries no colmap INHERITS its base's: the mapping
+        // covers the full column set whenever active, so "explicitly
+        // empty" never occurs on deltas — only a full checkpoint
+        // (materializeMapping) clears it. Inheritance means a delta
+        // writer that forgot to thread the map cannot silently strip it.
+        // `props` and `schemaLog` inherit only when ABSENT: an alter
+        // commit writes its whole new property set, and an empty object
+        // is a real value (the last constraint dropped), not "inherit".
+        // The depth is the one on disk: a base vacuum materialized into a
+        // checkpoint keeps its delta's recorded depth
+        applyCommit(base(raw.base.get), raw.version, raw.schemaDdl, raw.add,
+          raw.remove, raw.dvAdd, raw.colmap, raw.streamBatchId, raw.props,
+          raw.schemaLog)
+          .copy(depth = raw.depth)
     }
 
   /** Read a version's file set. Empty manifests reconstruct their schema
-    * from the recorded DDL; evolved tables resolve through the schema
-    * chain (returning the latest LOGICAL schema — time travel rewinds
-    * DATA, the column mapping stays current).
+    * from the recorded DDL; an evolved version resolves through its own
+    * schema log, returning the logical schema as of that version.
     */
   private def readManifestFiles(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
@@ -4362,7 +4318,7 @@ object Lake {
   private def readFilesWithDv(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
       m: VersionManifest, files: Seq[String]): DataFrame =
-    if (m.dvs.isEmpty) readSomeFiles(spark, fs, path, files, m.schemaDdl)
+    if (m.dvs.isEmpty) readSomeFiles(spark, fs, files, m)
     else readFilesWithDvTagged(spark, fs, path, m, files)
       .drop(DvSrcFileCol, DvPosCol)
 
@@ -4382,11 +4338,11 @@ object Lake {
     val (dvd, clean) = files.partition(covered)
     def tagged(fl: Seq[String]) =
       if (fl.isEmpty)
-        readSomeFiles(spark, fs, path, fl, m.schemaDdl)
+        readSomeFiles(spark, fs, fl, m)
           .withColumn(DvSrcFileCol, lit(null).cast("string"))
           .withColumn(DvPosCol, lit(null).cast("bigint"))
       else
-        readSomeFiles(spark, fs, path, fl, m.schemaDdl)
+        readSomeFiles(spark, fs, fl, m)
           .withColumn(DvSrcFileCol,
             relDataPathCol(col("_metadata.file_path"), root))
           .withColumn(DvPosCol, col("_metadata.row_index"))
@@ -4450,30 +4406,29 @@ object Lake {
     files.toIndexedSeq.map(f =>
       fs.makeQualified(new org.apache.hadoop.fs.Path(f)).toString)
 
-  /** Read `files` with the schema of the manifest that lists them. The
-    * manifest DDL is the files' physical schema, so the scan needs no
-    * footer-inference job; `schemaDdl` must belong to the manifest that
-    * lists `files` (a column the DDL names but a file lacks reads as NULL).
+  /** Read `files` through the manifest `m` that lists them. The manifest
+    * DDL is the files' physical schema, so the scan needs no
+    * footer-inference job (a column the DDL names but a file lacks reads
+    * as NULL); a schema-evolving manifest reads through its own schema log
+    * ([[evolvedRead]]), whose last entry that DDL describes.
     */
   private def readSomeFiles(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      files: Seq[String], schemaDdl: String): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(schemaDdl)
+      fs: org.apache.hadoop.fs.FileSystem, files: Seq[String],
+      m: VersionManifest): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
     if (files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else if (readSchemaManifests(spark, path).nonEmpty)
-      evolvedRead(spark, path, Some(files))
+    else if (m.schemaLog.nonEmpty) evolvedRead(spark, fs, files, m.schemaLog)
     else spark.read.schema(schema).parquet(qualifyForRead(fs, files): _*)
   }
 
-  /** Version a plain (or schema-evolving) table in place: the current data
-    * files become version 1 by reference — a metadata-only commit, no data
-    * is moved or rewritten.
+  /** Version a plain table in place: the current data files become
+    * version 1 by reference — a metadata-only commit, no data is moved or
+    * rewritten.
     */
   private def bootstrapRootVersion(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      streamBatchId: Option[Long] = None): Unit = {
+      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
     val hp = new org.apache.hadoop.fs.Path(path)
     // hive-partitioned layouts are refused: version manifests read files
     // EXPLICITLY (no basePath — see readFileSubset), so partition-dir
@@ -4486,11 +4441,8 @@ object Lake {
         "a file-reference read)")
     val files = listDataFiles(fs, hp)
     require(files.nonEmpty, s"no versions and no data files under $path")
-    val ddl =
-      if (readSchemaManifests(spark, path).nonEmpty) logicalDdl(spark, path)
-      else readParquet(spark, path).schema.toDDL
-    writeVersionManifest(spark, fs, path, 1L, ddl,
-      fileEntries(spark, fs, path, files), streamBatchId = streamBatchId,
+    writeVersionManifest(fs, path, VersionManifest(1L,
+      readParquet(spark, path).schema.toDDL, fileEntries(spark, fs, path, files)),
       op = Some("bootstrap"))
     writeVersionPointer(spark, fs, path, 1L)
   }
@@ -4509,10 +4461,6 @@ object Lake {
           listDataFiles(fs, s.getPath).nonEmpty))
     }
 
-  /** The latest LOGICAL schema of an evolved table as DDL. */
-  private def logicalDdl(spark: SparkSession, path: String): String =
-    fieldsDdl(logicalSchema(readSchemaManifests(spark, path)))
-
   /** The DDL of (name, catalog type) fields. */
   private def fieldsDdl(fields: Seq[(String, String)]): String =
     org.apache.spark.sql.types.StructType(fields.map { case (n, t) =>
@@ -4520,34 +4468,42 @@ object Lake {
         org.apache.spark.sql.types.DataType.fromDDL(t))
     }).toDDL
 
-  /** SCHEMA EVOLUTION for plain-parquet lake tables — the versioned-schema
+  /** SCHEMA EVOLUTION for versioned lake tables — the versioned-schema
     * half of what Delta/Iceberg column mapping does, on an explicit
-    * manifest under `_graft_schema/`.
+    * schema log carried by the version manifests (`schemaLog`, inherited
+    * by deltas like the table properties).
     *
     * Why not `mergeSchema`? Two reasons, both scale-fatal. (1) COST:
     * mergeSchema derives the union schema by reading EVERY file footer at
     * planning time — at 100 TB / ~128 MB files that is ~800k footer reads
-    * before the first byte of data; the manifest is one metadata-sized
-    * read. (2) SEMANTICS: a RENAME is invisible to footer merging — it
-    * looks like one dropped + one added column and comes back as two
-    * half-null columns; only a declared rename can fold the old physical
-    * name into the new logical one.
+    * before the first byte of data; the log is one metadata-sized read.
+    * (2) SEMANTICS: a RENAME is invisible to footer merging — it looks
+    * like one dropped + one added column and comes back as two half-null
+    * columns; only a declared rename can fold the old physical name into
+    * the new logical one.
     *
-    * `writeEvolving` publishes schema version N+1 (the appended frame's
+    * `writeEvolving` appends schema version N+1 (the appended frame's
     * logical schema + its declared old→new renames relative to version N)
-    * and THEN appends the data files. Manifest-first is the load-bearing
-    * order: a crash between the two steps leaves a declared-but-empty
-    * version — reads stay exactly correct — whereas data-first would leave
-    * files no schema version describes. Each manifest is written via the
-    * same tmp-write + atomic-rename protocol as the version pointer.
+    * to the head's log and publishes it with the frame's data files as one
+    * `evolve-append` commit: one manifest rename publishes schema and
+    * files, so no reader ever sees a schema version without its files or
+    * files without their schema. The commit races every other commit
+    * through that rename: the first write on an empty or plain dir
+    * publishes version 1 (a plain dir's files are adopted as version 1
+    * first, the way [[setAutoOptimize]] versions it), and a table never
+    * holds a schema log together with CHECK constraints or generated
+    * columns ([[publishNonCommuting]] refuses the commit that would join
+    * them). Returns the SCHEMA version number.
     *
     * `readEvolving` builds the UNIFIED PHYSICAL schema (every column name
-    * any version ever wrote) from the manifests and hands it to the
-    * parquet reader explicitly — per file, absent columns resolve by name
-    * to null, so no footer sweep happens — then folds each recorded rename
+    * any version ever wrote) from the log and hands it to the parquet
+    * reader explicitly — per file, absent columns resolve by name to
+    * null, so no footer sweep happens — then folds each recorded rename
     * with coalesce(new, cast(old)) and returns the LATEST version's
     * logical column set. Added columns read null for files written before
-    * them; renamed columns carry old-file values under the new name.
+    * them; renamed columns carry old-file values under the new name. Each
+    * table version reads through its own log, so time travel to a version
+    * before an evolution returns that version's columns.
     *
     * Scope: column ADDS, RENAMES, and lossless type WIDENING
     * (tinyint<smallint<int<bigint, float<double): the unified read
@@ -4563,37 +4519,48 @@ object Lake {
       streamBatchId: Option[Long] = None): Long = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(hp)
+    if (manifestVersions(fs, path).isEmpty && holdsTableData(fs, hp))
+      bootstrapRootVersion(spark, fs, path)
+    val head = headManifest(spark, fs, path)
+    evolve(spark, fs, path, df, head, renames, streamBatchId,
+      head.fold(Seq.empty[SchemaVersion])(_.schemaLog))._1
+  }
+
+  /** Publish `df` with schema version `prior`'s next — its fields and
+    * `renames` — as one `evolve-append` commit over `head` (None: the
+    * table's version 1).
+    *
+    * @return (the schema version, the manifest published)
+    */
+  private def evolve(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, df: DataFrame,
+      head: Option[VersionManifest], renames: Map[String, String],
+      streamBatchId: Option[Long],
+      prior: Seq[SchemaVersion]): (Long, VersionManifest) = {
     // deletion vectors and schema evolution are mutually exclusive: the
-    // evolved read path resolves through the column-mapping projection,
+    // evolved read path resolves through the rename-fold projection,
     // which cannot also attach the scan-stage _metadata position columns
     // the tombstone anti-join needs — drifting a dv'd table would leave
     // its reads broken. Purge first; the refusal mirrors deleteWhereDv's.
-    val head = headManifest(spark, fs, path)
     refuseDvs(head.map(_.dvs).getOrElse(Nil), path, "writeEvolving")
     refuseColMap(head.map(_.colmap).getOrElse(Nil), path, "writeEvolving")
     val props = head.fold(TableProps())(_.props)
     require(props.generated.isEmpty,
       s"$path declares GENERATED columns; schema evolution would bypass " +
         "their derivation - drop them first")
-    // the constraint contract is two-sided: addCheckConstraint refuses
-    // evolving tables, and a table that gained constraints while plain
-    // refuses to start evolving. The guards are check-then-act, so a
-    // CONCURRENT pair could pass both — the post-publish cross-checks
-    // (below, and in addCheckConstraint) resolve that race: each side
-    // re-checks the other's artifact after publishing its own and the
-    // detected loser backs out (here: deletes its schema manifest; there:
-    // commits the constraint's drop), so the forbidden constrained-
-    // evolving state never persists
+    // the mirror refusal (a constraint on an evolving table) is
+    // addCheckConstraint's; a constraint that lands concurrently makes
+    // this commit's rebase refuse
     require(props.checks.isEmpty,
       s"$path carries CHECK constraints; schema evolution would bypass " +
         "their enforcement - drop them first")
-    val prior = readSchemaManifests(spark, path)
     val next = prior.lastOption.map(_.version + 1).getOrElse(1L)
     val newFields = df.schema.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
     if (prior.isEmpty) {
       require(renames.isEmpty, "first write cannot declare renames")
     } else {
-      val prevLogical = logicalSchema(prior)
+      val prevLogical = prior.last.fields
       renames.foreach { case (from, to) =>
         require(prevLogical.exists(_._1 == from),
           s"rename source '$from' not in schema v${prior.last.version}")
@@ -4647,108 +4614,43 @@ object Lake {
           s"column name '$name' was retired by an earlier rename and " +
             "cannot be reused"))
     }
-    val dst = publishSchemaEntry(fs, hp, next, newFields, renames)
-    // mirror of addCheckConstraint's post-publish cross-check: if this is
-    // the FIRST schema version and a constraint landed concurrently (its
-    // gate read ran before our manifest), the EVOLUTION side rolls back —
-    // no data has been written yet, so deleting our own v=1 manifest is a
-    // clean abort, and one of the two racing sides always yields. The
-    // newest manifest, not the pointer: the pointer lags a publish
-    if (next == 1L &&
-        newestManifest(spark, fs, path).exists(_.props.checks.nonEmpty)) {
-      fs.delete(dst, false)
-      sys.error(s"$path gained CHECK constraints concurrently; schema " +
-        "evolution rolled back - drop the constraints first")
-    }
-    // a deleteWhere may have versioned this table: the append then writes
-    // a claimed dir and publishes a version (prior files by reference +
-    // the new files), so version-resolving readers see the appended rows.
-    // It rebases like any commit over the head the guards above read,
-    // enforcing a constraint that landed since on its files
-    val published =
-      try {
-        if (!fs.exists(versionsDir(path))) {
-          df.write.mode(SaveMode.Append).parquet(path)
-          None
-        } else {
-          Some(publishNonCommuting(spark, fs, path,
-            head.getOrElse(newestManifest(spark, fs, path).get),
-            fieldsDdl(newFields),
-            add = writeClaimedDir(spark, fs, path, df)._2, remove = Nil,
-            op = "evolve-append", streamBatchId = streamBatchId))
-        }
-      } catch {
-        // a refused write backs its schema entry out: no version reads it
-        // (an unpublished claimed dir is vacuum's to reclaim)
-        case e: Throwable => fs.delete(dst, false); throw e
-      }
-    published.foreach { pub =>
-      // keep an existing skipping manifest live over the appended files
-      // (appendVersioned's invariant — without this a DRIFTED append
-      // leaves the manifest stale and every later readSkipping refuses
-      // until a full writeStats): O(batch), tracked columns only — the
-      // drift is additive, so old tracked columns exist in the new files
-      keepStatsLive(spark, fs, path, pub)
-      refreshBloomIndexes(spark, fs, path, pub)
-    }
-    next
+    val ddl = fieldsDdl(newFields)
+    // the schema entry and the files publish in ONE manifest rename,
+    // rebasing like any commit over the head the guards above read
+    val pub = publishNonCommuting(spark, fs, path,
+      head.getOrElse(VersionManifest(0L, ddl, Nil)), ddl,
+      add = writeClaimedDir(spark, fs, path, df)._2, remove = Nil,
+      op = "evolve-append", full = head.isEmpty, streamBatchId = streamBatchId,
+      schemaLog = Some(prior :+ SchemaVersion(next, newFields,
+        renames.toSeq.sortBy(_._1))))
+    // keep an existing skipping manifest live over the appended files
+    // (appendVersioned's invariant — without this a DRIFTED append
+    // leaves the manifest stale and every later readSkipping refuses
+    // until a full writeStats): O(batch), tracked columns only — the
+    // drift is additive, so old tracked columns exist in the new files
+    keepStatsLive(spark, fs, path, pub)
+    refreshBloomIndexes(spark, fs, path, pub)
+    (next, pub)
   }
 
-  /** Publish schema-chain entry `v` — (name, catalog type) `fields` and
-    * from → to `renames` — refusing loudly when a writer already
-    * published it. Rename-to-existing fails on HDFS-like filesystems; the
-    * LOCAL filesystem silently replaces (POSIX rename), so the exists
-    * check carries the guard there, with a residual check-then-rename
-    * window (single-writer is the local contract).
+  /** The head version of a schema-evolving table, under its latest
+    * logical schema ([[writeEvolving]]); any versioned table reads as
+    * [[readVersioned]] does.
     */
-  private def publishSchemaEntry(fs: org.apache.hadoop.fs.FileSystem,
-      hp: org.apache.hadoop.fs.Path, v: Long, fields: Seq[(String, String)],
-      renames: Map[String, String]): org.apache.hadoop.fs.Path = {
-    def objs(kv: Seq[(String, String)], a: String, b: String) = kv.map {
-      case (x, y) => s"""{"$a":${jsonStr(x)},"$b":${jsonStr(y)}}""" }.mkString("[", ",", "]")
-    val tmp = new org.apache.hadoop.fs.Path(hp,
-      s"_graft_schema/.v=$v.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val dst = new org.apache.hadoop.fs.Path(hp, s"_graft_schema/v=$v.json")
-    val out = fs.create(tmp, true)
-    out.write((s"""{"version":$v,"fields":${objs(fields, "name", "type")},""" +
-      s""""renames":${objs(renames.toSeq.sortBy(_._1), "from", "to")}}""").getBytes("UTF-8"))
-    out.close()
-    require(!fs.exists(dst) && fs.rename(tmp, dst),
-      s"schema version $v already published under $hp (concurrent writer?) " +
-        "- re-read schemaVersions and retry")
-    dst
-  }
+  def readEvolving(spark: SparkSession, path: String): DataFrame =
+    readVersioned(spark, path)
 
-  def readEvolving(spark: SparkSession, path: String): DataFrame = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a deleteWhere bootstraps version manifests onto an evolved table;
-    // from then on the published version's file list is the table (a
-    // recursive dir read would see retired pre-delete files)
-    if (fs.exists(versionsDir(path))) readVersioned(spark, path)
-    else evolvedRead(spark, path, None)
-  }
-
-  /** [[readEvolving]] over the whole table or a pruned file subset.
-    * No basePath: evolved tables are unpartitioned by contract (compact's
-    * guard), and a basePath over a post-delete `v=N` rewrite dir would
-    * hallucinate a `v` partition column.
+  /** `files` read through schema log `versions` (see [[writeEvolving]]).
+    * No basePath: evolved tables are unpartitioned, and a basePath over a
+    * `v=N` commit dir would hallucinate a `v` partition column.
     */
-  private def evolvedRead(spark: SparkSession, path: String,
-      files: Option[Seq[String]]): DataFrame = {
+  private def evolvedRead(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, files: Seq[String],
+      versions: Seq[SchemaVersion]): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col}
-    val versions = readSchemaManifests(spark, path)
-    require(versions.nonEmpty, s"no _graft_schema manifests under $path")
-    val physical = org.apache.spark.sql.types.StructType(
-      physicalSchema(versions).map { case (n, t) =>
-        org.apache.spark.sql.types.StructField(n,
-          org.apache.spark.sql.types.DataType.fromDDL(t))
-      })
-    val tableFs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val reader = spark.read.schema(physical)
-    var df = files.fold(reader.parquet(path))(fs =>
-      reader.parquet(qualifyForRead(tableFs, fs): _*))
+    val physical = org.apache.spark.sql.types.StructType.fromDDL(
+      fieldsDdl(physicalSchema(versions)))
+    var df = spark.read.schema(physical).parquet(qualifyForRead(fs, files): _*)
     // fold renames in version order so CHAINS (a->b in v2, b->c in v3)
     // carry v1 values through; the target type comes from the version
     // that DECLARED the rename — the latest schema may have renamed it on
@@ -4762,42 +4664,17 @@ object Lake {
     // cast to the LATEST declared type: a rename fold lands at its
     // declare-time type, which a later version may have widened (the
     // cast is a no-op wherever the physical read is already widest)
-    df.select(logicalSchema(versions)
+    df.select(versions.last.fields
       .map { case (n, t) => col(n).cast(t).as(n) }: _*)
   }
 
-  def schemaVersions(spark: SparkSession, path: String): Seq[Long] =
-    readSchemaManifests(spark, path).map(_.version)
-
-  private case class SchemaVersion(version: Long,
-      fields: Seq[(String, String)], renames: Seq[(String, String)])
-
-  /** All schema manifests, version-ascending. Each is a KB-sized JSON
-    * object parsed on the driver, as the version manifests are: building
-    * a read frame of an evolving table starts no Spark job.
+  /** The head's schema versions, ascending; empty for a table that does
+    * not evolve.
     */
-  private def readSchemaManifests(spark: SparkSession,
-      path: String): Seq[SchemaVersion] = {
-    val dir = new org.apache.hadoop.fs.Path(path, "_graft_schema")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      fs.listStatus(dir).toSeq.map(_.getPath)
-        .filter(p => p.getName.startsWith("v=") && p.getName.endsWith(".json"))
-        .map { f =>
-          val in = fs.open(f)
-          val n =
-            try m.readTree(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-            finally in.close()
-          def pairs(key: String, a: String, b: String) = Option(n.get(key))
-            .fold(Seq.empty[(String, String)])(arr => (0 until arr.size).map(i =>
-              (arr.get(i).get(a).asText, arr.get(i).get(b).asText)))
-          SchemaVersion(n.get("version").asLong, pairs("fields", "name", "type"),
-            pairs("renames", "from", "to"))
-        }
-        .sortBy(_.version)
-    }
+  def schemaVersions(spark: SparkSession, path: String): Seq[Long] = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    headManifest(spark, fs, path).toSeq.flatMap(_.schemaLog.map(_.version))
   }
 
   /** Lossless widening chains. The parquet vectorized reader up-casts a
@@ -4827,11 +4704,6 @@ object Lake {
         case i => if (widens(acc(i)._2, t)) acc.updated(i, n -> t) else acc
       }
     }
-
-  /** The LATEST version's column set in its declared order. */
-  private def logicalSchema(
-      versions: Seq[SchemaVersion]): Seq[(String, String)] =
-    versions.last.fields
 
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
@@ -4878,18 +4750,14 @@ object Lake {
     val aggs = statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
       count(lit(1)).as("n_rows")
-    // an evolved table must resolve through its schema manifests (a plain
-    // parquet read over mixed-schema files binds one footer's schema and
-    // silently drops the other eras' columns); a VERSIONED table must
-    // resolve through its version manifest (a recursive read would scan
-    // retired files) — readVersioned composes both
+    // a VERSIONED table must resolve through its version manifest (a
+    // recursive read would scan retired files, and an evolved table's
+    // mixed-schema files need its schema log)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     requireNoColMap(spark, fs, path, "writeStats")
     val source =
       if (fs.exists(versionsDir(path))) readVersioned(spark, path)
-      else if (readSchemaManifests(spark, path).nonEmpty)
-        readEvolving(spark, path)
       else readParquet(spark, path)
     // one distributed aggregate; its one line per data file is rendered
     // on the driver and published as the whole manifest
@@ -5086,9 +4954,9 @@ object Lake {
     // Spark job; any other column scans ONLY the fresh files. A
     // schema-evolving table always scans: its files may hold a column
     // under an older name or type, and its reads resolve them through the
-    // schema manifests
+    // schema log
     val footerLines =
-      if (readSchemaManifests(spark, path).isEmpty)
+      if (head.forall(_.schemaLog.isEmpty))
         StatsManifest.fromFooters(fs, fresh, appendCols)
       else None
     val lines = footerLines.getOrElse {
@@ -5558,7 +5426,7 @@ object Lake {
 
   /** basePath keeps partition-dir columns in the schema when reading a
     * file subset, so the skipped read matches the unskipped one exactly.
-    * An EVOLVED table's subset resolves through the schema manifests
+    * An EVOLVED table's subset resolves through the head's schema log
     * (plain parquet reads over mixed-schema files silently drop columns).
     *
     * HEAD-ONLY CONTRACT: `head` is the table's resolved head manifest
@@ -5572,29 +5440,21 @@ object Lake {
     */
   private def readFileSubset(spark: SparkSession, path: String,
       files: Seq[String], head: Option[VersionManifest]): DataFrame = {
-    val evolved = readSchemaManifests(spark, path).nonEmpty
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (files.isEmpty) {
-      val full = head.fold(
-        if (evolved) readEvolving(spark, path) else readParquet(spark, path))(
-        readManifestFiles(spark, fs, path, _))
-      full.limit(0)
-    } else if (evolved) evolvedRead(spark, path, Some(files))
-    else head match {
+    head match {
       // versioned tables are unpartitioned (our writers): no basePath,
       // which over `v=N` rewrite dirs would hallucinate a `v` partition
-      // column. The head manifest's DDL is the files' physical schema, so
-      // the scan needs no footer-inference job; a column-mapped table's
-      // subset reads project to logical names like any full read
-      // (skipping/probe/lookup callers see the same schema)
-      case Some(m) =>
-        applyColMap(spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl))
-          .parquet(qualifyForRead(fs, files): _*), m.colmap)
+      // column. The head manifest's DDL (or schema log) is the files'
+      // physical schema, so the scan needs no footer-inference job; a
+      // column-mapped table's subset reads project to logical names like
+      // any full read (skipping/probe/lookup callers see the same schema)
+      case Some(m) => applyColMap(readSomeFiles(spark, fs, files, m), m.colmap)
       // a plain dir: the footer inference would read, read on the driver;
       // partition-dir columns still come from the paths under basePath
-      case None => readParquet(spark, path, files)
+      case None =>
+        if (files.isEmpty) readParquet(spark, path).limit(0)
+        else readParquet(spark, path, files)
     }
   }
 
@@ -6065,11 +5925,8 @@ object Lake {
       cur.withColumn("_graft_z", zValueColumn(cur, clusterCols, bitsPerCol))
         .repartitionByRange(nOut.toInt, col("_graft_z"))
         .drop("_graft_z"))
-    val ddl =
-      if (readSchemaManifests(spark, path).nonEmpty) logicalDdl(spark, path)
-      else m0.schemaDdl
     // checkpoint-form commit with disjoint-set rebase (see rerange note)
-    val pub = publishNonCommuting(spark, fs, path, m0, ddl,
+    val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
       add = rewritten, remove = m0.entries.map(_._1), op = "zorder",
       full = true)
     // every clustered column ends up tracked, like rerange's contract
@@ -6107,19 +5964,9 @@ object Lake {
     // files); remember its columns so a fresh one is published after
     val statsDir = StatsManifest.dir(path)
     val statsCols = StatsManifest.trackedAt(fs, path)
-    // an EVOLVED table's files carry DIFFERENT physical schemas: the
-    // rewrite must read through the manifests (a plain parquet read binds
-    // one footer's schema and silently drops other eras' columns) and the
-    // manifest chain must ride into the rewritten table — it stays valid
-    // over the uniform files (retired physical names read as all-null, so
-    // the rename folds are no-ops and the logical schema is unchanged)
-    val evolved = readSchemaManifests(spark, path).nonEmpty
     val children = fs.listStatus(hp)
     val leafDirs = children.filter(s => s.isDirectory &&
       s.getPath.getName.contains("=") && !s.getPath.getName.startsWith("_"))
-    require(!evolved || leafDirs.isEmpty,
-      s"$path mixes hive partition dirs with _graft_schema evolution; " +
-        "evolved tables are unpartitioned (writeEvolving)")
     val result = if (leafDirs.nonEmpty) {
       // hive-partitioned: recurse per partition dir (partition columns
       // live in the PATH, so each leaf compacts independently)
@@ -6138,23 +5985,9 @@ object Lake {
         // ignores them, so a concurrent scan of the parent table can never
         // discover a half-written "day=X.compacting" as a partition
         val staging = stagingPath(hp)
-        val source = if (evolved) readEvolving(spark, path)
-                     else readParquet(spark, path)
-        source
+        readParquet(spark, path)
           .coalesce(nOut.toInt)
           .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-        // the schema-manifest chain publishes WITH the rewrite (one swap,
-        // no window where the table exists without its manifests); the
-        // rewritten files carry the latest LOGICAL schema, under which
-        // the old chain still reads correctly (see note above)
-        // a failed/partial copy must abort BEFORE the rename-aside publish:
-        // publishing without the chain leaves a table readEvolving refuses
-        // (or plain reads silently bind one era's footer schema)
-        if (evolved) require(org.apache.hadoop.fs.FileUtil.copy(fs,
-          new org.apache.hadoop.fs.Path(hp, "_graft_schema"), fs,
-          new org.apache.hadoop.fs.Path(staging, "_graft_schema"),
-          false, spark.sparkContext.hadoopConfiguration),
-          s"compact: could not stage _graft_schema for $path (table unchanged)")
         // publish via RENAME-ASIDE, not delete-then-rename: both complete
         // copies exist until the new one is in place, so a crash at any
         // step leaves a complete dir on disk (recoverAside above renames
@@ -6211,28 +6044,17 @@ object Lake {
         s.getPath.getName.contains("=") && !s.getPath.getName.startsWith("_")),
       s"$path is hive-partitioned; rerange each leaf partition dir instead " +
         "(a whole-table rewrite would flatten the partition layout)")
-    // evolved tables re-range through the manifests, exactly like compact:
-    // the rewrite lands uniform latest-logical-schema files and the chain
-    // rides into staging so one rename publishes data + manifests together
-    val evolved = readSchemaManifests(spark, path).nonEmpty
-    def source = if (evolved) readEvolving(spark, path)
-                 else readParquet(spark, path)
     // the re-range key ALWAYS ends up tracked: re-ranging exists to restore
     // probe pruning on `c`, so a pre-existing manifest that happens not to
     // track c must gain its bounds, not silently keep lacking them
     val statsCols = (StatsManifest.trackedAt(fs, path) :+ c).distinct
     val nBefore = listDataFiles(fs, hp).size.toLong
     val nOut = math.max(1L,
-      (source.count() + targetFileRows - 1) / targetFileRows)
+      (readParquet(spark, path).count() + targetFileRows - 1) / targetFileRows)
     val staging = stagingPath(hp)
-    source
+    readParquet(spark, path)
       .repartitionByRange(nOut.toInt, col(c))
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    if (evolved) require(org.apache.hadoop.fs.FileUtil.copy(fs,
-      new org.apache.hadoop.fs.Path(hp, "_graft_schema"), fs,
-      new org.apache.hadoop.fs.Path(staging, "_graft_schema"),
-      false, spark.sparkContext.hadoopConfiguration),
-      s"rerange: could not stage _graft_schema for $path (table unchanged)")
     val aside = asidePath(hp)
     fs.delete(aside, true)
     require(fs.rename(hp, aside), s"rerange: could not move $path aside")

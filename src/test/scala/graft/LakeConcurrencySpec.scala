@@ -93,4 +93,48 @@ class LakeConcurrencySpec extends SparkSpec {
     }
     assert(folded == expect, "feed fold diverged from the final state")
   }
+
+  test("a delete losing to an append that writes a checkpoint rebases over it") {
+    val dir = tmp()
+    Lake.writeVersioned(spark, (1L to 20L).map(k => (k, k % 7)).toDF("k", "v")
+      .coalesce(1), dir)
+    // 32 appends fill the delta chain: the next append publishes a
+    // checkpoint (a full file list, no add/remove of its own)
+    (21L to 52L).foreach(k =>
+      Lake.appendVersioned(spark, Seq((k, k % 7)).toDF("k", "v"), dir))
+    val v0 = Lake.listVersions(spark, dir).last
+    // the delete blocks inside its discovery pass — after it resolved
+    // its head v0 — until the append has published v0 + 1
+    val gate = udf { (k: Long) =>
+      if (CheckpointRace.first.compareAndSet(true, false)) {
+        CheckpointRace.entered.countDown()
+        CheckpointRace.go.await(120, TimeUnit.SECONDS)
+      }
+      k
+    }
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val delete = pool.submit(() => Lake.deleteWhere(spark, dir, gate(col("k")) === 5L))
+      assert(CheckpointRace.entered.await(120, TimeUnit.SECONDS))
+      assert(Lake.appendVersioned(spark, Seq((99L, 1L)).toDF("k", "v"), dir) == v0 + 1)
+      val js = new String(Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/_graft_versions/v=${v0 + 1}.json")), "UTF-8")
+      assert(js.contains("\"files\":") && js.contains("\"op\":\"append\""),
+        s"the racing append did not publish a checkpoint: $js")
+      CheckpointRace.go.countDown()
+      assert(delete.get(180, TimeUnit.SECONDS) == ((v0 + 2, 1L)))
+    } finally { CheckpointRace.go.countDown(); pool.shutdown() }
+    // the head holds both changes
+    val keys = Lake.readVersioned(spark, dir).select("k").as[Long].collect().toSet
+    assert(keys == ((1L to 52L).toSet - 5L + 99L))
+  }
+}
+
+/** The one-shot latch pair the checkpoint-rebase spec's delete predicate
+  * blocks on (a UDF runs in an executor task of this JVM).
+  */
+private object CheckpointRace {
+  val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+  val entered = new CountDownLatch(1)
+  val go = new CountDownLatch(1)
 }

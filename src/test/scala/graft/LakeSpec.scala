@@ -184,9 +184,11 @@ class LakeSpec extends SparkSpec {
     assert(skim.columns.toSeq == Seq("id", "amount", "tag"))
     assert(skim.filter(col("id") === 30L).select("amount")
       .as[Long].head() == 300L, "pre-rename era must fold through the subset read")
-    // compact must rewrite through the manifests — a footer-bound read
-    // would silently drop one era's columns — and carry the chain along
-    val (nb, na) = Lake.compact(spark, dir, targetFileBytes = 1L << 20)
+    // the fold must rewrite through the schema log — a footer-bound read
+    // would silently drop one era's columns — and carry the log along
+    val nb = Lake.readVersioned(spark, dir).inputFiles.length
+    Lake.optimizeVersioned(spark, dir, targetFileBytes = 1L << 20)
+    val na = Lake.readVersioned(spark, dir).inputFiles.length
     assert(na < nb, s"expected a rewrite, got $nb -> $na")
     assert(Lake.schemaVersions(spark, dir).nonEmpty)
     val after = Lake.readEvolving(spark, dir).orderBy("id")
@@ -301,8 +303,8 @@ class LakeSpec extends SparkSpec {
       dir, renames = Map("amt" -> "amount"))
     val before = Lake.readEvolving(spark, dir).orderBy("k")
       .collect().map(_.toString).toSeq
-    Lake.rerange(spark, dir, "k", targetFileRows = 50)
-    assert(Lake.schemaVersions(spark, dir).nonEmpty, "manifest chain lost")
+    Lake.rerangeVersioned(spark, dir, "k", targetFileRows = 50)
+    assert(Lake.schemaVersions(spark, dir).nonEmpty, "schema log lost")
     val after = Lake.readEvolving(spark, dir).orderBy("k")
       .collect().map(_.toString).toSeq
     assert(after == before, "rerange changed the evolved table's content")
@@ -1048,16 +1050,16 @@ class LakeSpec extends SparkSpec {
       (41L to 80L).map(i => (i, i * 10L, s"s$i")).toDF("id", "amount", "tag"),
       dir, renames = Map("amt" -> "amount"))
     val (v, removed) = Lake.deleteWhere(spark, dir, col("id") % 10 === 0)
-    assert(v == 2L && removed == 8L)
+    assert(v == 3L && removed == 8L)
     // current read: latest logical schema, deleted rows gone, folds intact
     val cur = Lake.readEvolving(spark, dir).orderBy("id")
     assert(cur.columns.toSeq == Seq("id", "amount", "tag"))
     assert(cur.count() == 72)
     assert(cur.filter(col("id") === 30L).isEmpty)
     assert(cur.filter(col("id") === 31L).select("amount").as[Long].head() == 310L)
-    // time travel: version 1 is the complete pre-delete table, read under
+    // time travel: version 2 is the complete pre-delete table, read under
     // the same (current) logical column mapping
-    val v1 = Lake.readVersioned(spark, dir, Some(1L))
+    val v1 = Lake.readVersioned(spark, dir, Some(2L))
     assert(v1.columns.toSeq == Seq("id", "amount", "tag"))
     assert(v1.count() == 80)
     assert(v1.filter(col("id") === 30L).select("amount").as[Long].head() == 300L)
@@ -1066,8 +1068,8 @@ class LakeSpec extends SparkSpec {
     Lake.writeEvolving(spark,
       Seq((81L, 810L, "s81")).toDF("id", "amount", "tag"), dir)
     assert(Lake.readEvolving(spark, dir).count() == 73)
-    assert(Lake.listVersions(spark, dir) == Seq(1L, 2L, 3L))
-    assert(Lake.readVersioned(spark, dir, Some(2L)).count() == 72)
+    assert(Lake.listVersions(spark, dir) == Seq(1L, 2L, 3L, 4L))
+    assert(Lake.readVersioned(spark, dir, Some(3L)).count() == 72)
   }
 
   test("optimizeVersioned folds only small files, links compact ones, O(tail)") {
@@ -1200,7 +1202,7 @@ class LakeSpec extends SparkSpec {
     val src = Seq((10L, 1L, "upd"), (40L, 2L, "upd"), (99L, 3L, "new"))
       .toDF("id", "amount", "tag")
     val (v, (updated, inserted)) = Lake.mergeInto(spark, dir, src, Seq("id"))
-    assert(v == 2L && updated == 2L && inserted == 1L)
+    assert(v == 3L && updated == 2L && inserted == 1L)
     val cur = Lake.readEvolving(spark, dir).orderBy("id")
     assert(cur.count() == 61)
     // era-1 rows still fold through the rename; merged rows replaced
@@ -2857,5 +2859,36 @@ class LakeSpec extends SparkSpec {
       assert(back.select(df.columns.map(col): _*).collect().toSet
         == df.collect().toSet, s"$fmt roundtrip")
     }
+  }
+
+  test("time travel across a schema evolution reads each version's own schema") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val dir = tmp() + "/evtravel"
+    Lake.writeVersioned(spark, Seq((1L, 10), (2L, 20)).toDF("id", "v"), dir)
+    // v2: a drifted append adds `tag`; v3: `v` renamed (and widened) to
+    // `value`; v4: a delete
+    Lake.appendVersioned(spark, Seq((3L, 30, "x")).toDF("id", "v", "tag"), dir)
+    Lake.writeEvolving(spark, Seq((4L, 40L, "y")).toDF("id", "value", "tag"),
+      dir, renames = Map("v" -> "value"))
+    Lake.deleteWhere(spark, dir, col("id") === 2L)
+    assert(Lake.listVersions(spark, dir) == Seq(1L, 2L, 3L, 4L))
+    assert(Lake.schemaVersions(spark, dir) == Seq(1L, 2L, 3L))
+    def at(v: Option[Long]) = {
+      val df = Lake.readVersioned(spark, dir, v)
+      (df.columns.toSeq, df.orderBy("id").collect().map(_.toString).toSeq)
+    }
+    // before the evolution: that version's own columns and rows
+    assert(at(Some(1L)) == ((Seq("id", "v"), Seq("[1,10]", "[2,20]"))))
+    assert(Lake.readVersioned(spark, dir, Some(1L)).schema("v").dataType ==
+      IntegerType)
+    // at each evolution and at the head: the folded logical columns
+    assert(at(Some(2L)) == ((Seq("id", "v", "tag"),
+      Seq("[1,10,null]", "[2,20,null]", "[3,30,x]"))))
+    assert(at(Some(3L)) == ((Seq("id", "value", "tag"),
+      Seq("[1,10,null]", "[2,20,null]", "[3,30,x]", "[4,40,y]"))))
+    assert(Lake.readVersioned(spark, dir, Some(3L)).schema("value").dataType ==
+      LongType)
+    assert(at(None) == ((Seq("id", "value", "tag"),
+      Seq("[1,10,null]", "[3,30,x]", "[4,40,y]"))))
   }
 }

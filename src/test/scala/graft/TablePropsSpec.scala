@@ -323,5 +323,19 @@ class TablePropsSpec extends SparkSpec {
       .filter(_.startsWith("_")).toSet
     assert(meta == Set("_graft_versions", "_graft_latest", "_graft_stats",
       "_graft_bloom", "_graft_staged"), meta.toString)
+    // the evolving op families: the first evolution of a fresh dir, a
+    // drifted append, and a delete, optimize and merge on the evolving table
+    val ev = tmp() + "/evguard"
+    Lake.writeEvolving(spark, (1L to 20L).map(i => (i, i)).toDF("id", "v"), ev)
+    Lake.appendVersioned(spark, Seq((21L, 21L, "x")).toDF("id", "v", "tag"), ev)
+    Lake.deleteWhere(spark, ev, col("id") === 3L)
+    Lake.optimizeVersioned(spark, ev)
+    Lake.mergeInto(spark, ev, Seq((4L, 40L, "m"), (22L, 22L, "n"))
+      .toDF("id", "v", "tag"), Seq("id"))
+    assert(Lake.schemaVersions(spark, ev) == Seq(1L, 2L))
+    assert(Lake.readVersioned(spark, ev).count() == 21L)
+    val evMeta = new java.io.File(ev).listFiles().map(_.getName)
+      .filter(_.startsWith("_")).toSet
+    assert(evMeta == Set("_graft_versions", "_graft_latest"), evMeta.toString)
   }
 }
