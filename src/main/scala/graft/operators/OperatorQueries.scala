@@ -151,8 +151,9 @@ object OperatorQueries {
     * computes manifest rows for only those files. One production note
     * carried as a contract: appended files span the whole mh range, so
     * probe pruning degrades on them until a periodic re-range
-    * ([[graft.sources.Lake.rerange]], the OPTIMIZE analog) — screens stay
-    * CORRECT throughout because the manifest covers the new files.
+    * ([[graft.sources.Lake.rerangeVersioned]], the OPTIMIZE analog) —
+    * screens stay CORRECT throughout because the manifest covers the new
+    * files.
     */
   def admitBatchToIndex(sp: org.apache.spark.sql.SparkSession,
       dir: String, pred: Column, ixPath: String): Unit = {

@@ -90,33 +90,6 @@ object Lake {
     glob.fold(r)(g => r.option("pathGlobFilter", g)).load(path)
   }
 
-  /** Small-file compaction — the OPTIMIZE equivalent for plain parquet
-    * dirs. Streaming sinks and incremental appends accrete one file per
-    * micro-batch/run; at 100 TB that is a week-one pathology (every scan
-    * pays per-file open + listing, and the driver's file index bloats).
-    * `compact` rewrites a directory into ceil(bytes / targetFileBytes)
-    * files via `coalesce` (NARROW — no shuffle; compaction moves bytes,
-    * it should never pay an exchange) and publishes via RENAME-ASIDE:
-    * old dir → dot-prefixed aside, staging → dir, aside deleted last.
-    * A reader never sees a MIX of layouts, and a crash at any step leaves
-    * a complete copy on disk (the next compact call restores a stranded
-    * aside). The one residual window — the instant between the two
-    * renames — can surface to a concurrent lister as a briefly missing
-    * dir, never as partial data; plain-FS dir swaps cannot close it
-    * without a pointer indirection (that is what [[writeVersioned]] is
-    * for). An existing `_graft_stats` manifest is regenerated after the
-    * rewrite (the old one described the old files). Hive-partitioned
-    * tables are compacted per LEAF dir, preserving the partition layout
-    * and its pruning.
-    *
-    * A dir carrying a `_spark_metadata` streaming-sink log is refused
-    * unless `dropStreamingMetadata = true`: readers of such dirs trust
-    * the log, not the listing, and would miss the compacted files. With
-    * the flag, the log is removed and the dir becomes a plain parquet
-    * table (do this only on a sink that has stopped appending).
-    *
-    * @return (filesBefore, filesAfter) across all compacted leaves
-    */
   /** Versioned table writes with time-travel reads — the commit half of
     * the Delta behaviors this lake reproduces (compaction and data
     * skipping being the others).
@@ -193,18 +166,12 @@ object Lake {
         enforceConstraintsOn(spark, batch, gate.checks, s"writeVersioned($path)")
       val (dataDir, entries) = writeClaimedDir(spark, fs, path, batch)
       // an overwrite keeps the table's properties (Delta's rule): it
-      // publishes over the NEWEST manifest, carrying its properties and
-      // enforcing any the gate missed, at its version + 1 — the number
-      // every commit type contends on (the snapshot dir is a namespace)
-      val base = newestManifest(spark, fs, path, m0)
-      val pub = VersionManifest(base.fold(dataDir)(_.version + 1),
-        batch.schema.toDDL, entries, props = base.fold(TableProps())(_.props))
-      enforceNewProps(spark, fs, path, pub, entries.map(_._1), gate,
-        s"writeVersioned($path)")
-      writeVersionManifest(fs, path, pub.copy(streamBatchId = streamBatchId),
-        op = Some("snapshot"))
-      writeVersionPointer(spark, fs, path, pub.version)
-      pub.version
+      // replaces whatever head it lands on, carrying that head's
+      // properties; a table's first version is its claimed dir's number
+      val ddl = batch.schema.toDDL
+      commit(spark, fs, path, m0.getOrElse(VersionManifest(dataDir - 1, ddl, Nil)),
+        "snapshot", streamBatchId = streamBatchId,
+        replace = Some(VersionManifest(0L, ddl, entries))).version
     } finally { if (gate.gates) dfIn.unpersist(); () }
   }
 
@@ -215,18 +182,15 @@ object Lake {
     * touching it. Schema must match the table exactly (appends are not
     * schema evolution — that is [[writeEvolving]]).
     *
-    * CONCURRENT appends REBASE instead of failing: appends commute (each
-    * only ADDS files), so the loser of the manifest-publish race re-reads
-    * the new latest version, re-checks the schema against it, and
-    * republishes its delta against that base — the data files, already on
-    * disk, are never rewritten. This is Delta's optimistic-concurrency
+    * CONCURRENT appends REBASE instead of failing: an append reads
+    * nothing of the table, so the loser of the manifest-publish race
+    * republishes its delta over the winners ([[commit]]) — the data
+    * files, already on disk, are never rewritten; a winner that changed
+    * the schema refuses it. This is Delta's optimistic-concurrency
     * behavior for AddFile-only commits. The linearization point is the
-    * manifest rename: manifest numbers contend on max(published)+1, so
-    * sibling commits against one base are impossible — the second writer
-    * always observes the first's manifest and chains behind it.
-    * NON-commuting commits ([[deleteWhere]]/[[mergeInto]]/
-    * [[optimizeVersioned]] — their removals depend on the base file set)
-    * keep the fail-loudly contract.
+    * manifest rename: sibling commits against one base are impossible —
+    * the second writer always observes the first's manifest and chains
+    * behind it.
     */
   def appendVersioned(spark: SparkSession, df: DataFrame, path: String,
       streamBatchId: Option[Long] = None): Long = {
@@ -284,84 +248,32 @@ object Lake {
         dfG.select(m0.colmap.map { case (l, p) =>
           org.apache.spark.sql.functions.col(l).as(p) }: _*)
       }
-    val batchFields = dfP.schema.fields
-      .map(f => f.name -> f.dataType.catalogString).toSeq
     // SCHEMA EVOLUTION IS NOT A REFUSAL: a 24/7 stream appending through
     // this path must survive upstream column drift. A DRIFTED batch
     // publishes the schema log's next entry WITH its files in one
     // evolve-append commit (the same validation as writeEvolving: additive
-    // or widening only, stamped with this batch id); on a plain table the
-    // log starts as [current schema, batch schema]. A batch matching the
+    // or widening only, stamped with this batch id). A batch matching the
     // current schema is a plain delta append (no log entry — per-batch log
     // growth would pile thousands of identical versions)
-    val cur = org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
-      .fields.map(f => f.name -> f.dataType.catalogString).toSeq
-    if (batchFields != cur)
+    if (fieldsOf(dfP.schema) != fieldsOf(m0.schemaDdl))
       return evolve(spark, fs, path, df, Some(m0), Map.empty, streamBatchId,
-        if (m0.schemaLog.nonEmpty) m0.schemaLog
-        else Seq(SchemaVersion(1L, cur, Nil)))._2.version
-    def schemaCheck(baseDdl: String): Unit = {
-      val prior = org.apache.spark.sql.types.StructType.fromDDL(baseDdl)
-      require(batchFields ==
-          prior.fields.map(f => (f.name, f.dataType.catalogString)).toSeq,
-        s"appendVersioned schema mismatch: table has ${prior.toDDL}, " +
-          s"frame has ${dfP.schema.toDDL}")
-    }
+        logOf(m0))._2.version
     // constraints gate BEFORE any write: a violating batch refuses with
     // nothing on disk, not even an unpublished claimed dir
     if (gate.checks.nonEmpty)
       enforceConstraintsOn(spark, dfP, gate.checks, s"appendVersioned($path)")
-    // phase 1 — write the batch ONCE into a uniquely-claimed dir (see
+    // the batch is written ONCE into a uniquely-claimed dir (see
     // writeClaimedDir for the claim protocol and why the dir number is a
-    // namespace, not the commit number)
-    val fresh = writeClaimedDir(spark, fs, path, dfP)._2
-    // phase 2 — publish the delta manifest, REBASING on conflict: the
-    // base is re-read each attempt, so after losing a race the commit
-    // chains behind the winner instead of forking a sibling lineage
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= MaxCommitRetries,
-        s"appendVersioned: lost the manifest race under $path " +
-          s"$MaxCommitRetries times (livelock? raise MaxCommitRetries)")
-      // the base is the NEWEST MANIFEST, never the pointer: the pointer
-      // can lag a concurrent commit (it is written after the manifest),
-      // and chaining a delta onto a lagging base would silently drop the
-      // newer commit's files from this lineage
-      val base = newestManifest(spark, fs, path, Some(m0)).get
-      schemaCheck(base.schemaDdl) // a concurrent evolve/merge may have changed it
-      // a constraint or generated spec that landed since the gate is
-      // enforced on the written batch files before the manifest rename
-      enforceNewProps(spark, fs, path, base, fresh.map(_._1), gate,
-        s"appendVersioned($path)")
-      val next = base.version + 1
-      val published =
-        try Some(writeVersionDelta(spark, fs, path, next, base.schemaDdl,
-          base, add = fresh, remove = Seq.empty,
-          streamBatchId = streamBatchId, op = Some("append")))
-        catch {
-          case _: IllegalArgumentException
-              if fs.exists(versionManifestFile(path, next)) =>
-            None // manifest race lost: re-read the new base and rebase
-        }
-      published.foreach { pub =>
-        writeVersionPointer(spark, fs, path, next)
-        // keep an existing skipping manifest live over the appended files
-        // (the deleteWhere/merge/optimize invariant — appends are exactly
-        // the commits that degrade probe pruning, so leaving the manifest
-        // stale here would make every post-append readSkipping refuse):
-        // O(batch) — stats are computed for the fresh files only
-        keepStatsLive(spark, fs, path, pub)
-        refreshBloomIndexes(spark, fs, path, pub)
-        // table-level auto-compaction (see setAutoOptimize), under the
-        // policy of the version this commit published: runs AFTER this
-        // commit published, in its own maintenance commit — the append's
-        // version contract is unchanged
-        maybeAutoOptimize(spark, fs, path, pub)
-        return next
-      }
-    }
-    sys.error("unreachable")
+    // namespace, not the commit number), then published over m0
+    val pub = commit(spark, fs, path, m0, "append",
+      add = writeClaimedDir(spark, fs, path, dfP)._2,
+      streamBatchId = streamBatchId)
+    // table-level auto-compaction (see setAutoOptimize), under the policy
+    // of the version this commit published: runs AFTER this commit
+    // published, in its own maintenance commit — the append's version
+    // contract is unchanged
+    maybeAutoOptimize(spark, fs, path, pub)
+    pub.version
   }
 
   def listVersions(spark: SparkSession, path: String): Seq[Long] = {
@@ -1784,12 +1696,7 @@ object Lake {
     require(cm1.map(_._1).distinct.length == cm1.length,
       s"renameColumns: resulting schema has duplicate column names " +
         s"(${cm1.map(_._1).mkString(", ")})")
-    val next = v0 + 1
-    writeVersionDelta(spark, fs, path, next, m0.schemaDdl,
-      base = m0, add = Nil, remove = Nil, op = Some("rename"),
-      colmap = cm1)
-    writeVersionPointer(spark, fs, path, next)
-    next
+    commit(spark, fs, path, m0, "rename", colmap = cm1).version
   }
 
   /** METADATA-ONLY column drop: publish a new version whose column map no
@@ -1826,12 +1733,8 @@ object Lake {
     val keepPhys = cm1.map(_._2).toSet
     val ddl1 = org.apache.spark.sql.types.StructType(
       phys.fields.filter(f => keepPhys(f.name))).toDDL
-    val next = v0 + 1
-    writeVersionDelta(spark, fs, path, next, ddl1,
-      base = m0, add = Nil, remove = Nil, op = Some("drop"),
-      colmap = cm1)
-    writeVersionPointer(spark, fs, path, next)
-    next
+    commit(spark, fs, path, m0, "drop", schemaDdl = Some(ddl1),
+      colmap = cm1).version
   }
 
   /** Rewrite a column-mapped table ONCE under its logical names and clear
@@ -1851,12 +1754,11 @@ object Lake {
     if (m0.colmap.isEmpty) return (v0, 0L)
     val logical = readManifestFiles(spark, fs, path, m0)
     val (_, entries) = writeClaimedDir(spark, fs, path, logical)
-    val next = v0 + 1
-    writeVersionManifest(fs, path, VersionManifest(next,
-      logical.schema.toDDL, entries, props = m0.props, schemaLog = m0.schemaLog),
-      op = Some("remap"))
-    writeVersionPointer(spark, fs, path, next)
-    (next, entries.size.toLong)
+    // the rewrite read the whole table: only an alter winner rebases it
+    val pub = commit(spark, fs, path, m0, "remap", readAll = true,
+      replace = Some(VersionManifest(0L, logical.schema.toDDL, entries,
+        schemaLog = m0.schemaLog)))
+    (pub.version, entries.size.toLong)
   }
 
   /** Delta's `GENERATE symlink_format_manifest` analog — EXTERNAL-ENGINE
@@ -1947,7 +1849,7 @@ object Lake {
     * the latest logical schema.
     *
     * Isolation: by default a delete that loses the commit race REBASES
-    * over disjoint winners (see [[publishNonCommuting]]) — rows APPENDED
+    * over disjoint winners (see [[commit]]) — rows APPENDED
     * concurrently that match `pred` survive, because the delete applies
     * to the data it read. That is WEAKER than Delta's WriteSerializable,
     * which raises ConcurrentAppendException when a winner's added files
@@ -2006,11 +1908,11 @@ object Lake {
       if (matched.isEmpty) return (v0, v0, 0L)
       // SQL DELETE semantics: remove rows where pred is TRUE; a null
       // predicate KEEPS the row (a bare !pred would silently delete it).
-      // The rewrite lands in a claimed namespace dir; the COMMIT number is
-      // exactly base+1 — see the contiguity note below. The rewrite also
-      // reads through any live tombstones, so it PURGES them for the
-      // matched files (their dv coverage drops with the remove) instead
-      // of resurrecting dv-deleted rows.
+      // The rewrite lands in a claimed namespace dir (the COMMIT number
+      // is the next free one — see commit). It also reads through any
+      // live tombstones, so it PURGES them for the matched files (their
+      // dv coverage drops with the remove) instead of resurrecting
+      // dv-deleted rows.
       val matchedEntries = m0.entries.filter(e => matched(resolveRef(root, e._1)))
       // size-adaptive rewrite (same rule as mergeInto): the survivors are
       // bounded by the matched files' manifest row counts, so shape the
@@ -2025,13 +1927,9 @@ object Lake {
       // a concurrent commit that touched NONE of our matched files (append,
       // disjoint delete) rebases this delete behind it; a commit that
       // removed one of them refuses loudly (our rewrite would resurrect
-      // rows it dropped) — see publishNonCommuting
-      val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
-        add = rewritten, remove = matchedEntries.map(_._1), op = "delete")
-      // keep an existing skipping manifest live: the rewritten files gain
-      // stats rows incrementally (O(rewritten), not a corpus re-scan)
-      keepStatsLive(spark, fs, path, pub)
-      refreshBloomIndexes(spark, fs, path, pub)
+      // rows it dropped) — see commit
+      val pub = commit(spark, fs, path, m0, "delete", add = rewritten,
+        remove = matchedEntries.map(_._1))
       // metadata-only audit count from the manifests' per-file n_rows: rows
       // in the matched (resolved-source) files minus rows in their rewrites
       // — never a dir-listing guess, never a counting scan. Rows a prior
@@ -2098,7 +1996,7 @@ object Lake {
     *    manifest resolves its OWN live sidecar set);
     *  - the commit REBASES over concurrent appends (it touches no files)
     *    and refuses when a winner rewrote a covered file — positions
-    *    don't survive a rewrite (see publishNonCommuting's dv checks);
+    *    don't survive a rewrite (see commit's dv checks);
     *  - like non-strict [[deleteWhere]], rows in files appended AFTER the
     *    discovery pass are not re-screened (pass `strict` there for that).
     *
@@ -2179,8 +2077,7 @@ object Lake {
         readTombstones(spark, fs, written.map(e => resolveRef(root, e._1)))
           .select("file").distinct().collect().map(_.getString(0)).toSeq
     }
-    val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
-      add = Nil, remove = Nil, op = "dvdelete",
+    val pub = commit(spark, fs, path, m0, "dvdelete",
       dvAdd = written.map(e => DvEntry(e._1, e._2, covered)),
       readSet = covered.toSet)
     (pub.version, nDel)
@@ -2233,12 +2130,8 @@ object Lake {
     val (_, rewritten) = writeClaimedDir(spark, fs, path,
       readFilesWithDv(spark, fs, path, m0,
         dvdRel.map(f => resolveRef(root, f))))
-    val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
-      add = rewritten, remove = dvdRel, op = "purge",
-      readSet = dvdRel.toSet)
-    // keep an existing skipping manifest live over the purged rewrites
-    keepStatsLive(spark, fs, path, pub)
-    refreshBloomIndexes(spark, fs, path, pub)
+    val pub = commit(spark, fs, path, m0, "purge", add = rewritten,
+      remove = dvdRel, readSet = dvdRel.toSet)
     (pub.version, dvdRel.size.toLong)
   }
 
@@ -2587,16 +2480,17 @@ object Lake {
         .fieldNames.map(col): _*)
   }
 
-  /** The commit tail every merge shares, publishing base `m0` + 1:
+  /** The commit tail every merge shares — [[mergeInto]], [[mergeCdc]]
+    * and the gold fold ([[foldAggDelta]]):
     *   1. gate the rows ENTERING the table (`upserts`, `nUp` of them) on
     *      `m0`'s CHECK constraints — carried rows were validated when they
     *      entered, deleted rows remove data;
     *   2. write `keptOld` (the surviving rows of the matched files, in
     *      the table's column order) plus the upserts into one claimed
     *      dir, shaped to `estRows` rows;
-    *   3. publish the delta manifest, the pointer, the stats append and
-    *      the bloom refresh. The publish is strictly at `m0` + 1, so a
-    *      constraint added since step 1 makes it lose the race loudly.
+    *   3. [[commit]] it over `m0` as a commit that read the whole table:
+    *      it rebases only over alter winners, enforcing a constraint
+    *      added since step 1 on the rewrite, and refuses any other.
     */
   private def publishMergeRewrite(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
@@ -2613,7 +2507,7 @@ object Lake {
     // rewrite = unmatched rows of matched files + every UPSERT row
     // (updated keys replace, new keys insert; delete-flagged keys
     // contribute removals only) — one write into a claimed namespace
-    // dir; the commit number is base+1 (contiguity — see deleteWhere)
+    // dir
     val rewriteAll = keptOld.unionByName(entering)
     // size-adaptive output: the rewrite's row count is KNOWN before the
     // write (matched files' manifest n_rows minus replaced/deleted rows
@@ -2624,21 +2518,9 @@ object Lake {
       if (fs.exists(statsDir)) rewriteAll
       else rewriteAll.coalesce(commitFileParts(estRows))
     val (_, rewritten) = writeClaimedDir(spark, fs, path, rewriteDf)
-    // MERGE deliberately keeps the strict publish (no disjoint-set
-    // rebase): its match/insert split was computed against the WHOLE
-    // key set of the base version, so even a file-disjoint concurrent
-    // append can invalidate it (an appended row carrying a source key
-    // should have been an UPDATE — rebasing would silently insert a
-    // duplicate). Delta draws the same line: ConcurrentAppendException
-    // for merges that read the table, rebase only for blind appends.
-    val next = m0.version + 1
-    val pub = writeVersionDelta(spark, fs, path, next, m0.schemaDdl,
-      base = m0, add = rewritten, remove = matchedEntries.map(_._1),
-      streamBatchId = streamBatchId, op = Some("merge"))
-    writeVersionPointer(spark, fs, path, next)
-    keepStatsLive(spark, fs, path, pub)
-    refreshBloomIndexes(spark, fs, path, pub)
-    next
+    commit(spark, fs, path, m0, "merge", add = rewritten,
+      remove = matchedEntries.map(_._1), readAll = true,
+      streamBatchId = streamBatchId).version
   }
 
   /** Make a STREAM-WRITTEN table versioned — the commit half of the
@@ -2657,7 +2539,10 @@ object Lake {
     * both drains' files); calling it twice is a no-op. Root-level only is
     * load-bearing: files under `v=N` dirs belong to versioned REWRITES
     * (delete/merge/optimize) — a crash-orphaned rewrite dir must never be
-    * adopted as streamed data (vacuum reclaims it instead).
+    * adopted as streamed data (vacuum reclaims it instead). The adoption
+    * reads nothing of the table, so it rebases over concurrent commits
+    * like an append ([[commit]]); a winner that adopted one of the same
+    * files refuses it, so two adoptions of one file never both land.
     *
     * After the first commit the table is a first-class versioned Lake
     * table: `readVersioned`/time travel/`deleteWhere`/`mergeInto`/
@@ -2684,9 +2569,8 @@ object Lake {
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hp)) return None
     // the newest MANIFEST, resolved once: the column-mapping and property
-    // guards read it, and a delta commit publishes at its version + 1 —
-    // the contiguity contract every delta commit follows (see
-    // deleteWhere), so a concurrent alter makes it lose the race loudly
+    // guards read it, and the adoption commits over it, rebasing over
+    // any winner that did not adopt one of its files
     val retained = manifestVersions(fs, path)
     val base =
       if (!fs.exists(versionsDir(path))) None
@@ -2746,18 +2630,15 @@ object Lake {
       enforceConstraintsOn(spark,
         readParquet(spark, path, fresh.map(r => resolveRef(root, r))),
         props.checks, s"commitStreamVersion($path)")
-    val entries = fileEntries(spark, fs, path, fresh.map(r => resolveRef(root, r)))
-    val next = m0.version + 1
-    val pub = writeVersionDelta(spark, fs, path, next, m0.schemaDdl,
-      base = m0, add = entries, remove = Seq.empty,
-      streamBatchId = streamBatchId, op = Some("stream-adopt"))
-    writeVersionPointer(spark, fs, path, next)
+    val pub = commit(spark, fs, path, m0, "stream-adopt",
+      add = fileEntries(spark, fs, path, fresh.map(r => resolveRef(root, r))),
+      streamBatchId = streamBatchId)
     // a drained sink accretes one file set per drain — exactly the
     // auto-compaction target case (see setAutoOptimize); folded originals
     // stay on disk for log-trusting readers until vacuum, like every
     // optimizeVersioned commit
     maybeAutoOptimize(spark, fs, path, pub)
-    Some(next)
+    Some(pub.version)
   }
 
   /** Files the `_spark_metadata` streaming-sink log has COMMITTED
@@ -2814,8 +2695,9 @@ object Lake {
     * version `v`'s file list as a NEW version (metadata-only — files are
     * re-referenced, never copied), so the table's latest state becomes
     * the old state while the full history, including the versions being
-    * rolled back, stays time-travelable until vacuum. Published at
-    * base+1 with the rename guard like every commit, op "restore".
+    * rolled back, stays time-travelable until vacuum. A [[commit]] like
+    * any other, op "restore": it read nothing of the head, so it rebases
+    * over concurrent winners and replaces whatever head it lands on.
     *
     * @return the new version number
     */
@@ -2827,7 +2709,7 @@ object Lake {
     val m = readVersionManifest(spark, fs, path, v).getOrElse(
       sys.error(s"version $v does not exist under $path (have: " +
         s"${manifestVersions(fs, path).mkString(",")})"))
-    val head = newestManifest(spark, fs, path).get
+    val (_, head) = resolveHead(spark, fs, path)
     if (v == head.version) return v // restoring the latest is a no-op
     // the restore keeps the HEAD's properties (a restore rolls data back,
     // not the table's constraints). A version published BEFORE
@@ -2845,22 +2727,16 @@ object Lake {
       enforceConstraintsOn(spark, readManifestFiles(spark, fs, path, m), resCs,
         s"restoreVersion($path, v=$v)")
     // the restored version's schema log describes its files, and the
-    // head's properties never join a schema log (publishNonCommuting's
-    // rule)
+    // head's properties never join a schema log (commit's rule)
     require(m.schemaLog.isEmpty || !head.props.gates,
       s"restoreVersion($path, v=$v): version $v is schema-evolving and " +
         "the table carries CHECK constraints or GENERATED columns - drop " +
         "them first")
-    val next = head.version + 1
     // the restored version's live deletion vectors travel with it — a
     // restore to a pre-purge version re-applies that version's sidecars —
     // and so do its column mapping (restoring past a rename restores
-    // that version's own logical names) and its schema log; published
-    // strictly at head + 1
-    writeVersionManifest(fs, path, m.copy(version = next,
-      streamBatchId = None, props = head.props), op = Some("restore"))
-    writeVersionPointer(spark, fs, path, next)
-    next
+    // that version's own logical names) and its schema log
+    commit(spark, fs, path, head, "restore", replace = Some(m)).version
   }
 
   /** CHECK CONSTRAINTS for versioned tables — Delta's `ALTER TABLE ADD
@@ -2899,7 +2775,7 @@ object Lake {
     // versioned-commit gates, and a rename could silently detach the
     // constraint from the column it was written against — an unenforced
     // constraint is worse than none. An evolution that lands concurrently
-    // makes this alter's rebase refuse (publishNonCommuting)
+    // makes this alter's rebase refuse (commit)
     require(m0.schemaLog.isEmpty,
       s"$path is a schema-evolving table; CHECK constraints require the " +
         "fixed-schema versioned write path")
@@ -2986,8 +2862,7 @@ object Lake {
   private def publishAlter(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String, m0: VersionManifest,
       props: TableProps): Unit = {
-    publishNonCommuting(spark, fs, path, m0, m0.schemaDdl, add = Nil,
-      remove = Nil, op = "alter", props = Some(props))
+    commit(spark, fs, path, m0, "alter", props = Some(props))
     ()
   }
 
@@ -3063,9 +2938,9 @@ object Lake {
     * gate enforced (`have`) lack, they are enforced here on `files`
     * (manifest-relative, read through `m`'s schema and deletion vectors)
     * before the manifest rename: one narrow pass per kind, none when
-    * nothing is new. A commit publishing strictly at its gate head + 1
-    * (merge, the stream adoption) needs no call: a concurrent alter makes
-    * it lose the race loudly.
+    * nothing is new. [[commit]] calls it on every rebase, so a commit
+    * whose gate missed a concurrent alter enforces that alter's
+    * properties before it publishes.
     */
   private def enforceNewProps(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String, m: VersionManifest,
@@ -3234,7 +3109,7 @@ object Lake {
 
   /** OPTIMIZE for versioned tables — small-file compaction published as a
     * NEW VERSION, never an in-place rewrite (shared files are immutable;
-    * that is why [[compact]]/[[rerange]] refuse versioned tables). Files
+    * that is why [[compact]] refuses versioned tables). Files
     * smaller than half the target are bin-packed into ~targetFileBytes
     * rewrites; every already-compact file carries into the new version BY
     * REFERENCE. Cost is therefore ∝ SMALL-FILE bytes, not table size —
@@ -3261,8 +3136,6 @@ object Lake {
     val smallBytes = small.map(_._2).sum
     val nOut = math.max(1L,
       (smallBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // fold dir is a claimed namespace; the commit number is base+1 (the
-    // non-commuting contiguity contract — see deleteWhere)
     // reading THROUGH any live deletion vectors makes the fold double as
     // a purge for the folded files: tombstoned rows drop from the
     // rewrite, and the files' dv coverage drops with the remove
@@ -3272,11 +3145,8 @@ object Lake {
         .coalesce(nOut)) // NARROW: compaction moves bytes, never an exchange
     // disjoint-set commit: maintenance must not starve under a steady
     // append stream — concurrent appends rebase this fold behind them
-    val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
-      add = folded, remove = small.map(_._1._1), op = "optimize")
-    // keep an existing skipping manifest live over the folded files
-    keepStatsLive(spark, fs, path, pub)
-    refreshBloomIndexes(spark, fs, path, pub)
+    val pub = commit(spark, fs, path, m0, "optimize", add = folded,
+      remove = small.map(_._1._1))
     (pub.version, small.size.toLong)
   }
 
@@ -3356,18 +3226,18 @@ object Lake {
     }
   }
 
-  /** Sort-order OPTIMIZE for VERSIONED tables — the [[rerange]] analog
-    * published as a new version instead of an in-place dir swap (shared
-    * files are immutable). Interleaved [[appendVersioned]] batches each
-    * span the whole key range, so probe/range pruning on `c` degrades
-    * permanently as a versioned table accretes — the exact decay
-    * [[rerange]] fixes for plain tables, which until now had no versioned
-    * counterpart ([[optimizeVersioned]] bin-packs but never re-sorts).
-    * This rewrites the CURRENT file set range-clustered on `c` (one range
-    * exchange, ~targetFileRows rows per file) and publishes it as a full
-    * checkpoint manifest — a full manifest, not a delta, because the
-    * commit replaces every reference anyway (a delta would be checkpoint-
-    * sized). Old versions keep their file lists and stay time-travelable;
+  /** RE-RANGE maintenance — sort-order OPTIMIZE, the single-column
+    * sibling of [[zorderVersioned]], published as a new version (shared
+    * files are immutable; a plain table is versioned first, its files
+    * becoming version 1 by reference). Appended batches each span the
+    * whole key range, so probe/range pruning on `c` degrades as a table
+    * accretes ([[optimizeVersioned]] bin-packs but never re-sorts).
+    * Reads stay correct throughout — pruning quality, not correctness, is
+    * what decays. This rewrites the CURRENT file set range-clustered on
+    * `c` (one range exchange, ~targetFileRows rows per file) and publishes
+    * it as a full checkpoint manifest — a full manifest, not a delta,
+    * because the commit replaces every reference anyway (a delta would be
+    * checkpoint-sized). Old versions keep their file lists and stay time-travelable;
     * [[vacuum]] later reclaims the superseded originals; the `_graft_stats`
     * manifest gains rows for the new files so probe pruning is restored
     * immediately. Row counts come from manifest n_rows — no counting scan.
@@ -3384,42 +3254,43 @@ object Lake {
     require(targetFileRows > 0, "targetFileRows must be positive")
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(versionsDir(path)),
-      s"$path carries no _graft_versions manifests; use rerange (in-place " +
-        "dir swap) for plain tables")
+    if (!fs.exists(versionsDir(path))) bootstrapRootVersion(spark, fs, path)
     val (v0, m0) = resolveHead(spark, fs, path)
     refuseColMap(m0.colmap, path, "rerangeVersioned")
     if (m0.entries.isEmpty) return (v0, 0L)
     val nRows = m0.entries.map(_._2).sum
     val nOut = math.max(1L, (nRows + targetFileRows - 1) / targetFileRows)
-    // rewrite dir is a claimed namespace; the commit number is base+1
-    // (the non-commuting contiguity contract — see deleteWhere)
     val (_, rewritten) = writeClaimedDir(spark, fs, path,
       readManifestFiles(spark, fs, path, m0)
         .repartitionByRange(nOut.toInt, col(c)))
     // checkpoint-form commit with disjoint-set rebase: a concurrent
     // append's files ride into the new manifest un-reorganized (row-
     // correct; the next pass organizes them)
-    val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
-      add = rewritten, remove = m0.entries.map(_._1), op = "rerange",
-      full = true)
-    // the re-range key ALWAYS ends up tracked (rerange's contract): with c
-    // already tracked this is an O(new files) append; a manifest not yet
-    // tracking c (or absent) rebuilds in full — same cost class as the
-    // rewrite that just ran
-    val stats = StatsManifest.at(fs, path)
-    appendStatsTo(spark, fs, path,
-      (stats.toSeq.flatMap(_.tracked) :+ c).distinct, stats, Some(pub))
-    refreshBloomIndexes(spark, fs, path, pub)
+    val pub = commit(spark, fs, path, m0, "rerange", add = rewritten,
+      remove = m0.entries.map(_._1), full = true)
+    trackStats(spark, fs, path, Seq(c))
     (pub.version, rewritten.size.toLong)
+  }
+
+  /** The re-range/z-order contract: the clustered columns end up tracked
+    * by `_graft_stats`. The commit's upkeep already covered the rewrite
+    * when the manifest tracks them; a manifest not yet tracking them (or
+    * absent) rebuilds in full — the same cost class as the rewrite.
+    */
+  private def trackStats(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String,
+      cols: Seq[String]): Unit = {
+    val tracked = StatsManifest.trackedAt(fs, path)
+    if (!cols.forall(tracked.contains))
+      writeStats(spark, path, (tracked ++ cols).distinct)
+    ()
   }
 
   /** The table's HEAD version: the `_graft_latest` pointer, else the newest
     * manifest (the pointer is written after its manifest, so it may lag a
     * publish or be missing mid-swap); refuses a table with neither. Every
-    * operation decides its head here. A commit base that must be the
-    * NEWEST manifest (appendVersioned's publish loop, the rebase in
-    * publishNonCommuting) lists the manifests instead.
+    * operation decides its head here; a commit over a lagging head
+    * rebases in [[commit]], which lists the manifests.
     */
   private def headVersion(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Long =
@@ -3437,18 +3308,6 @@ object Lake {
     (v, readVersionManifest(spark, fs, path, v).getOrElse(
       sys.error(s"version $v has no manifest under $path")))
   }
-
-  /** The NEWEST manifest — the base a commit publishes over (the pointer
-    * can lag a concurrent publish) — reusing `known` when no commit has
-    * landed since it was resolved; None for a table without versions.
-    */
-  private def newestManifest(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      known: Option[VersionManifest] = None): Option[VersionManifest] =
-    manifestVersions(fs, path).lastOption.map(v =>
-      known.filter(_.version == v).getOrElse(
-        readVersionManifest(spark, fs, path, v).getOrElse(
-          sys.error(s"version $v has no manifest under $path"))))
 
   /** Version `version`'s manifest, or the head's when None; refuses a
     * version that has none.
@@ -3482,67 +3341,88 @@ object Lake {
       }
   }
 
-  /** Publish a NON-COMMUTING commit (one that removes files) with
-    * DISJOINT-SET conflict detection — Delta's WriteSerializable rule
-    * instead of refuse-on-any-race. The commit's add/remove sets were
-    * computed against base `v0`; if another commit wins the version
-    * number, the winner chain `v0+1..head` is inspected, each winner's
-    * change being its file set against its predecessor's (a delta's
-    * add/remove; a checkpoint — an append past [[MaxChainDepth]], zorder,
-    * rerange — lists the whole table, so only the diff tells):
+  /** THE COMMIT: every commit over an existing version publishes here, in
+    * load-bearing order — the manifest (tmp-write + rename with a
+    * rename-to-existing guard), the `_graft_latest` pointer, and for a
+    * commit that adds files the skipping-index upkeep over the manifest
+    * it published ([[keepStatsLive]], [[refreshBloomIndexes]]).
     *
-    *   - every winner removed NO file this commit removes and left the
-    *     schema unchanged → the two commits touch disjoint file sets, so
-    *     they COMMUTE at file granularity; REBASE: republish the same
-    *     add/remove against the new head (data files already on disk are
-    *     never rewritten). This is what lets maintenance
-    *     (optimize/zorder/rerange) and takedown deletes land under a
-    *     steady append stream instead of starving.
-    *   - a winner removed one of OUR removed files (our rewrite is stale —
-    *     rewriting it would resurrect rows the winner dropped), replaced
-    *     the table wholesale (snapshot or restore commit), or changed the
-    *     schema → REFUSE loudly; the caller must recompute against the new
-    *     state.
+    * The change was computed against base `m0`. When concurrent commits
+    * win the version number first, the winner chain `m0+1..head` is
+    * inspected, each winner's change being its file set against its
+    * predecessor's (a delta's add/remove; a checkpoint — an append past
+    * [[MaxChainDepth]], zorder, rerange — lists the whole table, so only
+    * the diff tells), and the commit REBASES — republishes the same change
+    * against the new head; its data files, already on disk, are never
+    * rewritten — unless a winner conflicts with what the commit READ:
+    *
+    *   - NOTHING (append, stream adoption, WAP publish, evolve-append, and
+    *     the `replace` commits snapshot and restore): any winner — the
+    *     commit's rows do not depend on the base (Delta's blind append);
+    *   - the files it REMOVES or TOMBSTONES (`remove`, `readSet`: delete,
+    *     DV delete, purge, optimize, zorder, rerange): refuses a winner
+    *     that removed one of them, tombstoned a file it removes, or
+    *     replaced the table (snapshot or restore) — Delta's
+    *     WriteSerializable disjoint-set rule. This is what lets
+    *     maintenance and takedown deletes land under a steady append
+    *     stream instead of starving;
+    *   - the WHOLE TABLE (`readAll`: merge — which serves the gold fold —
+    *     and materializeMapping): rebases only over winners that changed
+    *     no data file, deletion vector or column mapping (alter commits).
+    *     A merge's match/insert split was computed against the base's
+    *     whole key set, so even a file-disjoint append can invalidate it
+    *     (an appended row carrying a source key should have been an
+    *     UPDATE) — Delta's ConcurrentAppendException line.
+    *
+    * Every commit refuses a winner that added a file it also adds (two
+    * adoptions of one stream file), and one adding or removing files
+    * refuses a winner that changed the schema it read unless to the one
+    * it publishes. A metadata commit refuses a winner that changed what it
+    * rewrites: an ALTER (`props`: the whole new property set, no file
+    * change; it keeps the schema of the base it lands on) one that changed
+    * the properties or column mapping, a RENAME or DROP (`colmap`) one
+    * that changed the properties, mapping or schema log, an EVOLUTION
+    * (`schemaLog`: the whole new log) one that changed the log or mapping.
     *
     * Semantics note: rows APPENDED by a winner that would have matched a
     * rebased delete's predicate are NOT deleted — the delete applies to
-    * the data it read. This is WEAKER than Delta's WriteSerializable,
-    * which raises ConcurrentAppendException when a winner's added files
-    * match a DELETE's read predicate; [[deleteWhere]]'s `strict` flag
-    * restores that guarantee by re-checking winner-added files and
-    * re-deleting. A reorg rebased over an append leaves the appended
-    * files unorganized but carried — row-correct, organized on the next
-    * maintenance pass.
+    * the data it read. [[deleteWhere]]'s `strict` flag restores Delta's
+    * guarantee by re-checking winner-added files. A reorg rebased over an
+    * append leaves the appended files unorganized but carried.
     *
-    * `full = true` publishes checkpoint-form manifests (zorder/rerange
-    * replace ~every reference, so a delta would be checkpoint-sized with
-    * none of the O(1)-resolution benefit).
-    *
-    * TABLE METADATA follows [[enforceNewProps]]'s rule: the caller gated
+    * TABLE PROPERTIES follow [[enforceNewProps]]'s rule: the caller gated
     * its batch against `m0.props`, so a rebase onto a head whose
-    * properties gained a constraint or spec enforces it on `add`. An
-    * ALTER commit (`props` defined: the whole new property set, no add,
-    * no remove) refuses over a winner that changed the properties or the
-    * column mapping (its set was derived from `m0`'s), keeps the schema of
-    * the base it lands on, and applies its new properties to the files
-    * the winners added before rebasing. A schema-evolving commit
-    * (`schemaLog` defined: the whole new log) refuses over a winner that
-    * changed the log or the column mapping. And no rebase publishes a
-    * schema log together with CHECK constraints or generated columns:
-    * evolved reads bypass the gates that enforce them.
+    * properties gained a constraint or spec enforces it on `add`; an
+    * alter enforces its new properties on the files the winners added.
+    * And no rebase publishes a schema log together with CHECK
+    * constraints, generated columns or deletion vectors: evolved reads
+    * bypass the gates that enforce them and the tombstone anti-join.
+    *
+    * `schemaDdl` is the schema the commit publishes (None: the one of the
+    * base it lands on). `full = true` publishes checkpoint-form manifests
+    * (zorder/rerange replace ~every reference, so a delta would be
+    * checkpoint-sized with none of the O(1)-resolution benefit).
+    * `replace` publishes that manifest's files, deletion vectors, column
+    * mapping and schema as the whole table, as a checkpoint under the
+    * properties of the base it lands on (snapshot, restore, remap).
     *
     * @return the manifest published, as `m0` (or the head it rebased
-    *         onto) plus this commit — what the caller's upkeep covers
+    *         onto) plus this commit
     */
-  private def publishNonCommuting(spark: SparkSession,
+  private def commit(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String, m0: VersionManifest,
-      schemaDdl: String, add: Seq[(String, Long)], remove: Seq[String],
-      op: String, full: Boolean = false,
+      op: String, add: Seq[(String, Long)] = Nil, remove: Seq[String] = Nil,
+      schemaDdl: Option[String] = None, full: Boolean = false,
       dvAdd: Seq[DvEntry] = Nil, readSet: Set[String] = Set.empty,
-      streamBatchId: Option[Long] = None,
-      props: Option[TableProps] = None,
-      schemaLog: Option[Seq[SchemaVersion]] = None): VersionManifest = {
+      readAll: Boolean = false, streamBatchId: Option[Long] = None,
+      props: Option[TableProps] = None, colmap: Seq[(String, String)] = Nil,
+      schemaLog: Option[Seq[SchemaVersion]] = None,
+      replace: Option[VersionManifest] = None): VersionManifest = {
+    val adds = replace.fold(add)(_.entries)
+    val ourAdd = adds.map(_._1).toSet
     val ourRemove = remove.toSet
+    val readsFiles = ourRemove.nonEmpty || readSet.nonEmpty || readAll
+    lazy val had = m0.entries.map(_._1).toSet
     var base = m0
     var attempts = 0
     while (true) {
@@ -3551,93 +3431,98 @@ object Lake {
         s"$op: lost the manifest race under $path $MaxCommitRetries " +
           "times (livelock? raise MaxCommitRetries)")
       val next = base.version + 1
-      // an alter changes no schema: it keeps the one of the base it lands on
-      val ddl = if (props.isDefined) base.schemaDdl else schemaDdl
-      try {
-        val pub =
-          if (full) {
-            val p = applyCommit(base, next, ddl, add, remove, dvAdd,
-              streamBatchId = streamBatchId, props = props,
-              schemaLog = schemaLog).copy(depth = 0L)
-            writeVersionManifest(fs, path, p, Some(op))
-            p
-          } else
-            writeVersionDelta(spark, fs, path, next, ddl,
-              base = base, add = add, remove = remove, op = Some(op),
-              dvAdd = dvAdd, streamBatchId = streamBatchId, props = props,
-              schemaLog = schemaLog)
+      def lost(why: String): String =
+        s"$op($path): version $next already published — concurrent " +
+          s"commit $why; recompute against the new state"
+      val applied = replace match {
+        case Some(r) => r.copy(version = next, streamBatchId = streamBatchId,
+          props = base.props)
+        case None => applyCommit(base, next, schemaDdl.getOrElse(base.schemaDdl),
+          add, remove, dvAdd, colmap, streamBatchId, props, schemaLog)
+      }
+      val pub =
+        if (full || replace.isDefined || applied.depth > MaxChainDepth)
+          applied.copy(depth = 0L)
+        else applied
+      if (base ne m0) {
+        require(pub.schemaLog.isEmpty || !pub.props.gates && pub.dvs.isEmpty,
+          s"$op($path): a concurrent commit made the table " +
+            (if (schemaLog.isDefined) "constrained or deletion-vectored"
+             else "schema-evolving") + " - a schema-evolving table carries " +
+            "no CHECK constraints, GENERATED columns or deletion vectors")
+        // an alter validated the rows of m0 itself; anyone else gated
+        // its own batch against m0's properties
+        enforceNewProps(spark, fs, path, pub,
+          if (props.isDefined) pub.entries.map(_._1).filterNot(had)
+          else adds.map(_._1), m0.props, s"$op($path)")
+      }
+      val won =
+        try {
+          if (pub.depth == 0L) writeVersionManifest(fs, path, pub, Some(op))
+          else writeVersionDelta(fs, path, base, pub, add, remove, dvAdd,
+            colmap, props, schemaLog, op)
+          true
+        } catch {
+          case _: IllegalArgumentException
+              if fs.exists(versionManifestFile(path, next)) => false
+        }
+      if (won) {
         writeVersionPointer(spark, fs, path, next)
+        // a column-mapped version's physical names are not what the
+        // indexes key (they refuse mapped tables)
+        if (adds.nonEmpty && pub.colmap.isEmpty) {
+          keepStatsLive(spark, fs, path, pub)
+          refreshBloomIndexes(spark, fs, path, pub)
+        }
         return pub
-      } catch {
-        case _: IllegalArgumentException
-            if fs.exists(versionManifestFile(path, next)) =>
-          def lost(why: String): String =
-            s"$op($path): version $next already published — concurrent " +
-              s"commit $why; recompute against the new state"
-          val prev = base
-          (next to manifestVersions(fs, path).last).foreach { w =>
-            val raw = readRawManifest(spark, fs, path, w).getOrElse(
-              sys.error(s"version $w vanished under $path mid-rebase"))
-            require(!raw.op.exists(Set("snapshot", "restore")),
-              lost(s"$w replaced the table (${raw.op.get})"))
-            val cur = resolveRaw(raw, b =>
-              if (b == base.version) base
-              else readVersionManifest(spark, fs, path, b).getOrElse(
-                sys.error(s"version $b vanished under $path mid-rebase")))
-            val curFiles = cur.entries.map(_._1).toSet
-            val removed = base.entries.map(_._1).toSet -- curFiles
-            // a winner keeping the schema this commit read, or landing the
-            // one it publishes, leaves its files readable; an alter adds no
-            // file and rebases over any schema
-            require(props.isDefined || cur.schemaDdl == m0.schemaDdl ||
-                cur.schemaDdl == schemaDdl,
-              lost(s"$w changed the table schema"))
-            require((props.isEmpty || cur.props == m0.props) &&
-                (schemaLog.isEmpty || cur.schemaLog == m0.schemaLog) &&
-                (props.isEmpty && schemaLog.isEmpty || cur.colmap == m0.colmap),
-              lost(s"$w changed the table properties, schema log or column " +
-                "mapping"))
-            val overlap = removed.intersect(ourRemove)
-            require(overlap.isEmpty,
-              lost(s"$w removed file(s) this commit also rewrites " +
-                s"(${overlap.take(3).mkString(", ")})"))
-            // deletion-vector disjointness, both directions. A winner that
-            // REWROTE a file we tombstoned would resurrect our deleted
-            // rows (positions don't survive a rewrite); a winner that
-            // TOMBSTONED a file we are removing wrote positions into a
-            // file our rewrite is about to retire — its deletes would
-            // silently evaporate.
-            val dvHit = removed.intersect(readSet)
-            require(dvHit.isEmpty,
-              lost(s"$w rewrote file(s) this commit tombstones " +
-                s"(${dvHit.take(3).mkString(", ")})"))
-            val dvLoss = cur.dvs.filterNot(d => base.dvs.exists(_.dv == d.dv))
-              .flatMap(_.files).toSet.intersect(ourRemove)
-            require(dvLoss.isEmpty,
-              lost(s"$w added deletion vectors on file(s) this commit " +
-                s"rewrites (${dvLoss.take(3).mkString(", ")})"))
-            base = cur
-          }
-          // all winners file-disjoint: rebase onto the head and retry —
-          // unless the head plus this commit would hold a schema log
-          // together with CHECK constraints or generated columns
-          require(schemaLog.getOrElse(base.schemaLog).isEmpty ||
-              !props.getOrElse(base.props).gates,
-            lost("made the table " +
-              (if (schemaLog.isDefined) "constrained" else "schema-evolving") +
-              " - a schema-evolving table carries no CHECK constraints or " +
-              "GENERATED columns"))
-          props match {
-            case Some(p) =>
-              // the previous base's rows are validated (m0's by the caller)
-              val had = prev.entries.map(_._1).toSet
-              enforceNewProps(spark, fs, path, base.copy(props = p),
-                base.entries.map(_._1).filterNot(had), m0.props,
-                s"$op($path) over concurrently added files")
-            case None =>
-              enforceNewProps(spark, fs, path, base, add.map(_._1), m0.props,
-                s"$op($path)")
-          }
+      }
+      (next to manifestVersions(fs, path).last).foreach { w =>
+        val raw = readRawManifest(spark, fs, path, w).getOrElse(
+          sys.error(s"version $w vanished under $path mid-rebase"))
+        require(!readsFiles || !raw.op.exists(Set("snapshot", "restore")),
+          lost(s"$w replaced the table (${raw.op.get})"))
+        val cur = resolveRaw(raw, b =>
+          if (b == base.version) base
+          else readVersionManifest(spark, fs, path, b).getOrElse(
+            sys.error(s"version $b vanished under $path mid-rebase")))
+        val baseFiles = base.entries.map(_._1).toSet
+        val curFiles = cur.entries.map(_._1).toSet
+        val removed = baseFiles -- curFiles
+        require(props.isDefined || replace.isDefined ||
+            cur.schemaDdl == m0.schemaDdl || schemaDdl.contains(cur.schemaDdl),
+          lost(s"$w changed the table schema"))
+        val meta = props.isDefined || colmap.nonEmpty
+        require((!meta && schemaLog.isEmpty || cur.colmap == m0.colmap) &&
+            (!meta || cur.props == m0.props) &&
+            (colmap.isEmpty && schemaLog.isEmpty || cur.schemaLog == m0.schemaLog),
+          lost(s"$w changed the table properties, schema log or column " +
+            "mapping"))
+        require(!readAll || (curFiles == baseFiles && cur.dvs == base.dvs &&
+            cur.colmap == base.colmap),
+          lost(s"$w changed the data this commit read"))
+        val dup = (curFiles -- baseFiles).intersect(ourAdd)
+        require(dup.isEmpty,
+          lost(s"$w added file(s) this commit also adds " +
+            s"(${dup.take(3).mkString(", ")})"))
+        val overlap = removed.intersect(ourRemove)
+        require(overlap.isEmpty,
+          lost(s"$w removed file(s) this commit also rewrites " +
+            s"(${overlap.take(3).mkString(", ")})"))
+        // deletion-vector disjointness, both directions. A winner that
+        // REWROTE a file we tombstoned would resurrect our deleted rows
+        // (positions don't survive a rewrite); a winner that TOMBSTONED a
+        // file we are removing wrote positions into a file our rewrite is
+        // about to retire — its deletes would silently evaporate.
+        val dvHit = removed.intersect(readSet)
+        require(dvHit.isEmpty,
+          lost(s"$w rewrote file(s) this commit tombstones " +
+            s"(${dvHit.take(3).mkString(", ")})"))
+        val dvLoss = cur.dvs.filterNot(d => base.dvs.exists(_.dv == d.dv))
+          .flatMap(_.files).toSet.intersect(ourRemove)
+        require(dvLoss.isEmpty,
+          lost(s"$w added deletion vectors on file(s) this commit " +
+            s"rewrites (${dvLoss.take(3).mkString(", ")})"))
+        base = cur
       }
     }
     sys.error("unreachable")
@@ -3771,7 +3656,7 @@ object Lake {
 
   private val MaxChainDepth = 32L
 
-  /** Bound on optimistic-concurrency retries in [[appendVersioned]] —
+  /** Bound on optimistic-concurrency retries in [[commit]] —
     * losing 20 straight manifest races means pathological contention, not
     * bad luck; fail loudly rather than spin.
     */
@@ -4052,46 +3937,31 @@ object Lake {
       replace)
   }
 
-  /** Publish an O(changed-files) DELTA manifest against the resolved
-    * `base` — or, when the chain would exceed [[MaxChainDepth]], a full
-    * checkpoint of `base` with the change applied. `props` is the
-    * commit's whole new property set and `schemaLog` its whole new schema
-    * log (None: unchanged, inherited).
-    *
-    * @return the manifest published, resolved in memory
+  /** Publish `pub`, `base` with one commit applied, as an O(changed-files)
+    * DELTA manifest recording only that commit: `props` is its whole new
+    * property set and `schemaLog` its whole new schema log (None:
+    * unchanged, inherited).
     */
-  private def writeVersionDelta(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String, v: Long,
-      schemaDdl: String, base: VersionManifest, add: Seq[(String, Long)],
-      remove: Seq[String], streamBatchId: Option[Long] = None,
-      op: Option[String] = None, dvAdd: Seq[DvEntry] = Nil,
-      colmap: Seq[(String, String)] = Nil,
-      props: Option[TableProps] = None,
-      schemaLog: Option[Seq[SchemaVersion]] = None): VersionManifest = {
-    val pub = applyCommit(base, v, schemaDdl, add, remove, dvAdd, colmap,
-      streamBatchId, props, schemaLog)
-    if (pub.depth > MaxChainDepth) {
-      writeVersionManifest(fs, path, pub, op)
-      pub.copy(depth = 0L)
-    } else {
-      val removeJson = remove.map(jsonStr).mkString("[", ",", "]")
-      val bidField = streamBatchId
-        .map(b => s""""streamBatchId":$b,""").getOrElse("")
-      val opField = op.map(o => s""""op":${jsonStr(o)},""").getOrElse("")
-      val dvField = if (dvAdd.isEmpty) "" else s""""dvAdd":${dvJson(dvAdd)},"""
-      val cmField = if (colmap.isEmpty) ""
-        else s""""colmap":${pairsJson(colmap, "logical", "physical")},"""
-      val propsJson = props.fold("")(propsField)
-      val logJson = schemaLog.fold("")(schemaLogField)
-      writeManifestFile(fs, path, v,
-        s"""{"version":$v,"ts":${System.currentTimeMillis()},$bidField""" +
-          s"""$opField$dvField$cmField$propsJson$logJson""" +
-          s""""schema":${jsonStr(schemaDdl)},""" +
-          s""""depth":${pub.depth},"base":${base.version},""" +
-          s""""add":${entriesJson(add)},"remove":$removeJson}""",
-        replace = false)
-      pub
-    }
+  private def writeVersionDelta(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, base: VersionManifest, pub: VersionManifest,
+      add: Seq[(String, Long)], remove: Seq[String], dvAdd: Seq[DvEntry],
+      colmap: Seq[(String, String)], props: Option[TableProps],
+      schemaLog: Option[Seq[SchemaVersion]], op: String): Unit = {
+    val removeJson = remove.map(jsonStr).mkString("[", ",", "]")
+    val bidField = pub.streamBatchId
+      .map(b => s""""streamBatchId":$b,""").getOrElse("")
+    val dvField = if (dvAdd.isEmpty) "" else s""""dvAdd":${dvJson(dvAdd)},"""
+    val cmField = if (colmap.isEmpty) ""
+      else s""""colmap":${pairsJson(colmap, "logical", "physical")},"""
+    val propsJson = props.fold("")(propsField)
+    val logJson = schemaLog.fold("")(schemaLogField)
+    writeManifestFile(fs, path, pub.version,
+      s"""{"version":${pub.version},"ts":${System.currentTimeMillis()},""" +
+        s"""$bidField"op":${jsonStr(op)},$dvField$cmField$propsJson$logJson""" +
+        s""""schema":${jsonStr(pub.schemaDdl)},""" +
+        s""""depth":${pub.depth},"base":${base.version},""" +
+        s""""add":${entriesJson(add)},"remove":$removeJson}""",
+      replace = false)
   }
 
   /** `base` with one commit applied, as [[readVersionManifest]] resolves
@@ -4117,7 +3987,7 @@ object Lake {
   /** Fold one commit's dv change into a base's live dv set: removing a
     * data file trims it from every entry's coverage (its rewrite dropped
     * the tombstoned rows physically, or its remover's rewrite refused to
-    * race us — see publishNonCommuting's dv checks), entries left
+    * race us — see commit's dv checks), entries left
     * covering nothing drop out, and the commit's own dvAdd appends.
     */
   private def applyDvDelta(baseDvs: Seq[DvEntry], removed: Set[String],
@@ -4461,6 +4331,24 @@ object Lake {
           listDataFiles(fs, s.getPath).nonEmpty))
     }
 
+  /** The (name, catalog type) fields of a schema, as schema checks and
+    * the schema log compare them.
+    */
+  private def fieldsOf(schema: org.apache.spark.sql.types.StructType): Seq[(String, String)] =
+    schema.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
+
+  private def fieldsOf(ddl: String): Seq[(String, String)] =
+    fieldsOf(org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
+  /** The schema log an evolution of head `m` extends: its own, or on a
+    * table that has none yet its current schema as version 1 — so the
+    * columns the table already holds are carried, renamed or refused as
+    * drops like any logged version's.
+    */
+  private def logOf(m: VersionManifest): Seq[SchemaVersion] =
+    if (m.schemaLog.nonEmpty) m.schemaLog
+    else Seq(SchemaVersion(1L, fieldsOf(m.schemaDdl), Nil))
+
   /** The DDL of (name, catalog type) fields. */
   private def fieldsDdl(fields: Seq[(String, String)]): String =
     org.apache.spark.sql.types.StructType(fields.map { case (n, t) =>
@@ -4488,12 +4376,15 @@ object Lake {
     * `evolve-append` commit: one manifest rename publishes schema and
     * files, so no reader ever sees a schema version without its files or
     * files without their schema. The commit races every other commit
-    * through that rename: the first write on an empty or plain dir
-    * publishes version 1 (a plain dir's files are adopted as version 1
-    * first, the way [[setAutoOptimize]] versions it), and a table never
-    * holds a schema log together with CHECK constraints or generated
-    * columns ([[publishNonCommuting]] refuses the commit that would join
-    * them). Returns the SCHEMA version number.
+    * through that rename: the first write on an empty dir publishes
+    * version 1 (a plain dir's files are adopted as version 1 first, the
+    * way [[setAutoOptimize]] versions it), and a table never holds a
+    * schema log together with CHECK constraints or generated columns
+    * ([[commit]] refuses the commit that would join them). The first
+    * evolution of a table that already holds data seeds the log with the
+    * table's schema as schema version 1, so its columns are carried or
+    * refused as drops like any logged version's. Returns the SCHEMA
+    * version number.
     *
     * `readEvolving` builds the UNIFIED PHYSICAL schema (every column name
     * any version ever wrote) from the log and hands it to the parquet
@@ -4524,7 +4415,7 @@ object Lake {
       bootstrapRootVersion(spark, fs, path)
     val head = headManifest(spark, fs, path)
     evolve(spark, fs, path, df, head, renames, streamBatchId,
-      head.fold(Seq.empty[SchemaVersion])(_.schemaLog))._1
+      head.fold(Seq.empty[SchemaVersion])(logOf))._1
   }
 
   /** Publish `df` with schema version `prior`'s next — its fields and
@@ -4556,7 +4447,7 @@ object Lake {
       s"$path carries CHECK constraints; schema evolution would bypass " +
         "their enforcement - drop them first")
     val next = prior.lastOption.map(_.version + 1).getOrElse(1L)
-    val newFields = df.schema.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
+    val newFields = fieldsOf(df.schema)
     if (prior.isEmpty) {
       require(renames.isEmpty, "first write cannot declare renames")
     } else {
@@ -4616,20 +4507,14 @@ object Lake {
     }
     val ddl = fieldsDdl(newFields)
     // the schema entry and the files publish in ONE manifest rename,
-    // rebasing like any commit over the head the guards above read
-    val pub = publishNonCommuting(spark, fs, path,
-      head.getOrElse(VersionManifest(0L, ddl, Nil)), ddl,
-      add = writeClaimedDir(spark, fs, path, df)._2, remove = Nil,
-      op = "evolve-append", full = head.isEmpty, streamBatchId = streamBatchId,
+    // rebasing like any commit over the head the guards above read (the
+    // drift is additive, so the tracked stats columns exist in the files)
+    val pub = commit(spark, fs, path,
+      head.getOrElse(VersionManifest(0L, ddl, Nil)), "evolve-append",
+      add = writeClaimedDir(spark, fs, path, df)._2, schemaDdl = Some(ddl),
+      full = head.isEmpty, streamBatchId = streamBatchId,
       schemaLog = Some(prior :+ SchemaVersion(next, newFields,
         renames.toSeq.sortBy(_._1))))
-    // keep an existing skipping manifest live over the appended files
-    // (appendVersioned's invariant — without this a DRIFTED append
-    // leaves the manifest stale and every later readSkipping refuses
-    // until a full writeStats): O(batch), tracked columns only — the
-    // drift is additive, so old tracked columns exist in the new files
-    keepStatsLive(spark, fs, path, pub)
-    refreshBloomIndexes(spark, fs, path, pub)
     (next, pub)
   }
 
@@ -4917,14 +4802,17 @@ object Lake {
 
   /** Keep an existing stats manifest live over the files of `head`, the
     * manifest a commit just published: an [[appendStats]] over every
-    * column it tracks; no-op without one. A concurrent commit's files are
-    * covered by that commit's own upkeep.
+    * column it tracks; no-op without one, or when `head` no longer holds a
+    * tracked column (a snapshot that dropped it, an evolution that renamed
+    * it) — the manifest then stays stale and skipping reads refuse it. A
+    * concurrent commit's files are covered by that commit's own upkeep.
     */
   private def keepStatsLive(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
       head: VersionManifest): Unit =
-    StatsManifest.at(fs, path).filter(_.tracked.nonEmpty).foreach(m =>
-      appendStatsTo(spark, fs, path, m.tracked, Some(m), Some(head)))
+    StatsManifest.at(fs, path).filter(m => m.tracked.nonEmpty &&
+        (m.tracked.toSet -- fieldsOf(head.schemaDdl).map(_._1)).isEmpty)
+      .foreach(m => appendStatsTo(spark, fs, path, m.tracked, Some(m), Some(head)))
 
   /** [[appendStats]] against the stats manifest already read (None: none
     * yet) and the table's head manifest (None: not versioned).
@@ -4977,8 +4865,7 @@ object Lake {
     * — and publishes via the same staged-write + rename-aside swap as
     * [[writeStats]], with bit-identical pruning decisions before and
     * after. ([[writeStats]] also yields a single file but at corpus-scan
-    * cost; [[rerange]] folds as a side effect of its writeStats rebuild
-    * but rewrites the data too. This is the pure-housekeeping form: run it
+    * cost. This is the pure-housekeeping form: run it
     * periodically the way Delta checkpoints its log.)
     *
     * @return (manifest files before, after) — (n, n) when already compact
@@ -5237,7 +5124,7 @@ object Lake {
     def unclaim(): Unit = { fs.rename(claimed, stagedMarker(path, id)); () }
     // Unclaim ONLY on failures provably BEFORE any manifest write (stale
     // schema, constraint refusal, head read) — those hand the stage back
-    // for inspection/abort. Any exception escaping publishNonCommuting is
+    // for inspection/abort. Any exception escaping commit is
     // treated as POST-claim: the manifest may already have landed (e.g. a
     // version-pointer IO failure after the manifest wrote), and unclaiming
     // then lets a retried publishStaged read the new manifest as head and
@@ -5257,17 +5144,13 @@ object Lake {
         // files: they were written at staging, maybe before a constraint
         // or derivation existed, so a violating stage must unclaim (back
         // to staged for abort), never fold in. A property added after
-        // this gate is enforced by publishNonCommuting's rebase.
+        // this gate is enforced by commit's rebase.
         enforceNewProps(spark, fs, path, m0, entries.map(_._1), TableProps(),
           s"publishStaged($path, $id)")
         m0
       } catch { case e: Throwable => unclaim(); throw e }
-    val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
-      add = entries, remove = Nil, op = "wap",
+    val pub = commit(spark, fs, path, m0, "wap", add = entries,
       streamBatchId = streamBatchId)
-    // same keep-alive invariants as every other committing path
-    keepStatsLive(spark, fs, path, pub)
-    refreshBloomIndexes(spark, fs, path, pub)
     fs.delete(claimed, false)
     pub.version
   }
@@ -5700,15 +5583,17 @@ object Lake {
     * an index. Same invariant: commits that add files are exactly the
     * ones that would otherwise flip the index's stale guard into refusing
     * every lookup. Dot-named entries are a publish's staging or aside
-    * copies, not indexes.
+    * copies, not indexes; a column `head` no longer holds keeps its stale
+    * index, as [[keepStatsLive]] keeps a stale manifest.
     */
   private def refreshBloomIndexes(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
       head: VersionManifest): Unit = {
     val root = new org.apache.hadoop.fs.Path(path, "_graft_bloom")
     if (!fs.exists(root)) return
+    val cols = fieldsOf(head.schemaDdl).map(_._1).toSet
     fs.listStatus(root).map(_.getPath.getName)
-      .filterNot(_.startsWith("."))
+      .filter(c => !c.startsWith(".") && cols(c))
       .foreach(c => appendBloomIndexAt(spark, fs, path, c, Some(head)))
   }
 
@@ -5925,18 +5810,42 @@ object Lake {
       cur.withColumn("_graft_z", zValueColumn(cur, clusterCols, bitsPerCol))
         .repartitionByRange(nOut.toInt, col("_graft_z"))
         .drop("_graft_z"))
-    // checkpoint-form commit with disjoint-set rebase (see rerange note)
-    val pub = publishNonCommuting(spark, fs, path, m0, m0.schemaDdl,
-      add = rewritten, remove = m0.entries.map(_._1), op = "zorder",
-      full = true)
-    // every clustered column ends up tracked, like rerange's contract
-    val stats = StatsManifest.at(fs, path)
-    appendStatsTo(spark, fs, path,
-      (stats.toSeq.flatMap(_.tracked) ++ clusterCols).distinct, stats, Some(pub))
-    refreshBloomIndexes(spark, fs, path, pub)
+    // checkpoint-form commit with disjoint-set rebase (see rerangeVersioned)
+    val pub = commit(spark, fs, path, m0, "zorder", add = rewritten,
+      remove = m0.entries.map(_._1), full = true)
+    trackStats(spark, fs, path, clusterCols)
     (pub.version, rewritten.size.toLong)
   }
 
+  /** Small-file compaction — the OPTIMIZE equivalent for plain parquet
+    * dirs, hive-partitioned ones and streaming-sink dirs included (a
+    * versioned table folds its small files with [[optimizeVersioned]]).
+    * Streaming sinks and incremental appends accrete one file per
+    * micro-batch/run; at 100 TB that is a week-one pathology (every scan
+    * pays per-file open + listing, and the driver's file index bloats).
+    * `compact` rewrites a directory into ceil(bytes / targetFileBytes)
+    * files via `coalesce` (NARROW — no shuffle; compaction moves bytes,
+    * it should never pay an exchange) and publishes via RENAME-ASIDE:
+    * old dir → dot-prefixed aside, staging → dir, aside deleted last.
+    * A reader never sees a MIX of layouts, and a crash at any step leaves
+    * a complete copy on disk (the next compact call restores a stranded
+    * aside). The one residual window — the instant between the two
+    * renames — can surface to a concurrent lister as a briefly missing
+    * dir, never as partial data; plain-FS dir swaps cannot close it
+    * without a pointer indirection (that is what [[writeVersioned]] is
+    * for). An existing `_graft_stats` manifest is regenerated after the
+    * rewrite (the old one described the old files). Hive-partitioned
+    * tables are compacted per LEAF dir, preserving the partition layout
+    * and its pruning.
+    *
+    * A dir carrying a `_spark_metadata` streaming-sink log is refused
+    * unless `dropStreamingMetadata = true`: readers of such dirs trust
+    * the log, not the listing, and would miss the compacted files. With
+    * the flag, the log is removed and the dir becomes a plain parquet
+    * table (do this only on a sink that has stopped appending).
+    *
+    * @return (filesBefore, filesAfter) across all compacted leaves
+    */
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L << 20,
       dropStreamingMetadata: Boolean = false): (Long, Long) = {
@@ -6010,61 +5919,6 @@ object Lake {
     }
     if (statsCols.nonEmpty) writeStats(spark, path, statsCols)
     result
-  }
-
-  /** RE-RANGE maintenance — the OPTIMIZE analog for range-laid tables
-    * (single-column sibling of [[zorderWrite]], publish protocol of
-    * [[compact]]). Appends land as files spanning the whole key range, so
-    * probe/range pruning degrades as a table accretes (each appended file
-    * overlaps every probe); re-ranging rewrites the table ordered by `c`
-    * at a fixed rows-per-file target and republishes the stats manifest,
-    * restoring tight per-file bounds. Reads stay correct throughout —
-    * pruning quality, not correctness, is what decays — so this can run
-    * as periodic housekeeping exactly like Delta's OPTIMIZE. One range
-    * exchange; publish via the same crash-safe rename-aside as compact.
-    */
-  def rerange(spark: SparkSession, path: String, c: String,
-      targetFileRows: Long): (Long, Long) = {
-    import org.apache.spark.sql.functions.col
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverAside(fs, hp)
-    require(!fs.exists(versionsDir(path)),
-      s"$path carries _graft_versions manifests; re-range by publishing a " +
-        "rewritten version (writeVersioned, or optimizeVersioned for " +
-        "small-file folding) instead of rewriting shared files in place")
-    // same refusals as compact: a streaming-sink log would be wiped by the
-    // swap (its readers trust the log, not the listing), and a rewrite of
-    // a hive-partitioned layout would FLATTEN it (partition values live in
-    // the path; rerange per leaf dir instead)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(path, "_spark_metadata")),
-      s"$path carries a _spark_metadata streaming-sink log; stop the sink " +
-        "and freeze it via compact(dropStreamingMetadata = true) first")
-    require(!fs.listStatus(hp).exists(s => s.isDirectory &&
-        s.getPath.getName.contains("=") && !s.getPath.getName.startsWith("_")),
-      s"$path is hive-partitioned; rerange each leaf partition dir instead " +
-        "(a whole-table rewrite would flatten the partition layout)")
-    // the re-range key ALWAYS ends up tracked: re-ranging exists to restore
-    // probe pruning on `c`, so a pre-existing manifest that happens not to
-    // track c must gain its bounds, not silently keep lacking them
-    val statsCols = (StatsManifest.trackedAt(fs, path) :+ c).distinct
-    val nBefore = listDataFiles(fs, hp).size.toLong
-    val nOut = math.max(1L,
-      (readParquet(spark, path).count() + targetFileRows - 1) / targetFileRows)
-    val staging = stagingPath(hp)
-    readParquet(spark, path)
-      .repartitionByRange(nOut.toInt, col(c))
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val aside = asidePath(hp)
-    fs.delete(aside, true)
-    require(fs.rename(hp, aside), s"rerange: could not move $path aside")
-    if (!fs.rename(staging, hp)) {
-      fs.rename(aside, hp)
-      sys.error(s"rerange: staging rename failed for $path (restored)")
-    }
-    fs.delete(aside, true)
-    writeStats(spark, path, statsCols)
-    (nBefore, listDataFiles(fs, hp).size.toLong)
   }
 
   /** If a crash stranded the table at `<path>.old` (between compact's two

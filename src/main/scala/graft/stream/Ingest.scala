@@ -335,8 +335,6 @@ object Ingest {
     */
   def runQuarantinedSilverPipeline(spark: SparkSession, landingDir: String,
       silverDir: String, quarantineDir: String, checkpointDir: String,
-      compactSilverEveryBatches: Option[Int] = None,
-      compactTargetFileBytes: Long = 128L << 20,
       statsCols: Seq[String] = Seq.empty): StreamingQuery = {
     import graft.dq.Expectations
     val bronze = bronzeStreamInferred(spark, landingDir)
@@ -372,21 +370,12 @@ object Ingest {
                 col(RescuedCol): _*)
               .write.mode("overwrite").parquet(s"$quarantineDir/batch=$batchId")
           }
-          // post-commit compaction hook: per-micro-batch appends accrete
-          // one file per batch; every N batches fold them back to target
-          // size (safe here — this foreachBatch is the dir's only writer)
-          compactSilverEveryBatches.foreach { n =>
-            if ((batchId + 1) % n == 0)
-              graft.sources.Lake.compact(spark, silverDir, compactTargetFileBytes)
-          }
         } finally { batch.unpersist(); () }
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    // post-drain, after any compaction hook ran: compact republishes the
-    // manifest it invalidates, and this append covers whatever is newer
     if (statsCols.nonEmpty) publishStreamStats(spark, silverDir, statsCols)
     q
   }

@@ -138,6 +138,28 @@ class LakeSpec extends SparkSpec {
     assert(scan.contains("ReadSchema"), scan)
   }
 
+  test("the first evolution of a table holding data refuses dropping its columns") {
+    val dir = tmp() + "/t"
+    Lake.writeVersioned(spark, Seq((1L, 10L)).toDF("id", "v"), dir)
+    // the table's schema is the log's first version: omitting `v` is a drop
+    val e = intercept[IllegalArgumentException](
+      Lake.writeEvolving(spark, Seq((2L, "w")).toDF("id", "w"), dir))
+    assert(e.getMessage.contains("column 'v'"), e.getMessage)
+    assert(Lake.schemaVersions(spark, dir).isEmpty)
+    assert(Lake.readVersioned(spark, dir).columns.toSeq == Seq("id", "v"))
+    // carrying it evolves the table; the seeded version keeps its number
+    assert(Lake.writeEvolving(spark, Seq((2L, 20L, "w")).toDF("id", "v", "w"),
+      dir) == 2L)
+    assert(Lake.schemaVersions(spark, dir) == Seq(1L, 2L))
+    assert(Lake.readVersioned(spark, dir).orderBy("id").as[(Long, Long, String)]
+      .collect().toSeq == Seq((1L, 10L, null), (2L, 20L, "w")))
+    // a plain dir seeds its log the same way
+    val plain = tmp() + "/p"
+    Seq((1L, 10L)).toDF("id", "v").write.parquet(plain)
+    intercept[IllegalArgumentException](
+      Lake.writeEvolving(spark, Seq((2L, "w")).toDF("id", "w"), plain))
+  }
+
   test("schema evolution widens int->long and float->double, refuses narrowing") {
     import org.apache.spark.sql.types.{DoubleType, LongType}
     val dir = tmp() + "/t"
@@ -286,12 +308,15 @@ class LakeSpec extends SparkSpec {
     val (k2, _) = Lake.probeDataFiles(spark, dir, "k", probes)
     assert(k2.size == 2, s"append should degrade pruning: ${k2.size}")
     val before = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    val (nb, na) = Lake.rerange(spark, dir, "k", targetFileRows = 550)
-    assert(nb == 9 && na == 8, s"$nb -> $na")
+    // the plain table's 9 files become version 1, the re-range version 2
+    val (v, na) = Lake.rerangeVersioned(spark, dir, "k", targetFileRows = 550)
+    val nb = Lake.readVersioned(spark, dir, Some(1L)).inputFiles.length
+    assert(v == 2L && nb == 9 && na == 8, s"v$v: $nb -> $na")
     // tight bounds restored; content byte-identical
     val (k3, _) = Lake.probeDataFiles(spark, dir, "k", probes)
     assert(k3.size == 1, s"rerange should restore pruning: ${k3.size}")
-    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq == before)
+    assert(Lake.readVersioned(spark, dir).collect().map(_.toString).sorted.toSeq ==
+      before)
   }
 
   test("rerange on an evolved table folds eras and keeps the manifests") {

@@ -184,25 +184,32 @@ class TablePropsSpec extends SparkSpec {
       val t = tmp() + s"/race$round"
       Lake.writeVersioned(spark, (1L to 40L).map(i => (i, i)).toDF("id", "v"), t)
       val stage = Lake.stageAppend(spark, Seq((99L, -2L)).toDF("id", "v"), t)
-      val latch = new java.util.concurrent.CountDownLatch(3)
-      def go(body: => Unit) = attempt { latch.countDown(); latch.await(); body }
+      val latch = new java.util.concurrent.CountDownLatch(4)
+      def go(body: => Unit) = attempt {
+        scala.concurrent.blocking { latch.countDown(); latch.await() }
+        body
+      }
       val add = go(Lake.addCheckConstraint(spark, t, "v_nonneg", "v >= 0"))
       val app = go(Lake.appendVersioned(spark, Seq((98L, -1L)).toDF("id", "v"), t))
       val wap = go(Lake.publishStaged(spark, t, stage))
-      val Seq(addR, appR, wapR) =
-        Seq(add, app, wap).map(Await.result(_, Duration("180s")))
+      // the merge read the whole table: it also loses to a data commit
+      val mrg = go(Lake.mergeInto(spark, t, Seq((5L, -5L)).toDF("id", "v"), Seq("id")))
+      val Seq(addR, appR, wapR, mrgR) =
+        Seq(add, app, wap, mrg).map(Await.result(_, Duration("180s")))
       (addR ++ appR ++ wapR).foreach(m =>
         assert(m.contains("CHECK constraint violation"), s"round $round: $m"))
+      mrgR.foreach(m => assert(m.contains("CHECK constraint violation") ||
+        m.contains("already published"), s"round $round: $m"))
       val violating = Lake.readVersioned(spark, t).filter(col("v") < 0).count()
       if (addR.isEmpty) {
-        assert(appR.isDefined && wapR.isDefined,
+        assert(appR.isDefined && wapR.isDefined && mrgR.isDefined,
           s"round $round: a violating batch landed beside the constraint")
         assert(Lake.checkConstraints(spark, t) == Seq("v_nonneg" -> "v >= 0"))
         assert(violating == 0L, s"round $round")
       } else {
         assert(Lake.checkConstraints(spark, t).isEmpty, s"round $round")
         assert(appR.isEmpty && wapR.isEmpty, s"round $round: $appR $wapR")
-        assert(violating == 2L, s"round $round")
+        assert(violating == 2L + (if (mrgR.isEmpty) 1L else 0L), s"round $round")
       }
       // every version resolves: one chain, no fork
       Lake.listVersions(spark, t).foreach(v =>
@@ -252,7 +259,7 @@ class TablePropsSpec extends SparkSpec {
     assert(Lake.listVersions(spark, t) == before)
     assert(Lake.readVersioned(spark, t).count() == 10L)
     Lake.writeEvolving(spark, Seq((11L, 11L, "x")).toDF("id", "v", "tag"), t)
-    assert(Lake.schemaVersions(spark, t) == Seq(1L))
+    assert(Lake.schemaVersions(spark, t) == Seq(1L, 2L))
     assert(Lake.readVersioned(spark, t).count() == 11L)
   }
 
